@@ -5,8 +5,8 @@
   names, same rows in any order, floats equal to within one unit of the
   sixth decimal (the registry's queries round floats to 6 or 9 decimals,
   and a sum that lands on a decimal tie rounds either way in two engines).
-- :func:`planted_family_problems` checks ``dedup_near_dup_groups``
-  against the generator's planted families.
+- :func:`planted_pair_problems` checks ``dedup_minhash_lsh`` against the
+  generator's planted families.
 - :func:`ledger_counters` and :func:`state_checksum` read the store's
   operation log and current manifest with pyarrow, without Spark, for
   the price-paid answer key.
@@ -66,37 +66,32 @@ def compare_tables(spark_table, duck_table, name: str) -> list[str]:
     return bad[:5] + ([f"{name}: {len(bad)} rows differ"] if len(bad) > 5 else [])
 
 
-def planted_family_problems(groups_table, families: list[dict]) -> list[str]:
-    """Check ``dedup_near_dup_groups`` against the planted families.
+def planted_pair_problems(pairs_table, families: list[dict]) -> list[str]:
+    """Check the near-duplicate pairs of ``dedup_minhash_lsh`` against the
+    planted families.
 
     Guaranteed by construction, whatever the MinHash hash functions: no
-    group mixes families or holds an unplanted document (unrelated texts
-    share almost no word 3-grams), each family's verbatim pair is grouped
-    together, and a group's canonical doc is its smallest id. Recall of
-    the near copies depends on the hash functions, so at least 95 % of
-    all planted documents must sit in their family's group."""
-    rows = groups_table.to_pylist()
-    canonical = {r["doc"]: r["canonical_doc"] for r in rows}
+    pair crosses families or holds an unplanted document (unrelated texts
+    share almost no word 3-grams), and each family's verbatim pair is
+    found. A near copy can be missed by every band, so at least 95 % of
+    the planted documents must be paired with a member of their family."""
     family_of = {d: i for i, f in enumerate(families) for d in f["members"]}
-    groups: dict[int, list[int]] = {}
-    for doc, canon in canonical.items():
-        groups.setdefault(canon, []).append(doc)
-    problems = []
-    for canon, docs in groups.items():
-        if canon != min(docs):
-            problems.append(f"group {sorted(docs)[:5]}: canonical {canon}")
-        if len({family_of.get(d) for d in docs}) != 1 or family_of.get(docs[0]) is None:
-            problems.append(f"group {sorted(docs)[:5]} is not inside one planted family")
-    found = 0
+    pairs = {(min(r["doc_a"], r["doc_b"]), max(r["doc_a"], r["doc_b"]))
+             for r in pairs_table.select(["doc_a", "doc_b"]).to_pylist()}
+    problems = [
+        f"pair {a}, {b} is not inside one planted family"
+        for a, b in sorted(pairs)
+        if family_of.get(a) is None or family_of.get(a) != family_of.get(b)
+    ]
     for f in families:
         a, b = f["verbatim"]
-        if a not in canonical or canonical[a] != canonical.get(b):
-            problems.append(f"verbatim pair {a}, {b} not grouped together")
-            continue
-        found += sum(canonical.get(d) == canonical[a] for d in f["members"])
-    planted = sum(len(f["members"]) for f in families)
-    if found < 0.95 * planted:
-        problems.append(f"only {found} of {planted} planted documents grouped")
+        if (a, b) not in pairs:
+            problems.append(f"verbatim pair {a}, {b} not found")
+    paired = {d for p in pairs for d in p}
+    planted = len(family_of)
+    if len(paired & family_of.keys()) < 0.95 * planted:
+        problems.append(f"only {len(paired & family_of.keys())} of {planted} planted "
+                        "documents paired")
     return problems[:5]
 
 

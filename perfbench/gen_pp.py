@@ -4,11 +4,11 @@ One call writes, under ``out_dir``:
 
 - ``snapshot.csv``: a headerless 16-column pp-complete file whose rows
   spread over the 29 ``data_year`` values 1995-2023;
-- ``batch_<i>.csv``: monthly A/C/D files. The narrow ones touch the same
-  three consecutive years; one "late corrections" batch touches all 29.
-  From the second batch on, every batch hits all twelve merge outcomes;
-- ``redelivery.csv``: a byte-identical copy of the last batch;
-- ``expected_<i>.parquet``: the state every batch must leave (key, the 14
+- ``batch_0.csv``: a monthly A/C/D file over the latest three years. The
+  snapshot holds no deleted rows, so it hits the nine merge outcomes that
+  need none (the three that meet a deleted row cannot occur yet);
+- ``redelivery.csv``: a byte-identical copy of the batch;
+- ``expected.parquet``: the state the batch must leave (key, the 14
   value columns and ``is_deleted``), for the post-merge reconcile;
 - ``expected.json``: per batch, the 17 ledger counters and the state
   checksum (rows, live rows, sum of live prices).
@@ -29,6 +29,11 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 YEARS = list(range(1995, 2024))
+# Sales per year grow toward the present, as in the real register, and
+# monthly updates mostly touch the latest years.
+YEAR_WEIGHTS = [(i + 1) ** 2 / sum(j * j for j in range(1, len(YEARS) + 1))
+                for i in range(len(YEARS))]
+NARROW_YEARS = YEARS[-3:]
 
 VALUE_COLUMNS = [
     "price",
@@ -104,55 +109,58 @@ class _Rows:
         self.rng = rng
 
     def keys(self, n: int, taken: set[str]) -> list[str]:
-        out = []
+        out: list[str] = []
         while len(out) < n:
-            h = self.rng.bytes(16).hex().upper()
-            k = f"{{{h[:8]}-{h[8:12]}-{h[12:16]}-{h[16:20]}-{h[20:]}}}"
-            if k not in taken:
-                taken.add(k)
-                out.append(k)
+            need = n - len(out)
+            h = self.rng.bytes(16 * need).hex().upper()
+            for i in range(0, 32 * need, 32):
+                k = (f"{{{h[i:i + 8]}-{h[i + 8:i + 12]}-{h[i + 12:i + 16]}-"
+                     f"{h[i + 16:i + 20]}-{h[i + 20:i + 32]}}}")
+                if k not in taken:
+                    taken.add(k)
+                    out.append(k)
         return out
 
     def dates(self, years: np.ndarray) -> list[str]:
-        days = self.rng.integers(0, 365, len(years))
+        days = self.rng.integers(0, 365, len(years)).tolist()
         return [
-            (datetime.date(int(y), 1, 1) + datetime.timedelta(days=int(d))).isoformat()
-            + " 00:00"
-            for y, d in zip(years, days)
+            (datetime.date(y, 1, 1) + datetime.timedelta(days=d)).isoformat() + " 00:00"
+            for y, d in zip(np.asarray(years).tolist(), days)
         ]
 
     def values(self, years: np.ndarray) -> list[tuple]:
         n, r = len(years), self.rng
-        price = r.integers(20_000, 2_000_000, n)
-        pc_a = r.integers(0, 26, (n, 2))
-        pc_n = r.integers(1, 99, n)
-        pc_b = r.integers(0, 26, (n, 2))
-        ptype = r.choice(list("DSTFO"), n)
-        new = r.choice(["Y", "N"], n, p=[0.1, 0.9])
-        lease = r.choice(["F", "L"], n)
-        paon = r.integers(1, 300, n)
-        saon = r.choice(["", "", "", "FLAT 1", "FLAT 2"], n)
-        street = r.integers(0, len(_STREETS), n)
-        town = r.integers(0, len(_TOWNS), n)
-        ppd = r.choice(["A", "B"], n, p=[0.9, 0.1])
+        # Plain Python lists: indexing numpy arrays row by row is slow.
+        price = r.integers(20_000, 2_000_000, n).tolist()
+        pc_a = r.integers(0, 26, (n, 2)).tolist()
+        pc_n = r.integers(1, 99, n).tolist()
+        pc_b = r.integers(0, 26, (n, 2)).tolist()
+        ptype = r.choice(list("DSTFO"), n).tolist()
+        new = r.choice(["Y", "N"], n, p=[0.1, 0.9]).tolist()
+        lease = r.choice(["F", "L"], n).tolist()
+        paon = r.integers(1, 300, n).tolist()
+        saon = r.choice(["", "", "", "FLAT 1", "FLAT 2"], n).tolist()
+        street = r.integers(0, len(_STREETS), n).tolist()
+        town = r.integers(0, len(_TOWNS), n).tolist()
+        ppd = r.choice(["A", "B"], n, p=[0.9, 0.1]).tolist()
         dates = self.dates(years)
         return [
             (
-                int(price[i]),
+                price[i],
                 dates[i],
-                f"{chr(65 + pc_a[i, 0])}{chr(65 + pc_a[i, 1])}{pc_n[i]} "
-                f"{pc_n[i] % 10}{chr(65 + pc_b[i, 0])}{chr(65 + pc_b[i, 1])}",
-                str(ptype[i]),
-                str(new[i]),
-                str(lease[i]),
+                f"{chr(65 + pc_a[i][0])}{chr(65 + pc_a[i][1])}{pc_n[i]} "
+                f"{pc_n[i] % 10}{chr(65 + pc_b[i][0])}{chr(65 + pc_b[i][1])}",
+                ptype[i],
+                new[i],
+                lease[i],
                 str(paon[i]),
-                str(saon[i]),
+                saon[i],
                 _STREETS[street[i]],
                 "",
                 _TOWNS[town[i]],
                 _TOWNS[town[i]] + " DISTRICT",
                 _COUNTIES[town[i]],
-                str(ppd[i]),
+                ppd[i],
             )
             for i in range(n)
         ]
@@ -270,13 +278,10 @@ def generate(
     out_dir: str,
     seed: int,
     snapshot_rows: int,
-    narrow_rows: int,
-    wide_rows: int,
-    n_narrow: int = 2,
+    batch_rows: int,
 ) -> dict:
     """Write the workload's files under ``out_dir`` and return the answer
-    key that is also written to ``expected.json``. The batch order is
-    narrow, wide, then the remaining narrow ones."""
+    key that is also written to ``expected.json``."""
     if os.path.isdir(out_dir):
         shutil.rmtree(out_dir)
     os.makedirs(out_dir)
@@ -284,7 +289,7 @@ def generate(
     gen = _Rows(rng)
     taken: set[str] = set()
 
-    years = rng.choice(YEARS, snapshot_rows)
+    years = rng.choice(YEARS, snapshot_rows, p=YEAR_WEIGHTS)
     keys = gen.keys(snapshot_rows, taken)
     vals = gen.values(years)
     state = {k: [v, False] for k, v in zip(keys, vals)}
@@ -293,29 +298,19 @@ def generate(
         [_csv_line(k, v, "A") for k, v in zip(keys, vals)],
     )
 
-    start = int(rng.integers(0, len(YEARS) - 2))
-    narrow_years = YEARS[start : start + 3]
-    kinds = ["narrow", "wide"] + ["narrow"] * (n_narrow - 1)
-    batches = []
-    for i, kind in enumerate(kinds):
-        years_i = narrow_years if kind == "narrow" else YEARS
-        lines, counts = _plan_batch(
-            gen, state, taken, years_i, narrow_rows if kind == "narrow" else wide_rows
-        )
-        name = f"batch_{i}.csv"
-        _write_csv(os.path.join(out_dir, name), lines)
-        _write_expected(os.path.join(out_dir, f"expected_{i}.parquet"), state)
-        batches.append(
-            {
-                "file": name,
-                "kind": kind,
-                "years": len(years_i),
-                "expected": f"expected_{i}.parquet",
-                "outcomes": counts,
-                "ledger": _ledger(counts),
-                "checksum": _checksum(state),
-            }
-        )
+    lines, counts = _plan_batch(gen, state, taken, NARROW_YEARS, batch_rows)
+    _write_csv(os.path.join(out_dir, "batch_0.csv"), lines)
+    batches = [
+        {
+            "file": "batch_0.csv",
+            "kind": "narrow",
+            "years": len(NARROW_YEARS),
+            "outcomes": counts,
+            "ledger": _ledger(counts),
+            "checksum": _checksum(state),
+        }
+    ]
+    _write_expected(os.path.join(out_dir, "expected.parquet"), state)
     shutil.copyfile(
         os.path.join(out_dir, batches[-1]["file"]), os.path.join(out_dir, "redelivery.csv")
     )
@@ -323,6 +318,7 @@ def generate(
         "seed": seed,
         "snapshot": {"file": "snapshot.csv", "rows": snapshot_rows},
         "batches": batches,
+        "expected": "expected.parquet",
         "redelivery": "redelivery.csv",
     }
     with open(os.path.join(out_dir, "expected.json"), "w") as f:

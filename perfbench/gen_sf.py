@@ -15,7 +15,7 @@ Documents are random word sequences over a large vocabulary, so two
 unrelated documents share almost no word 3-grams. A family member is the
 family's base text, either verbatim or with one extra word appended; any
 two members then have word-3-gram Jaccard similarity of at least 0.95.
-The verbatim pair of each family is grouped by any MinHash-LSH; an
+The verbatim pair of each family is paired by any MinHash-LSH; an
 appended member is missed only if its extra 3-gram happens to win the
 minimum in every band, which the check tolerates for a few members.
 The same seed gives byte-identical files.

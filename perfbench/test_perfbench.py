@@ -3,8 +3,8 @@
     python3 -m pytest perfbench -q
 
 The generator and catalog tests take seconds. The end-to-end tests run
-the benchmark command itself, traced, once per workload (about a minute
-each on a 4-core host).
+the benchmark command itself, traced, once per workload (one to one and
+a half minutes each on a 4-core host).
 """
 
 from __future__ import annotations
@@ -23,6 +23,7 @@ import gen_pp
 import gen_sf
 import metrics
 import run
+import tracing
 import workloads
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -37,7 +38,7 @@ def _same_tree(a: str, b: str) -> bool:
 
 
 def _pp(out: str, seed: int) -> None:
-    gen_pp.generate(out, seed, snapshot_rows=2_000, narrow_rows=240, wide_rows=480)
+    gen_pp.generate(out, seed, snapshot_rows=2_000, batch_rows=240)
 
 
 def _sf(out: str, seed: int) -> None:
@@ -56,17 +57,50 @@ def test_generator_is_byte_identical_per_seed_and_differs_across_seeds(tmp_path,
     assert not _same_tree(a, c)
 
 
-def test_pp_answer_key_covers_every_outcome(tmp_path):
-    answer = gen_pp.generate(str(tmp_path), 3, snapshot_rows=2_000, narrow_rows=240,
-                             wide_rows=480)
-    kinds = [b["kind"] for b in answer["batches"]]
-    assert kinds == ["narrow", "wide", "narrow"]
-    for b in answer["batches"][1:]:
-        assert all(n > 0 for n in b["outcomes"].values()), b["outcomes"]
-    assert len(answer["batches"][0]["ledger"]) == 17
+def test_pp_answer_key_covers_every_reachable_outcome(tmp_path):
+    answer = gen_pp.generate(str(tmp_path), 3, snapshot_rows=2_000, batch_rows=240)
+    (batch,) = answer["batches"]
+    assert batch["kind"] == "narrow"
+    # A snapshot holds no deleted rows, so only these three cannot occur.
+    need_deleted = {"add_undelete_change", "change_ignore_deleted", "delete_ignore_deleted"}
+    for outcome, n in batch["outcomes"].items():
+        assert (n == 0) == (outcome in need_deleted), batch["outcomes"]
+    assert len(batch["ledger"]) == 17
+    assert os.path.isfile(tmp_path / answer["expected"])
     with open(tmp_path / "redelivery.csv", "rb") as f, \
-            open(tmp_path / answer["batches"][-1]["file"], "rb") as g:
+            open(tmp_path / batch["file"], "rb") as g:
         assert f.read() == g.read()
+
+
+def _tracer_with(spans: list[tuple[str, int | None, float, float]]) -> tracing.Tracer:
+    t = tracing.Tracer.__new__(tracing.Tracer)
+    t.spans = [tracing.Span(i, name, parent, "r", start, end)
+               for i, (name, parent, start, end) in enumerate(spans)]
+    return t
+
+
+def test_layer_coverage_counts_only_engine_layer_spans():
+    # A merge whose engine call covers 6 of its 10 s, a reconcile whose
+    # state read covers 1 of 4 s (the collect runs outside any layer), and
+    # two queries of which only one has its plan in a read-path layer.
+    t = _tracer_with([
+        ("op.merge", None, 0.0, 10.0),
+        ("ingest.monthly", 0, 1.0, 7.0),
+        ("state.resolve", 1, 2.0, 3.0),
+        ("reconcile", None, 10.0, 14.0),
+        ("state.read", 3, 10.0, 11.0),
+        ("q.a", None, 14.0, 17.0),
+        ("q.b", None, 17.0, 19.0),
+    ])
+    modules = {"a": "plans.analytics", "b": "plans.elsewhere"}
+    assert metrics.layer_coverage(t, modules) == pytest.approx(6.0 + 1.0 + 3.0)
+
+
+def test_wall_takes_each_operations_fastest_time_over_passes():
+    cold, warm = workloads.Caller(), workloads.Caller()
+    cold.ops = [workloads.Op("snapshot", 9.0), workloads.Op("merge", 2.0)]
+    warm.ops = [workloads.Op("snapshot", 4.0), workloads.Op("merge", 3.0)]
+    assert workloads.fastest([cold, warm]) == {"snapshot": 4.0, "merge": 2.0}
 
 
 def test_compare_tables_flags_differences():
@@ -76,6 +110,18 @@ def test_compare_tables_flags_differences():
     assert checks.compare_tables(a, pa.table({"v": [0.25, 0.5], "k": [2, 1]}), "q") == []
     assert checks.compare_tables(a, pa.table({"k": [1, 2], "v": [0.5, 0.3]}), "q")
     assert checks.compare_tables(a, pa.table({"k": [1], "v": [0.5]}), "q")
+
+
+def test_planted_pair_check_flags_cross_family_and_missing_pairs():
+    import pyarrow as pa
+
+    families = [{"members": [1, 2, 3], "verbatim": [1, 2]},
+                {"members": [4, 5], "verbatim": [4, 5]}]
+    good = pa.table({"doc_a": [2, 1, 4], "doc_b": [1, 3, 5]})
+    assert checks.planted_pair_problems(good, families) == []
+    crossed = pa.table({"doc_a": [1, 1, 4, 3], "doc_b": [2, 3, 5, 4]})
+    assert checks.planted_pair_problems(crossed, families)
+    assert checks.planted_pair_problems(pa.table({"doc_a": [1], "doc_b": [3]}), families)
 
 
 def _benchmark_json() -> dict:
@@ -108,7 +154,8 @@ def test_traced_run_reports_catalog_and_spans_cover_wall(workload):
     assert result["correct"] and result["failed"] == 0, p.stdout
     names = {m["name"] for m in _benchmark_json()["per_layer"]}
     assert set(result["metrics"]) == names
-    assert result["metrics"]["trace.span_coverage"]["value"] >= 0.95
+    # Most of the timed wall lies in the layers the workload names.
+    assert result["metrics"]["trace.span_coverage"]["value"] >= 0.5
     for line in p.stdout.splitlines()[1:-1]:
         name = line.split()[0]
         if name not in ("op", "problem:", "pp.merge_s_p50", "failed_ops_ratio", "output",
