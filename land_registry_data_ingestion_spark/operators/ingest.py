@@ -2,15 +2,21 @@
 
 The reference runs this as six Kafka-connected microservices mutating a
 shared file-log row (downloader → data-decision → archiver/GC → db-upload →
-merge). Here the same stages are pure functions over two kinds of state:
+merge). Here the same stages are pure functions over one store with two
+planes:
 
-- **snapshot state**: immutable parquet directory per accepted file,
-  addressed by content hash (``state/run=<sha12>/``). "Current" is a
-  pointer resolved from the file-log — pointer-flip is atomic, so there is
-  no overwrite window (the reference's ``if_exists='replace'`` has one).
-- **file_log**: an append-only parquet ledger, one row per pipeline run
-  (the reference's mutable ``PP*DownloadFileLog`` rows become immutable
-  events; "latest" is a ``max_by`` over run timestamps — SURVEY W3).
+- **data plane** (Spark): content-addressed state partitions under
+  ``parts/run=<sha12>/data_year=YYYY/``, resolved through a per-run
+  manifest (:class:`~.state.ManifestStore`);
+- **control plane** (driver, ``pyarrow.parquet``): the append-only
+  ``file_log/`` ledger, one row per pipeline run (the reference's
+  mutable ``PP*DownloadFileLog`` rows become immutable events; "latest"
+  is a max over run timestamps — SURVEY W3), the ``operation_log/``
+  outcome counters and the manifests. These hold a few hundred rows, so
+  they are read and written on the driver without a Spark job; every
+  file lands under a hidden temp name and is published by
+  ``os.replace``. Resolution is ledger → manifest → partition paths, and
+  the ledger append is the commit point.
 
 Stage semantics preserved from the reference:
 - sha256 content hash decides archive vs garbage_collect: equal to the
@@ -29,13 +35,16 @@ import datetime
 import hashlib
 import os
 import shutil
+import uuid
 from dataclasses import dataclass
+from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from pyspark.sql import Observation
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from land_registry_data_ingestion_spark.operators.merge import (
     cdc_merge,
@@ -47,6 +56,9 @@ from land_registry_data_ingestion_spark.sources.csv import (
     read_price_paid_csv,
     read_price_paid_csv_with_rejects,
 )
+
+if TYPE_CHECKING:
+    from land_registry_data_ingestion_spark.operators.state import ManifestStore
 
 FILE_LOG_SCHEMA = T.StructType(
     [
@@ -61,43 +73,106 @@ FILE_LOG_SCHEMA = T.StructType(
     ]
 )
 
+OPERATION_LOG_SCHEMA = T.StructType(
+    [
+        T.StructField("record_op", T.StringType(), True),
+        T.StructField("outcome", T.StringType(), False),
+        T.StructField("n_rows", T.LongType(), False),
+        T.StructField("run_id", T.StringType(), False),
+    ]
+)
+
+
+def write_parquet_file(rows: list[dict], schema: T.StructType, path: str) -> None:
+    """Write ``rows`` as ONE parquet file at ``path``, atomically: the file
+    is written under a hidden name in the same directory (Spark and
+    pyarrow readers skip ``.``-prefixed files) and published with
+    ``os.replace``, so a reader sees the old file or the new one, never a
+    torn write. Naive datetimes are local time, as Spark's TimestampType
+    reads them, so the driver read and the DataFrame view agree."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.tmp")
+    rows = [{f.name: _utc(r.get(f.name)) for f in schema.fields} for r in rows]
+    pq.write_table(pa.Table.from_pylist(rows, to_arrow_schema(schema)), tmp)
+    os.replace(tmp, path)
+
+
+def read_parquet_rows(path: str, schema: T.StructType) -> list[dict]:
+    """Every row of the parquet files in directory ``path`` (``[]`` when
+    it does not exist), with timestamps as naive local datetimes — the
+    values Spark's ``collect()`` returns for the same files."""
+    if not os.path.isdir(path):
+        return []
+    return [
+        {k: _local(v) for k, v in r.items()}
+        for r in pq.read_table(path, schema=to_arrow_schema(schema)).to_pylist()
+    ]
+
+
+def _utc(v):
+    return v.astimezone(datetime.timezone.utc) if isinstance(v, datetime.datetime) else v
+
+
+def _local(v):
+    return v.astimezone().replace(tzinfo=None) if isinstance(v, datetime.datetime) else v
+
+
+def _part_name() -> str:
+    return f"part-{uuid.uuid4().hex}.parquet"
+
 
 @dataclass
 class IngestStore:
-    """Filesystem layout: ``root/state/run=<sha12>/`` + ``root/file_log/``.
-
-    State directories are written partitioned by ``data_year`` (derived
-    from ``transaction_date`` at write time, SURVEY §4.1): year-ranged
-    queries then prune partitions at the scan, and at 100 TB each yearly
-    partition stays an independently-sized write unit. Set
-    ``partition_cols=()`` to disable (tiny test fixtures)."""
+    """The store's ledger: ``root/file_log/`` (one row per run) and
+    ``root/operation_log/`` (per-run merge-outcome counters), both read
+    and written on the driver. :class:`~.state.ManifestStore`, the one
+    store the pipeline uses, adds the state layout on top."""
 
     spark: SparkSession
     root: str
-    partition_cols: tuple[str, ...] = ("data_year",)
 
     @property
     def file_log_path(self) -> str:
         return os.path.join(self.root, "file_log")
 
-    def state_path(self, sha: str) -> str:
-        return os.path.join(self.root, "state", f"run={sha[:12]}")
+    @property
+    def operation_log_path(self) -> str:
+        return os.path.join(self.root, "operation_log")
 
     # -- ledger ---------------------------------------------------------
 
     def file_log(self) -> DataFrame:
-        # Only the missing-path case (first run) yields an empty ledger;
-        # any other read failure (corrupt footer, permissions) must
-        # propagate — swallowing it would silently flip last_accepted()
-        # to None and re-ingest instead of failing the run.
+        """The ledger as a DataFrame view. Only the missing-path case
+        (first run) yields an empty ledger; any other read failure
+        (corrupt footer, permissions) must propagate — swallowing it would
+        silently flip last_accepted() to None and re-ingest instead of
+        failing the run."""
         if not os.path.isdir(self.file_log_path):
             return self.spark.createDataFrame([], FILE_LOG_SCHEMA)
         return self.spark.read.schema(FILE_LOG_SCHEMA).parquet(self.file_log_path)
 
     def _append_log(self, row: dict) -> None:
-        self.spark.createDataFrame([row], FILE_LOG_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(self.file_log_path)
+        write_parquet_file(
+            [row], FILE_LOG_SCHEMA, os.path.join(self.file_log_path, _part_name())
+        )
+
+    def _accepted(self) -> list[dict]:
+        """Archive-decision rows, latest first (W3: max over the ledger)."""
+        rows = [
+            r
+            for r in read_parquet_rows(self.file_log_path, FILE_LOG_SCHEMA)
+            if r["decision"] == "archive"
+        ]
+        return sorted(rows, key=lambda r: (r["run_datetime"], r["run_id"]), reverse=True)
+
+    def last_accepted(self) -> dict | None:
+        """Latest archive-decision row."""
+        accepted = self._accepted()
+        return accepted[0] if accepted else None
+
+    def accepted_run(self, run_id: str) -> dict | None:
+        """The ledger's archive row for ``run_id``, or None."""
+        return next((r for r in self._accepted() if r["run_id"] == run_id), None)
 
     def operation_log(self) -> DataFrame:
         """Per-run merge-outcome stats, deduplicated by (run_id, outcome).
@@ -110,22 +185,30 @@ class IngestStore:
         replayed rows are exact duplicates (same batch vs the same
         converged state), so read-side dedup restores exactly-once
         semantics without a distributed transaction."""
-        path = os.path.join(self.root, "operation_log")
-        if not os.path.isdir(path):
-            schema = "record_op string, outcome string, n_rows bigint, run_id string"
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(path).dropDuplicates(
-            ["run_id", "record_op", "outcome"]
+        if not os.path.isdir(self.operation_log_path):
+            return self.spark.createDataFrame([], OPERATION_LOG_SCHEMA)
+        return (
+            self.spark.read.schema(OPERATION_LOG_SCHEMA)
+            .parquet(self.operation_log_path)
+            .dropDuplicates(["run_id", "record_op", "outcome"])
+        )
+
+    def _append_operation_log(self, run_id: str, stats: list[dict]) -> None:
+        """Append one run's ``(record_op, outcome, n_rows)`` counters."""
+        write_parquet_file(
+            [dict(r, run_id=run_id) for r in stats],
+            OPERATION_LOG_SCHEMA,
+            os.path.join(self.operation_log_path, _part_name()),
         )
 
     def compact_file_log(self) -> int:
-        """Ledger maintenance: every run appends one tiny ``coalesce(1)``
-        parquet file to ``file_log/``; at daily cadence that is 365 small
-        files a year, all scanned by every ``last_accepted()`` call.
-        Rewrites the ledger as a single file via staging-dir swap (write
-        next to the live dir, two renames, remove the old) so a crash at
-        any point leaves either the old or the new complete ledger on
-        disk. Returns the number of ledger rows carried over.
+        """Ledger maintenance: every run appends one tiny parquet file to
+        ``file_log/``; at daily cadence that is 365 small files a year,
+        all read by every ``last_accepted()`` call. Rewrites the ledger as
+        a single file via staging-dir swap (write next to the live dir,
+        two renames, remove the old) so a crash at any point leaves either
+        the old or the new complete ledger on disk. Returns the number of
+        ledger rows carried over.
 
         The reference has no analogue — its ledger is mutable DB rows —
         but at parquet-ledger cadence this is the same maintenance Delta/
@@ -137,15 +220,12 @@ class IngestStore:
         for stale in (tmp, old):
             if os.path.isdir(stale):
                 shutil.rmtree(stale)
-        df = self.spark.read.schema(FILE_LOG_SCHEMA).parquet(self.file_log_path)
-        obs = Observation()
-        df.observe(obs, F.count(F.lit(1)).alias("n_rows")).coalesce(
-            1
-        ).write.mode("overwrite").parquet(tmp)
+        rows = read_parquet_rows(self.file_log_path, FILE_LOG_SCHEMA)
+        write_parquet_file(rows, FILE_LOG_SCHEMA, os.path.join(tmp, _part_name()))
         os.rename(self.file_log_path, old)
         os.rename(tmp, self.file_log_path)
         shutil.rmtree(old)
-        return int(obs.get["n_rows"])
+        return len(rows)
 
     def maybe_compact_file_log(self, max_files: int = 64) -> bool:
         """Compact when the ledger dir has fragmented past ``max_files``
@@ -163,80 +243,6 @@ class IngestStore:
         self.compact_file_log()
         return True
 
-    def last_accepted(self) -> dict | None:
-        """Latest archive-decision row (W3: max_by over the ledger)."""
-        rows = (
-            self.file_log()
-            .filter(F.col("decision") == "archive")
-            .orderBy(F.desc("run_datetime"), F.desc("run_id"))
-            .limit(1)
-            .collect()
-        )
-        return rows[0].asDict() if rows else None
-
-    def current_state(self) -> DataFrame:
-        last = self.last_accepted()
-        if last is None:
-            raise FileNotFoundError("no accepted snapshot in the ledger yet")
-        df = self.spark.read.parquet(last["state_location"])
-        # partition columns are write-time derivations, not state
-        return df.drop(*[c for c in self.partition_cols if c in df.columns])
-
-    def read_state_at(self, location: str) -> DataFrame:
-        """State rows at a state_location — including one written but not
-        yet committed to the ledger (the snapshot gate probes it)."""
-        return self.spark.read.parquet(location)
-
-    def discard_state_at(self, location: str) -> None:
-        """Best-effort removal of an UNCOMMITTED state write (the gate's
-        failure path). Never call on a ledger-referenced location."""
-        shutil.rmtree(location, ignore_errors=True)
-
-    def write_state(self, state: DataFrame, location: str) -> int:
-        """Overwrite a content-addressed state dir, partitioned for pruning;
-        returns the written row count.
-
-        ``data_year`` is (re)derived from ``transaction_date`` on every
-        write — a CDC change that moves a row's transaction date moves the
-        row to the right partition instead of stranding it. The row count
-        comes from ``df.observe()`` metrics captured DURING the write —
-        the earlier read-back ``count()`` was a second full scan of the
-        state table per run, just for a ledger field."""
-        cols = self.partition_cols
-        if "data_year" in cols and "transaction_date" in state.columns:
-            state = state.withColumn("data_year", F.year("transaction_date"))
-        cols = tuple(c for c in cols if c in state.columns)
-        obs = Observation()
-        writer = state.observe(obs, F.count(F.lit(1)).alias("n_rows")).write.mode(
-            "overwrite"
-        )
-        if cols:
-            writer = writer.partitionBy(*cols)
-        writer.parquet(location)
-        n = int(obs.get["n_rows"] or 0)
-        if n == 0 and cols:
-            # A dynamic-partitioned write of ZERO rows emits no files at
-            # all — not even a schema footer — leaving an unreadable
-            # state dir. Re-write non-partitioned: Spark persists a
-            # metadata-only file for an empty frame, so an accepted
-            # empty snapshot stays a readable (zero-row) state.
-            state.limit(0).write.mode("overwrite").parquet(location)
-        return n
-
-    # -- merge hooks (overridden by ManifestStore for incremental writes) --
-
-    def current_for_merge(self, updates: DataFrame, key_col: str):
-        """State to feed ``cdc_merge`` plus opaque carry-over info.
-
-        The base store merges against the FULL current state and carries
-        nothing; :class:`~..operators.state.ManifestStore` restricts to the
-        partitions the batch can touch and carries the rest by reference."""
-        return self.current_state(), None
-
-    def write_merged(self, new_state: DataFrame, location: str, carry) -> int:
-        """Persist a merged state; returns the total row count."""
-        return self.write_state(new_state, location)
-
 
 def sha256_of_file(path: str, chunk: int = 1 << 20) -> str:
     """F1: content hash of a staged file (driver-side, streamed — the file
@@ -251,8 +257,47 @@ def sha256_of_file(path: str, chunk: int = 1 << 20) -> str:
     return h.hexdigest()
 
 
-def ingest_snapshot(
+def record_run(
     store: IngestStore,
+    run_id: str,
+    source_path: str,
+    file_kind: str,
+    sha: str,
+    now: datetime.datetime,
+    row_count: int | None = None,
+    location: str | None = None,
+) -> dict:
+    """Append the run's ledger row (the commit point) and return it: an
+    ``archive`` row when the run wrote state at ``location``, otherwise
+    ``garbage_collect``."""
+    row = {
+        "run_id": run_id,
+        "source_path": source_path,
+        "file_kind": file_kind,
+        "sha256": sha,
+        "decision": "archive" if location else "garbage_collect",
+        "row_count": row_count,
+        "state_location": location,
+        "run_datetime": now,
+    }
+    store._append_log(row)
+    return row
+
+
+def _redelivered(
+    store: IngestStore, csv_path: str, run_id: str, file_kind: str, now
+) -> tuple[str, dict | None]:
+    """The data decision: the staged file's sha256, plus the appended
+    ``garbage_collect`` row when it equals the last accepted file's."""
+    sha = sha256_of_file(csv_path)
+    last = store.last_accepted()
+    if last is not None and last["sha256"] == sha:
+        return sha, record_run(store, run_id, csv_path, file_kind, sha, now)
+    return sha, None
+
+
+def ingest_snapshot(
+    store: ManifestStore,
     csv_path: str,
     run_id: str,
     n_columns: int = 16,
@@ -264,22 +309,9 @@ def ingest_snapshot(
     Returns the appended file-log row (with ``decision``).
     """
     now = now or datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
-    sha = sha256_of_file(csv_path)
-    last = store.last_accepted()
-
-    if last is not None and last["sha256"] == sha:
-        row = {
-            "run_id": run_id,
-            "source_path": csv_path,
-            "file_kind": "complete",
-            "sha256": sha,
-            "decision": "garbage_collect",
-            "row_count": None,
-            "state_location": None,
-            "run_datetime": now,
-        }
-        store._append_log(row)
-        return row
+    sha, skipped = _redelivered(store, csv_path, run_id, "complete", now)
+    if skipped:
+        return skipped
 
     # Single-parse load (round 4): the snapshot is the one input big
     # enough that a separate gate pass matters (at 100 TB a second CSV
@@ -345,18 +377,7 @@ def ingest_snapshot(
                 f"refusing to merge; the full-outer join would fan out"
             )
 
-    row = {
-        "run_id": run_id,
-        "source_path": csv_path,
-        "file_kind": "complete",
-        "sha256": sha,
-        "decision": "archive",
-        "row_count": row_count,
-        "state_location": location,
-        "run_datetime": now,
-    }
-    store._append_log(row)
-    return row
+    return record_run(store, run_id, csv_path, "complete", sha, now, row_count, location)
 
 
 def _assert_unique(df: DataFrame, key_col: str, what: str) -> None:
@@ -372,7 +393,7 @@ def _assert_unique(df: DataFrame, key_col: str, what: str) -> None:
 
 
 def _gate_batch(
-    store: IngestStore, csv_path: str, n_columns: int, strict: bool, what: str
+    store: ManifestStore, csv_path: str, n_columns: int, strict: bool, what: str
 ) -> DataFrame:
     """Read the staged file and enforce every batch invariant in ONE
     aggregate pass over one parse:
@@ -426,7 +447,7 @@ def _gate_batch(
 
 
 def ingest_monthly_update(
-    store: IngestStore,
+    store: ManifestStore,
     csv_path: str,
     run_id: str,
     n_columns: int = 16,
@@ -452,21 +473,9 @@ def ingest_monthly_update(
       the default.
     """
     now = now or datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
-    sha = sha256_of_file(csv_path)
-    last = store.last_accepted()
-    if last is not None and last["sha256"] == sha:
-        row = {
-            "run_id": run_id,
-            "source_path": csv_path,
-            "file_kind": "monthly",
-            "sha256": sha,
-            "decision": "garbage_collect",
-            "row_count": None,
-            "state_location": None,
-            "run_datetime": now,
-        }
-        store._append_log(row)
-        return row
+    sha, skipped = _redelivered(store, csv_path, run_id, "monthly", now)
+    if skipped:
+        return skipped
 
     updates = _gate_batch(
         store, csv_path, n_columns, strict, "monthly update batch"
@@ -485,7 +494,7 @@ def ingest_monthly_update(
 
 
 def merge_update_frame(
-    store: IngestStore,
+    store: ManifestStore,
     updates: DataFrame,
     run_id: str,
     key_col: str = "transaction_unique_id",
@@ -509,14 +518,9 @@ def merge_update_frame(
     exactly-once effect (one ≤ledger-sized lookup, no state touched).
     """
     now = now or datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
-    prior = (
-        store.file_log()
-        .filter((F.col("run_id") == run_id) & (F.col("decision") == "archive"))
-        .limit(1)
-        .collect()
-    )
-    if prior:
-        return prior[0].asDict()
+    prior = store.accepted_run(run_id)
+    if prior is not None:
+        return prior
 
     if validate_batch:
         _assert_unique(updates, key_col, f"{source} update batch {run_id}")
@@ -554,22 +558,16 @@ def merge_update_frame(
     token = token or hashlib.sha256(run_id.encode()).hexdigest()
     location = store.state_path(token)
     row_count = store.write_merged(result.new_state, location, carry)
-    store.spark.createDataFrame(
-        stats_rows, merge_outcome_stats(result.outcomes).schema
-    ).withColumn("run_id", F.lit(run_id)).coalesce(1).write.mode(
-        "append"
-    ).parquet(os.path.join(store.root, "operation_log"))
-
-    row = {
-        "run_id": run_id,
-        "source_path": source_path or f"{source}:{run_id}",
-        "file_kind": "monthly",
-        "sha256": token,
-        "decision": "archive",
-        "row_count": row_count,
-        "state_location": location,
-        "run_datetime": now,
-    }
-    store._append_log(row)
+    store._append_operation_log(
+        run_id,
+        [
+            {"record_op": r[op_col], "outcome": r["outcome"], "n_rows": r["n_rows"]}
+            for r in stats_rows
+        ],
+    )
+    row = record_run(
+        store, run_id, source_path or f"{source}:{run_id}", "monthly", token, now,
+        row_count, location,
+    )
     store.maybe_compact_file_log()
     return row

@@ -28,24 +28,21 @@ import os
 from pyspark.sql import SparkSession
 
 from land_registry_data_ingestion_spark.operators.ingest import (
-    IngestStore,
     ingest_monthly_update,
     ingest_snapshot,
 )
 from land_registry_data_ingestion_spark.operators.state import ManifestStore
 
 
-def make_store(spark: SparkSession, root: str, incremental: bool = True) -> IngestStore:
-    """Construct the pipeline's state store. The default is the
-    manifest-backed incremental store: a monthly CDC merge writes only the
-    ``data_year`` partitions its batch touches and carries the rest by
-    reference (at the reference's 28.9M-row state the full-rewrite store
-    spends ~80% of the merge rewriting untouched years — see
-    ``operators/state.py``). ``incremental=False`` returns the plain
-    full-rewrite store for fixtures that want a flat ``state/`` layout."""
-    if incremental:
-        return ManifestStore(spark=spark, root=root)
-    return IngestStore(spark=spark, root=root)
+def make_store(spark: SparkSession, root: str) -> ManifestStore:
+    """Construct the pipeline's state store at ``root``: the ledger
+    (``file_log/``, ``operation_log/``) plus manifest-resolved state
+    (``manifests/run=*`` → ``parts/run=*/data_year=*``). A monthly CDC
+    merge writes only the ``data_year`` partitions its batch touches and
+    carries the rest by reference (see ``operators/state.py``); the
+    ledger, operation log and manifests are read and written on the
+    driver, without a Spark job."""
+    return ManifestStore(spark=spark, root=root)
 from land_registry_data_ingestion_spark.sources.fetch import (
     Transport,
     fetch_with_retry,
@@ -55,7 +52,7 @@ from land_registry_data_ingestion_spark.sources.fs import FS
 
 
 def _archive_or_collect(
-    store: IngestStore, staged_path: str, archive_dir: str, row: dict
+    store: ManifestStore, staged_path: str, archive_dir: str, row: dict
 ) -> dict:
     fs = FS(store.spark, staged_path)
     if row["decision"] == "archive":
@@ -72,7 +69,7 @@ def _archive_or_collect(
 
 
 def run_snapshot_cycle(
-    store: IngestStore,
+    store: ManifestStore,
     url: str,
     staging_dir: str,
     archive_dir: str,
@@ -96,7 +93,7 @@ def run_snapshot_cycle(
 
 
 def run_monthly_cycle(
-    store: IngestStore,
+    store: ManifestStore,
     url: str,
     staging_dir: str,
     archive_dir: str,

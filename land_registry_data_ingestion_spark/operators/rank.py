@@ -12,7 +12,10 @@ deterministic pagination.
 
 The range-partitioned frame sits behind a barrier so the count pass and
 the rank pass read the SAME materialization — RangePartitioner samples
-its boundaries, and recomputing could legally re-sample.
+its boundaries, and recomputing could legally re-sample. The barrier is
+a cache, not a checkpoint: if an executor loses its blocks, Spark
+recomputes them, may re-sample, and the collected sizes no longer match
+the ranked partitions.
 """
 
 from __future__ import annotations
@@ -23,6 +26,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from land_registry_data_ingestion_spark.util import barrier
+
+# monotonically_increasing_id puts the partition id in the upper 31 bits
+# and the partition-local row index in the lower 33 (Spark's documented
+# current layout, relied on here as of Spark 4.1).
+_ROW_INDEX_BITS = 33
+
+
+def _row_index(sizes) -> F.Column:
+    """The partition-local 0-based row index, after checking that no
+    partition in ``sizes`` (rows with ``_n``) outgrows its bits."""
+    largest = max((r["_n"] for r in sizes), default=0)
+    if largest >= 1 << _ROW_INDEX_BITS:
+        raise ValueError(
+            f"a range partition holds {largest} rows, more than the "
+            f"{_ROW_INDEX_BITS}-bit row index of monotonically_increasing_id"
+        )
+    return F.col("_mid").bitwiseAND(F.lit((1 << _ROW_INDEX_BITS) - 1))
 
 
 def _global_rank_with_total(
@@ -41,6 +61,7 @@ def _global_rank_with_total(
     ).withColumn("_pid", F.spark_partition_id())
 
     sizes = parts.groupBy("_pid").agg(F.count("*").alias("_n")).collect()
+    row_index = _row_index(sizes)
     acc = 0
     offsets = []
     for row in sorted(sizes, key=lambda r: r["_pid"]):
@@ -65,12 +86,7 @@ def _global_rank_with_total(
         parts.sortWithinPartitions(*[F.col(c) for c in order_cols])
         .withColumn("_mid", F.monotonically_increasing_id())
         .join(F.broadcast(off_df), "_pid")
-        .withColumn(
-            rank_col,
-            F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1))
-            + F.lit(1)
-            + F.col("_off"),
-        )
+        .withColumn(rank_col, row_index + F.lit(1) + F.col("_off"))
         .drop("_pid", "_off", "_mid")
     )
     return ranked, acc
@@ -208,9 +224,7 @@ def equidepth_histogram(
         .withColumn("_mid", F.monotonically_increasing_id())
         .withColumn(
             "_rn",
-            (F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1)) + F.lit(1)).cast(
-                "int"
-            ),
+            (_row_index(stats) + F.lit(1)).cast("int"),
         )
         .join(F.broadcast(probe_df), ["_pid", "_rn"])
         .select("_rank", value_col)

@@ -1074,20 +1074,13 @@ def ivf_topk(
         by_cid[cid][0].append(qid)
         by_cid[cid][1].append(np.asarray(qv, dtype=np.float64))
 
-    id_type = corpus.schema[id_col].dataType.simpleString()
     out_schema = f"query_id {id_type}, neighbor_id {id_type}, cosine double"
-    integral_ids = id_type in ("bigint", "int", "smallint", "tinyint")
-    id_pd_dtype = "int64" if integral_ids else "object"
 
     probe_tab = {}
     for cid, (qids, qvs) in by_cid.items():
         Q = np.array(qvs)
         qnorm = np.sqrt(_seq_pair_dots(Q, Q))
-        probe_tab[cid] = (
-            np.array(qids, dtype=np.int64 if integral_ids else object),
-            Q,
-            qnorm,
-        )
+        probe_tab[cid] = (np.array(qids, dtype=np.int64), Q, qnorm)
 
     # centroid table for the fused in-kernel assignment — identical
     # collect to ivf_assign_vectorized's (sorted by cid, NULL-vec seeds
@@ -1114,7 +1107,7 @@ def ivf_topk(
             empty = pd.DataFrame(
                 {"query_id": [], "neighbor_id": [], "cosine": []}
             ).astype(
-                {"query_id": id_pd_dtype, "neighbor_id": id_pd_dtype,
+                {"query_id": "int64", "neighbor_id": "int64",
                  "cosine": "float64"}
             )
             for pdf in batches:
@@ -1144,7 +1137,7 @@ def ivf_topk(
                     yield empty
                     continue
                 mids_all = pdf[id_col].to_numpy()
-                if integral_ids and mids_all.dtype != np.int64:
+                if mids_all.dtype != np.int64:
                     # a null-carrying id column arrives as float64; the
                     # null rows were dropped above, so the cast is exact
                     mids_all = mids_all.astype(np.int64)

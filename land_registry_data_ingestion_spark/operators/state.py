@@ -1,21 +1,29 @@
-"""Manifest-based incremental state store — the 100 TB path for S11 + CDC.
+"""The price-paid state store: content-addressed ``data_year``
+partitions resolved through per-run manifests (the table-format idea of
+Iceberg/Delta snapshot reuse, with nothing but plain parquet).
 
-The plain :class:`~.ingest.IngestStore` rewrites the ENTIRE state
-directory on every monthly merge. At the reference's 28.9M-row snapshot
-that is ~83 s, almost all of it rewriting ``data_year`` partitions the
-288k-row batch never touches; at 100 TB it is a full-table write per
-small CDC batch. This store applies the table-format idea (Iceberg/Delta
-snapshot reuse) with nothing but plain parquet plus one tiny file:
+Layout under the store root::
 
-- each run writes ONLY the partitions its batch touches, under a
-  content-addressed ``parts/run=<sha12>/data_year=YYYY/`` directory;
-- a per-run **manifest** (parquet rows ``data_year, path, row_count``)
-  maps every partition of that run's state to the run that last wrote
-  it — unchanged partitions are carried by reference, never rewritten;
-- "current" still resolves ledger → manifest → partition paths, and the
-  manifest is written before the ledger row is appended, so the pointer
-  flip stays atomic and replays stay idempotent (same guarantees as the
-  base store, reference ``...data_decision.py:143-174`` semantics).
+    file_log/                          ledger, one row per run  (driver)
+    operation_log/                     merge-outcome counters   (driver)
+    manifests/run=<sha12>/             data_year, path, row_count (driver)
+    parts/run=<sha12>/data_year=YYYY/  state rows               (Spark)
+
+- each run writes ONLY the partitions its batch touches, under its own
+  content-addressed ``parts/run=<sha12>/`` directory;
+- the run's **manifest** maps every partition of that run's state to the
+  run that last wrote it — unchanged partitions are carried by
+  reference, never rewritten (at the reference's 28.9M-row snapshot a
+  full rewrite spends ~80% of a monthly merge on years the batch never
+  touches);
+- "current" resolves ledger → manifest → partition paths. A run commits
+  in the order state → operation log → ledger, so the pointer flip is
+  the ledger append and a replay of an uncommitted run converges
+  (reference ``...data_decision.py:143-174`` semantics).
+
+The control plane — ledger, operation log, manifests and the
+per-partition row counts (parquet footers) — is read and written on the
+driver with ``pyarrow.parquet``; only state rows go through Spark.
 
 Touched partitions for an A/C/D batch are exactly:
 
@@ -33,9 +41,9 @@ index is the next lever if even that scan hurts.
 Merging only the touched partitions is sound because the CDC join is
 keyed: a state row whose key is absent from the batch passes through
 ``cdc_merge`` unchanged, so restricting ``current`` to the partitions
-above produces bit-identical merged rows AND identical outcome/ledger
-counters to the full merge (parity-tested, including year-moving
-changes, in ``tests/test_manifest_state.py``).
+above produces the same merged rows AND the same outcome/ledger counters
+as a merge against the full state (tested against explicit rows and the
+golden outcome matrix in ``tests/test_manifest_state.py``).
 """
 
 from __future__ import annotations
@@ -44,11 +52,16 @@ import os
 import shutil
 from dataclasses import dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from land_registry_data_ingestion_spark.operators.ingest import IngestStore
+from land_registry_data_ingestion_spark.operators.ingest import (
+    IngestStore,
+    read_parquet_rows,
+    write_parquet_file,
+)
 
 MANIFEST_SCHEMA = T.StructType(
     [
@@ -69,8 +82,9 @@ def _year_col():
 
 @dataclass
 class ManifestStore(IngestStore):
-    """Drop-in replacement for ``IngestStore`` (same public surface, same
-    ledger schema) whose monthly merge writes only touched partitions."""
+    """The pipeline's state store: the ledger of :class:`IngestStore` plus
+    manifest-resolved state whose monthly merge writes only touched
+    partitions."""
 
     def state_path(self, sha: str) -> str:
         # The ledger's state_location points at the manifest, not a data dir.
@@ -79,20 +93,17 @@ class ManifestStore(IngestStore):
     def _parts_dir(self, location: str) -> str:
         return os.path.join(self.root, "parts", os.path.basename(location))
 
-    # -- manifest I/O ---------------------------------------------------
+    # -- manifest I/O (driver) -----------------------------------------
 
     def _manifest_entries(self, manifest_path: str) -> list[dict]:
-        rows = (
-            self.spark.read.schema(MANIFEST_SCHEMA)
-            .parquet(manifest_path)
-            .collect()
-        )
-        return sorted((r.asDict() for r in rows), key=lambda e: e["data_year"])
+        rows = read_parquet_rows(manifest_path, MANIFEST_SCHEMA)
+        return sorted(rows, key=lambda e: e["data_year"])
 
     def _write_manifest(self, manifest_path: str, entries: list[dict]) -> None:
-        self.spark.createDataFrame(entries, MANIFEST_SCHEMA).coalesce(
-            1
-        ).write.mode("overwrite").parquet(manifest_path)
+        # One fixed file name: a replayed run replaces its manifest whole.
+        write_parquet_file(
+            entries, MANIFEST_SCHEMA, os.path.join(manifest_path, "part-00000.parquet")
+        )
 
     def _read_parts(self, paths: list[str]) -> DataFrame:
         # Leaf ``data_year=YYYY`` dirs: no partition-column inference, so
@@ -104,81 +115,52 @@ class ManifestStore(IngestStore):
         return self.spark.read.option("mergeSchema", "true").parquet(*paths)
 
     def _scan_part_counts(self, parts_dir: str) -> list[dict]:
-        """Per-partition row counts of a freshly written parts dir — a
-        zero-data-column aggregate, satisfied from parquet footers."""
-        years = [
-            d
-            for d in os.listdir(parts_dir)
-            if d.startswith("data_year=") and os.path.isdir(os.path.join(parts_dir, d))
-        ]
-        if not years:
-            return []
-        rows = (
-            self.spark.read.parquet(parts_dir)
-            .groupBy("data_year")
-            .agg(F.count(F.lit(1)).alias("row_count"))
-            .collect()
-        )
-        return [
-            {
-                "data_year": int(r["data_year"]),
-                "path": os.path.join(parts_dir, f"data_year={int(r['data_year'])}"),
-                "row_count": int(r["row_count"]),
-            }
-            for r in rows
-        ]
+        """Per-partition row counts of a freshly written parts dir, summed
+        from the parquet footers of its data files."""
+        entries = []
+        for d in sorted(os.listdir(parts_dir)):
+            if d.startswith("data_year="):
+                leaf = os.path.join(parts_dir, d)
+                n = sum(
+                    pq.read_metadata(os.path.join(leaf, f)).num_rows
+                    for f in os.listdir(leaf)
+                    if f.startswith("part-") and f.endswith(".parquet")
+                )
+                entries.append({"data_year": int(d[10:]), "path": leaf, "row_count": n})
+        return entries
 
     # -- state read/write ----------------------------------------------
 
-    def current_state(self) -> DataFrame:
+    def _current_entries(self) -> list[dict]:
         last = self.last_accepted()
         if last is None:
             raise FileNotFoundError("no accepted snapshot in the ledger yet")
-        entries = self._manifest_entries(last["state_location"])
-        return self._read_parts([e["path"] for e in entries])
+        return self._manifest_entries(last["state_location"])
+
+    def current_state(self) -> DataFrame:
+        return self._read_parts([e["path"] for e in self._current_entries()])
 
     def write_state(self, state: DataFrame, location: str) -> int:
         """Full write (snapshot load): every partition lands under this
         run's parts dir and the manifest references only this run."""
-        parts_dir = self._parts_dir(location)
-        state = state.withColumn("data_year", _year_col())
-        obs = Observation()
-        state.observe(obs, F.count(F.lit(1)).alias("n_rows")).write.mode(
-            "overwrite"
-        ).partitionBy("data_year").parquet(parts_dir)
-        n = int(obs.get["n_rows"] or 0)
-        if n == 0:
-            # Zero rows → the partitioned write emitted no leaf dirs and
-            # no schema footer. Persist one schema-only leaf (file schema
-            # = state schema minus the partition column, like every other
-            # leaf) so the manifest references a readable empty state.
-            leaf = os.path.join(parts_dir, f"data_year={NULL_YEAR}")
-            state.drop("data_year").limit(0).write.mode("overwrite").parquet(
-                leaf
-            )
-            self._write_manifest(
-                location,
-                [{"data_year": NULL_YEAR, "path": leaf, "row_count": 0}],
-            )
-            return 0
-        self._write_manifest(location, self._scan_part_counts(parts_dir))
-        return n
+        return self._write(state, location, [])
 
     def read_state_at(self, location: str) -> DataFrame:
+        """State rows at a state_location — including one written but not
+        yet committed to the ledger (the snapshot gate probes it)."""
         entries = self._manifest_entries(location)
         return self._read_parts([e["path"] for e in entries])
 
     def discard_state_at(self, location: str) -> None:
-        import shutil
-
+        """Best-effort removal of an UNCOMMITTED state write (the gate's
+        failure path). Never call on a ledger-referenced location."""
         shutil.rmtree(self._parts_dir(location), ignore_errors=True)
         shutil.rmtree(location, ignore_errors=True)
 
     def current_for_merge(self, updates: DataFrame, key_col: str):
-        last = self.last_accepted()
-        if last is None:
-            raise FileNotFoundError("no accepted snapshot in the ledger yet")
-        entries = self._manifest_entries(last["state_location"])
+        """State to feed ``cdc_merge`` — only the partitions the batch can
+        touch — plus the untouched manifest entries to carry by reference."""
+        entries = self._current_entries()
         cur_all = self._read_parts([e["path"] for e in entries])
 
         upd_years = {
@@ -204,28 +186,32 @@ class ManifestStore(IngestStore):
         return current, carry
 
     def write_merged(self, new_state: DataFrame, location: str, carry) -> int:
+        """Merge write: the touched partitions land under this run's parts
+        dir; the manifest adds the ``carry`` entries by reference."""
+        return self._write(new_state, location, list(carry or []))
+
+    def _write(self, state: DataFrame, location: str, carry: list[dict]) -> int:
+        """Write ``state`` partitioned by ``data_year`` under the run's parts
+        dir, then its manifest (written parts + ``carry``); returns the total
+        row count, observed during the write."""
         parts_dir = self._parts_dir(location)
-        new_state = new_state.withColumn("data_year", _year_col())
+        state = state.withColumn("data_year", _year_col())
         obs = Observation()
-        new_state.observe(obs, F.count(F.lit(1)).alias("n_rows")).write.mode(
+        state.observe(obs, F.count(F.lit(1)).alias("n_rows")).write.mode(
             "overwrite"
         ).partitionBy("data_year").parquet(parts_dir)
-        carry = list(carry or [])
         n = int(obs.get["n_rows"] or 0)
         if n == 0 and not carry:
-            # Same degenerate shape as write_state's zero-row gate: an
-            # empty merged state with nothing carried forward writes no
-            # leaf dirs, and a manifest with zero entries would make
-            # read_state_at call spark.read.parquet() with zero paths.
-            # Reachable since empty snapshots became acceptable (empty
-            # accepted state + a batch of all-invalid updates).
+            # Zero rows and nothing carried → the partitioned write emitted
+            # no leaf dirs and no schema footer, and an empty manifest
+            # would make read_state_at call spark.read.parquet() with zero
+            # paths. Persist one schema-only leaf (file schema = state
+            # schema minus the partition column, like every other leaf) so
+            # the manifest references a readable empty state.
             leaf = os.path.join(parts_dir, f"data_year={NULL_YEAR}")
-            new_state.drop("data_year").limit(0).write.mode(
-                "overwrite"
-            ).parquet(leaf)
+            state.drop("data_year").limit(0).write.mode("overwrite").parquet(leaf)
             self._write_manifest(
-                location,
-                [{"data_year": NULL_YEAR, "path": leaf, "row_count": 0}],
+                location, [{"data_year": NULL_YEAR, "path": leaf, "row_count": 0}]
             )
             return 0
         self._write_manifest(location, self._scan_part_counts(parts_dir) + carry)
@@ -240,20 +226,12 @@ class ManifestStore(IngestStore):
         one manifest read away — the table-format time-travel idea).
 
         Complements ``operators/rewind.py`` (which reconstructs history
-        from audit columns even under the rewrite store): this is an O(1)
-        pointer lookup, that is an O(data) reconstruction."""
-        rows = (
-            self.file_log()
-            .filter(
-                (F.col("run_id") == run_id) & (F.col("decision") == "archive")
-            )
-            .limit(1)
-            .collect()
-        )
-        if not rows:
+        from audit columns): this is an O(1) pointer lookup, that is an
+        O(data) reconstruction."""
+        row = self.accepted_run(run_id)
+        if row is None:
             raise KeyError(f"no accepted run {run_id!r} in the ledger")
-        entries = self._manifest_entries(rows[0]["state_location"])
-        return self._read_parts([e["path"] for e in entries])
+        return self.read_state_at(row["state_location"])
 
     # -- garbage collection --------------------------------------------
 
@@ -271,15 +249,8 @@ class ManifestStore(IngestStore):
         a concurrent run's not-yet-committed parts look identical to
         orphans; the pipeline is single-writer by design (SURVEY §3.1's
         daily cycle)."""
-        kept = (
-            self.file_log()
-            .filter(F.col("decision") == "archive")
-            .orderBy(F.desc("run_datetime"), F.desc("run_id"))
-            .limit(keep_runs)
-            .collect()
-        )
         live: set[str] = set()
-        for row in kept:
+        for row in self._accepted()[:keep_runs]:
             live |= {
                 e["path"] for e in self._manifest_entries(row["state_location"])
             }

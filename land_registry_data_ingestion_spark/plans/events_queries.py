@@ -255,17 +255,16 @@ def evt_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SAME key as the window partition — no second exchange.
     Stage 2/3 membership additionally requires a non-NULL user_id: the
     oracle's `e.user_id = v.user_id` join never matches NULL, while the
-    stage-1 GROUP BY keeps the NULL-user group. NULL-ts events can
-    never anchor or match a gate (`ts >= t` is never true on NULL) and
-    drop up front."""
+    stage-1 GROUP BY keeps the NULL-user group. A NULL-ts view still
+    enters stage 1 (the oracle's view GROUP BY keeps a user whose views
+    all lack ts), but NULL-ts events can never anchor or match a gate
+    (`ts >= t` is never true on NULL), so the click and purchase gates
+    exclude them."""
     t = load_tables(spark, sf_dir)
-    ev = (
-        t.events.filter(
-            F.col("event_type").isin("view", "click", "purchase")
-        )
-        .filter(F.col("ts").isNotNull())
-        .select("user_id", "event_type", "ts")
-    )
+    ev = t.events.filter(
+        F.col("event_type").isin("view", "click", "purchase")
+    ).select("user_id", "event_type", "ts")
+    has_ts = F.col("ts").isNotNull()
     w = Window.partitionBy("user_id").orderBy("ts").rangeBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -275,7 +274,7 @@ def evt_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = ev.withColumn(
         "_ec",
         F.when(
-            (F.col("event_type") == "click") & view_run.isNotNull(),
+            (F.col("event_type") == "click") & has_ts & view_run.isNotNull(),
             F.col("ts"),
         ),
     )
@@ -283,7 +282,7 @@ def evt_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = staged.withColumn(
         "_ep",
         F.when(
-            (F.col("event_type") == "purchase") & click_run.isNotNull(),
+            (F.col("event_type") == "purchase") & has_ts & click_run.isNotNull(),
             F.lit(1),
         ),
     )

@@ -290,6 +290,7 @@ def cdc_state_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet; reference parity target is the rewind flow its history tables
     serve (``LRD/land_registry_pp_monthly_update_database_updater.py``
     audit columns), done here without touching row history at all."""
+    import datetime
     import shutil
     import tempfile
 
@@ -301,6 +302,7 @@ def cdc_state_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
     state1 = _current(spark, sf_dir).join(date_col, "tuid")
     updates = _updates(spark, sf_dir).join(date_col, "tuid")
 
+    from land_registry_data_ingestion_spark.operators.ingest import record_run
     from land_registry_data_ingestion_spark.operators.state import ManifestStore
 
     root = tempfile.mkdtemp(prefix="lrdi_state_as_of_")
@@ -308,21 +310,11 @@ def cdc_state_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
         store = ManifestStore(spark=spark, root=root)
         loc1 = store.state_path("a" * 64)
         n1 = store.write_state(state1, loc1)
-        store._append_log(
-            {
-                "run_id": "r1",
-                "source_path": "derived:orders",
-                "file_kind": "complete",
-                "sha256": "a" * 64,
-                "decision": "archive",
-                "row_count": n1,
-                "state_location": loc1,
-                "run_datetime": __import__("datetime").datetime(2024, 1, 1),
-            }
-        )
+        record_run(store, "r1", "derived:orders", "complete", "a" * 64,
+                   datetime.datetime(2024, 1, 1), n1, loc1)
         current, carry = store.current_for_merge(updates, "tuid")
         merged = cdc_merge(
-            current.drop("data_year"),
+            current,
             updates,
             key_col="tuid",
             value_cols=["price", "status", "transaction_date"],
@@ -330,18 +322,8 @@ def cdc_state_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         loc2 = store.state_path("b" * 64)
         n2 = store.write_merged(merged.new_state, loc2, carry)
-        store._append_log(
-            {
-                "run_id": "r2",
-                "source_path": "derived:orders",
-                "file_kind": "monthly",
-                "sha256": "b" * 64,
-                "decision": "archive",
-                "row_count": n2,
-                "state_location": loc2,
-                "run_datetime": __import__("datetime").datetime(2024, 2, 1),
-            }
-        )
+        record_run(store, "r2", "derived:orders", "monthly", "b" * 64,
+                   datetime.datetime(2024, 2, 1), n2, loc2)
         checksum_df = (
             store.state_as_of("r1")
             .agg(

@@ -23,16 +23,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from land_registry_data_ingestion_spark.operators.ingest import (
-    IngestStore,
-    merge_update_frame,
-)
+from land_registry_data_ingestion_spark.operators.ingest import merge_update_frame
+from land_registry_data_ingestion_spark.operators.state import ManifestStore
 from land_registry_data_ingestion_spark.streaming.conflate import conflate_latest
 
 
 def run_cdc_stream(
     stream: DataFrame,
-    store: IngestStore,
+    store: ManifestStore,
     checkpoint_dir: str,
     key_col: str = "transaction_unique_id",
     op_col: str = "record_op",

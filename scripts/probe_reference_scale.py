@@ -3,23 +3,22 @@
 ~1 h single-node load of the 28.9M-row pp-complete snapshot
 (reference ``README.md:45``). This script reproduces that operation —
 plus the monthly CDC merge the reference performs row-at-a-time — at the
-same row count, against either state store, and prints ONE JSON line.
+same row count, through the pipeline's state store, and prints ONE JSON
+line.
 
 The two numbers it exists to track (COVERAGE.md "Reference-scale probe"):
 
 - ``snapshot_sec``: headerless CSV → strict casts → audit bootstrap →
   partitioned state write (+ sha decision + ledger append);
 - ``merge_sec``: 288k-row A/C/D batch CDC-merged into the 28.9M-row
-  state. With ``--store rewrite`` (the plain ``IngestStore``) this
-  rewrites every ``data_year`` partition; with the default
-  ``--store manifest`` (``ManifestStore``, the pipeline default) only
-  the partitions the batch touches are written — the batch targets 3 of
-  29 years, which is the realistic shape of a monthly update file.
+  state. Only the ``data_year`` partitions the batch touches are written
+  — the batch targets 3 of 29 years, which is the realistic shape of a
+  monthly update file.
 
 Usage::
 
-    python scripts/probe_reference_scale.py              # 28.9M rows, manifest
-    python scripts/probe_reference_scale.py --rows 1000000 --store rewrite
+    python scripts/probe_reference_scale.py              # 28.9M rows
+    python scripts/probe_reference_scale.py --rows 1000000
 """
 
 from __future__ import annotations
@@ -84,7 +83,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rows", type=int, default=28_900_000)
     ap.add_argument("--batch-rows", type=int, default=288_000)
-    ap.add_argument("--store", choices=["manifest", "rewrite"], default="manifest")
     ap.add_argument("--workdir", default="/tmp/ref_scale_probe")
     ap.add_argument(
         "--no-strict",
@@ -161,9 +159,7 @@ def main() -> None:
     monthly_csv = str(work / "pp-monthly.csv")
     _write_single_csv(changes.union(deletes).union(adds), monthly_csv)
 
-    store = make_store(
-        spark, str(work / "store"), incremental=(args.store == "manifest")
-    )
+    store = make_store(spark, str(work / "store"))
 
     strict = not args.no_strict
     t0 = time.monotonic()
@@ -209,7 +205,6 @@ def main() -> None:
     print(
         json.dumps(
             {
-                "store": args.store,
                 "strict_gates": strict,
                 "rows": snap_row["row_count"],
                 "batch_rows": args.batch_rows,

@@ -80,17 +80,15 @@ def test_strict_ingest_rejects_malformed_batch(spark, tmp_path):
 
     import pytest
 
-    from land_registry_data_ingestion_spark.operators.ingest import (
-        IngestStore,
-        ingest_snapshot,
-    )
+    from land_registry_data_ingestion_spark.operators.ingest import ingest_snapshot
+    from land_registry_data_ingestion_spark.operators.state import ManifestStore
 
     p = tmp_path / "bad.csv"
     p.write_text(
         '"{T9}","oops","2015-01-05 00:00","SW1A 1AA","T","N","F","10","","S",'
         '"","L","D","C","A","A"\n'
     )
-    store = IngestStore(spark=spark, root=str(tmp_path / "root"))
+    store = ManifestStore(spark=spark, root=str(tmp_path / "root"))
     with pytest.raises(ValueError, match="bad_price"):
         ingest_snapshot(store, str(p), "r1", now=datetime.datetime(2024, 1, 1))
     # nothing was written: no ledger, no state

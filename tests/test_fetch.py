@@ -8,7 +8,7 @@ import datetime
 
 import pytest
 
-from land_registry_data_ingestion_spark.operators.ingest import IngestStore
+from land_registry_data_ingestion_spark.operators.state import ManifestStore
 from land_registry_data_ingestion_spark.sources.fetch import (
     FetchFailed,
     fetch_and_ingest_snapshot,
@@ -80,7 +80,7 @@ def test_fetch_timestamps_from_injected_clock(tmp_path):
 
 def test_fetch_and_ingest_snapshot_end_to_end(spark, tmp_path):
     payload = ("\n".join(SNAP1) + "\n").encode()
-    store = IngestStore(spark=spark, root=str(tmp_path / "store"))
+    store = ManifestStore(spark=spark, root=str(tmp_path / "store"))
     transport = FlakyTransport(payload, n_failures=1)
     row = fetch_and_ingest_snapshot(
         store,

@@ -11,11 +11,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from land_registry_data_ingestion_spark.operators.ingest import (
-    IngestStore,
     ingest_monthly_update,
     ingest_snapshot,
 )
 from land_registry_data_ingestion_spark.operators.reconcile import reconcile
+from land_registry_data_ingestion_spark.operators.state import ManifestStore
 from land_registry_data_ingestion_spark.sources.csv import read_price_paid_csv
 
 
@@ -41,7 +41,7 @@ MONTHLY = [
 
 @pytest.fixture()
 def store(spark, tmp_path):
-    return IngestStore(spark=spark, root=str(tmp_path / "store"))
+    return ManifestStore(spark=spark, root=str(tmp_path / "store"))
 
 
 def _write(tmp_path, name, lines):
@@ -115,41 +115,6 @@ def test_changed_snapshot_supersedes(spark, store, tmp_path):
     assert len({r["state_location"] for r in log}) == 2
 
 
-def test_state_partitioned_by_year_with_pruning(spark, store, tmp_path):
-    """State dirs are hive-partitioned on data_year and a year predicate
-    prunes partitions at the scan (SURVEY §4.1)."""
-    import os
-
-    snap = _write(tmp_path, "pp-complete-part.csv", SNAP1)
-    row = ingest_snapshot(store, snap, "r1", now=datetime.datetime(2024, 1, 1))
-    assert sorted(
-        d for d in os.listdir(row["state_location"]) if d.startswith("data_year=")
-    ) == ["data_year=2015"]
-
-    # a second year lands in its own partition after a monthly merge
-    monthly = MONTHLY + [_line("T0005", 900000, "2016-03-01", "A")]
-    upd = _write(tmp_path, "pp-monthly-part.csv", monthly)
-    row2 = ingest_monthly_update(
-        store, upd, "r2", now=datetime.datetime(2024, 2, 1)
-    )
-    assert sorted(
-        d
-        for d in os.listdir(row2["state_location"])
-        if d.startswith("data_year=")
-    ) == ["data_year=2015", "data_year=2016"]
-
-    # year filter shows up as a partition filter, not a data filter
-    df = spark.read.parquet(row2["state_location"]).filter("data_year = 2016")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "data_year" in plan.split(
-        "PartitionFilters"
-    )[1].split("]")[0]
-    assert df.count() == 1
-
-    # current_state drops the derived partition column
-    assert "data_year" not in store.current_state().columns
-
-
 def test_monthly_update_rejects_duplicate_keys(spark, store, tmp_path):
     """A monthly file with a duplicated transaction_unique_id must fail
     the run before any state is written (reference crashes via .one())."""
@@ -203,11 +168,17 @@ def test_ingest_never_rereads_state_for_row_count(spark, store, tmp_path, monkey
         return orig(self, *paths, **kw)
 
     monkeypatch.setattr(DataFrameReader, "parquet", spy)
+
+    def reads_of(row):
+        parts = store._parts_dir(row["state_location"])
+        return [p for p in read_paths if p.startswith(parts)]
+
     snap = _write(tmp_path, "pp-complete-obs.csv", SNAP1)
     t0 = datetime.datetime(2024, 1, 1)
     row1 = ingest_snapshot(store, snap, "r1", now=t0)
     assert row1["row_count"] == 3  # from observe, not the probe read
-    assert read_paths.count(row1["state_location"]) <= 1
+    assert reads_of(row1) == [os.path.join(store._parts_dir(row1["state_location"]),
+                                           "data_year=2015")]
 
     monthly = _write(tmp_path, "pp-monthly-obs.csv", MONTHLY)
     read_paths.clear()
@@ -215,7 +186,7 @@ def test_ingest_never_rereads_state_for_row_count(spark, store, tmp_path, monkey
         store, monthly, "r2", now=datetime.datetime(2024, 2, 1)
     )
     assert row2["row_count"] == 4  # 3 + insert (delete is soft)
-    assert row2["state_location"] not in read_paths
+    assert reads_of(row2) == []
 
 
 def test_compact_file_log_bounds_files_and_preserves_latest(spark, store, tmp_path):
@@ -271,57 +242,32 @@ def test_compact_file_log_bounds_files_and_preserves_latest(spark, store, tmp_pa
     assert store.file_log().count() == 170
 
 
-def test_rejected_snapshot_discards_uncommitted_state(spark, tmp_path):
+def test_rejected_snapshot_discards_uncommitted_state(spark, store, tmp_path):
     """The single-parse gate writes state BEFORE validating; a rejected
-    snapshot must leave no ledger row AND no orphan state on disk, for
-    both store layouts (plain dir and manifest+parts)."""
-    import os
-
-    from land_registry_data_ingestion_spark.operators.state import (
-        ManifestStore,
-    )
+    snapshot must leave no ledger row AND no orphan state on disk
+    (neither manifest nor parts)."""
+    import hashlib
 
     dup_snap = _write(
         tmp_path,
         "pp-complete-dup3.csv",
         SNAP1 + [_line("T0001", 111111, "2015-03-01")],
     )
-    for cls, root in [
-        (IngestStore, tmp_path / "s_plain"),
-        (ManifestStore, tmp_path / "s_manifest"),
-    ]:
-        st = cls(spark=spark, root=str(root))
-        with pytest.raises(ValueError, match="duplicate transaction_unique_id"):
-            ingest_snapshot(
-                st, dup_snap, "r1", now=datetime.datetime(2024, 1, 1)
-            )
-        assert st.file_log().count() == 0
-        loc = st.state_path(
-            __import__("hashlib").sha256(open(dup_snap, "rb").read()).hexdigest()
-        )
-        assert not os.path.exists(loc)
-        if isinstance(st, ManifestStore):
-            assert not os.path.exists(st._parts_dir(loc))
+    with pytest.raises(ValueError, match="duplicate transaction_unique_id"):
+        ingest_snapshot(store, dup_snap, "r1", now=datetime.datetime(2024, 1, 1))
+    assert store.file_log().count() == 0
+    loc = store.state_path(hashlib.sha256(open(dup_snap, "rb").read()).hexdigest())
+    assert not os.path.exists(loc)
+    assert not os.path.exists(store._parts_dir(loc))
 
 
 def test_empty_snapshot_accepted_not_crashed(spark, store, tmp_path):
     """Zero-row snapshot: F.sum over no rows observes NULL — the gate
     must read that as 0 bad rows (the reference accepts an empty file),
     not raise TypeError and strand the orphan state dir."""
-    from land_registry_data_ingestion_spark.operators.state import (
-        ManifestStore,
-    )
-
     empty = _write(tmp_path, "pp-complete-empty.csv", [])
-    for cls, root in [
-        (IngestStore, tmp_path / "e_plain"),
-        (ManifestStore, tmp_path / "e_manifest"),
-    ]:
-        st = cls(spark=spark, root=str(root))
-        row = ingest_snapshot(
-            st, empty, "r_empty", now=datetime.datetime(2024, 1, 1)
-        )
-        assert row["decision"] == "archive"
-        assert row["row_count"] == 0
-        # the empty state is READABLE, not a footer-less dir
-        assert st.current_state().count() == 0
+    row = ingest_snapshot(store, empty, "r_empty", now=datetime.datetime(2024, 1, 1))
+    assert row["decision"] == "archive"
+    assert row["row_count"] == 0
+    # the empty state is READABLE, not a footer-less dir
+    assert store.current_state().count() == 0

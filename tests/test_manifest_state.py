@@ -1,8 +1,9 @@
-"""ManifestStore tests: the incremental CDC write must be
-indistinguishable from the full rewrite (rows, outcome counters, ledger
-row counts) while physically touching ONLY the partitions the batch can
-affect — unchanged ``data_year`` partitions are carried by reference to
-the run that last wrote them."""
+"""ManifestStore tests: the incremental CDC write must produce the
+expected rows and the golden outcome counters while physically touching
+ONLY the partitions the batch can affect — unchanged ``data_year``
+partitions are carried by reference to the run that last wrote them —
+and its control plane (ledger, operation log, manifests, part counts)
+must run without a Spark job."""
 
 from __future__ import annotations
 
@@ -61,23 +62,52 @@ def _part_years(parts_dir: str) -> list[str]:
     return sorted(d for d in os.listdir(parts_dir) if d.startswith("data_year="))
 
 
+def _state(df) -> dict[str, tuple]:
+    """key → (price, transaction year, is_deleted) of every state row."""
+    cols = ["transaction_unique_id", "price", F.year("transaction_date"), "is_deleted"]
+    return {k: (p, y, d) for k, p, y, d in df.select(cols).collect()}
+
+
+def _counters(store, run_id: str) -> dict[tuple, int]:
+    return {
+        (r["record_op"], r["outcome"]): r["n_rows"]
+        for r in store.operation_log().collect()
+        if r["run_id"] == run_id
+    }
+
+
+SNAP_STATE = {
+    "{T0001}": (100000, 2015, False),
+    "{T0002}": (200000, 2015, False),
+    "{T0003}": (300000, 2016, False),
+    "{T0004}": (400000, 2017, False),
+}
+MONTHLY_STATE = {
+    "{T0001}": (150000, 2015, False),
+    "{T0002}": (200000, 2015, False),
+    "{T0003}": (300000, 2016, True),
+    "{T0004}": (400000, 2017, False),
+    "{T0005}": (500000, 2018, False),
+}
+MONTHLY_COUNTERS = {
+    ("C", "change_change"): 1,
+    ("D", "delete_delete"): 1,
+    ("A", "add_insert"): 1,
+}
+
+
 @pytest.fixture()
-def stores(spark, tmp_path):
-    return (
-        IngestStore(spark=spark, root=str(tmp_path / "full")),
-        ManifestStore(spark=spark, root=str(tmp_path / "mani")),
-    )
+def store(spark, tmp_path):
+    return ManifestStore(spark=spark, root=str(tmp_path / "mani"))
 
 
-def test_snapshot_parity_and_manifest(spark, stores, tmp_path):
-    full, mani = stores
+def test_snapshot_parity_and_manifest(spark, store, tmp_path):
     snap = _write(tmp_path, "s.csv", SNAP)
-    t0 = datetime.datetime(2024, 1, 1)
-    row_f = ingest_snapshot(full, snap, "r1", now=t0)
-    row_m = ingest_snapshot(mani, snap, "r1", now=t0)
-    assert row_m["row_count"] == row_f["row_count"] == 4
-    assert _rows(mani.current_state()) == _rows(full.current_state())
-    entries = mani._manifest_entries(row_m["state_location"])
+    row = ingest_snapshot(store, snap, "r1", now=datetime.datetime(2024, 1, 1))
+    assert row["row_count"] == 4
+    assert _state(store.current_state()) == SNAP_STATE
+    assert "data_year" not in store.current_state().columns
+    entries = store._manifest_entries(row["state_location"])
     assert [(e["data_year"], e["row_count"]) for e in entries] == [
         (2015, 2),
         (2016, 1),
@@ -85,140 +115,188 @@ def test_snapshot_parity_and_manifest(spark, stores, tmp_path):
     ]
 
 
-def test_merge_parity_and_partition_reuse(spark, stores, tmp_path):
-    full, mani = stores
-    snap = _write(tmp_path, "s.csv", SNAP)
-    upd = _write(tmp_path, "m.csv", MONTHLY)
-    t0 = datetime.datetime(2024, 1, 1)
-    t1 = datetime.datetime(2024, 2, 1)
-    snap_f = ingest_snapshot(full, snap, "r1", now=t0)
-    snap_m = ingest_snapshot(mani, snap, "r1", now=t0)
-    row_f = ingest_monthly_update(full, upd, "r2", now=t1)
-    row_m = ingest_monthly_update(mani, upd, "r2", now=t1)
+# One batch that reaches all 12 merge outcomes through the store (the
+# golden matrix of tests/test_merge.py, on price-paid rows spread over
+# years so that 2018 stays untouched). K03, K05 and K12 are deleted by a
+# first merge so the batch can meet deleted rows.
+GOLDEN_SNAP = [
+    _line("K0001", 100, "2015-01-01"),
+    _line("K0002", 200, "2015-02-01"),
+    _line("K0003", 300, "2016-01-01"),
+    _line("K0004", 400, "2016-02-01"),
+    _line("K0005", 500, "2016-03-01"),
+    _line("K0006", 600, "2017-01-01"),
+    _line("K0009", 900, "2017-02-01"),
+    _line("K0010", 1000, "2018-01-01"),
+    _line("K0011", 1100, "2017-03-01"),
+    _line("K0012", 1200, "2016-04-01"),
+]
+GOLDEN_DELETES = [
+    _line("K0003", 300, "2016-01-01", "D"),
+    _line("K0005", 500, "2016-03-01", "D"),
+    _line("K0012", 1200, "2016-04-01", "D"),
+]
+GOLDEN_BATCH = [  # (update line, the outcome it must take)
+    (_line("K0001", 100, "2015-01-01", "A"), "add_ignore"),
+    (_line("K0002", 201, "2015-02-01", "A"), "add_change"),
+    (_line("K0003", 301, "2016-01-01", "A"), "add_undelete_change"),
+    (_line("K0007", 700, "2019-01-01", "A"), "add_insert"),
+    (_line("K0004", 400, "2016-02-01", "C"), "change_ignore"),
+    (_line("K0006", 601, "2017-01-01", "C"), "change_change"),
+    (_line("K0005", 501, "2016-03-01", "C"), "change_ignore_deleted"),
+    (_line("K0008", 800, "2019-02-01", "C"), "change_insert"),
+    (_line("K0009", 900, "2017-02-01", "D"), "delete_delete"),
+    (_line("K0011", 1101, "2017-03-01", "D"), "delete_change_delete"),
+    (_line("K0012", 1201, "2016-04-01", "D"), "delete_ignore_deleted"),
+    (_line("K0013", 1300, "2019-03-01", "D"), "delete_ignore_missing"),
+]
+GOLDEN_STATE = {
+    "{K0001}": (100, 2015, False),
+    "{K0002}": (201, 2015, False),
+    "{K0003}": (301, 2016, False),
+    "{K0004}": (400, 2016, False),
+    "{K0005}": (500, 2016, True),
+    "{K0006}": (601, 2017, False),
+    "{K0007}": (700, 2019, False),
+    "{K0008}": (800, 2019, False),
+    "{K0009}": (900, 2017, True),
+    "{K0010}": (1000, 2018, False),
+    "{K0011}": (1101, 2017, True),
+    "{K0012}": (1200, 2016, True),
+}
 
-    # identical result rows and identical ledger row count
-    assert _rows(mani.current_state()) == _rows(full.current_state())
-    assert row_m["row_count"] == row_f["row_count"] == 5
 
-    # identical outcome counters in the operation log
-    for root in (full.root, mani.root):
-        got = {
-            r["outcome"]: r["n_rows"]
-            for r in spark.read.parquet(os.path.join(root, "operation_log")).collect()
-        }
-        assert got == {"change_change": 1, "delete_delete": 1, "add_insert": 1}
+def test_merge_parity_and_partition_reuse(spark, store, tmp_path):
+    t = datetime.datetime(2024, 1, 1)
+    snap_row = ingest_snapshot(store, _write(tmp_path, "g.csv", GOLDEN_SNAP), "r1", now=t)
+    ingest_monthly_update(
+        store, _write(tmp_path, "d.csv", GOLDEN_DELETES), "r2",
+        now=t + datetime.timedelta(days=1),
+    )
+    row = ingest_monthly_update(
+        store, _write(tmp_path, "b.csv", [line for line, _ in GOLDEN_BATCH]), "r3",
+        now=t + datetime.timedelta(days=2),
+    )
+    assert _counters(store, "r3") == {
+        (line[-2], outcome): 1 for line, outcome in GOLDEN_BATCH
+    }
+    assert _state(store.current_state()) == GOLDEN_STATE
+    assert row["row_count"] == len(GOLDEN_STATE)
 
     # the merge run physically wrote ONLY the touched years
-    merge_parts = mani._parts_dir(row_m["state_location"])
+    merge_parts = store._parts_dir(row["state_location"])
     assert _part_years(merge_parts) == [
         "data_year=2015",
         "data_year=2016",
-        "data_year=2018",
+        "data_year=2017",
+        "data_year=2019",
     ]
-    # 2017 is carried by reference to the snapshot run's partition dir
+    # 2018 is carried by reference to the snapshot run's partition dir
     entries = {
-        e["data_year"]: e for e in mani._manifest_entries(row_m["state_location"])
+        e["data_year"]: e for e in store._manifest_entries(row["state_location"])
     }
-    snap_parts = mani._parts_dir(snap_m["state_location"])
-    assert entries[2017]["path"] == os.path.join(snap_parts, "data_year=2017")
-    for y in (2015, 2016, 2018):
+    snap_parts = store._parts_dir(snap_row["state_location"])
+    assert entries[2018]["path"] == os.path.join(snap_parts, "data_year=2018")
+    for y in (2015, 2016, 2017, 2019):
         assert entries[y]["path"].startswith(merge_parts)
-    assert entries[2016]["row_count"] == 1  # soft-deleted row stays
+    assert entries[2016]["row_count"] == 4  # soft-deleted rows stay
+
+    # a parts dir is hive-partitioned: a year predicate prunes at the scan
+    df = spark.read.parquet(merge_parts).filter("data_year = 2016")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "data_year" in plan.split("PartitionFilters: [")[1].split("]")[0]
+    assert df.count() == 4
 
 
-def test_year_moving_change_rewrites_both_years(spark, stores, tmp_path):
+def test_year_moving_change_rewrites_both_years(spark, store, tmp_path):
     """A C op that moves transaction_date across years must drop the row
     from the old partition and land it in the new one — the old year is
     'touched' via the key scan even though no update row targets it."""
-    full, mani = stores
     snap = _write(tmp_path, "s.csv", SNAP)
     move = _write(
         tmp_path, "mv.csv", [_line("T0004", 400000, "2019-08-01", "C")]
     )
-    t0 = datetime.datetime(2024, 1, 1)
-    for st in (full, mani):
-        ingest_snapshot(st, snap, "r1", now=t0)
-        ingest_monthly_update(st, move, "r2", now=datetime.datetime(2024, 2, 1))
-    assert _rows(mani.current_state()) == _rows(full.current_state())
+    ingest_snapshot(store, snap, "r1", now=datetime.datetime(2024, 1, 1))
+    ingest_monthly_update(store, move, "r2", now=datetime.datetime(2024, 2, 1))
+    assert _state(store.current_state()) == dict(
+        SNAP_STATE, **{"{T0004}": (400000, 2019, False)}
+    )
 
-    row_m = mani.last_accepted()
+    row_m = store.last_accepted()
     entries = {
-        e["data_year"]: e for e in mani._manifest_entries(row_m["state_location"])
+        e["data_year"]: e for e in store._manifest_entries(row_m["state_location"])
     }
     # 2017 emptied out entirely → no manifest entry; 2019 holds the row
     assert sorted(entries) == [2015, 2016, 2019]
     assert entries[2019]["row_count"] == 1
     # only the moved row's years were written by the merge run
-    assert _part_years(mani._parts_dir(row_m["state_location"])) == [
+    assert _part_years(store._parts_dir(row_m["state_location"])) == [
         "data_year=2019"
     ]
-    moved = mani.current_state().filter(
+    moved = store.current_state().filter(
         F.col("transaction_unique_id") == "{T0004}"
     ).collect()
     assert [r["transaction_date"].year for r in moved] == [2019]
 
 
-def test_vacuum_keeps_referenced_partitions(spark, stores, tmp_path):
-    _, mani = stores
+def test_vacuum_keeps_referenced_partitions(spark, store, tmp_path):
     snap = _write(tmp_path, "s.csv", SNAP)
     upd = _write(tmp_path, "m.csv", MONTHLY)
-    snap_row = ingest_snapshot(mani, snap, "r1", now=datetime.datetime(2024, 1, 1))
-    ingest_monthly_update(mani, upd, "r2", now=datetime.datetime(2024, 2, 1))
+    snap_row = ingest_snapshot(store, snap, "r1", now=datetime.datetime(2024, 1, 1))
+    ingest_monthly_update(store, upd, "r2", now=datetime.datetime(2024, 2, 1))
 
-    before = _rows(mani.current_state())
-    removed = mani.vacuum(keep_runs=1)
+    before = _rows(store.current_state())
+    removed = store.vacuum(keep_runs=1)
     # the snapshot's 2015/2016 partitions are superseded → removed;
     # its 2017 partition is still referenced by the merge manifest → kept
-    snap_parts = mani._parts_dir(snap_row["state_location"])
+    snap_parts = store._parts_dir(snap_row["state_location"])
     assert sorted(os.path.basename(p) for p in removed) == [
         "data_year=2015",
         "data_year=2016",
     ]
     assert all(p.startswith(snap_parts) for p in removed)
     assert _part_years(snap_parts) == ["data_year=2017"]
-    assert _rows(mani.current_state()) == before
+    assert _rows(store.current_state()) == before
 
     # a second vacuum finds nothing left to delete
-    assert mani.vacuum(keep_runs=1) == []
+    assert store.vacuum(keep_runs=1) == []
 
 
-def test_insert_only_batch_reads_no_old_partitions(spark, stores, tmp_path):
+def test_insert_only_batch_reads_no_old_partitions(spark, store, tmp_path):
     """A batch whose keys are all new and whose years are all new must
     not rewrite any existing partition."""
-    _, mani = stores
     snap = _write(tmp_path, "s.csv", SNAP)
     ins = _write(
         tmp_path, "ins.csv", [_line("T0009", 900000, "2020-05-01", "A")]
     )
-    snap_row = ingest_snapshot(mani, snap, "r1", now=datetime.datetime(2024, 1, 1))
-    row = ingest_monthly_update(mani, ins, "r2", now=datetime.datetime(2024, 2, 1))
+    snap_row = ingest_snapshot(store, snap, "r1", now=datetime.datetime(2024, 1, 1))
+    row = ingest_monthly_update(store, ins, "r2", now=datetime.datetime(2024, 2, 1))
     assert row["row_count"] == 5
-    assert _part_years(mani._parts_dir(row["state_location"])) == [
+    assert _part_years(store._parts_dir(row["state_location"])) == [
         "data_year=2020"
     ]
     entries = {
         e["data_year"]: e["path"]
-        for e in mani._manifest_entries(row["state_location"])
+        for e in store._manifest_entries(row["state_location"])
     }
-    snap_parts = mani._parts_dir(snap_row["state_location"])
+    snap_parts = store._parts_dir(snap_row["state_location"])
     for y in (2015, 2016, 2017):
         assert entries[y].startswith(snap_parts)
 
 
-def test_state_as_of_time_travel(spark, stores, tmp_path):
+def test_state_as_of_time_travel(spark, store, tmp_path):
     """Any un-vacuumed accepted run is readable as-of: the snapshot run's
     state must be re-readable unchanged after a later merge."""
-    _, mani = stores
     snap = _write(tmp_path, "s.csv", SNAP)
     upd = _write(tmp_path, "m.csv", MONTHLY)
-    ingest_snapshot(mani, snap, "r1", now=datetime.datetime(2024, 1, 1))
-    before = _rows(mani.current_state())
-    ingest_monthly_update(mani, upd, "r2", now=datetime.datetime(2024, 2, 1))
+    ingest_snapshot(store, snap, "r1", now=datetime.datetime(2024, 1, 1))
+    before = _rows(store.current_state())
+    ingest_monthly_update(store, upd, "r2", now=datetime.datetime(2024, 2, 1))
 
-    assert _rows(mani.state_as_of("r1")) == before
-    assert _rows(mani.state_as_of("r2")) == _rows(mani.current_state())
+    assert _rows(store.state_as_of("r1")) == before
+    assert _rows(store.state_as_of("r2")) == _rows(store.current_state())
     with pytest.raises(KeyError):
-        mani.state_as_of("no-such-run")
+        store.state_as_of("no-such-run")
 
 
 def test_schema_evolution_across_carried_partitions(spark, tmp_path):
@@ -288,3 +366,107 @@ def test_empty_merge_into_empty_state_stays_readable(spark, tmp_path):
     assert row["row_count"] == 0
     assert store.current_state().count() == 0  # readable, not a crash
     assert store.state_as_of("r1").count() == 0
+
+
+def _ledger_row(run_id: str, when: datetime.datetime, **kw) -> dict:
+    row = {
+        "run_id": run_id,
+        "source_path": f"/staged/{run_id}.csv",
+        "file_kind": "monthly",
+        "sha256": run_id.encode().hex().ljust(64, "0"),
+        "decision": "archive",
+        "row_count": 1,
+        "state_location": f"/state/{run_id}",
+        "run_datetime": when,
+    }
+    row.update(kw)
+    return row
+
+
+def test_control_plane_runs_no_spark_job(spark, store, tmp_path):
+    """Ledger, operation-log, manifest and part-count calls are driver
+    file I/O: each one, inside its own job group, schedules no Spark job."""
+    snap = _write(tmp_path, "s.csv", SNAP)
+    t0 = datetime.datetime(2024, 1, 1)
+    loc = ingest_snapshot(store, snap, "r1", now=t0)["state_location"]
+    entries = store._manifest_entries(loc)
+    sc = spark.sparkContext
+    calls = {
+        "last_accepted": store.last_accepted,
+        "accepted_run": lambda: store.accepted_run("r1"),
+        "_append_log": lambda: store._append_log(
+            _ledger_row("r2", t0 + datetime.timedelta(days=1))
+        ),
+        "_append_operation_log": lambda: store._append_operation_log(
+            "r2", [{"record_op": "A", "outcome": "add_insert", "n_rows": 1}]
+        ),
+        "_manifest_entries": lambda: store._manifest_entries(loc),
+        "_write_manifest": lambda: store._write_manifest(
+            store.state_path("f" * 64), entries
+        ),
+        "_scan_part_counts": lambda: store._scan_part_counts(store._parts_dir(loc)),
+        "maybe_compact_file_log": lambda: store.maybe_compact_file_log(max_files=1),
+    }
+    results = {}
+    for name, call in calls.items():
+        group = f"control-plane-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            results[name] = call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], name
+    assert results["last_accepted"]["run_id"] == "r1"
+    assert results["accepted_run"]["state_location"] == loc
+    assert results["_scan_part_counts"] == entries
+    assert store._manifest_entries(store.state_path("f" * 64)) == entries
+    assert results["maybe_compact_file_log"] is True
+    assert store.last_accepted()["run_id"] == "r2"
+
+
+def test_ledger_row_round_trips_driver_and_dataframe(spark, store):
+    """A ledger row written by the driver (pyarrow) reads back unchanged
+    through last_accepted() and through the file_log() DataFrame view,
+    NULL row_count and naive UTC run_datetime included."""
+    now = datetime.datetime(2024, 3, 31, 23, 59, 58, 123456)
+    row = _ledger_row("r1", now, row_count=None)
+    store._append_log(row)
+    assert store.last_accepted() == row
+    assert [r.asDict() for r in store.file_log().collect()] == [row]
+    assert store.accepted_run("r1") == row
+    assert store.accepted_run("nope") is None
+
+
+def test_crash_before_ledger_append_replays_once(spark, store, tmp_path, monkeypatch):
+    """A crash after the operation-log append but before the ledger
+    append (the commit point) leaves the run uncommitted; replaying it
+    yields one ledger row, the same state, and single-run counters."""
+    snap = _write(tmp_path, "s.csv", SNAP)
+    upd = _write(tmp_path, "m.csv", MONTHLY)
+    ingest_snapshot(store, snap, "r1", now=datetime.datetime(2024, 1, 1))
+
+    append_log = IngestStore._append_log
+    crashed = []
+
+    def crash_once(self, row):
+        if row["run_id"] == "r2" and not crashed:
+            crashed.append(row)
+            raise OSError("crash before the ledger append")
+        append_log(self, row)
+
+    monkeypatch.setattr(IngestStore, "_append_log", crash_once)
+    t1 = datetime.datetime(2024, 2, 1)
+    with pytest.raises(OSError, match="crash before the ledger append"):
+        ingest_monthly_update(store, upd, "r2", now=t1)
+    assert store.last_accepted()["run_id"] == "r1"
+    assert store.accepted_run("r2") is None
+
+    row = ingest_monthly_update(store, upd, "r2", now=t1)
+    assert row["row_count"] == 5
+    assert store.file_log().filter(F.col("run_id") == "r2").count() == 1
+    assert _state(store.current_state()) == MONTHLY_STATE
+    assert _counters(store, "r2") == MONTHLY_COUNTERS
+    # the replay appended the counters a second time; the view dedups them
+    raw = spark.read.parquet(store.operation_log_path)
+    assert raw.filter(F.col("run_id") == "r2").count() == 2 * len(MONTHLY_COUNTERS)

@@ -20,9 +20,7 @@ from tests.test_ingest import MONTHLY, SNAP1
 
 @pytest.fixture()
 def store(spark, tmp_path):
-    # The pipeline's default store is the incremental ManifestStore; the
-    # whole cycle suite runs against it so the default path is what is
-    # exercised end-to-end.
+    # The pipeline's one store, exercised end-to-end by the cycle suite.
     s = make_store(spark, str(tmp_path / "store"))
     assert isinstance(s, ManifestStore)
     return s

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import Row, Window
 from pyspark.sql import functions as F
 
@@ -57,3 +58,14 @@ def test_empty_input(spark):
     df = spark.createDataFrame([], "k long, v double")
     assert global_rank(df, ["v", "k"], num_partitions=4).count() == 0
     assert equidepth_histogram(df, "v", "k", n_buckets=4).count() == 0
+
+
+def test_partition_larger_than_row_index_is_refused(spark, monkeypatch):
+    """The rank reads the partition-local row index from the low bits of
+    monotonically_increasing_id; a partition too large for them must
+    fail loudly instead of wrapping into wrong ranks."""
+    from land_registry_data_ingestion_spark.operators import rank
+
+    monkeypatch.setattr(rank, "_ROW_INDEX_BITS", 2)
+    with pytest.raises(ValueError, match="2-bit row index"):
+        global_rank(_frame(spark, n=20), ["v", "k"], num_partitions=2)
