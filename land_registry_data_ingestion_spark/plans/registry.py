@@ -6,11 +6,13 @@ SURVEY.md §2 (or a scale-out extension), expressed twice:
 - ``fn(spark, sf_dir) -> DataFrame`` — the engine's Spark-first plan;
 - ``sql`` — the equivalent ANSI SQL DuckDB runs on the same parquet views.
 
-Contract (driver's CORRECTNESS gate): column names must match exactly
-between the two, values hash-compare order-insensitively. Computed columns
-are therefore aliased identically on both sides, float outputs are rounded
-at a fixed scale on both sides, and every top-k/limit query has a
-deterministic total order.
+Contract (``tests/test_oracle.py`` over every declared query at sf0.01,
+plus the seven-tier adversarial gate, ``tests/test_adversarial_gate.py``):
+column names must match exactly between the two, values compare
+order-insensitively. Computed columns are therefore aliased identically on
+both sides, float outputs are rounded at a fixed scale on both sides, and
+every top-k/limit query has a deterministic total order. ``REGISTRY``
+iterates in module-load order.
 """
 
 from __future__ import annotations
@@ -42,7 +44,7 @@ def query(name: str, sql: str | None = None) -> Callable[[QueryFn], QueryFn]:
             raise ValueError(f"duplicate query name: {name}")
 
         def fresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # The registry serves long-lived sessions that run ~50 queries
+            # The registry serves long-lived sessions that run many queries
             # back to back: drop the previous query's barrier caches (see
             # util.barrier) before building this one, so cached
             # intermediates never accumulate across queries.
@@ -71,40 +73,6 @@ def oracle_sql() -> dict[str, str]:
 
 _LOADED = False
 
-# The external correctness harness samples a bounded prefix (~50) of the
-# registry in insertion order, so ordering is part of the verification
-# contract. The rotation rule, applied before each round's driver run:
-#
-#   1. DEPENDENCY PROMOTION — every declared query whose plan can reach
-#      a SYMBOL changed since the last driver run moves into the front
-#      of the window (computed by `scripts/gen_query_index.py
-#      --rotation <last-round-commit>`, an AST diff per top-level def
-#      propagated through a cross-module symbol-reference graph;
-#      QUERY_DEPS.json remains the coarser committed module-level map).
-#      A semantics change must never ride on external rows that predate
-#      it.
-#   2. STALENESS — remaining slots fill oldest-newest-green-row first
-#      (per-query ages are the union of the CORRECTNESS_r*.json files),
-#      so no query's external evidence falls more than a few rounds
-#      behind. Never-checked queries count as infinitely stale.
-#
-# Names absent from the registry are ignored; registered queries missing
-# from this list are appended in module-load order.
-# The full ordering lives in plans/check_priority.py, GENERATED by
-# `scripts/gen_query_index.py --rotation <last-round-ref>` — the
-# generator computes rule 1 at SYMBOL granularity (AST diff of every
-# top-level def between the ref and the working tree, propagated
-# through a cross-module symbol-reference graph), fills the remaining
-# window with rule 2 (oldest-newest-green-row first, ages unioned over
-# all CORRECTNESS_r*.json), and HARD-FAILS if a touched query would
-# spill past the window or any spilled query would exceed 2-round
-# staleness. Round 6 demonstrated why a human must not own this
-# arithmetic: prepending 7 rewrites silently pushed the staleness
-# block's last 7 queries out of the 50-slot window for a third round.
-from land_registry_data_ingestion_spark.plans.check_priority import (
-    CHECK_PRIORITY as _CHECK_PRIORITY,
-)
-
 
 def _load_all() -> None:
     """Import every query module exactly once (they self-register)."""
@@ -123,8 +91,4 @@ def _load_all() -> None:
         corpus_queries,
     )
 
-    ordered = {n: REGISTRY[n] for n in _CHECK_PRIORITY if n in REGISTRY}
-    ordered.update({n: s for n, s in REGISTRY.items() if n not in ordered})
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
     _LOADED = True
