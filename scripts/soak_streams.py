@@ -24,8 +24,7 @@ asserts:
   ``HEAP_SLACK_MB``.
 
 Run: ``python scripts/soak_streams.py [n_batches]`` (default 100;
-~4-6 min). Exits non-zero with a diagnosis when an assertion fails —
-the committed record of a pass lives in ROUND6_NOTES.md.
+~4-6 min). Exits non-zero with a diagnosis when an assertion fails.
 """
 
 from __future__ import annotations

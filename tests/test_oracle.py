@@ -1,8 +1,9 @@
 """Oracle-differential tests: every declared query vs DuckDB at sf0.01.
 
-This mirrors the driver's correctness gate (CORRECTNESS_r{N}.json): same
-column names, same row multiset, bit-identical values after each query's
-own rounding.
+This is the registry's correctness contract, together with the
+seven-tier adversarial gate (tests/test_adversarial_gate.py): same column
+names, same row multiset, bit-identical values after each query's own
+rounding.
 """
 
 from __future__ import annotations
