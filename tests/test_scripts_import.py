@@ -2,8 +2,8 @@
 
 The scripts are not a package and no other test runs most of them, so a
 script left importing a deleted module would otherwise go unnoticed.
-Each is loaded by file path under its own name, so its ``__main__``
-guard keeps ``main`` from running."""
+Each is loaded by file path under a module name other than
+``__main__``, so its ``__main__`` guard keeps ``main`` from running."""
 
 from __future__ import annotations
 
