@@ -1,10 +1,10 @@
-"""Unit tests for bench.py's stall-flag calibration (round-7 rework).
+"""Unit tests for the benchmark's host telemetry (perfbench/host.py).
 
-Round 6's floor×1.5 rule flagged 19/31 healthy queries — the committed
-floors were calm-window minima that ordinary sessions read 1.3-2× above.
-The flag now reads a per-query noise band built from per-session minima;
-these tests pin both directions: ordinary session drift must NOT flag,
-an injected regression (the sleep-in-one-query scenario) MUST."""
+Each perfbench run records the 1-minute load average, the share of CPU
+time stolen by the hypervisor and a fixed canary's wall time next to its
+metrics, so that a slow set of runs can be told apart from a host stall.
+These tests pin that the probe reads real /proc numbers on a Linux host
+and that the steal share is the tick-delta ratio over the run."""
 
 from __future__ import annotations
 
@@ -12,495 +12,33 @@ import importlib.util
 import os
 
 _spec = importlib.util.spec_from_file_location(
-    "bench", os.path.join(os.path.dirname(__file__), "..", "bench.py")
+    "perfbench_host",
+    os.path.join(os.path.dirname(__file__), "..", "perfbench", "host.py"),
 )
-bench = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(bench)
-
-
-def _ref(sessions, floor=None, plan="abc123"):
-    return {
-        "plan": plan,
-        "floor": floor if floor is not None else min(sessions),
-        "sessions": sessions,
-    }
-
-
-def test_ordinary_session_drift_not_flagged():
-    # committed sessions drift 1.0-1.3; readings up to ~1.7x the median
-    # are this host's measured healthy inter-session spread — no flag.
-    ref = _ref([1.0, 1.2, 1.3])
-    assert bench.annotate({"q": ref}, "q", 2.0, "abc123") is None
-
-
-def test_injected_regression_flagged():
-    ref = _ref([1.0, 1.05, 1.1])
-    note = bench.annotate({"q": ref}, "q", 3.0, "abc123")
-    assert note and note["suspect_stall"] and note["threshold"] < 3.0
-
-
-def test_zero_mad_does_not_flag_everything():
-    # identical session minima → MAD 0; the 75%/0.4 s guards must keep
-    # an ordinary next session from flagging.
-    ref = _ref([2.0, 2.0, 2.0])
-    assert bench.annotate({"q": ref}, "q", 3.4, "abc123") is None
-    assert bench.annotate({"q": ref}, "q", 3.6, "abc123")
-
-
-def test_subsecond_queries_need_absolute_excess():
-    ref = _ref([0.2, 0.2, 0.25])
-    # +0.4 s on a 0.2 s query is scheduler jitter, not a stall (scale
-    # section's 0.4 s absolute term)
-    assert bench.annotate({"q": ref}, "q", 0.55, "abc123") is None
-    assert bench.annotate({"q": ref}, "q", 0.9, "abc123")
-
-
-def test_headline_abs_floor_sees_fast_query_regressions():
-    """Round-8 (r7 verdict #5): under the old 0.4 s absolute term a
-    0.2 s-median headline query tolerated ~2.5× same-plan slowdowns
-    silently; the headline section's 0.15 s term must flag them while
-    still passing ordinary jitter."""
-    ref = _ref([0.2, 0.2, 0.25])
-    hl = bench.ABS_NOISE_SEC["headline"]
-    # ordinary jitter (+0.1 s) stays quiet...
-    assert bench.annotate({"q": ref}, "q", 0.3, "abc123", hl) is None
-    # ...a 2.6× reading flags (it did NOT under the 0.4 s term)
-    assert bench.annotate({"q": ref}, "q", 0.52, "abc123", hl)
-    assert bench.annotate({"q": ref}, "q", 0.52, "abc123") is None
-
-
-def test_zero_valued_session_minimum_still_counts():
-    """A 0.0 recorded session (sub-millisecond reading rounded to 3
-    decimals) must count toward the ≥3-session band — filtering with
-    truthiness would silently drop it and leave the query on the
-    2×-floor fallback despite having 3 recorded sessions."""
-    ref = {"plan": "abc123", "floor": 0.0, "sessions": [0.0, 0.001, 0.001]}
-    thr = bench.stall_threshold(ref, 0.15)
-    # band exists (3 sessions) and is the absolute term, not 2×floor=0
-    assert thr is not None and 0.15 <= thr <= 0.16
-
-
-def test_committed_floor_sessions_replay_clean():
-    """Replay EVERY recorded session minimum in the committed
-    BENCH_FLOORS.json against its own band (headline 0.15 s absolute
-    term, scale 0.4 s): the only flags allowed are the adjudicated
-    host-anomaly readings, each with a recorded isolated re-measure
-    showing steady-state inside the band (provenance per reading:
-    ROUND7_NOTES for the r7 floor-session episodes, ROUND8_NOTES for
-    the r7 driver reading and the r8 episodes). Anything else flagging
-    would be a false flag. Note the set is maintained, not append-only:
-    r7's text_token_budget_sample 2.642 stopped flagging when drift
-    readings widened its band, the r7/r8 text_dsir_weights /
-    text_token_budget_sample readings left the file entirely when the
-    round-8 NULL-semantics fixes changed those queries' plans and reset
-    their sessions (a plan change starts a fresh band by design), and
-    seven r8-era entries (sim_kmeans_clusters 0.892 / 1.25,
-    evt_range_join 1.13, text_lm_perplexity 2.475, evt_rolling_24h
-    0.803, text_dup_span_trim 5.573 scale, win_equidepth_histogram
-    7.241) were pruned in round 10 when the r9 session-4 floors write
-    widened their bands past them. The replay itself is
-    ``bench.replay_floor_flags`` — the same function the floors-write
-    gate runs, so this test and the gate can never disagree about what
-    counts as an open flag."""
-    import json
-
-    with open(os.path.join(os.path.dirname(__file__), "..", "BENCH_FLOORS.json")) as f:
-        floors = json.load(f)
-    adjudicated = {
-        # --- r8 third floor cycle (sessions 1-3 of 6): one SUSTAINED
-        # host slow window — 68.5 / 62.8 / 69.7 s headline vs the
-        # ~41-45 s committed medians, ~1 h, the longest episode of the
-        # class ROUND3_NOTES first documented. Host load oscillates
-        # without any engine process running (observed 1-min load 0.4 →
-        # 12.9 across idle polls), so single isolated re-measures can
-        # themselves land in warm patches; the adjudication evidence
-        # below is therefore isolated idle re-measures PLUS session 6 —
-        # a complete clean floor session (44.1 s headline, ZERO flags,
-        # plans unchanged) in which every reading below sat at
-        # steady-state far inside its band (full table in ROUND8_NOTES).
-        # An entry belongs here when it flags against its band and its
-        # own session telemetry shows NO mechanical slow window —
-        # historically the pre-telemetry (sid None) readings, but a
-        # sid-carrying reading from a QUIET session can also land here
-        # when it is a genuine one-off transient; each entry must cite
-        # recorded steady-state evidence (later sessions / isolated
-        # re-measures inside the band). Entries leave as the 8-session
-        # cap rotates them out, and every change in either direction
-        # passes through bench.py's floors-write gate.
-        # After the round-10 floor session rotated the r8 slow-cycle
-        # sessions out, six entries left the set (dedup_embedding_cosine
-        # 4.16, evt_sliding_users_24h 5.753 headline, rel_multi_join_chain
-        # 2.483, text_dup_span_trim 4.876, text_redact_pii 1.284,
-        # sim_pq_topk 2.218) and two older adjudicated readings RE-flag
-        # because the same rotation pulled their bands' medians down —
-        # both were previously enumerated and left when r9 drift widened
-        # the bands, both verified steady-state then, both among the
-        # oldest readings in their windows (2-4 more sessions from
-        # rotating out):
-        # (the second r10 session rotated out scale win_latest_row 1.7
-        # and scale evt_sliding_users_24h 3.998 in turn; the third,
-        # headline dedup_minhash_lsh 7.322; the fourth, the last
-        # pre-telemetry entry, scale text_dsir_weights 3.635)
-        # One sid-carrying entry: r10 session 1 (sid 5) read this
-        # same-plan transient 0.039 s over the band the fourth r10
-        # session's append exposed; its own telemetry is quiet (load
-        # 0.22, steal 0.006), so it cannot auto-adjudicate — but the
-        # three subsequent quiet sessions read 1.808 / 0.868 / 1.254,
-        # all far inside the band, so steady-state is unaffected and
-        # the reading rotates out within four more sessions.
-        ("scale", "text_token_budget_sample", 2.965),
-    }
-    for section, entries in floors.items():
-        if section.startswith("_"):
-            continue  # _hosts: the session telemetry map, not a section
-        for name, ref in entries.items():
-            n_sessions = len(ref.get("sessions", []))
-            assert n_sessions >= 3, (
-                f"{section}/{name}: {n_sessions} sessions — a plan "
-                "change must land with >=3 fresh floor sessions"
-            )
-    flagged, auto = bench.replay_floor_flags(floors)
-    # The r9 session-4 readings (evt_asof_join 0.983, cdc_merge_state
-    # 6.411, text_segment_dedup 4.306) must auto-adjudicate via the
-    # session's recorded scale load1 ramp (4.75 → 23.45 from a 0.13
-    # start) — the round-10 SECTION_LOAD1_MAX clause, not enumeration.
-    assert flagged - auto == adjudicated
-
-
-def test_fewer_than_three_sessions_falls_back_to_2x_floor():
-    ref = {"plan": "abc123", "floor": 1.0, "sessions": [1.0]}
-    assert bench.annotate({"q": ref}, "q", 1.9, "abc123") is None
-    assert bench.annotate({"q": ref}, "q", 2.1, "abc123")
-
-
-def test_plan_change_wins_over_stall():
-    ref = _ref([1.0, 1.0, 1.0])
-    note = bench.annotate({"q": ref}, "q", 9.0, "DIFFERENT")
-    assert note == {"plan_changed": True}
-
-
-def test_legacy_floor_only_entries_still_work():
-    # pre-round-7 BENCH_FLOORS.json had no "sessions" key at all
-    ref = {"plan": "abc123", "floor": 1.0}
-    assert bench.annotate({"q": ref}, "q", 1.9, "abc123") is None
-    assert bench.annotate({"q": ref}, "q", 2.1, "abc123")
+host = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(host)
 
 
 def test_host_section_math():
-    """Busy/steal fractions derive from /proc/stat tick deltas."""
-    before = {"load1": 0.4, "total": 10_000, "idle": 9_000, "steal": 0}
-    after = {"load1": 30.0, "total": 20_000, "idle": 12_000, "steal": 500}
-    s = bench.host_section(before, after, wall=42.0)
-    assert s["load1"] == [0.4, 30.0]
-    assert s["cpu_busy"] == 0.7      # 1 - 3000/10000
-    assert s["cpu_steal"] == 0.05    # 500/10000
-    assert s["wall_sec"] == 42.0
-
-
-def test_host_slow_window_classifier():
-    """The mechanical adjudication rule (round-9 verdict #2): a flagged
-    reading is labeled slow-window from committed telemetry alone when
-    the box was loaded BEFORE the run, the fixed-workload canary ran
-    long, or hypervisor steal ate the section — and stays quiet on a
-    healthy session so real regressions still surface."""
-    healthy = {
-        "load_start": 0.3,
-        "canary_sec": 8.0,
-        # section load1 inflated by the bench's OWN local[32] threads —
-        # the recorded clean ceiling is ~14 (sid 1, scale), which must
-        # NOT read as external load
-        "headline": {"load1": [1.0, 14.0], "cpu_busy": 0.8,
-                     "cpu_steal": 0.001, "wall_sec": 45.0},
-    }
-    assert bench.host_slow_window(healthy, ref_canary=8.2) == []
-
-    # the r8 judge's observed episode: load 13.8 with nothing running
-    assert bench.host_slow_window({**healthy, "load_start": 13.8}, 8.2)
-    # canary far above the committed reference
-    assert bench.host_slow_window({**healthy, "canary_sec": 20.0}, 8.2)
-    # hypervisor steal during a section
-    stolen = dict(healthy)
-    stolen["scale"] = {"load1": [15.0, 16.0], "cpu_busy": 0.9,
-                       "cpu_steal": 0.12, "wall_sec": 70.0}
-    assert bench.host_slow_window(stolen, 8.2)
-    # mid-run external load ramp (round 10, the r9 session-4 episode:
-    # quiet 0.13 start, scale section load1 ending 23.45 — every other
-    # clause blind to it)
-    ramped = dict(healthy)
-    ramped["scale"] = {"load1": [4.75, 23.45], "cpu_busy": 0.43,
-                       "cpu_steal": 0.04, "wall_sec": 545.0}
-    ev = bench.host_slow_window(ramped, 8.2)
-    assert ev and any("load1 peak" in e for e in ev)
-    # missing/None telemetry never crashes and never auto-adjudicates
-    assert bench.host_slow_window({}, None) == []
-    assert bench.host_slow_window({"headline": {"load1": [None, None]}}, None) == []
+    """Steal share derives from /proc/stat tick deltas over the run."""
+    ticks = iter([(0, 10_000), (500, 20_000)])
+    saved = host._cpu_ticks
+    host._cpu_ticks = lambda: next(ticks)
+    try:
+        t = host.Telemetry()
+        s = t.finish()
+    finally:
+        host._cpu_ticks = saved
+    assert s["host.steal_pct"] == 5.0     # 100 * 500 / 10000
+    assert s["host.load1"] >= 0.0
+    assert s["host.canary_ms"] > 0.0
 
 
 def test_host_probe_reads_this_linux_host():
-    """host_probe must return real /proc numbers here (and tolerate
-    their absence elsewhere by contract)."""
-    p1 = bench.host_probe()
-    assert p1["load1"] is not None and p1["load1"] >= 0.0
-    assert p1["total"] > p1["idle"] > 0
-
-
-def test_flagged_reading_with_slow_window_telemetry_auto_adjudicates():
-    """End-to-end of the round-9 mechanism on synthetic floors data: the
-    same same-plan outlier reading is a REAL flag in a session whose
-    telemetry is healthy, and auto-adjudicated in one whose telemetry
-    shows a slow window."""
-    ref = {"plan": "abc", "floor": 1.0,
-           "sessions": [1.0, 1.1, 1.05, 2.4], "sids": [None, None, 1, 2]}
-    thr = bench.stall_threshold(ref, 0.15)
-    assert ref["sessions"][-1] > thr  # the reading flags
-    slow = {"load_start": 12.0, "canary_sec": 9.0}
-    quiet = {"load_start": 0.2, "canary_sec": 8.1}
-    assert bench.host_slow_window(slow, ref_canary=8.0)
-    assert not bench.host_slow_window(quiet, ref_canary=8.0)
-
-
-def test_headline_only_floors_write_preserves_scale_section():
-    """A headline-only run (SPARK_GRAFT_BENCH_SCALE=0) with floors
-    written must carry the committed scale section forward untouched —
-    it used to drop it entirely, erasing every scale floor/band and
-    putting the stall detector on the loose 2x-floor fallback."""
-    prev = {
-        "_hosts": {"1": {"load_start": 0.2}},
-        "headline": {n: {"plan": "p", "floor": 1.0, "sessions": [1.0],
-                         "sids": [1]} for n in bench.HEADLINE},
-        "scale": {n: {"plan": "s", "floor": 2.0, "sessions": [2.0, 2.1],
-                      "sids": [1, 1]} for n in bench.SCALE_QUERIES},
-    }
-    timings = {n: 1.1 for n in bench.HEADLINE}
-    plans = {n: "p" for n in bench.HEADLINE}
-    out = bench.build_new_floors(prev, {"load_start": 0.3}, timings, plans, None)
-    assert out["scale"] == prev["scale"]
-    # and the headline entries appended this session's minima
-    any_q = bench.HEADLINE[0]
-    assert out["headline"][any_q]["sessions"] == [1.0, 1.1]
-    assert out["headline"][any_q]["sids"] == [1, 2]
-
-
-def test_replay_floor_flags_splits_auto_from_open():
-    """The shared replay primitive: a same-plan outlier reading linked
-    to slow-window telemetry lands in ``auto``; the same reading linked
-    to a quiet session stays an open flag; sub-band readings never
-    appear."""
-    floors = {
-        "_hosts": {
-            "1": {"load_start": 0.2, "canary_sec": 8.0},      # quiet
-            "2": {"load_start": 12.0, "canary_sec": 8.1},     # loaded
-        },
-        "headline": {
-            "q_auto": {"plan": "p", "floor": 1.0,
-                       "sessions": [1.0, 1.05, 1.1, 2.5],
-                       "sids": [None, None, 1, 2]},
-            "q_open": {"plan": "p", "floor": 1.0,
-                       "sessions": [1.0, 1.05, 1.1, 2.5],
-                       "sids": [None, None, 2, 1]},
-            "q_clean": {"plan": "p", "floor": 1.0,
-                        "sessions": [1.0, 1.05, 1.1],
-                        "sids": [None, 1, 2]},
-        },
-    }
-    flagged, auto = bench.replay_floor_flags(floors)
-    assert ("headline", "q_auto", 2.5) in flagged
-    assert ("headline", "q_auto", 2.5) in auto
-    assert ("headline", "q_open", 2.5) in flagged
-    assert ("headline", "q_open", 2.5) not in auto
-    assert not any(n == "q_clean" for _, n, _ in flagged)
-
-
-def test_floors_write_gate_blocks_unadjudicated_changes():
-    """The round-10 snapshot gate: a floors write that introduces a new
-    open (un-adjudicated) flag, or silently drops one the enumerated
-    set still lists, must be named in the blockers dict; a write that
-    leaves the open set unchanged is free to land unattended — exactly
-    the r9 failure (snapshot committed a 4th session with three open
-    flags after the last gate run) made impossible."""
-    base = {
-        "_hosts": {"1": {"load_start": 0.2, "canary_sec": 8.0}},
-        "headline": {
-            "q": {"plan": "p", "floor": 1.0,
-                  "sessions": [1.0, 1.05, 1.1], "sids": [1, 1, 1]},
-        },
-    }
-    # identical open sets → no blockers
-    assert bench.floors_write_blockers(base, base) == {}
-
-    # a new quiet-session outlier reading → "new" blocker
-    import copy
-
-    worse = copy.deepcopy(base)
-    worse["_hosts"]["2"] = {"load_start": 0.3, "canary_sec": 8.1}
-    q = worse["headline"]["q"]
-    q["sessions"], q["sids"] = q["sessions"] + [2.6], q["sids"] + [2]
-    blk = bench.floors_write_blockers(base, worse)
-    assert blk.get("new") == [("headline", "q", 2.6)]
-
-    # the same reading on a LOADED session auto-adjudicates → no blocker
-    slow = copy.deepcopy(worse)
-    slow["_hosts"]["2"]["load_start"] = 12.0
-    assert bench.floors_write_blockers(base, slow) == {}
-
-    # a previously-open flag vanishing (band widened / session rotated
-    # out) orphans the test's enumerated set → "gone" blocker
-    had_open = copy.deepcopy(worse)
-    assert bench.floors_write_blockers(had_open, base).get("gone") == [
-        ("headline", "q", 2.6)
-    ]
-
-
-def test_hosts_trim_keeps_sid_referenced_records():
-    """_hosts trims to the last 16 sessions but must retain any record a
-    sids list still references: headline-only writes carry the scale
-    section forward untouched, so a fixed window would rotate out the
-    telemetry that makes old scale flags mechanically adjudicable."""
-    prev = {
-        "_hosts": {str(i): {"load_start": 0.1 * i} for i in range(1, 21)},
-        "headline": {n: {"plan": "p", "floor": 1.0, "sessions": [1.0],
-                         "sids": [20]} for n in bench.HEADLINE},
-        # scale section still references session 1 — 19 sessions old
-        "scale": {n: {"plan": "s", "floor": 2.0, "sessions": [2.0],
-                      "sids": [1]} for n in bench.SCALE_QUERIES},
-    }
-    timings = {n: 1.0 for n in bench.HEADLINE}
-    plans = {n: "p" for n in bench.HEADLINE}
-    out = bench.build_new_floors(prev, {"load_start": 0.2}, timings, plans, None)
-    hosts = out["_hosts"]
-    assert "1" in hosts, "sid still referenced by the scale section"
-    assert str(21) in hosts, "this write's own record"
-    # the unreferenced old records beyond the window are gone
-    assert "2" not in hosts and "3" not in hosts
-
-
-def test_host_section_honest_nulls_without_proc():
-    """When either probe lacks /proc ticks (non-Linux host, transient
-    read failure) the section must record None busy/steal — not a
-    fabricated 'fully busy, zero steal' — and host_slow_window must
-    treat that as no-evidence rather than crashing."""
-    dead = {"load1": None, "total": 0, "idle": 0, "steal": 0}
-    s = bench.host_section(dead, dead, wall=10.0)
-    assert s["cpu_busy"] is None and s["cpu_steal"] is None
-    assert bench.host_slow_window(
-        {"load_start": None, "canary_sec": None, "headline": s}, None
-    ) == []
-
-
-def test_host_slow_window_evidence_matched_to_section():
-    """Round-11 ADVICE: per-section evidence (steal, mid-run load1 ramp)
-    recorded only during the SCALE section must not adjudicate a
-    HEADLINE flag from the same session — the headline section ran
-    before that load arrived, so a genuine headline regression would be
-    silently dismissed. Session-wide clauses (load_start, canary) apply
-    to both sections."""
-    host = {
-        "load_start": 0.2,
-        "canary_sec": 8.0,
-        "headline": {"load1": [1.0, 5.0], "cpu_busy": 0.8,
-                     "cpu_steal": 0.001, "wall_sec": 45.0},
-        "scale": {"load1": [4.75, 23.45], "cpu_busy": 0.43,
-                  "cpu_steal": 0.04, "wall_sec": 545.0},
-    }
-    # scale-only ramp: evidence for scale flags, NOT headline flags
-    assert bench.host_slow_window(host, 8.2, section="scale")
-    assert bench.host_slow_window(host, 8.2, section="headline") == []
-    # the human-facing default keeps the full-session view
-    assert bench.host_slow_window(host, 8.2)
-    # session-wide clauses still adjudicate either section
-    loaded = {**host, "load_start": 12.0}
-    assert bench.host_slow_window(loaded, 8.2, section="headline")
-
-
-def test_replay_floor_flags_respects_flag_section():
-    """End-to-end through the shared replay primitive: the same outlier
-    reading auto-adjudicates as a scale flag (the session's ramp is in
-    the scale section) but stays OPEN as a headline flag."""
-    ramped_host = {
-        "load_start": 0.2,
-        "canary_sec": 8.0,
-        "headline": {"load1": [1.0, 5.0], "cpu_busy": 0.8,
-                     "cpu_steal": 0.001, "wall_sec": 45.0},
-        "scale": {"load1": [4.75, 23.45], "cpu_busy": 0.43,
-                  "cpu_steal": 0.04, "wall_sec": 545.0},
-    }
-    entry = {"plan": "p", "floor": 1.0,
-             "sessions": [1.0, 1.05, 1.1, 2.5], "sids": [1, 1, 1, 2]}
-    floors = {
-        "_hosts": {"1": {"load_start": 0.2, "canary_sec": 8.0},
-                   "2": ramped_host},
-        "headline": {"q_h": dict(entry)},
-        "scale": {"q_s": dict(entry)},
-    }
-    flagged, auto = bench.replay_floor_flags(floors)
-    assert ("scale", "q_s", 2.5) in auto
-    assert ("headline", "q_h", 2.5) in flagged
-    assert ("headline", "q_h", 2.5) not in auto
-
-
-def test_replay_floor_flags_rejects_excess_sids():
-    """Round-11 ADVICE: a hand-edited floors entry with MORE sids than
-    sessions would zip() values against the wrong session ids (the
-    negative padding multiplier yields no padding), adjudicating
-    against mismatched telemetry — it must fail loudly instead."""
-    import pytest
-
-    floors = {
-        "_hosts": {"1": {"load_start": 0.2}},
-        "headline": {"q": {"plan": "p", "floor": 1.0,
-                           "sessions": [1.0, 1.1], "sids": [1, 1, 1]}},
-    }
-    with pytest.raises(ValueError, match="corrupt floors entry"):
-        bench.replay_floor_flags(floors)
-
-
-def test_bench_front_end_is_side_effect_free():
-    """Round-11 (r10 verdict #2): ``bench.py --help`` used to run the
-    full ~13-minute two-section bench and clobber BENCH_DETAIL.json.
-    The front end must print-and-exit on --help and ERROR on stray
-    operands rather than silently benching."""
-    import pytest
-
-    # no args: parses clean (the normal invocation path)
-    assert bench._parse_args([]) is None
-    with pytest.raises(SystemExit) as e:
-        bench._parse_args(["--help"])
-    assert e.value.code == 0
-    with pytest.raises(SystemExit) as e:
-        bench._parse_args(["garbage"])
-    assert e.value.code == 2
-
-
-def test_adaptive_defers_settle_above_flag_threshold():
-    """Round-11 transient mechanism: a heavy-codegen query's JIT tiering
-    decays over ~3-4 runs, and min-of-2 could settle on an inflated
-    pair of early readings (both committed text_token_budget_sample
-    transients were exactly this). With the committed band's threshold
-    supplied, two agreeing ABOVE-band runs must not settle — the
-    remaining run budget confirms; below-band readings settle exactly
-    as before (no extra cost for healthy queries)."""
-    import time as _t
-
-    def scripted(durations):
-        it = iter(durations)
-
-        def fn():
-            _t.sleep(next(it))
-
-        return fn
-
-    # two agreeing above-threshold runs, then the warmed steady state
-    lo, hi, n = bench._timed_adaptive(
-        scripted([0.5, 0.55, 0.32, 0.32]), flag_threshold=0.45
-    )
-    assert n == 4 and lo < 0.45, (lo, hi, n)
-
-    # same first two runs BELOW the threshold: settles at 2 runs
-    lo, hi, n = bench._timed_adaptive(
-        scripted([0.5, 0.55]), flag_threshold=0.8
-    )
-    assert n == 2 and 0.5 <= lo < 0.55
-
-    # no band (changed plan / no floors): unchanged legacy behavior
-    lo, hi, n = bench._timed_adaptive(scripted([0.5, 0.55]))
-    assert n == 2
+    """The probe must return real /proc numbers here."""
+    steal, total = host._cpu_ticks()
+    assert total > 0 and 0 <= steal <= total
+    s = host.Telemetry().finish()
+    assert s["host.load1"] >= 0.0
+    assert 0.0 <= s["host.steal_pct"] <= 100.0
+    assert s["host.canary_ms"] > 0.0
