@@ -41,7 +41,7 @@ from typing import TYPE_CHECKING
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -49,7 +49,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from land_registry_data_ingestion_spark.operators.merge import (
     cdc_merge,
     init_state,
-    merge_outcome_stats,
+    observed_outcome_stats,
     validate_unique,
 )
 from land_registry_data_ingestion_spark.sources.csv import (
@@ -88,8 +88,9 @@ def write_parquet_file(rows: list[dict], schema: T.StructType, path: str) -> Non
     is written under a hidden name in the same directory (Spark and
     pyarrow readers skip ``.``-prefixed files) and published with
     ``os.replace``, so a reader sees the old file or the new one, never a
-    torn write. Naive datetimes are local time, as Spark's TimestampType
-    reads them, so the driver read and the DataFrame view agree."""
+    torn write. Naive datetimes are UTC — the engine's convention (the
+    default ``now`` is naive UTC) — never host-local time, which a DST
+    gap makes ambiguous."""
     os.makedirs(os.path.dirname(path), exist_ok=True)
     tmp = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.tmp")
     rows = [{f.name: _utc(r.get(f.name)) for f in schema.fields} for r in rows]
@@ -97,24 +98,33 @@ def write_parquet_file(rows: list[dict], schema: T.StructType, path: str) -> Non
     os.replace(tmp, path)
 
 
-def read_parquet_rows(path: str, schema: T.StructType) -> list[dict]:
+def _stored_rows(path: str, schema: T.StructType) -> list[dict]:
     """Every row of the parquet files in directory ``path`` (``[]`` when
-    it does not exist), with timestamps as naive local datetimes — the
-    values Spark's ``collect()`` returns for the same files."""
+    it does not exist), timestamps as the stored UTC instants."""
     if not os.path.isdir(path):
         return []
-    return [
-        {k: _local(v) for k, v in r.items()}
-        for r in pq.read_table(path, schema=to_arrow_schema(schema)).to_pylist()
-    ]
+    return pq.read_table(path, schema=to_arrow_schema(schema)).to_pylist()
+
+
+def read_parquet_rows(path: str, schema: T.StructType) -> list[dict]:
+    """:func:`_stored_rows` with timestamps as naive local datetimes — the
+    values Spark's ``collect()`` returns for the same files."""
+    return [_as_collected(r) for r in _stored_rows(path, schema)]
 
 
 def _utc(v):
-    return v.astimezone(datetime.timezone.utc) if isinstance(v, datetime.datetime) else v
+    if not isinstance(v, datetime.datetime):
+        return v
+    if v.tzinfo is None:
+        return v.replace(tzinfo=datetime.timezone.utc)
+    return v.astimezone(datetime.timezone.utc)
 
 
-def _local(v):
-    return v.astimezone().replace(tzinfo=None) if isinstance(v, datetime.datetime) else v
+def _as_collected(row: dict) -> dict:
+    return {
+        k: v.astimezone().replace(tzinfo=None) if isinstance(v, datetime.datetime) else v
+        for k, v in row.items()
+    }
 
 
 def _part_name() -> str:
@@ -157,13 +167,16 @@ class IngestStore:
         )
 
     def _accepted(self) -> list[dict]:
-        """Archive-decision rows, latest first (W3: max over the ledger)."""
+        """Archive-decision rows, latest first (W3: max over the ledger),
+        ordered on the stored instant: host-local wall-clock times can tie
+        or invert across a DST change."""
         rows = [
             r
-            for r in read_parquet_rows(self.file_log_path, FILE_LOG_SCHEMA)
+            for r in _stored_rows(self.file_log_path, FILE_LOG_SCHEMA)
             if r["decision"] == "archive"
         ]
-        return sorted(rows, key=lambda r: (r["run_datetime"], r["run_id"]), reverse=True)
+        rows.sort(key=lambda r: (r["run_datetime"], r["run_id"]), reverse=True)
+        return [_as_collected(r) for r in rows]
 
     def last_accepted(self) -> dict | None:
         """Latest archive-decision row."""
@@ -220,7 +233,7 @@ class IngestStore:
         for stale in (tmp, old):
             if os.path.isdir(stale):
                 shutil.rmtree(stale)
-        rows = read_parquet_rows(self.file_log_path, FILE_LOG_SCHEMA)
+        rows = _stored_rows(self.file_log_path, FILE_LOG_SCHEMA)
         write_parquet_file(rows, FILE_LOG_SCHEMA, os.path.join(tmp, _part_name()))
         os.rename(self.file_log_path, old)
         os.rename(tmp, self.file_log_path)
@@ -321,7 +334,8 @@ def ingest_snapshot(
     # dir and raises, and since readers resolve state through the ledger
     # pointer, the partial write was never visible. Monthly batches keep
     # the up-front ``_gate_batch`` (they are small; failing before any
-    # work is the better trade there).
+    # work is the better trade there, and its aggregate also finds the
+    # partitions the merge touches).
     key = "transaction_unique_id"
     df = read_price_paid_csv(store.spark, csv_path, n_columns=n_columns)
     gate_obs = Observation()
@@ -393,57 +407,77 @@ def _assert_unique(df: DataFrame, key_col: str, what: str) -> None:
 
 
 def _gate_batch(
-    store: ManifestStore, csv_path: str, n_columns: int, strict: bool, what: str
-) -> DataFrame:
-    """Read the staged file and enforce every batch invariant in ONE
-    aggregate pass over one parse:
+    store: ManifestStore,
+    updates: DataFrame,
+    key_col: str,
+    op_col: str,
+    what: str,
+    validate: bool = True,
+    rejects: DataFrame | None = None,
+) -> set[int]:
+    """The merge's first Spark action: enforce every batch invariant and
+    find the partitions the merge touches in ONE collect
+    (:meth:`~.state.ManifestStore.probe_batch`) — a one-row aggregate over
+    the batch cross-joined with the one-row old-year probe. Returns the
+    touched years. The invariants (``validate``):
 
-    - ``strict`` (default): no row's price/date failed its cast — the
-      reference crashes on such rows (DB constraint); this engine refuses
-      with samples instead of silently nulling values into state;
-    - ≤1 row per business key — the invariant the reference enforces via
-      ``.one()`` crashing; a duplicate would fan out the merge join.
+    - no row's price/date failed its cast, when ``rejects`` (the strict
+      CSV parse's quarantine) is given — the reference crashes on such
+      rows (DB constraint); this engine refuses with samples instead of
+      silently nulling values into state;
+    - ≤1 row per non-NULL key (``count(key)`` against
+      ``count_distinct(key)``; NULL keys are ``invalid_key`` rows, not
+      duplicates) — the invariant the reference enforces via ``.one()``
+      crashing; a duplicate would fan out the merge join;
+    - only A/C/D ops (reference RuntimeError,
+      database_updater.py:1011-1013).
 
-    Both checks collapse into a single scan-wide aggregate (count /
-    count_distinct / conditional counts — partial-aggregated, so the
-    shuffle is one row per task, unlike the groupBy-on-key probe this
-    replaces). The happy path therefore costs exactly two parses of the
-    staged CSV per run: this gate and the state write. Sample rows for
-    the error message are fetched by a targeted query only on the
-    failure path."""
-    key = "transaction_unique_id"
-    df, rejects = read_price_paid_csv_with_rejects(
-        store.spark, csv_path, n_columns=n_columns
-    )
-    aggs = [
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count_distinct(F.col(key)).alias("n_keys"),
-    ]
-    if strict:
-        aggs.append(
-            F.sum(
-                (F.col("price").isNull() | F.col("transaction_date").isNull())
-                .cast("long")
-            ).alias("n_bad")
-        )
-    g = df.agg(*aggs).collect()[0]
-    if strict and g["n_bad"]:
+    Count and conditional-count aggregates partial-aggregate, so the
+    shuffle is one row per task. Sample rows for the error message are
+    fetched by a targeted query only on the failure path."""
+    aggs = []
+    if validate:
+        aggs = [
+            F.count(key_col).alias("n_keyed"),
+            F.count_distinct(key_col).alias("n_keys"),
+            F.count(F.when(_outside_acd(op_col), 1)).alias("n_bad_op"),
+        ]
+        if rejects is not None:
+            bad = F.col("price").isNull() | F.col("transaction_date").isNull()
+            aggs.append(F.count(F.when(bad, 1)).alias("n_bad"))
+    g, years = store.probe_batch(updates, key_col, aggs)
+    if validate and rejects is not None and g["n_bad"]:
         bad = rejects.limit(5).collect()  # failure path only
         sample = ", ".join(
             f"{r['transaction_unique_id']}({r['reject_reason']})" for r in bad
         ) or "all-null after cast: grammar-broken or missing fields"
         raise ValueError(
-            f"malformed values in {csv_path} (e.g. {sample}) — batch "
+            f"malformed values in {what} (e.g. {sample}) — batch "
             f"rejected before any state was written"
         )
-    if g["n_keys"] < g["n_rows"]:
-        dups = validate_unique(df, key).limit(5).collect()  # failure path only
-        sample = ", ".join(str(r[key]) for r in dups)
+    if validate and g["n_keys"] < g["n_keyed"]:
+        dups = validate_unique(updates, key_col).limit(5).collect()
+        sample = ", ".join(str(r[key_col]) for r in dups)
         raise ValueError(
-            f"duplicate {key} in {what} (e.g. {sample}) — "
+            f"duplicate {key_col} in {what} (e.g. {sample}) — "
             f"refusing to merge; the full-outer join would fan out"
         )
-    return df
+    if validate and g["n_bad_op"]:
+        _reject_ops(updates, key_col, op_col, what)
+    return years
+
+
+def _outside_acd(op_col: str) -> Column:
+    return ~F.coalesce(F.col(op_col).isin("A", "C", "D"), F.lit(False))
+
+
+def _reject_ops(updates: DataFrame, key_col: str, op_col: str, what: str) -> None:
+    bad = updates.filter(_outside_acd(op_col)).limit(5).collect()  # failure path only
+    sample = ", ".join(f"{r[key_col]}={r[op_col]!r}" for r in bad)
+    raise ValueError(
+        f"{what} contains ops outside A/C/D (e.g. {sample}) — batch "
+        f"rejected, state unchanged"
+    )
 
 
 def ingest_monthly_update(
@@ -458,13 +492,16 @@ def ingest_monthly_update(
     """Incremental A/C/D ingestion: CDC-merge into the current snapshot,
     write a new content-addressed state, append ledger + outcome counters.
 
+    The staged file is parsed ONCE and persisted for the run's two Spark
+    actions: the gate (:func:`_gate_batch`, which also finds the touched
+    partitions) and the state write (:func:`merge_update_frame`).
+
     Invariant gates (the reference crashes via ``.one()``; here the run
     fails with an actionable error BEFORE any state is written):
 
-    - the update batch must have ≤1 row per key — probed every run (the
-      batch is small, the probe is one aggregate over it);
-    - the batch must contain only A/C/D ops — detected from the outcome
-      counters (reference RuntimeError, database_updater.py:1011-1013);
+    - the update batch must have ≤1 row per key and only A/C/D ops —
+      probed every run (the batch is small, the probe is one aggregate
+      over it);
     - the current state is unique *by induction*: validated when the
       snapshot was loaded (``ingest_snapshot``) and preserved by the
       merge (one output row per key). ``validate_current=True`` adds an
@@ -477,20 +514,29 @@ def ingest_monthly_update(
     if skipped:
         return skipped
 
-    updates = _gate_batch(
-        store, csv_path, n_columns, strict, "monthly update batch"
+    updates, rejects = read_price_paid_csv_with_rejects(
+        store.spark, csv_path, n_columns=n_columns
     )
-    return merge_update_frame(
-        store,
-        updates,
-        run_id=run_id,
-        now=now,
-        source="monthly",
-        token=sha,
-        source_path=csv_path,
-        validate_batch=False,  # _gate_batch above already probed the key
-        validate_current=validate_current,
-    )
+    updates = updates.persist()
+    try:
+        years = _gate_batch(
+            store, updates, "transaction_unique_id", "record_op",
+            f"monthly update batch {csv_path}", rejects=rejects if strict else None,
+        )
+        return merge_update_frame(
+            store,
+            updates,
+            run_id=run_id,
+            now=now,
+            source="monthly",
+            token=sha,
+            source_path=csv_path,
+            validate_batch=False,  # _gate_batch above already validated it
+            validate_current=validate_current,
+            touched_years=years,
+        )
+    finally:
+        updates.unpersist()
 
 
 def merge_update_frame(
@@ -505,11 +551,19 @@ def merge_update_frame(
     source_path: str | None = None,
     validate_batch: bool = True,
     validate_current: bool = False,
+    touched_years: set[int] | None = None,
 ) -> dict:
     """CDC-merge an already-typed A/C/D update FRAME into the store — the
     frame-level core of :func:`ingest_monthly_update`, shared by the
     streaming sink (`streaming/cdc_sink.py`), where batches arrive as
     DataFrames with no file to sha.
+
+    Two Spark actions: the gate (:func:`_gate_batch`; skipped when the
+    caller already ran it and passes its ``touched_years``) and the state
+    write, whose per-(op, outcome) counters ride the write as observed
+    metrics — no second join for the operation log. A batch the gate did
+    not validate (``validate_batch=False``) that turns out to hold an op
+    outside A/C/D has its uncommitted state discarded and is rejected.
 
     Exactly-once by ``run_id``: if the ledger already holds an accepted
     run with this id the call is a no-op returning that row — Structured
@@ -522,9 +576,12 @@ def merge_update_frame(
     if prior is not None:
         return prior
 
-    if validate_batch:
-        _assert_unique(updates, key_col, f"{source} update batch {run_id}")
-    current, carry = store.current_for_merge(updates, key_col)
+    what = f"{source} update batch {run_id}"
+    if touched_years is None:
+        touched_years = _gate_batch(
+            store, updates, key_col, op_col, what, validate=validate_batch
+        )
+    current, carry = store.current_for_merge(updates, key_col, touched_years)
     if validate_current:
         _assert_unique(current, key_col, "current state")
     value_cols = [
@@ -547,24 +604,16 @@ def merge_update_frame(
         op_col=op_col,
         batch_timestamp=F.lit(now),
     )
-    stats_rows = merge_outcome_stats(result.outcomes).collect()
-    if any(r["outcome"] == "invalid_op" for r in stats_rows):
-        bad = result.invalid_ops.limit(5).collect()
-        sample = ", ".join(f"{r[key_col]}={r[op_col]!r}" for r in bad)
-        raise ValueError(
-            f"{source} batch {run_id} contains ops outside A/C/D "
-            f"(e.g. {sample}) — batch rejected, state unchanged"
-        )
     token = token or hashlib.sha256(run_id.encode()).hexdigest()
     location = store.state_path(token)
-    row_count = store.write_merged(result.new_state, location, carry)
-    store._append_operation_log(
-        run_id,
-        [
-            {"record_op": r[op_col], "outcome": r["outcome"], "n_rows": r["n_rows"]}
-            for r in stats_rows
-        ],
-    )
+    obs = Observation()
+    row_count = store.write_merged(result.observed_state(obs), location, carry)
+    counters = obs.get
+    if counters["invalid_op"]:
+        if all(r["state_location"] != location for r in store._accepted()):
+            store.discard_state_at(location)
+        _reject_ops(updates, key_col, op_col, what)
+    store._append_operation_log(run_id, observed_outcome_stats(counters, op_col))
     row = record_run(
         store, run_id, source_path or f"{source}:{run_id}", "monthly", token, now,
         row_count, location,

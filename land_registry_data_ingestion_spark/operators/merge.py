@@ -40,10 +40,9 @@ round-trips, no driver loops. Output overwrites the state table
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-from functools import reduce
+from functools import cached_property
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 # Outcome vocabulary (op_outcome), feeding the A8 statistics operator.
@@ -61,31 +60,87 @@ OUTCOMES = [
     "delete_ignore_deleted",
     "delete_ignore_missing",
 ]
+_OP_OF = dict(zip(OUTCOMES, "AAAACCCCDDDD"))
 
 
-@dataclass
 class MergeResult:
-    new_state: DataFrame  # post-merge current state (live + soft-deleted)
-    outcomes: DataFrame  # one row per update: key, record_op, outcome
-    invalid_ops: DataFrame  # updates whose op ∉ A/C/D (reference raises)
-    # One row per update: key, old_live/old_<values>, new_live/new_<values>
-    # — the before/after images the merge join already holds, exposed so
-    # incremental view maintenance (operators/rollup.py) can update
-    # aggregates in O(batch) without re-scanning state.
-    transitions: DataFrame
+    """The merge's outputs, all projections of ONE annotated join (the
+    joined cur/upd row space plus its ``_outcome`` column).
+
+    ``new_state`` is the post-merge current state (live + soft-deleted).
+    ``outcomes`` (one row per update: key, record_op, outcome),
+    ``invalid_ops`` (updates whose op ∉ A/C/D or whose key is NULL — the
+    reference raises) and ``transitions`` (one row per keyed update: key,
+    old_live/old_<values>, new_live/new_<values> — the before/after
+    images incremental view maintenance in ``operators/rollup.py`` reads
+    to update aggregates in O(batch)) are built only when read: the store
+    path writes ``new_state`` and takes its counters as observed metrics
+    (:meth:`observed_state`), so it never plans them."""
+
+    def __init__(self, annotated: DataFrame, sql: dict):
+        self._annotated = annotated
+        self._sql = sql
+
+    def _state_of(self, annotated: DataFrame) -> DataFrame:
+        q = self._sql
+        return annotated.filter(f"NOT {q['phantom']}").selectExpr(
+            q["key"], *q["values"], *q["audit"]
+        )
+
+    @cached_property
+    def new_state(self) -> DataFrame:
+        return self._state_of(self._annotated)
+
+    def observed_state(self, observation: Observation) -> DataFrame:
+        """``new_state`` whose action also reports the merge's outcome
+        counters to ``observation`` — counted on the annotated join BEFORE
+        the phantom filter, so every update row counts once (filters do
+        not push below an observation). Metrics: one count per outcome in
+        :data:`OUTCOMES`, ``invalid_key_<op>`` for NULL-keyed A/C/D rows,
+        and ``invalid_op``: rows whose op is outside A/C/D, keyed or not.
+        :func:`observed_outcome_stats` turns them into ledger rows."""
+        op = self._sql["op"]
+        counts = {o: f"_outcome = '{o}'" for o in OUTCOMES}
+        for o in "ACD":
+            counts[f"invalid_key_{o}"] = f"_outcome = 'invalid_key' AND {op} = '{o}'"
+        counts["invalid_op"] = (
+            f"_outcome IS NOT NULL AND NOT coalesce({op} IN ('A', 'C', 'D'), false)"
+        )
+        metrics = [
+            F.expr(f"count(CASE WHEN {cond} THEN 1 END)").alias(name)
+            for name, cond in counts.items()
+        ]
+        return self._state_of(self._annotated.observe(observation, *metrics))
+
+    @cached_property
+    def outcomes(self) -> DataFrame:
+        q = self._sql
+        return self._annotated.filter(q["upd_exists"]).selectExpr(*q["outcomes"])
+
+    @cached_property
+    def invalid_ops(self) -> DataFrame:
+        return self.outcomes.filter("outcome IN ('invalid_op', 'invalid_key')")
+
+    @cached_property
+    def transitions(self) -> DataFrame:
+        q = self._sql
+        return self._annotated.filter(q["upd_keyed"]).selectExpr(*q["transitions"])
 
 
-def _all_values_equal(
-    value_cols: list[str], cur_prefix: str = "cur.", upd_prefix: str = "upd."
-) -> Column:
-    """Null-safe conjunctive equality over every value column (P4)."""
-    return reduce(
-        lambda a, b: a & b,
-        [
-            F.col(f"{cur_prefix}{c}").eqNullSafe(F.col(f"{upd_prefix}{c}"))
-            for c in value_cols
-        ],
-    )
+def observed_outcome_stats(metrics: dict, op_col: str = "record_op") -> list[dict]:
+    """The non-zero ``(record_op, outcome, n_rows)`` counters of
+    :meth:`MergeResult.observed_state`'s metrics — the rows
+    :func:`merge_outcome_stats` would aggregate from ``outcomes``, for a
+    batch with no op outside A/C/D."""
+    rows = []
+    for name, n in metrics.items():
+        if not n or name == "invalid_op":
+            continue
+        if name.startswith("invalid_key_"):
+            rows.append({op_col: name[-1], "outcome": "invalid_key", "n_rows": n})
+        else:
+            rows.append({op_col: _OP_OF[name], "outcome": name, "n_rows": n})
+    return rows
 
 
 def validate_unique(df: DataFrame, key_col: str) -> DataFrame:
@@ -204,56 +259,58 @@ def _merge_from_joined(
 ) -> MergeResult:
     """Decision cascade + projections over the joined cur/upd row space —
     either a real full-outer join (alias-scoped "cur."/"upd." columns)
-    or the co-derived flat form ("_cur_"/"_upd_" attributes)."""
+    or the co-derived flat form ("_cur_"/"_upd_" attributes).
 
-    def cur(n: str) -> Column:
-        return F.col(f"{cur_prefix}{n}")
+    Every expression is SQL text over those names, parsed by the JVM in
+    one ``selectExpr``/``filter`` per frame: building the same cascade
+    from Column objects cost ~4,000 py4j round trips per merge."""
 
-    def upd(n: str) -> Column:
-        return F.col(f"{upd_prefix}{n}")
+    def ref(prefix: str, n: str) -> str:
+        n = n.replace("`", "``")
+        return f"{prefix[:-1]}.`{n}`" if prefix.endswith(".") else f"`{prefix}{n}`"
 
-    cur_exists = cur("_cur_present").isNotNull()
-    upd_exists = upd("_upd_present").isNotNull()
-    upd_keyed = upd_exists & upd(key_col).isNotNull()
-    cur_deleted = cur_exists & cur("is_deleted")
-    cur_live = cur_exists & ~cur("is_deleted")
-    identical = cur_live & _all_values_equal(value_cols, cur_prefix, upd_prefix)
+    def cur(n: str) -> str:
+        return ref(cur_prefix, n)
+
+    def upd(n: str) -> str:
+        return ref(upd_prefix, n)
+
+    def name(n: str) -> str:
+        return "`" + n.replace("`", "``") + "`"
+
+    def is_in(*labels: str) -> str:
+        return "_outcome IN (" + ", ".join(f"'{x}'" for x in labels) + ")"
+
+    cur_exists = f"({cur('_cur_present')} IS NOT NULL)"
+    upd_exists = f"({upd('_upd_present')} IS NOT NULL)"
+    upd_keyed = f"({upd_exists} AND {upd(key_col)} IS NOT NULL)"
+    cur_deleted = f"({cur_exists} AND {cur('is_deleted')})"
+    cur_live = f"({cur_exists} AND NOT {cur('is_deleted')})"
+    # null-safe conjunctive equality over every value column (P4)
+    identical = f"({cur_live} AND " + " AND ".join(
+        f"({cur(c)} <=> {upd(c)})" for c in value_cols
+    ) + ")"
     op = upd(op_col)
 
-    outcome = (
-        F.when(~upd_exists, F.lit(None).cast("string"))  # untouched state row
-        # a NULL key can address no row (the reference's PK is NOT NULL —
-        # its per-row path would fail the batch); surfaced like invalid
-        # ops so callers can reject the batch, counted in the ledger's
-        # input_file_row_count only.
-        .when(~upd_keyed, F.lit("invalid_key"))
-        .when(
-            op == "A",
-            F.when(identical, "add_ignore")
-            .when(cur_live, "add_change")
-            .when(cur_deleted, "add_undelete_change")
-            .otherwise("add_insert"),
+    # A NULL key can address no row (the reference's PK is NOT NULL — its
+    # per-row path would fail the batch); surfaced like invalid ops so
+    # callers can reject the batch, counted in the ledger's
+    # input_file_row_count only.
+    branches = " ".join(
+        f"WHEN {op} = '{o}' THEN CASE WHEN {identical} THEN '{same}' "
+        f"WHEN {cur_live} THEN '{live}' WHEN {cur_deleted} THEN '{deleted}' "
+        f"ELSE '{missing}' END"
+        for o, (same, live, deleted, missing) in zip(
+            "ACD", [OUTCOMES[i : i + 4] for i in range(0, 12, 4)]
         )
-        .when(
-            op == "C",
-            F.when(identical, "change_ignore")
-            .when(cur_live, "change_change")
-            .when(cur_deleted, "change_ignore_deleted")
-            .otherwise("change_insert"),
-        )
-        .when(
-            op == "D",
-            F.when(identical, "delete_delete")
-            .when(cur_live, "delete_change_delete")
-            .when(cur_deleted, "delete_ignore_deleted")
-            .otherwise("delete_ignore_missing"),
-        )
-        .otherwise(F.lit("invalid_op"))
     )
+    outcome = (
+        f"CASE WHEN NOT {upd_exists} THEN CAST(NULL AS STRING) "  # untouched state row
+        f"WHEN NOT {upd_keyed} THEN 'invalid_key' {branches} ELSE 'invalid_op' END"
+    )
+    annotated = joined.withColumns({"_merge_ts": ts, "_outcome": F.expr(outcome)})
 
-    annotated = joined.withColumn("_outcome", outcome)
-
-    takes_update_values = F.col("_outcome").isin(
+    takes_update_values = is_in(
         "add_change",
         "add_undelete_change",
         "add_insert",
@@ -261,39 +318,32 @@ def _merge_from_joined(
         "change_insert",
         "delete_change_delete",
     )
-    becomes_deleted = F.col("_outcome").isin(
-        "delete_delete", "delete_change_delete"
-    ) | (F.col("_outcome").isNull() & F.coalesce(cur("is_deleted"), F.lit(False)))
-    becomes_undeleted = F.col("_outcome") == "add_undelete_change"
-    is_insert = F.col("_outcome").isin("add_insert", "change_insert")
-    is_change = F.col("_outcome").isin(
+    deletes = is_in("delete_delete", "delete_change_delete")
+    becomes_deleted = (
+        f"({deletes} OR (_outcome IS NULL AND coalesce({cur('is_deleted')}, false)))"
+    )
+    becomes_undeleted = "(_outcome = 'add_undelete_change')"
+    is_insert = is_in("add_insert", "change_insert")
+    is_change = is_in(
         "add_change", "add_undelete_change", "change_change", "delete_change_delete"
     )
+    is_deleted = (
+        f"CASE WHEN {becomes_undeleted} THEN false WHEN {becomes_deleted} THEN true "
+        f"ELSE coalesce({cur('is_deleted')}, false) END"
+    )
 
-    key = F.coalesce(cur(key_col), upd(key_col)).alias(key_col)
-    values = [
-        F.when(takes_update_values, upd(c))
-        .otherwise(cur(c))
-        .alias(c)
-        for c in value_cols
-    ]
+    def new_value(c: str) -> str:
+        return f"CASE WHEN {takes_update_values} THEN {upd(c)} ELSE {cur(c)} END"
+
     audit = [
-        F.when(is_insert, ts).otherwise(cur("created_datetime")).alias(
-            "created_datetime"
-        ),
-        F.when(is_change, ts).otherwise(cur("updated_datetime")).alias(
-            "updated_datetime"
-        ),
-        F.when(becomes_undeleted, F.lit(None).cast("timestamp"))
-        .when(
-            F.col("_outcome").isin("delete_delete", "delete_change_delete"), ts
-        )
-        .otherwise(cur("deleted_datetime"))
-        .alias("deleted_datetime"),
-        F.when(becomes_undeleted, F.lit(False))
-        .when(becomes_deleted, F.lit(True))
-        .otherwise(F.coalesce(cur("is_deleted"), F.lit(False)))
-        .alias("is_deleted"),
+        f"CASE WHEN {is_insert} THEN _merge_ts ELSE {cur('created_datetime')} END "
+        "AS created_datetime",
+        f"CASE WHEN {is_change} THEN _merge_ts ELSE {cur('updated_datetime')} END "
+        "AS updated_datetime",
+        f"CASE WHEN {becomes_undeleted} THEN CAST(NULL AS TIMESTAMP) "
+        f"WHEN {deletes} THEN _merge_ts ELSE {cur('deleted_datetime')} END "
+        "AS deleted_datetime",
+        f"{is_deleted} AS is_deleted",
     ]
 
     # Cases where the update side exists but nothing may be inserted: a
@@ -324,60 +374,44 @@ def _merge_from_joined(
     #   _outcome = 'invalid_op'            ⟺ upd_keyed ∧ op ∉ {A,C,D}
     # (each arm null-safe so phantom is never NULL).
     miss = (
-        ~F.coalesce(identical, F.lit(False))
-        & ~F.coalesce(cur_live, F.lit(False))
-        & ~F.coalesce(cur_deleted, F.lit(False))
+        f"NOT coalesce({identical}, false) AND NOT coalesce({cur_live}, false) "
+        f"AND NOT coalesce({cur_deleted}, false)"
     )
-    phantom = upd_exists & (
-        (upd_keyed & F.coalesce(op == "D", F.lit(False)) & miss)
-        | (~upd_keyed & ~cur_exists)
-        | (
-            upd_keyed
-            & ~F.coalesce(op.isin("A", "C", "D"), F.lit(False))
-            & ~cur_exists
-        )
+    phantom = (
+        f"({upd_exists} AND ("
+        f"({upd_keyed} AND coalesce({op} = 'D', false) AND {miss}) "
+        f"OR (NOT {upd_keyed} AND NOT {cur_exists}) "
+        f"OR ({upd_keyed} AND NOT coalesce({op} IN ('A', 'C', 'D'), false) "
+        f"AND NOT {cur_exists})))"
     )
-    new_state = annotated.filter(~phantom).select(key, *values, *audit)
-
-    outcomes = annotated.filter(upd_exists).select(
-        upd(key_col).alias(key_col),
-        upd(op_col).alias(op_col),
-        F.col("_outcome").alias("outcome"),
-    )
-    invalid_ops = outcomes.filter(
-        F.col("outcome").isin("invalid_op", "invalid_key")
-    )
-
-    # Before/after images for IVM: same annotated probe, no extra join.
-    # A touched row is live AFTER the merge iff it survives into
-    # new_state and its final is_deleted is false (same expressions the
-    # state projection uses).
-    survives = ~phantom
-    new_is_deleted = (
-        F.when(becomes_undeleted, F.lit(False))
-        .when(becomes_deleted, F.lit(True))
-        .otherwise(F.coalesce(cur("is_deleted"), F.lit(False)))
-    )
-    # keyed only: a NULL-keyed update touches no state, so it has no
-    # before/after image — and a NULL group key would pollute IVM rollups
-    transitions = annotated.filter(upd_keyed).select(
-        upd(key_col).alias(key_col),
-        cur_live.alias("old_live"),
-        *[cur(c).alias(f"old_{c}") for c in value_cols],
-        (survives & ~new_is_deleted).alias("new_live"),
-        *[
-            F.when(takes_update_values, upd(c))
-            .otherwise(cur(c))
-            .alias(f"new_{c}")
-            for c in value_cols
+    sql = {
+        "op": op,
+        "upd_exists": upd_exists,
+        "upd_keyed": upd_keyed,
+        "phantom": phantom,
+        "key": f"coalesce({cur(key_col)}, {upd(key_col)}) AS {name(key_col)}",
+        "values": [f"{new_value(c)} AS {name(c)}" for c in value_cols],
+        "audit": audit,
+        "outcomes": [
+            f"{upd(key_col)} AS {name(key_col)}",
+            f"{op} AS {name(op_col)}",
+            "_outcome AS outcome",
         ],
-    )
-    return MergeResult(
-        new_state=new_state,
-        outcomes=outcomes,
-        invalid_ops=invalid_ops,
-        transitions=transitions,
-    )
+        # Before/after images for IVM: same annotated probe, no extra
+        # join. A touched row is live AFTER the merge iff it survives into
+        # new_state and its final is_deleted is false (same expressions
+        # the state projection uses). Keyed only: a NULL-keyed update
+        # touches no state, so it has no before/after image — and a NULL
+        # group key would pollute IVM rollups.
+        "transitions": [
+            f"{upd(key_col)} AS {name(key_col)}",
+            f"{cur_live} AS old_live",
+            *[f"{cur(c)} AS {name('old_' + c)}" for c in value_cols],
+            f"NOT {phantom} AND NOT ({is_deleted}) AS new_live",
+            *[f"{new_value(c)} AS {name('new_' + c)}" for c in value_cols],
+        ],
+    }
+    return MergeResult(annotated, sql)
 
 
 def init_state(

@@ -5,11 +5,14 @@ value columns with ``indicator=True`` and splits the result into
 left-only / right-only / both (``LRD/land_registry_database_verify.py:209-236``),
 then optionally repairs the difference (:296-446).
 
-Spark-first: a full-outer equi join on the value tuple — Catalyst plans an
-SMJ over one shuffle of each side; at 100 TB both sides hash-partition on
-the same composite key so the compare is fully parallel. For very wide
-tuples, compare on a fingerprint (xxhash64 of the struct) first and only
-join wide rows for the mismatches.
+Spark-first: ONE aggregate. Both sides are unioned, tagged ``(1, 0)`` and
+``(0, 1)``, and grouped by the compared tuple, so a tuple seen ``m`` times
+on the left and ``n`` times on the right yields the full-outer join's
+``m·n`` ``both`` rows (or ``m`` ``left_only`` / ``n`` ``right_only``) with
+one shuffle of the narrow union instead of two sort-merge sides. At 100 TB
+the group-by hash-partitions on the same composite key, so the compare is
+fully parallel. For very wide tuples, compare on a fingerprint (xxhash64
+of the struct) first and only group wide rows for the mismatches.
 """
 
 from __future__ import annotations
@@ -33,30 +36,39 @@ def reconcile(
     """Full-outer compare of two datasets on ``on`` (default: all shared
     columns), tagging each row with its provenance.
 
-    The join is NULL-SAFE (``eqNullSafe`` / IS NOT DISTINCT FROM): the
-    reference's pandas merge treats NaN join keys as equal
-    (database_verify.py:209-236), so two rows identical on every column
-    except a shared NULL (nullable price/date in the price-paid schema)
-    must report as ``both`` — a plain equi-join would misreport them as
-    left_only + right_only. Null-safe equality still hash-partitions both
-    sides on the key tuple (NULL hashes like any value), so the plan is
-    the same one-shuffle-per-side SMJ."""
+    The compare is NULL-SAFE (IS NOT DISTINCT FROM): the reference's
+    pandas merge treats NaN join keys as equal (database_verify.py:209-236),
+    so two rows identical on every column except a shared NULL (nullable
+    price/date in the price-paid schema) must report as ``both`` — a plain
+    equi-join would misreport them as left_only + right_only. Grouping
+    gives that for free: group keys treat NULLs as equal and normalise NaN
+    and -0.0 the way ``eqNullSafe`` join keys do. ``diff`` repeats each
+    tuple by its multiplicity, as the join would."""
     cols = on if on is not None else [c for c in left.columns if c in right.columns]
-    l = left.select(*cols).withColumn("_in_left", F.lit(True)).alias("l")
-    r = right.select(*cols).withColumn("_in_right", F.lit(True)).alias("r")
-    cond = reduce(
-        lambda a, b: a & b,
-        [F.col(f"l.{c}").eqNullSafe(F.col(f"r.{c}")) for c in cols],
+    grouped = (
+        left.select(*cols, F.lit(1).alias("_m"), F.lit(0).alias("_n"))
+        .union(right.select(*cols, F.lit(0).alias("_m"), F.lit(1).alias("_n")))
+        .groupBy(*cols)
+        .agg(F.sum("_m").alias("_m"), F.sum("_n").alias("_n"))
     )
-    joined = l.join(r, cond, "full_outer")
-    diff = joined.select(
-        *[F.coalesce(F.col(f"l.{c}"), F.col(f"r.{c}")).alias(c) for c in cols],
-        F.when(F.col("_in_left") & F.col("_in_right"), "both")
-        .when(F.col("_in_left"), "left_only")
-        .otherwise("right_only")
-        .alias("presence"),
-    )
-    counts = diff.groupBy("presence").agg(F.count("*").alias("n_rows"))
+    diff = grouped.select(
+        *cols,
+        F.expr(
+            "CASE WHEN _m > 0 AND _n > 0 THEN 'both' "
+            "WHEN _m > 0 THEN 'left_only' ELSE 'right_only' END"
+        ).alias("presence"),
+        F.explode(
+            F.expr("array_repeat(0, CAST(greatest(_m * _n, _m, _n) AS INT))")
+        ).alias("_copy"),
+    ).drop("_copy")
+    counts = grouped.agg(
+        F.expr("sum(_m * _n)").alias("both"),
+        F.expr("sum(CASE WHEN _n = 0 THEN _m END)").alias("left_only"),
+        F.expr("sum(CASE WHEN _m = 0 THEN _n END)").alias("right_only"),
+    ).selectExpr(
+        "stack(3, 'both', both, 'left_only', left_only, 'right_only', right_only) "
+        "AS (presence, n_rows)"
+    ).filter("n_rows > 0")
     return ReconcileResult(diff=diff, counts=counts)
 
 
@@ -73,12 +85,10 @@ def repair_updates(
 
     The anti-join is null-safe on every shared column, mirroring the
     reconcile's NaN-equal comparison."""
-    from functools import reduce as _reduce
-
     cols = [c for c in truth.columns if c in target.columns]
     l = truth.select(*cols).alias("l")
     r = target.select(*cols).alias("r")
-    cond = _reduce(
+    cond = reduce(
         lambda a, b: a & b,
         [F.col(f"l.{c}").eqNullSafe(F.col(f"r.{c}")) for c in cols],
     )

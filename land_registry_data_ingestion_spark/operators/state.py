@@ -38,6 +38,14 @@ Finding the second set is one column-pruned scan of
 broadcast — no shuffle of the state, no write. A per-partition key bloom
 index is the next lever if even that scan hurts.
 
+A monthly merge is therefore two Spark actions: :meth:`ManifestStore.
+probe_batch` collects the batch's invariant aggregate and both year sets
+in one row, then the state write runs the merge join once, its outcome
+counters riding along as observed metrics. Everything between — the
+manifest lookup, :meth:`ManifestStore.current_for_merge` given the probed
+years, and every state read's schema (the union of one parquet footer per
+leaf) — is driver work that schedules no Spark job.
+
 Merging only the touched partitions is sound because the CDC join is
 keyed: a state row whose key is absent from the batch passes through
 ``cdc_merge`` unchanged, so restricting ``current`` to the partitions
@@ -48,12 +56,13 @@ golden outcome matrix in ``tests/test_manifest_state.py``).
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 from dataclasses import dataclass
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -71,6 +80,9 @@ MANIFEST_SCHEMA = T.StructType(
     ]
 )
 
+# The footer key under which Spark records a data file's row schema.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
 # Rows with NULL transaction_date get a concrete partition value so every
 # state row lives in exactly one manifest entry.
 NULL_YEAR = -1
@@ -78,6 +90,19 @@ NULL_YEAR = -1
 
 def _year_col():
     return F.coalesce(F.year("transaction_date"), F.lit(NULL_YEAR))
+
+
+def _union_schema(paths: list[str]) -> T.StructType:
+    """Union, by column name in first-seen order, of the Spark row schemas
+    that the first data file of each leaf dir records in its footer."""
+    fields: dict[str, T.StructField] = {}
+    for leaf in paths:
+        data = min(f for f in os.listdir(leaf) if f.startswith("part-"))
+        meta = pq.read_schema(os.path.join(leaf, data)).metadata
+        schema = T.StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+        for f in schema.fields:
+            fields.setdefault(f.name, f)
+    return T.StructType(list(fields.values()))
 
 
 @dataclass
@@ -108,11 +133,14 @@ class ManifestStore(IngestStore):
     def _read_parts(self, paths: list[str]) -> DataFrame:
         # Leaf ``data_year=YYYY`` dirs: no partition-column inference, so
         # the frame carries exactly the state schema regardless of which
-        # runs the paths belong to. mergeSchema: a column added by a later
-        # merge exists only in partitions written since — carried-by-
-        # reference older partitions must still surface it (as NULL), not
-        # silently win the footer race.
-        return self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        # runs the paths belong to. The schema is the union of the
+        # leaves' schemas (a column added by a later merge exists only in
+        # partitions written since — carried-by-reference older
+        # partitions must still surface it, as NULL), read on the driver
+        # from one footer per leaf, so the read schedules no Spark job.
+        # Past 32 paths (spark.sql.sources.parallelPartitionDiscovery.
+        # threshold) Spark still lists the leaves' files with a job.
+        return self.spark.read.schema(_union_schema(paths)).parquet(*paths)
 
     def _scan_part_counts(self, parts_dir: str) -> list[dict]:
         """Per-partition row counts of a freshly written parts dir, summed
@@ -157,33 +185,45 @@ class ManifestStore(IngestStore):
         shutil.rmtree(self._parts_dir(location), ignore_errors=True)
         shutil.rmtree(location, ignore_errors=True)
 
-    def current_for_merge(self, updates: DataFrame, key_col: str):
+    def probe_batch(
+        self, updates: DataFrame, key_col: str, aggs: list[Column]
+    ) -> tuple[Row, set[int]]:
+        """The merge's first Spark action: ONE collect of the caller's
+        one-row aggregate ``aggs`` over ``updates`` (its batch invariants)
+        cross-joined with the one-row probe of the years the merge
+        touches. Returns the aggregate row and those years: the batch's
+        own years, union the years currently holding any batch key (the
+        broadcast-key semi-join over the state's key column)."""
+        paths = [e["path"] for e in self._current_entries()]
+        old_years = (
+            self._read_parts(paths)
+            .join(F.broadcast(updates.select(key_col)), key_col, "left_semi")
+            .agg(F.collect_set(_year_col()).alias("_old_years"))
+        )
+        row = (
+            updates.agg(*aggs, F.collect_set(_year_col()).alias("_new_years"))
+            .crossJoin(old_years)
+            .collect()[0]
+        )
+        return row, set(row["_new_years"]) | set(row["_old_years"])
+
+    def current_for_merge(
+        self, updates: DataFrame, key_col: str, touched_years: set[int] | None = None
+    ):
         """State to feed ``cdc_merge`` — only the partitions the batch can
-        touch — plus the untouched manifest entries to carry by reference."""
+        touch — plus the untouched manifest entries to carry by reference.
+        Given ``touched_years`` (from :meth:`probe_batch`, which the
+        ingest gate runs anyway) this schedules no Spark job; without it,
+        it runs the probe itself."""
+        if touched_years is None:
+            touched_years = self.probe_batch(updates, key_col, [])[1]
         entries = self._current_entries()
-        cur_all = self._read_parts([e["path"] for e in entries])
-
-        upd_years = {
-            r["y"]
-            for r in updates.select(_year_col().alias("y")).distinct().collect()
-        }
-        keys = updates.select(key_col).distinct()
-        old_years = {
-            r["y"]
-            for r in cur_all.join(F.broadcast(keys), key_col, "left_semi")
-            .select(_year_col().alias("y"))
-            .distinct()
-            .collect()
-        }
-        touched = upd_years | old_years
-
-        touched_entries = [e for e in entries if e["data_year"] in touched]
-        carry = [e for e in entries if e["data_year"] not in touched]
-        if touched_entries:
-            current = self._read_parts([e["path"] for e in touched_entries])
-        else:
-            current = cur_all.filter(F.lit(False))
-        return current, carry
+        touched = [e["path"] for e in entries if e["data_year"] in touched_years]
+        carry = [e for e in entries if e["data_year"] not in touched_years]
+        if touched:
+            return self._read_parts(touched), carry
+        schema = _union_schema([e["path"] for e in entries])
+        return self.spark.createDataFrame([], schema), carry
 
     def write_merged(self, new_state: DataFrame, location: str, carry) -> int:
         """Merge write: the touched partitions land under this run's parts

@@ -4,6 +4,9 @@ updates, touch only batch partitions, and replay as no-ops."""
 
 from __future__ import annotations
 
+import hashlib
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -109,6 +112,13 @@ def test_invalid_op_batch_rejected_before_any_write(
     assert _state_rows(store) == before
     assert (
         store.file_log().filter(F.col("run_id") == "stream-bad").count() == 0
+    )
+    # nothing of the rejected run remains: no parts, no manifest, no counters
+    run_dir = f"run={hashlib.sha256(b'stream-bad').hexdigest()[:12]}"
+    assert not os.path.exists(os.path.join(store.root, "parts", run_dir))
+    assert not os.path.exists(os.path.join(store.root, "manifests", run_dir))
+    assert (
+        store.operation_log().filter(F.col("run_id") == "stream-bad").count() == 0
     )
 
 

@@ -383,6 +383,20 @@ def _ledger_row(run_id: str, when: datetime.datetime, **kw) -> dict:
     return row
 
 
+def _jobs_in_group(spark, name: str, call):
+    """``call()``'s result and the number of Spark jobs it scheduled,
+    counted through a job group of its own."""
+    sc = spark.sparkContext
+    group = f"job-budget-{name}"
+    sc.setJobGroup(group, name)
+    try:
+        result = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_control_plane_runs_no_spark_job(spark, store, tmp_path):
     """Ledger, operation-log, manifest and part-count calls are driver
     file I/O: each one, inside its own job group, schedules no Spark job."""
@@ -390,7 +404,6 @@ def test_control_plane_runs_no_spark_job(spark, store, tmp_path):
     t0 = datetime.datetime(2024, 1, 1)
     loc = ingest_snapshot(store, snap, "r1", now=t0)["state_location"]
     entries = store._manifest_entries(loc)
-    sc = spark.sparkContext
     calls = {
         "last_accepted": store.last_accepted,
         "accepted_run": lambda: store.accepted_run("r1"),
@@ -409,20 +422,65 @@ def test_control_plane_runs_no_spark_job(spark, store, tmp_path):
     }
     results = {}
     for name, call in calls.items():
-        group = f"control-plane-{name}"
-        sc.setJobGroup(group, name)
-        try:
-            results[name] = call()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        assert sc.statusTracker().getJobIdsForGroup(group) == [], name
+        results[name], n_jobs = _jobs_in_group(spark, name, call)
+        assert n_jobs == 0, name
     assert results["last_accepted"]["run_id"] == "r1"
     assert results["accepted_run"]["state_location"] == loc
     assert results["_scan_part_counts"] == entries
     assert store._manifest_entries(store.state_path("f" * 64)) == entries
     assert results["maybe_compact_file_log"] is True
     assert store.last_accepted()["run_id"] == "r2"
+
+
+def test_state_reads_run_no_spark_job(spark, store, tmp_path):
+    """Building a state read is driver work: its schema comes from one
+    parquet footer per leaf, not a mergeSchema job. current_for_merge
+    handed the probed years plans its frame without a job too."""
+    from land_registry_data_ingestion_spark.sources.csv import read_price_paid_csv
+
+    t0 = datetime.datetime(2024, 1, 1)
+    ingest_snapshot(store, _write(tmp_path, "s.csv", SNAP), "r1", now=t0)
+    loc = ingest_monthly_update(
+        store, _write(tmp_path, "m.csv", MONTHLY), "r2",
+        now=t0 + datetime.timedelta(days=1),
+    )["state_location"]
+    updates = read_price_paid_csv(spark, _write(tmp_path, "u.csv", MONTHLY))
+    calls = {
+        "current_state": store.current_state,
+        "read_state_at": lambda: store.read_state_at(loc),
+        "current_for_merge": lambda: store.current_for_merge(
+            updates, "transaction_unique_id", {2015, 2016, 2018}
+        ),
+    }
+    frames = {}
+    for name, call in calls.items():
+        frames[name], n_jobs = _jobs_in_group(spark, name, call)
+        assert n_jobs == 0, name
+    assert _state(frames["current_state"]) == MONTHLY_STATE
+    assert _rows(frames["read_state_at"]) == _rows(frames["current_state"])
+    current, carry = frames["current_for_merge"]
+    assert sorted(_state(current)) == ["{T0001}", "{T0002}", "{T0003}", "{T0005}"]
+    assert [e["data_year"] for e in carry] == [2017]
+
+
+def test_monthly_merge_job_budget(spark, store, tmp_path):
+    """A warm monthly merge is two Spark actions (the gate's one collect,
+    then the state write with its counters observed): 11 jobs on the
+    golden batch. A second parse or a second merge join fails this."""
+    t = datetime.datetime(2024, 1, 1)
+    ingest_snapshot(store, _write(tmp_path, "g.csv", GOLDEN_SNAP), "r1", now=t)
+    ingest_monthly_update(
+        store, _write(tmp_path, "d.csv", GOLDEN_DELETES), "r2",
+        now=t + datetime.timedelta(days=1),
+    )
+    batch = _write(tmp_path, "b.csv", [line for line, _ in GOLDEN_BATCH])
+    row, n_jobs = _jobs_in_group(
+        spark, "golden", lambda: ingest_monthly_update(
+            store, batch, "r3", now=t + datetime.timedelta(days=2)
+        )
+    )
+    assert row["decision"] == "archive"
+    assert n_jobs <= 11
 
 
 def test_ledger_row_round_trips_driver_and_dataframe(spark, store):
@@ -436,6 +494,36 @@ def test_ledger_row_round_trips_driver_and_dataframe(spark, store):
     assert [r.asDict() for r in store.file_log().collect()] == [row]
     assert store.accepted_run("r1") == row
     assert store.accepted_run("nope") is None
+
+
+def test_ledger_orders_on_the_stored_instant_across_dst_gap(tmp_path):
+    """Naive run_datetimes are UTC. On a Europe/London host, 00:50 and
+    01:50 on 2024-03-31 straddle the spring-forward gap: read as
+    host-local time both stored as 00:50Z, tied, and the run_id
+    tie-break made the OLDER run the latest. Driver only: no Spark."""
+    import time
+
+    store = IngestStore(spark=None, root=str(tmp_path / "dst"))
+    saved = os.environ.get("TZ")
+    os.environ["TZ"] = "Europe/London"
+    time.tzset()
+    try:
+        store._append_log(_ledger_row("z-earlier", datetime.datetime(2024, 3, 31, 0, 50)))
+        store._append_log(_ledger_row("a-later", datetime.datetime(2024, 3, 31, 1, 50)))
+        accepted = store._accepted()
+    finally:
+        if saved is None:
+            os.environ.pop("TZ")
+        else:
+            os.environ["TZ"] = saved
+        time.tzset()
+    assert [r["run_id"] for r in accepted] == ["a-later", "z-earlier"]
+    # read back as host-local wall-clock times, the values Spark's
+    # collect() gives for the file_log() view: 01:50Z is 02:50 BST
+    assert [r["run_datetime"] for r in accepted] == [
+        datetime.datetime(2024, 3, 31, 2, 50),
+        datetime.datetime(2024, 3, 31, 0, 50),
+    ]
 
 
 def test_crash_before_ledger_append_replays_once(spark, store, tmp_path, monkeypatch):

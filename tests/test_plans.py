@@ -146,6 +146,43 @@ def test_reconcile_null_safe_join(spark):
     assert counts == {"both": 1, "left_only": 1, "right_only": 1}
 
 
+def test_reconcile_counts_rows_by_multiplicity(spark):
+    """Duplicates reconcile as the full-outer join on every column
+    would: a tuple twice left and three times right is 6 ``both`` rows,
+    one-sided duplicates keep their multiplicity, and a shared NULL or a
+    shared NaN matches. ``diff`` repeats each row by multiplicity."""
+    from collections import Counter
+    import math
+
+    from land_registry_data_ingestion_spark.operators.reconcile import reconcile
+
+    nan = float("nan")
+    schema = "k long, name string, price double"
+    left = spark.createDataFrame(
+        [(1, "a", 1.0)] * 2 + [(2, "b", 2.0)] * 2 + [(4, None, 4.0), (5, "n", nan)],
+        schema,
+    )
+    right = spark.createDataFrame(
+        [(1, "a", 1.0)] * 3 + [(3, "c", 3.0)] * 2 + [(4, None, 4.0), (5, "n", nan)],
+        schema,
+    )
+    res = reconcile(left, right)
+    counts = {r["presence"]: r["n_rows"] for r in res.counts.collect()}
+    assert counts == {"both": 8, "left_only": 2, "right_only": 2}
+
+    def key(r):
+        price = "NaN" if math.isnan(r["price"]) else r["price"]
+        return (r["k"], r["name"], price, r["presence"])
+
+    assert Counter(key(r) for r in res.diff.collect()) == Counter({
+        (1, "a", 1.0, "both"): 6,
+        (2, "b", 2.0, "left_only"): 2,
+        (3, "c", 3.0, "right_only"): 2,
+        (4, None, 4.0, "both"): 1,
+        (5, "n", "NaN", "both"): 1,
+    })
+
+
 def test_repair_updates_converges_target_to_truth(spark):
     """verify→repair loop: corrupt one row + drop one row in the target;
     repair_updates + cdc_merge(op='A') must converge the target to the
