@@ -41,7 +41,7 @@ from typing import TYPE_CHECKING
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -98,18 +98,16 @@ def write_parquet_file(rows: list[dict], schema: T.StructType, path: str) -> Non
     os.replace(tmp, path)
 
 
-def _stored_rows(path: str, schema: T.StructType) -> list[dict]:
+def read_parquet_rows(path: str, schema: T.StructType) -> list[dict]:
     """Every row of the parquet files in directory ``path`` (``[]`` when
-    it does not exist), timestamps as the stored UTC instants."""
+    it does not exist), timestamps as naive UTC datetimes — the values
+    :func:`write_parquet_file` was given, whatever the host's time zone."""
     if not os.path.isdir(path):
         return []
-    return pq.read_table(path, schema=to_arrow_schema(schema)).to_pylist()
-
-
-def read_parquet_rows(path: str, schema: T.StructType) -> list[dict]:
-    """:func:`_stored_rows` with timestamps as naive local datetimes — the
-    values Spark's ``collect()`` returns for the same files."""
-    return [_as_collected(r) for r in _stored_rows(path, schema)]
+    return [
+        {k: _naive_utc(v) for k, v in r.items()}
+        for r in pq.read_table(path, schema=to_arrow_schema(schema)).to_pylist()
+    ]
 
 
 def _utc(v):
@@ -120,11 +118,10 @@ def _utc(v):
     return v.astimezone(datetime.timezone.utc)
 
 
-def _as_collected(row: dict) -> dict:
-    return {
-        k: v.astimezone().replace(tzinfo=None) if isinstance(v, datetime.datetime) else v
-        for k, v in row.items()
-    }
+def _naive_utc(v):
+    if not isinstance(v, datetime.datetime):
+        return v
+    return _utc(v).replace(tzinfo=None)
 
 
 def _part_name() -> str:
@@ -156,10 +153,19 @@ class IngestStore:
         (first run) yields an empty ledger; any other read failure
         (corrupt footer, permissions) must propagate — swallowing it would
         silently flip last_accepted() to None and re-ingest instead of
-        failing the run."""
+        failing the run.
+
+        ``run_datetime`` reads as a TIMESTAMP_NTZ holding the naive UTC
+        value the driver wrote and reads back: ``collect()`` would turn a
+        TIMESTAMP into host-local time."""
         if not os.path.isdir(self.file_log_path):
-            return self.spark.createDataFrame([], FILE_LOG_SCHEMA)
-        return self.spark.read.schema(FILE_LOG_SCHEMA).parquet(self.file_log_path)
+            log = self.spark.createDataFrame([], FILE_LOG_SCHEMA)
+        else:
+            log = self.spark.read.schema(FILE_LOG_SCHEMA).parquet(self.file_log_path)
+        ntz = F.col("run_datetime").cast("timestamp_ntz")  # session-time wall clock
+        return log.withColumn(
+            "run_datetime", F.convert_timezone(F.current_timezone(), F.lit("UTC"), ntz)
+        )
 
     def _append_log(self, row: dict) -> None:
         write_parquet_file(
@@ -168,15 +174,14 @@ class IngestStore:
 
     def _accepted(self) -> list[dict]:
         """Archive-decision rows, latest first (W3: max over the ledger),
-        ordered on the stored instant: host-local wall-clock times can tie
-        or invert across a DST change."""
+        ordered on the naive UTC ``run_datetime`` — host-local wall-clock
+        times could tie or invert across a DST change."""
         rows = [
             r
-            for r in _stored_rows(self.file_log_path, FILE_LOG_SCHEMA)
+            for r in read_parquet_rows(self.file_log_path, FILE_LOG_SCHEMA)
             if r["decision"] == "archive"
         ]
-        rows.sort(key=lambda r: (r["run_datetime"], r["run_id"]), reverse=True)
-        return [_as_collected(r) for r in rows]
+        return sorted(rows, key=lambda r: (r["run_datetime"], r["run_id"]), reverse=True)
 
     def last_accepted(self) -> dict | None:
         """Latest archive-decision row."""
@@ -233,7 +238,7 @@ class IngestStore:
         for stale in (tmp, old):
             if os.path.isdir(stale):
                 shutil.rmtree(stale)
-        rows = _stored_rows(self.file_log_path, FILE_LOG_SCHEMA)
+        rows = read_parquet_rows(self.file_log_path, FILE_LOG_SCHEMA)
         write_parquet_file(rows, FILE_LOG_SCHEMA, os.path.join(tmp, _part_name()))
         os.rename(self.file_log_path, old)
         os.rename(tmp, self.file_log_path)
@@ -346,7 +351,7 @@ def ingest_snapshot(
         ).alias("n_bad")
     ]
     df = df.observe(gate_obs, *gate_aggs)
-    state = init_state(df.drop("record_op"), batch_timestamp=F.lit(now))
+    state = init_state(df.drop("record_op"), batch_timestamp=F.lit(_utc(now)))
     location = store.state_path(sha)
     row_count = store.write_state(state, location)
 
@@ -412,41 +417,41 @@ def _gate_batch(
     key_col: str,
     op_col: str,
     what: str,
-    validate: bool = True,
     rejects: DataFrame | None = None,
 ) -> set[int]:
     """The merge's first Spark action: enforce every batch invariant and
     find the partitions the merge touches in ONE collect
     (:meth:`~.state.ManifestStore.probe_batch`) — a one-row aggregate over
     the batch cross-joined with the one-row old-year probe. Returns the
-    touched years. The invariants (``validate``):
+    touched years. The invariants:
 
     - no row's price/date failed its cast, when ``rejects`` (the strict
       CSV parse's quarantine) is given — the reference crashes on such
       rows (DB constraint); this engine refuses with samples instead of
       silently nulling values into state;
-    - ≤1 row per non-NULL key (``count(key)`` against
-      ``count_distinct(key)``; NULL keys are ``invalid_key`` rows, not
-      duplicates) — the invariant the reference enforces via ``.one()``
-      crashing; a duplicate would fan out the merge join;
+    - no NULL key — the reference's key is NOT NULL, so its per-row path
+      fails such a batch; a NULL key addresses no row;
+    - ≤1 row per key (``count(key)`` against ``count_distinct(key)``) —
+      the invariant the reference enforces via ``.one()`` crashing; a
+      duplicate would fan out the merge join;
     - only A/C/D ops (reference RuntimeError,
       database_updater.py:1011-1013).
 
     Count and conditional-count aggregates partial-aggregate, so the
     shuffle is one row per task. Sample rows for the error message are
     fetched by a targeted query only on the failure path."""
-    aggs = []
-    if validate:
-        aggs = [
-            F.count(key_col).alias("n_keyed"),
-            F.count_distinct(key_col).alias("n_keys"),
-            F.count(F.when(_outside_acd(op_col), 1)).alias("n_bad_op"),
-        ]
-        if rejects is not None:
-            bad = F.col("price").isNull() | F.col("transaction_date").isNull()
-            aggs.append(F.count(F.when(bad, 1)).alias("n_bad"))
+    bad_op = ~F.coalesce(F.col(op_col).isin("A", "C", "D"), F.lit(False))
+    aggs = [
+        F.count(F.lit(1)).alias("n_rows"),
+        F.count(key_col).alias("n_keyed"),
+        F.count_distinct(key_col).alias("n_keys"),
+        F.count(F.when(bad_op, 1)).alias("n_bad_op"),
+    ]
+    if rejects is not None:
+        bad = F.col("price").isNull() | F.col("transaction_date").isNull()
+        aggs.append(F.count(F.when(bad, 1)).alias("n_bad"))
     g, years = store.probe_batch(updates, key_col, aggs)
-    if validate and rejects is not None and g["n_bad"]:
+    if rejects is not None and g["n_bad"]:
         bad = rejects.limit(5).collect()  # failure path only
         sample = ", ".join(
             f"{r['transaction_unique_id']}({r['reject_reason']})" for r in bad
@@ -455,29 +460,26 @@ def _gate_batch(
             f"malformed values in {what} (e.g. {sample}) — batch "
             f"rejected before any state was written"
         )
-    if validate and g["n_keys"] < g["n_keyed"]:
+    if g["n_keyed"] < g["n_rows"]:
+        raise ValueError(
+            f"{what} has {g['n_rows'] - g['n_keyed']} row(s) with a NULL "
+            f"{key_col} — batch rejected before any state was written"
+        )
+    if g["n_keys"] < g["n_keyed"]:
         dups = validate_unique(updates, key_col).limit(5).collect()
         sample = ", ".join(str(r[key_col]) for r in dups)
         raise ValueError(
             f"duplicate {key_col} in {what} (e.g. {sample}) — "
             f"refusing to merge; the full-outer join would fan out"
         )
-    if validate and g["n_bad_op"]:
-        _reject_ops(updates, key_col, op_col, what)
+    if g["n_bad_op"]:
+        bad = updates.filter(bad_op).limit(5).collect()  # failure path only
+        sample = ", ".join(f"{r[key_col]}={r[op_col]!r}" for r in bad)
+        raise ValueError(
+            f"{what} contains ops outside A/C/D (e.g. {sample}) — batch "
+            f"rejected, state unchanged"
+        )
     return years
-
-
-def _outside_acd(op_col: str) -> Column:
-    return ~F.coalesce(F.col(op_col).isin("A", "C", "D"), F.lit(False))
-
-
-def _reject_ops(updates: DataFrame, key_col: str, op_col: str, what: str) -> None:
-    bad = updates.filter(_outside_acd(op_col)).limit(5).collect()  # failure path only
-    sample = ", ".join(f"{r[key_col]}={r[op_col]!r}" for r in bad)
-    raise ValueError(
-        f"{what} contains ops outside A/C/D (e.g. {sample}) — batch "
-        f"rejected, state unchanged"
-    )
 
 
 def ingest_monthly_update(
@@ -499,9 +501,9 @@ def ingest_monthly_update(
     Invariant gates (the reference crashes via ``.one()``; here the run
     fails with an actionable error BEFORE any state is written):
 
-    - the update batch must have ≤1 row per key and only A/C/D ops —
-      probed every run (the batch is small, the probe is one aggregate
-      over it);
+    - the update batch must have no NULL key, ≤1 row per key and only
+      A/C/D ops — probed every run (the batch is small, the probe is one
+      aggregate over it);
     - the current state is unique *by induction*: validated when the
       snapshot was loaded (``ingest_snapshot``) and preserved by the
       merge (one output row per key). ``validate_current=True`` adds an
@@ -531,7 +533,6 @@ def ingest_monthly_update(
             source="monthly",
             token=sha,
             source_path=csv_path,
-            validate_batch=False,  # _gate_batch above already validated it
             validate_current=validate_current,
             touched_years=years,
         )
@@ -549,7 +550,6 @@ def merge_update_frame(
     source: str = "stream",
     token: str | None = None,
     source_path: str | None = None,
-    validate_batch: bool = True,
     validate_current: bool = False,
     touched_years: set[int] | None = None,
 ) -> dict:
@@ -558,12 +558,11 @@ def merge_update_frame(
     streaming sink (`streaming/cdc_sink.py`), where batches arrive as
     DataFrames with no file to sha.
 
-    Two Spark actions: the gate (:func:`_gate_batch`; skipped when the
-    caller already ran it and passes its ``touched_years``) and the state
-    write, whose per-(op, outcome) counters ride the write as observed
-    metrics — no second join for the operation log. A batch the gate did
-    not validate (``validate_batch=False``) that turns out to hold an op
-    outside A/C/D has its uncommitted state discarded and is rejected.
+    Two Spark actions: the gate (:func:`_gate_batch`, which rejects a bad
+    batch before any write; a caller that already ran it passes its
+    ``touched_years`` instead) and the state write, whose per-(op,
+    outcome) counters ride the write as observed metrics — no second join
+    for the operation log.
 
     Exactly-once by ``run_id``: if the ledger already holds an accepted
     run with this id the call is a no-op returning that row — Structured
@@ -576,10 +575,9 @@ def merge_update_frame(
     if prior is not None:
         return prior
 
-    what = f"{source} update batch {run_id}"
     if touched_years is None:
         touched_years = _gate_batch(
-            store, updates, key_col, op_col, what, validate=validate_batch
+            store, updates, key_col, op_col, f"{source} update batch {run_id}"
         )
     current, carry = store.current_for_merge(updates, key_col, touched_years)
     if validate_current:
@@ -602,18 +600,13 @@ def merge_update_frame(
         key_col=key_col,
         value_cols=value_cols,
         op_col=op_col,
-        batch_timestamp=F.lit(now),
+        batch_timestamp=F.lit(_utc(now)),
     )
     token = token or hashlib.sha256(run_id.encode()).hexdigest()
     location = store.state_path(token)
     obs = Observation()
     row_count = store.write_merged(result.observed_state(obs), location, carry)
-    counters = obs.get
-    if counters["invalid_op"]:
-        if all(r["state_location"] != location for r in store._accepted()):
-            store.discard_state_at(location)
-        _reject_ops(updates, key_col, op_col, what)
-    store._append_operation_log(run_id, observed_outcome_stats(counters, op_col))
+    store._append_operation_log(run_id, observed_outcome_stats(obs.get, op_col))
     row = record_run(
         store, run_id, source_path or f"{source}:{run_id}", "monthly", token, now,
         row_count, location,

@@ -93,22 +93,14 @@ class MergeResult:
 
     def observed_state(self, observation: Observation) -> DataFrame:
         """``new_state`` whose action also reports the merge's outcome
-        counters to ``observation`` — counted on the annotated join BEFORE
-        the phantom filter, so every update row counts once (filters do
-        not push below an observation). Metrics: one count per outcome in
-        :data:`OUTCOMES`, ``invalid_key_<op>`` for NULL-keyed A/C/D rows,
-        and ``invalid_op``: rows whose op is outside A/C/D, keyed or not.
-        :func:`observed_outcome_stats` turns them into ledger rows."""
-        op = self._sql["op"]
-        counts = {o: f"_outcome = '{o}'" for o in OUTCOMES}
-        for o in "ACD":
-            counts[f"invalid_key_{o}"] = f"_outcome = 'invalid_key' AND {op} = '{o}'"
-        counts["invalid_op"] = (
-            f"_outcome IS NOT NULL AND NOT coalesce({op} IN ('A', 'C', 'D'), false)"
-        )
+        counters to ``observation``: one count per outcome in
+        :data:`OUTCOMES`, taken on the annotated join BEFORE the phantom
+        filter, so every update row counts once (filters do not push
+        below an observation). :func:`observed_outcome_stats` turns them
+        into ledger rows."""
         metrics = [
-            F.expr(f"count(CASE WHEN {cond} THEN 1 END)").alias(name)
-            for name, cond in counts.items()
+            F.expr(f"count(CASE WHEN _outcome = '{o}' THEN 1 END)").alias(o)
+            for o in OUTCOMES
         ]
         return self._state_of(self._annotated.observe(observation, *metrics))
 
@@ -130,17 +122,12 @@ class MergeResult:
 def observed_outcome_stats(metrics: dict, op_col: str = "record_op") -> list[dict]:
     """The non-zero ``(record_op, outcome, n_rows)`` counters of
     :meth:`MergeResult.observed_state`'s metrics — the rows
-    :func:`merge_outcome_stats` would aggregate from ``outcomes``, for a
-    batch with no op outside A/C/D."""
-    rows = []
-    for name, n in metrics.items():
-        if not n or name == "invalid_op":
-            continue
-        if name.startswith("invalid_key_"):
-            rows.append({op_col: name[-1], "outcome": "invalid_key", "n_rows": n})
-        else:
-            rows.append({op_col: _OP_OF[name], "outcome": name, "n_rows": n})
-    return rows
+    :func:`merge_outcome_stats` would aggregate from ``outcomes`` for a
+    batch with no NULL key and no op outside A/C/D, which the ingest gate
+    rejects before any write."""
+    return [
+        {op_col: _OP_OF[o], "outcome": o, "n_rows": n} for o, n in metrics.items() if n
+    ]
 
 
 def validate_unique(df: DataFrame, key_col: str) -> DataFrame:

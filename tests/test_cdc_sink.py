@@ -122,6 +122,22 @@ def test_invalid_op_batch_rejected_before_any_write(
     )
 
 
+def test_null_key_batch_rejected_before_any_write(spark, tmp_path, booted):
+    store = booted
+    bad = _updates_df(
+        spark, tmp_path, "nokey.csv", [_line("T0001", 1, "2015-01-05", "C")]
+    ).withColumn("transaction_unique_id", F.lit(None).cast("string"))
+    before = _state_rows(store)
+    with pytest.raises(ValueError, match="NULL transaction_unique_id"):
+        merge_update_frame(store, bad, run_id="stream-nokey")
+    assert _state_rows(store) == before
+    run_dir = f"run={hashlib.sha256(b'stream-nokey').hexdigest()[:12]}"
+    assert not os.path.exists(os.path.join(store.root, "parts", run_dir))
+    assert (
+        store.operation_log().filter(F.col("run_id") == "stream-nokey").count() == 0
+    )
+
+
 def test_restart_from_checkpoint_processes_only_new_files(
     spark, tmp_path, booted
 ):

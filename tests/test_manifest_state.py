@@ -7,8 +7,10 @@ must run without a Spark job."""
 
 from __future__ import annotations
 
+import contextlib
 import datetime
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -496,32 +498,62 @@ def test_ledger_row_round_trips_driver_and_dataframe(spark, store):
     assert store.accepted_run("nope") is None
 
 
-def test_ledger_orders_on_the_stored_instant_across_dst_gap(tmp_path):
-    """Naive run_datetimes are UTC. On a Europe/London host, 00:50 and
-    01:50 on 2024-03-31 straddle the spring-forward gap: read as
-    host-local time both stored as 00:50Z, tied, and the run_id
-    tie-break made the OLDER run the latest. Driver only: no Spark."""
-    import time
-
-    store = IngestStore(spark=None, root=str(tmp_path / "dst"))
+@contextlib.contextmanager
+def _host_tz(name: str):
+    """Run the block with the Python process's local time zone set to
+    ``name`` (the JVM and the Spark session time zone keep theirs)."""
     saved = os.environ.get("TZ")
-    os.environ["TZ"] = "Europe/London"
+    os.environ["TZ"] = name
     time.tzset()
     try:
-        store._append_log(_ledger_row("z-earlier", datetime.datetime(2024, 3, 31, 0, 50)))
-        store._append_log(_ledger_row("a-later", datetime.datetime(2024, 3, 31, 1, 50)))
-        accepted = store._accepted()
+        yield
     finally:
         if saved is None:
             os.environ.pop("TZ")
         else:
             os.environ["TZ"] = saved
         time.tzset()
+
+
+def test_ledger_round_trips_and_matches_state_stamps_on_a_non_utc_host(
+    spark, store, tmp_path
+):
+    """On a host whose local time zone is not UTC, a ledger row still
+    reads back unchanged through the driver and the file_log() view, and
+    a snapshot's audit stamps hold the same UTC instant as its ledger
+    row's naive UTC run_datetime."""
+    import pyarrow.parquet as pq
+
+    now = datetime.datetime(2024, 3, 31, 23, 59, 58, 123456)
+    with _host_tz("America/New_York"):
+        row = _ledger_row("r0", now, row_count=None, decision="garbage_collect")
+        store._append_log(row)
+        assert [r.asDict() for r in store.file_log().collect()] == [row]
+        snap = ingest_snapshot(store, _write(tmp_path, "s.csv", SNAP), "r1", now=now)
+        assert store.last_accepted() == snap
+        assert store.accepted_run("r1") == snap
+        assert store.file_log().filter(F.col("run_id") == "r1").first()[
+            "run_datetime"
+        ] == now
+        parts = store._parts_dir(snap["state_location"])
+        stamps = pq.read_table(parts, columns=["created_datetime"]).column(0)
+    assert {t.replace(tzinfo=None) for t in stamps.to_pylist()} == {now}
+
+
+def test_ledger_orders_on_the_stored_instant_across_dst_gap(tmp_path):
+    """Naive run_datetimes are UTC. On a Europe/London host, 00:50 and
+    01:50 on 2024-03-31 straddle the spring-forward gap: read as
+    host-local time both stored as 00:50Z, tied, and the run_id
+    tie-break made the OLDER run the latest. Driver only: no Spark."""
+    store = IngestStore(spark=None, root=str(tmp_path / "dst"))
+    with _host_tz("Europe/London"):
+        store._append_log(_ledger_row("z-earlier", datetime.datetime(2024, 3, 31, 0, 50)))
+        store._append_log(_ledger_row("a-later", datetime.datetime(2024, 3, 31, 1, 50)))
+        accepted = store._accepted()
     assert [r["run_id"] for r in accepted] == ["a-later", "z-earlier"]
-    # read back as host-local wall-clock times, the values Spark's
-    # collect() gives for the file_log() view: 01:50Z is 02:50 BST
+    # read back as written, whatever the host's time zone
     assert [r["run_datetime"] for r in accepted] == [
-        datetime.datetime(2024, 3, 31, 2, 50),
+        datetime.datetime(2024, 3, 31, 1, 50),
         datetime.datetime(2024, 3, 31, 0, 50),
     ]
 
