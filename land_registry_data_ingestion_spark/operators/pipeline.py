@@ -62,9 +62,6 @@ def _archive_or_collect(
     else:
         fs.delete(staged_path)
         row = dict(row, archived_path=None)
-    # Ledger maintenance rides the cycle: one O(listdir) probe per run,
-    # a single-file rewrite only once fragmentation crosses the bound.
-    store.maybe_compact_file_log()
     return row
 
 

@@ -1,16 +1,24 @@
-"""The price-paid state store: content-addressed ``data_year``
-partitions resolved through per-run manifests (the table-format idea of
-Iceberg/Delta snapshot reuse, with nothing but plain parquet).
+"""The price-paid state store: run-addressed ``data_year`` partitions
+resolved through per-run manifests (the table-format idea of
+Iceberg/Delta snapshot reuse, with nothing but plain parquet). This
+module is the only one that knows the layout.
 
 Layout under the store root::
 
     file_log/                          ledger, one row per run  (driver)
     operation_log/                     merge-outcome counters   (driver)
-    manifests/run=<sha12>/             data_year, path, row_count (driver)
-    parts/run=<sha12>/data_year=YYYY/  state rows               (Spark)
+    manifests/run=<id12>/              data_year, path, row_count (driver)
+    parts/run=<id12>/data_year=YYYY/   state rows               (Spark)
+
+``<id12>`` is the first 12 hex digits of the sha256 of the ``run_id``
+(:meth:`ManifestStore.state_path`):
 
 - each run writes ONLY the partitions its batch touches, under its own
-  content-addressed ``parts/run=<sha12>/`` directory;
+  ``parts/run=<id12>/`` directory. A run's directories are never
+  written again once its ledger row is committed: a replay of a
+  committed ``run_id`` returns that row, and a file byte-identical to an
+  older accepted one gets directories of its own (the file's sha only
+  feeds the data decision, never the address);
 - the run's **manifest** maps every partition of that run's state to the
   run that last wrote it — unchanged partitions are carried by
   reference, never rewritten (at the reference's 28.9M-row snapshot a
@@ -56,20 +64,41 @@ golden outcome matrix in ``tests/test_manifest_state.py``).
 
 from __future__ import annotations
 
+import datetime
+import hashlib
 import json
 import os
 import shutil
+import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import Column, DataFrame, Observation, Row
+from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from land_registry_data_ingestion_spark.operators.ingest import (
-    IngestStore,
-    read_parquet_rows,
-    write_parquet_file,
+FILE_LOG_SCHEMA = T.StructType(
+    [
+        T.StructField("run_id", T.StringType(), False),
+        T.StructField("source_path", T.StringType(), False),
+        T.StructField("file_kind", T.StringType(), False),  # complete|monthly
+        T.StructField("sha256", T.StringType(), False),
+        T.StructField("decision", T.StringType(), False),  # archive|garbage_collect
+        T.StructField("row_count", T.LongType(), True),
+        T.StructField("state_location", T.StringType(), True),
+        T.StructField("run_datetime", T.TimestampType(), False),
+    ]
+)
+
+OPERATION_LOG_SCHEMA = T.StructType(
+    [
+        T.StructField("record_op", T.StringType(), True),
+        T.StructField("outcome", T.StringType(), False),
+        T.StructField("n_rows", T.LongType(), False),
+        T.StructField("run_id", T.StringType(), False),
+    ]
 )
 
 MANIFEST_SCHEMA = T.StructType(
@@ -86,6 +115,51 @@ _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 # Rows with NULL transaction_date get a concrete partition value so every
 # state row lives in exactly one manifest entry.
 NULL_YEAR = -1
+
+
+def write_parquet_file(rows: list[dict], schema: T.StructType, path: str) -> None:
+    """Write ``rows`` as ONE parquet file at ``path``, atomically: the file
+    is written under a hidden name in the same directory (Spark and
+    pyarrow readers skip ``.``-prefixed files) and published with
+    ``os.replace``, so a reader sees the old file or the new one, never a
+    torn write. Naive datetimes are UTC — the engine's convention (the
+    default ``now`` is naive UTC) — never host-local time, which a DST
+    gap makes ambiguous."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.tmp")
+    rows = [{f.name: _utc(r.get(f.name)) for f in schema.fields} for r in rows]
+    pq.write_table(pa.Table.from_pylist(rows, to_arrow_schema(schema)), tmp)
+    os.replace(tmp, path)
+
+
+def read_parquet_rows(path: str, schema: T.StructType) -> list[dict]:
+    """Every row of the parquet files in directory ``path`` (``[]`` when
+    it does not exist), timestamps as naive UTC datetimes — the values
+    :func:`write_parquet_file` was given, whatever the host's time zone."""
+    if not os.path.isdir(path):
+        return []
+    return [
+        {k: _naive_utc(v) for k, v in r.items()}
+        for r in pq.read_table(path, schema=to_arrow_schema(schema)).to_pylist()
+    ]
+
+
+def _utc(v):
+    if not isinstance(v, datetime.datetime):
+        return v
+    if v.tzinfo is None:
+        return v.replace(tzinfo=datetime.timezone.utc)
+    return v.astimezone(datetime.timezone.utc)
+
+
+def _naive_utc(v):
+    if not isinstance(v, datetime.datetime):
+        return v
+    return _utc(v).replace(tzinfo=None)
+
+
+def _part_name() -> str:
+    return f"part-{uuid.uuid4().hex}.parquet"
 
 
 def _year_col():
@@ -106,14 +180,147 @@ def _union_schema(paths: list[str]) -> T.StructType:
 
 
 @dataclass
-class ManifestStore(IngestStore):
-    """The pipeline's state store: the ledger of :class:`IngestStore` plus
-    manifest-resolved state whose monthly merge writes only touched
-    partitions."""
+class ManifestStore:
+    """The pipeline's state store: the ledger (``file_log/``, one row per
+    run, and ``operation_log/``, per-run merge-outcome counters), read
+    and written on the driver, plus manifest-resolved state whose monthly
+    merge writes only touched partitions."""
 
-    def state_path(self, sha: str) -> str:
-        # The ledger's state_location points at the manifest, not a data dir.
-        return os.path.join(self.root, "manifests", f"run={sha[:12]}")
+    spark: SparkSession
+    root: str
+
+    @property
+    def file_log_path(self) -> str:
+        return os.path.join(self.root, "file_log")
+
+    @property
+    def operation_log_path(self) -> str:
+        return os.path.join(self.root, "operation_log")
+
+    # -- ledger ---------------------------------------------------------
+
+    def file_log(self) -> DataFrame:
+        """The ledger as a DataFrame view. Only the missing-path case
+        (first run) yields an empty ledger; any other read failure
+        (corrupt footer, permissions) must propagate — swallowing it would
+        silently flip last_accepted() to None and re-ingest instead of
+        failing the run.
+
+        ``run_datetime`` reads as a TIMESTAMP_NTZ holding the naive UTC
+        value the driver wrote and reads back: ``collect()`` would turn a
+        TIMESTAMP into host-local time."""
+        if not os.path.isdir(self.file_log_path):
+            log = self.spark.createDataFrame([], FILE_LOG_SCHEMA)
+        else:
+            log = self.spark.read.schema(FILE_LOG_SCHEMA).parquet(self.file_log_path)
+        ntz = F.col("run_datetime").cast("timestamp_ntz")  # session-time wall clock
+        return log.withColumn(
+            "run_datetime", F.convert_timezone(F.current_timezone(), F.lit("UTC"), ntz)
+        )
+
+    def _append_log(self, row: dict) -> None:
+        write_parquet_file(
+            [row], FILE_LOG_SCHEMA, os.path.join(self.file_log_path, _part_name())
+        )
+
+    def _accepted(self) -> list[dict]:
+        """Archive-decision rows, latest first (W3: max over the ledger),
+        ordered on the naive UTC ``run_datetime`` — host-local wall-clock
+        times could tie or invert across a DST change."""
+        rows = [
+            r
+            for r in read_parquet_rows(self.file_log_path, FILE_LOG_SCHEMA)
+            if r["decision"] == "archive"
+        ]
+        return sorted(rows, key=lambda r: (r["run_datetime"], r["run_id"]), reverse=True)
+
+    def last_accepted(self) -> dict | None:
+        """Latest archive-decision row."""
+        accepted = self._accepted()
+        return accepted[0] if accepted else None
+
+    def accepted_run(self, run_id: str) -> dict | None:
+        """The ledger's archive row for ``run_id``, or None."""
+        return next((r for r in self._accepted() if r["run_id"] == run_id), None)
+
+    def operation_log(self) -> DataFrame:
+        """Per-run merge-outcome stats, deduplicated by (run_id, outcome).
+
+        Merge effects are three non-atomic writes ordered state →
+        operation_log → ledger. A crash between the last two leaves the
+        run unrecorded in the ledger, so the replay re-runs the merge —
+        state converges (the location is run-addressed and overwritten
+        bit-identically) but the stats rows append a second time. The
+        replayed rows are exact duplicates (same batch vs the same
+        converged state), so read-side dedup restores exactly-once
+        semantics without a distributed transaction."""
+        if not os.path.isdir(self.operation_log_path):
+            return self.spark.createDataFrame([], OPERATION_LOG_SCHEMA)
+        return (
+            self.spark.read.schema(OPERATION_LOG_SCHEMA)
+            .parquet(self.operation_log_path)
+            .dropDuplicates(["run_id", "record_op", "outcome"])
+        )
+
+    def _append_operation_log(self, run_id: str, stats: list[dict]) -> None:
+        """Append one run's ``(record_op, outcome, n_rows)`` counters."""
+        write_parquet_file(
+            [dict(r, run_id=run_id) for r in stats],
+            OPERATION_LOG_SCHEMA,
+            os.path.join(self.operation_log_path, _part_name()),
+        )
+
+    def compact_file_log(self) -> int:
+        """Ledger maintenance: every run appends one tiny parquet file to
+        ``file_log/``; at daily cadence that is 365 small files a year,
+        all read by every ``last_accepted()`` call. Rewrites the ledger as
+        a single file via staging-dir swap (write next to the live dir,
+        two renames, remove the old) so a crash at any point leaves either
+        the old or the new complete ledger on disk. Returns the number of
+        ledger rows carried over.
+
+        The reference has no analogue — its ledger is mutable DB rows —
+        but at parquet-ledger cadence this is the same maintenance Delta/
+        Iceberg call checkpoint/rewrite-manifests."""
+        if not os.path.isdir(self.file_log_path):
+            return 0
+        tmp = self.file_log_path + ".compacting"
+        old = self.file_log_path + ".old"
+        for stale in (tmp, old):
+            if os.path.isdir(stale):
+                shutil.rmtree(stale)
+        rows = read_parquet_rows(self.file_log_path, FILE_LOG_SCHEMA)
+        write_parquet_file(rows, FILE_LOG_SCHEMA, os.path.join(tmp, _part_name()))
+        os.rename(self.file_log_path, old)
+        os.rename(tmp, self.file_log_path)
+        shutil.rmtree(old)
+        return len(rows)
+
+    def maybe_compact_file_log(self, max_files: int = 64) -> bool:
+        """Compact when the ledger dir has fragmented past ``max_files``
+        parquet parts — an O(listdir) probe, so every ledger append can
+        run it. Returns True when a compaction ran."""
+        if not os.path.isdir(self.file_log_path):
+            return False
+        n = sum(
+            1
+            for f in os.listdir(self.file_log_path)
+            if f.startswith("part-") and f.endswith(".parquet")
+        )
+        if n <= max_files:
+            return False
+        self.compact_file_log()
+        return True
+
+    # -- layout ---------------------------------------------------------
+
+    def state_path(self, run_id: str) -> str:
+        """``run_id``'s manifest dir: the ledger's ``state_location``.
+        Run ids are caller-chosen strings (stream tags, prefixes), so the
+        directory is named by a fixed-length, path-safe digest of the id.
+        A replay of an uncommitted run converges on the same location."""
+        token = hashlib.sha256(run_id.encode()).hexdigest()[:12]
+        return os.path.join(self.root, "manifests", f"run={token}")
 
     def _parts_dir(self, location: str) -> str:
         return os.path.join(self.root, "parts", os.path.basename(location))
@@ -262,7 +469,7 @@ class ManifestStore(IngestStore):
     def state_as_of(self, run_id: str) -> DataFrame:
         """Read the state exactly as accepted by ``run_id`` (snapshot
         isolation for free: manifests are immutable and partitions are
-        content-addressed per run, so any un-vacuumed historical state is
+        addressed per run, so any un-vacuumed historical state is
         one manifest read away — the table-format time-travel idea).
 
         Complements ``operators/rewind.py`` (which reconstructs history

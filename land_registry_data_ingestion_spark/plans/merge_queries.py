@@ -284,7 +284,7 @@ def cdc_state_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
     the checksum DuckDB computes over the original snapshot input: the
     merge physically rewrote touched ``data_year`` partitions, so parity
     proves untouched partitions are carried by reference and touched ones
-    remain readable from r1's content-addressed parts.
+    remain readable from r1's run-addressed parts.
 
     The table-format idea (Iceberg/Delta snapshot isolation) on plain
     parquet; reference parity target is the rewind flow its history tables
@@ -308,7 +308,7 @@ def cdc_state_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="lrdi_state_as_of_")
     try:
         store = ManifestStore(spark=spark, root=root)
-        loc1 = store.state_path("a" * 64)
+        loc1 = store.state_path("r1")
         n1 = store.write_state(state1, loc1)
         record_run(store, "r1", "derived:orders", "complete", "a" * 64,
                    datetime.datetime(2024, 1, 1), n1, loc1)
@@ -320,7 +320,7 @@ def cdc_state_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
             value_cols=["price", "status", "transaction_date"],
             batch_timestamp=F.lit(_TS).cast("timestamp"),
         )
-        loc2 = store.state_path("b" * 64)
+        loc2 = store.state_path("r2")
         n2 = store.write_merged(merged.new_state, loc2, carry)
         record_run(store, "r2", "derived:orders", "monthly", "b" * 64,
                    datetime.datetime(2024, 2, 1), n2, loc2)

@@ -85,13 +85,6 @@ def main() -> None:
     ap.add_argument("--batch-rows", type=int, default=288_000)
     ap.add_argument("--workdir", default="/tmp/ref_scale_probe")
     ap.add_argument(
-        "--no-strict",
-        action="store_true",
-        help="disable the strict cast-failure aggregate (the gate pass "
-        "itself — second parse + key-uniqueness agg — still runs); "
-        "isolates the marginal cost of the strict checks",
-    )
-    ap.add_argument(
         "--snapshot-parse-write-only",
         action="store_true",
         help="measure the snapshot as ONE parse + state write with the "
@@ -161,7 +154,6 @@ def main() -> None:
 
     store = make_store(spark, str(work / "store"))
 
-    strict = not args.no_strict
     t0 = time.monotonic()
     if args.snapshot_parse_write_only:
         from land_registry_data_ingestion_spark.operators.merge import (
@@ -184,7 +176,6 @@ def main() -> None:
             snap_csv,
             "probe-snap",
             now=datetime.datetime(2024, 1, 1),
-            strict=strict,
         )
     t_snap = time.monotonic() - t0
 
@@ -198,14 +189,12 @@ def main() -> None:
             monthly_csv,
             "probe-merge",
             now=datetime.datetime(2024, 2, 1),
-            strict=strict,
         )
         t_merge = time.monotonic() - t0
 
     print(
         json.dumps(
             {
-                "strict_gates": strict,
                 "rows": snap_row["row_count"],
                 "batch_rows": args.batch_rows,
                 "merged_rows": merge_row["row_count"],

@@ -4,7 +4,6 @@ updates, touch only batch partitions, and replay as no-ops."""
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 import pytest
@@ -19,6 +18,7 @@ from land_registry_data_ingestion_spark.operators.state import ManifestStore
 from land_registry_data_ingestion_spark.sources.csv import read_price_paid_csv
 from land_registry_data_ingestion_spark.streaming.cdc_sink import run_cdc_stream
 
+from tests.test_ingest import _run_dirs
 from tests.test_manifest_state import MONTHLY, SNAP, _line, _write
 
 
@@ -106,7 +106,7 @@ def test_invalid_op_batch_rejected_before_any_write(
     bad = _updates_df(
         spark, tmp_path, "bad.csv", [_line("T0001", 1, "2015-01-05", "X")]
     )
-    before = _state_rows(store)
+    before, dirs = _state_rows(store), _run_dirs(store)
     with pytest.raises(ValueError, match="outside A/C/D"):
         merge_update_frame(store, bad, run_id="stream-bad")
     assert _state_rows(store) == before
@@ -114,9 +114,10 @@ def test_invalid_op_batch_rejected_before_any_write(
         store.file_log().filter(F.col("run_id") == "stream-bad").count() == 0
     )
     # nothing of the rejected run remains: no parts, no manifest, no counters
-    run_dir = f"run={hashlib.sha256(b'stream-bad').hexdigest()[:12]}"
-    assert not os.path.exists(os.path.join(store.root, "parts", run_dir))
-    assert not os.path.exists(os.path.join(store.root, "manifests", run_dir))
+    loc = store.state_path("stream-bad")
+    assert not os.path.exists(store._parts_dir(loc))
+    assert not os.path.exists(loc)
+    assert _run_dirs(store) == dirs
     assert (
         store.operation_log().filter(F.col("run_id") == "stream-bad").count() == 0
     )
@@ -127,12 +128,12 @@ def test_null_key_batch_rejected_before_any_write(spark, tmp_path, booted):
     bad = _updates_df(
         spark, tmp_path, "nokey.csv", [_line("T0001", 1, "2015-01-05", "C")]
     ).withColumn("transaction_unique_id", F.lit(None).cast("string"))
-    before = _state_rows(store)
+    before, dirs = _state_rows(store), _run_dirs(store)
     with pytest.raises(ValueError, match="NULL transaction_unique_id"):
         merge_update_frame(store, bad, run_id="stream-nokey")
     assert _state_rows(store) == before
-    run_dir = f"run={hashlib.sha256(b'stream-nokey').hexdigest()[:12]}"
-    assert not os.path.exists(os.path.join(store.root, "parts", run_dir))
+    assert not os.path.exists(store._parts_dir(store.state_path("stream-nokey")))
+    assert _run_dirs(store) == dirs
     assert (
         store.operation_log().filter(F.col("run_id") == "stream-nokey").count() == 0
     )

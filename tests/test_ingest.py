@@ -50,6 +50,16 @@ def _write(tmp_path, name, lines):
     return str(p)
 
 
+def _run_dirs(store) -> set[str]:
+    """The run directories under the store's parts/ and manifests/."""
+    return {
+        os.path.join(sub, d)
+        for sub in ("parts", "manifests")
+        if os.path.isdir(os.path.join(store.root, sub))
+        for d in os.listdir(os.path.join(store.root, sub))
+    }
+
+
 def test_snapshot_then_dedup_then_update(spark, store, tmp_path):
     snap = _write(tmp_path, "pp-complete-1.csv", SNAP1)
     t0 = datetime.datetime(2024, 1, 1)
@@ -110,7 +120,7 @@ def test_changed_snapshot_supersedes(spark, store, tmp_path):
     ingest_snapshot(store, snap2, "r2", now=datetime.datetime(2024, 1, 2))
     assert store.last_accepted()["run_id"] == "r2"
     assert store.current_state().count() == 4
-    # both content-addressed state dirs exist (history retained)
+    # both run-addressed state dirs exist (history retained)
     log = store.file_log().filter(F.col("decision") == "archive").collect()
     assert len({r["state_location"] for r in log}) == 2
 
@@ -246,8 +256,6 @@ def test_rejected_snapshot_discards_uncommitted_state(spark, store, tmp_path):
     """The single-parse gate writes state BEFORE validating; a rejected
     snapshot must leave no ledger row AND no orphan state on disk
     (neither manifest nor parts)."""
-    import hashlib
-
     dup_snap = _write(
         tmp_path,
         "pp-complete-dup3.csv",
@@ -256,9 +264,10 @@ def test_rejected_snapshot_discards_uncommitted_state(spark, store, tmp_path):
     with pytest.raises(ValueError, match="duplicate transaction_unique_id"):
         ingest_snapshot(store, dup_snap, "r1", now=datetime.datetime(2024, 1, 1))
     assert store.file_log().count() == 0
-    loc = store.state_path(hashlib.sha256(open(dup_snap, "rb").read()).hexdigest())
+    loc = store.state_path("r1")
     assert not os.path.exists(loc)
     assert not os.path.exists(store._parts_dir(loc))
+    assert _run_dirs(store) == set()
 
 
 def test_empty_snapshot_accepted_not_crashed(spark, store, tmp_path):

@@ -16,9 +16,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from land_registry_data_ingestion_spark.operators.ingest import (
-    IngestStore,
     ingest_monthly_update,
     ingest_snapshot,
+    merge_update_frame,
 )
 from land_registry_data_ingestion_spark.operators.state import ManifestStore
 
@@ -301,6 +301,95 @@ def test_state_as_of_time_travel(spark, store, tmp_path):
         store.state_as_of("no-such-run")
 
 
+def _files(store) -> dict[str, float]:
+    """Every file under the store's parts/ and manifests/, with its mtime."""
+    out = {}
+    for sub in ("parts", "manifests"):
+        for d, _, names in os.walk(os.path.join(store.root, sub)):
+            for n in names:
+                out[os.path.join(d, n)] = os.stat(os.path.join(d, n)).st_mtime_ns
+    return out
+
+
+def test_monthly_redelivery_of_an_older_file_keeps_that_runs_state(
+    spark, store, tmp_path
+):
+    """A monthly file byte-identical to an OLDER accepted one (not the
+    last) is a new run: it gets a state location of its own, and the
+    older run's state reads back unchanged."""
+    t0 = datetime.datetime(2024, 1, 1)
+    day = datetime.timedelta(days=1)
+    m1 = _write(tmp_path, "m1.csv", [_line("T0001", 150000, "2015-01-05", "C")])
+    m2 = _write(tmp_path, "m2.csv", [_line("T0002", 1, "2015-06-06", "C")])
+    ingest_snapshot(store, _write(tmp_path, "s.csv", SNAP), "r1", now=t0)
+    r2 = ingest_monthly_update(store, m1, "r2", now=t0 + day)
+    r2_rows = _rows(store.state_as_of("r2"))
+    ingest_monthly_update(store, m2, "r3", now=t0 + 2 * day)
+    r4 = ingest_monthly_update(store, m1, "r4", now=t0 + 3 * day)
+
+    assert r4["decision"] == "archive"
+    assert r4["state_location"] != r2["state_location"]
+    assert _rows(store.state_as_of("r2")) == r2_rows
+    assert _state(store.state_as_of("r2"))["{T0002}"] == (200000, 2015, False)
+    assert _state(store.current_state())["{T0002}"] == (1, 2015, False)
+
+
+def test_snapshot_redelivery_of_an_older_file_keeps_that_runs_state(
+    spark, store, tmp_path
+):
+    """A snapshot byte-identical to an OLDER accepted one gets its own
+    state location and leaves the older run's rows (audit stamps
+    included) as they were; re-running a committed run_id returns its
+    ledger row and rewrites nothing."""
+    t0 = datetime.datetime(2024, 1, 1)
+    day = datetime.timedelta(days=1)
+    s1 = _write(tmp_path, "s1.csv", SNAP)
+    s2 = _write(tmp_path, "s2.csv", SNAP[:3])
+    a = ingest_snapshot(store, s1, "a", now=t0)
+    a_rows = _rows(store.state_as_of("a"))
+    ingest_snapshot(store, s2, "b", now=t0 + day)
+    c = ingest_snapshot(store, s1, "c", now=t0 + 2 * day)
+
+    assert c["decision"] == "archive"
+    assert c["state_location"] != a["state_location"]
+    # every column, a's created_datetime stamps included (c's time when
+    # c rewrote a's directory)
+    assert _rows(store.state_as_of("a")) == a_rows
+
+    files, n_ledger = _files(store), store.file_log().count()
+    assert ingest_snapshot(store, s1, "a", now=t0 + 3 * day) == a
+    assert _files(store) == files
+    assert store.file_log().count() == n_ledger
+
+
+def test_replay_of_a_committed_run_runs_no_spark_job(spark, store, tmp_path):
+    """Re-running a committed run_id returns its ledger row before the
+    parse and before the gate, through every entry point."""
+    from land_registry_data_ingestion_spark.sources.csv import read_price_paid_csv
+
+    t0 = datetime.datetime(2024, 1, 1)
+    snap = _write(tmp_path, "s.csv", SNAP)
+    upd = _write(tmp_path, "m.csv", MONTHLY)
+    rows = {
+        "r1": ingest_snapshot(store, snap, "r1", now=t0),
+        "r2": ingest_monthly_update(store, upd, "r2", now=t0 + datetime.timedelta(days=1)),
+    }
+    frame = read_price_paid_csv(spark, upd)
+    rows["r3"] = merge_update_frame(store, frame, run_id="r3")
+    later = t0 + datetime.timedelta(days=5)
+    calls = {
+        "r1": lambda: ingest_snapshot(store, snap, "r1", now=later),
+        "r2": lambda: ingest_monthly_update(store, upd, "r2", now=later),
+        "r3": lambda: merge_update_frame(store, frame, run_id="r3", now=later),
+    }
+    n_ledger = store.file_log().count()
+    for run_id, call in calls.items():
+        row, n_jobs = _jobs_in_group(spark, f"replay-{run_id}", call)
+        assert n_jobs == 0, run_id
+        assert row == rows[run_id]
+    assert store.file_log().count() == n_ledger
+
+
 def test_schema_evolution_across_carried_partitions(spark, tmp_path):
     """A column added by a later merge must surface (as NULL) on rows in
     carried-by-reference partitions written before it existed."""
@@ -342,9 +431,6 @@ def test_empty_merge_into_empty_state_stays_readable(spark, tmp_path):
     key in the NULL-year partition) must write the schema-only leaf like
     write_state's zero-row gate — an empty manifest would make every
     later read_state_at call spark.read.parquet() with zero paths."""
-    from land_registry_data_ingestion_spark.operators.ingest import (
-        merge_update_frame,
-    )
     from land_registry_data_ingestion_spark.sources.csv import (
         read_price_paid_csv,
     )
@@ -545,7 +631,7 @@ def test_ledger_orders_on_the_stored_instant_across_dst_gap(tmp_path):
     01:50 on 2024-03-31 straddle the spring-forward gap: read as
     host-local time both stored as 00:50Z, tied, and the run_id
     tie-break made the OLDER run the latest. Driver only: no Spark."""
-    store = IngestStore(spark=None, root=str(tmp_path / "dst"))
+    store = ManifestStore(spark=None, root=str(tmp_path / "dst"))
     with _host_tz("Europe/London"):
         store._append_log(_ledger_row("z-earlier", datetime.datetime(2024, 3, 31, 0, 50)))
         store._append_log(_ledger_row("a-later", datetime.datetime(2024, 3, 31, 1, 50)))
@@ -566,7 +652,7 @@ def test_crash_before_ledger_append_replays_once(spark, store, tmp_path, monkeyp
     upd = _write(tmp_path, "m.csv", MONTHLY)
     ingest_snapshot(store, snap, "r1", now=datetime.datetime(2024, 1, 1))
 
-    append_log = IngestStore._append_log
+    append_log = ManifestStore._append_log
     crashed = []
 
     def crash_once(self, row):
@@ -575,7 +661,7 @@ def test_crash_before_ledger_append_replays_once(spark, store, tmp_path, monkeyp
             raise OSError("crash before the ledger append")
         append_log(self, row)
 
-    monkeypatch.setattr(IngestStore, "_append_log", crash_once)
+    monkeypatch.setattr(ManifestStore, "_append_log", crash_once)
     t1 = datetime.datetime(2024, 2, 1)
     with pytest.raises(OSError, match="crash before the ledger append"):
         ingest_monthly_update(store, upd, "r2", now=t1)
