@@ -34,6 +34,7 @@ from __future__ import annotations
 import datetime
 import hashlib
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -43,7 +44,11 @@ from land_registry_data_ingestion_spark.operators.merge import (
     observed_outcome_stats,
     validate_unique,
 )
-from land_registry_data_ingestion_spark.operators.state import ManifestStore, _utc
+from land_registry_data_ingestion_spark.operators.state import (
+    BatchKeys,
+    ManifestStore,
+    _utc,
+)
 from land_registry_data_ingestion_spark.sources.csv import (
     read_price_paid_csv,
     read_price_paid_csv_with_rejects,
@@ -125,6 +130,11 @@ def ingest_snapshot(
 ) -> dict:
     """Full-snapshot ingestion: hash → dedup decision → load → ledger.
 
+    Two Spark jobs: the state write, with the gate's cast-failure count
+    observed, and the narrow job that builds the key index from the
+    written leaves. Key uniqueness is then checked on the driver over
+    that index; only a suspected duplicate pays an exact Spark check.
+
     Returns the appended file-log row (with ``decision``), or the
     accepted row when ``run_id`` is already committed.
     """
@@ -155,7 +165,7 @@ def ingest_snapshot(
     df = df.observe(gate_obs, *gate_aggs)
     state = init_state(df.drop("record_op"), batch_timestamp=F.lit(_utc(now)))
     location = store.state_path(run_id)
-    row_count = store.write_state(state, location)
+    row_count = store.write_state(state, location, key)
 
     # `or 0`: F.sum over a ZERO-ROW snapshot yields NULL — an empty file
     # is gate-clean (the reference accepts it too), not a TypeError.
@@ -173,19 +183,14 @@ def ingest_snapshot(
             f"malformed values in {csv_path} (e.g. {sample}) — batch "
             f"rejected before any state was committed"
         )
-    # Key uniqueness probes the WRITTEN parquet: one dictionary-encoded
-    # column scan instead of a second CSV parse — the check the reference
-    # enforces by `.one()` crashing mid-load. Two-tier: the happy path
-    # distinct-counts 8-byte key HASHES (distinct hashes < rows implies a
-    # possible duplicate OR a hash collision, never the reverse — a real
-    # duplicate can't hide), and only that rare suspicion pays the exact
-    # string-keyed confirm. At reference scale the hash pass shuffles
-    # ~7× less than distinct-counting the 56-char keys directly.
-    written = store.read_state_at(location)
-    n_hashed = written.agg(
-        F.count_distinct(F.xxhash64(F.col(key))).alias("n")
-    ).collect()[0]["n"]
-    if n_hashed < row_count:
+    # Key uniqueness — the check the reference enforces by `.one()`
+    # crashing mid-load — reads the key index just written, on the
+    # driver: no repeated key hash proves the keys unique (a real
+    # duplicate can't hide), and only a repeat (a duplicate OR a hash
+    # collision) pays the exact string-keyed confirm over the written
+    # parquet.
+    if store.duplicate_key_hashes(location):
+        written = store.read_state_at(location)
         n_keys = written.agg(
             F.count_distinct(F.col(key)).alias("n")
         ).collect()[0]["n"]
@@ -208,12 +213,13 @@ def _gate_batch(
     op_col: str,
     what: str,
     rejects: DataFrame | None = None,
-) -> set[int]:
-    """The merge's first Spark action: enforce every batch invariant and
-    find the partitions the merge touches in ONE collect
-    (:meth:`~.state.ManifestStore.probe_batch`) — a one-row aggregate over
-    the batch cross-joined with the one-row old-year probe. Returns the
-    touched years. The invariants:
+) -> BatchKeys:
+    """The merge's first Spark action: ONE collect of the batch's skinny
+    columns (:meth:`~.state.ManifestStore.probe_batch`: key, key hash,
+    year, op and the cast-failure flag), which also materialises a
+    persisted parse. Every batch invariant is then checked on the driver,
+    and the key index gives the partitions the merge touches. Returns
+    the batch's keys with those years. The invariants:
 
     - no row's price/date failed its cast, when ``rejects`` (the strict
       CSV parse's quarantine) is given — the reference crashes on such
@@ -221,27 +227,21 @@ def _gate_batch(
       silently nulling values into state;
     - no NULL key — the reference's key is NOT NULL, so its per-row path
       fails such a batch; a NULL key addresses no row;
-    - ≤1 row per key (``count(key)`` against ``count_distinct(key)``) —
-      the invariant the reference enforces via ``.one()`` crashing; a
-      duplicate would fan out the merge join;
+    - ≤1 row per key (exact, over the collected keys) — the invariant the
+      reference enforces via ``.one()`` crashing; a duplicate would fan
+      out the merge join;
     - only A/C/D ops (reference RuntimeError,
       database_updater.py:1011-1013).
 
-    Count and conditional-count aggregates partial-aggregate, so the
-    shuffle is one row per task. Sample rows for the error message are
-    fetched by a targeted query only on the failure path."""
+    Sample rows for the error message are fetched by a targeted query
+    only on the failure path."""
     bad_op = ~F.coalesce(F.col(op_col).isin("A", "C", "D"), F.lit(False))
-    aggs = [
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count(key_col).alias("n_keyed"),
-        F.count_distinct(key_col).alias("n_keys"),
-        F.count(F.when(bad_op, 1)).alias("n_bad_op"),
-    ]
+    extra = [bad_op.alias("_bad_op")]
     if rejects is not None:
         bad = F.col("price").isNull() | F.col("transaction_date").isNull()
-        aggs.append(F.count(F.when(bad, 1)).alias("n_bad"))
-    g, years = store.probe_batch(updates, key_col, aggs)
-    if rejects is not None and g["n_bad"]:
+        extra.append(bad.alias("_bad"))
+    cols, batch = store.probe_batch(updates, key_col, extra)
+    if rejects is not None and pc.any(cols.column("_bad")).as_py():
         bad = rejects.limit(5).collect()  # failure path only
         sample = ", ".join(
             f"{r['transaction_unique_id']}({r['reject_reason']})" for r in bad
@@ -250,26 +250,27 @@ def _gate_batch(
             f"malformed values in {what} (e.g. {sample}) — batch "
             f"rejected before any state was written"
         )
-    if g["n_keyed"] < g["n_rows"]:
+    keys = cols.column(key_col)
+    if keys.null_count:
         raise ValueError(
-            f"{what} has {g['n_rows'] - g['n_keyed']} row(s) with a NULL "
+            f"{what} has {keys.null_count} row(s) with a NULL "
             f"{key_col} — batch rejected before any state was written"
         )
-    if g["n_keys"] < g["n_keyed"]:
+    if len(pc.unique(keys)) < len(keys):
         dups = validate_unique(updates, key_col).limit(5).collect()
         sample = ", ".join(str(r[key_col]) for r in dups)
         raise ValueError(
             f"duplicate {key_col} in {what} (e.g. {sample}) — "
             f"refusing to merge; the full-outer join would fan out"
         )
-    if g["n_bad_op"]:
+    if pc.any(cols.column("_bad_op")).as_py():
         bad = updates.filter(bad_op).limit(5).collect()  # failure path only
         sample = ", ".join(f"{r[key_col]}={r[op_col]!r}" for r in bad)
         raise ValueError(
             f"{what} contains ops outside A/C/D (e.g. {sample}) — batch "
             f"rejected, state unchanged"
         )
-    return years
+    return batch
 
 
 def ingest_monthly_update(
@@ -283,17 +284,19 @@ def ingest_monthly_update(
     write the run's state, append ledger + outcome counters.
 
     The staged file is parsed ONCE and persisted for the run's two Spark
-    actions in :func:`merge_update_frame`: the gate (which also finds the
-    touched partitions, and here also refuses price/date cast failures
-    that the strict parse quarantined in ``rejects``) and the state
-    write.
+    actions in :func:`merge_update_frame`: the gate's collect of the
+    batch's skinny columns (the key index then gives the touched
+    partitions on the driver; here the gate also refuses price/date cast
+    failures that the strict parse quarantined in ``rejects``) and the
+    state write. The state is read only by the write, and only for the
+    touched years.
 
     Invariant gates (the reference crashes via ``.one()``; here the run
     fails with an actionable error BEFORE any state is written):
 
     - the update batch must have no NULL key, ≤1 row per key and only
-      A/C/D ops — probed every run (the batch is small, the probe is one
-      aggregate over it);
+      A/C/D ops — checked every run on the driver, over the batch's
+      collected skinny columns (the batch is small);
     - the current state is unique *by induction*: validated when the
       snapshot was loaded (``ingest_snapshot``) and preserved by the
       merge (one output row per key).
@@ -333,11 +336,13 @@ def merge_update_frame(
     DataFrames with no file to sha (the ledger's ``sha256`` then holds
     the sha256 of ``run_id``).
 
-    Two Spark actions: the gate (:func:`_gate_batch`, which rejects a bad
-    batch before any write; ``rejects`` is the strict CSV parse's
-    quarantine, when there is one) and the state write, whose per-(op,
-    outcome) counters ride the write as observed metrics — no second join
-    for the operation log.
+    Two Spark actions: the gate (:func:`_gate_batch`, one collect of the
+    batch's skinny columns, which rejects a bad batch before any write
+    and probes the key index for the touched years; ``rejects`` is the
+    strict CSV parse's quarantine, when there is one) and the state
+    write, whose per-(op, outcome) counters ride the write as observed
+    metrics — no second join for the operation log. The written leaves'
+    key indexes are extended on the driver from the gate's key hashes.
 
     Exactly-once by ``run_id``: if the ledger already holds an accepted
     run with this id the call is a no-op returning that row — Structured
@@ -351,10 +356,10 @@ def merge_update_frame(
         return prior
 
     source_path = source_path or f"stream:{run_id}"
-    touched_years = _gate_batch(
+    batch = _gate_batch(
         store, updates, key_col, op_col, f"update batch {source_path}", rejects
     )
-    current, carry = store.current_for_merge(updates, key_col, touched_years)
+    current, carry = store.current_for_merge(updates, key_col, batch.touched)
     value_cols = [
         c
         for c in current.columns
@@ -377,7 +382,7 @@ def merge_update_frame(
     )
     location = store.state_path(run_id)
     obs = Observation()
-    row_count = store.write_merged(result.observed_state(obs), location, carry)
+    row_count = store.write_merged(result.observed_state(obs), location, carry, batch)
     store._append_operation_log(run_id, observed_outcome_stats(obs.get, op_col))
     return record_run(
         store, run_id, source_path, "monthly",

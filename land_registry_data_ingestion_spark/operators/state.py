@@ -9,6 +9,9 @@ Layout under the store root::
     operation_log/                     merge-outcome counters   (driver)
     manifests/run=<id12>/              data_year, path, row_count (driver)
     parts/run=<id12>/data_year=YYYY/   state rows               (Spark)
+    parts/run=<id12>/_key_index/data_year=YYYY/
+                                       sorted xxhash64(key) of that leaf
+                                                                (driver)
 
 ``<id12>`` is the first 12 hex digits of the sha256 of the ``run_id``
 (:meth:`ManifestStore.state_path`):
@@ -29,9 +32,9 @@ Layout under the store root::
   the ledger append and a replay of an uncommitted run converges
   (reference ``...data_decision.py:143-174`` semantics).
 
-The control plane — ledger, operation log, manifests and the
-per-partition row counts (parquet footers) — is read and written on the
-driver with ``pyarrow.parquet``; only state rows go through Spark.
+The control plane — ledger, operation log, manifests, the per-partition
+row counts (parquet footers) and the key index — is read and written on
+the driver with ``pyarrow.parquet``; only state rows go through Spark.
 
 Touched partitions for an A/C/D batch are exactly:
 
@@ -41,18 +44,36 @@ Touched partitions for an A/C/D batch are exactly:
   row across years — the old year must drop it; a D op must rewrite the
   year that holds the doomed row).
 
-Finding the second set is one column-pruned scan of
-``(key, transaction_date)`` over the state with the (small) batch keys
-broadcast — no shuffle of the state, no write. A per-partition key bloom
-index is the next lever if even that scan hurts.
+The **key index** finds the second set without reading the state. Each
+leaf has one sibling file of the sorted ``xxhash64`` of its keys, under
+the writing run's ``_key_index/`` (the ``_`` prefix keeps Spark readers
+and the ``part-`` filters off it); a carried leaf carries its index by
+reference, since the index path follows from the leaf path. The index
+records the key column it hashes and that column's type. The probe
+(:meth:`ManifestStore.probe_batch`) collects the batch's key hashes —
+the key cast to the state's key type, so an int batch hashes like a
+long state — and binary-searches each leaf's index on the driver. The
+probe may only err towards MORE years:
 
-A monthly merge is therefore two Spark actions: :meth:`ManifestStore.
-probe_batch` collects the batch's invariant aggregate and both year sets
-in one row, then the state write runs the merge join once, its outcome
-counters riding along as observed metrics. Everything between — the
-manifest lookup, :meth:`ManifestStore.current_for_merge` given the probed
-years, and every state read's schema (the union of one parquet footer per
-leaf) — is driver work that schedules no Spark job.
+- a hash collision or a stale entry only adds a touched year;
+- a leaf with no index, or one hashing another column or type, counts
+  as touched; that merge rewrites the leaf and indexes it anew.
+
+A snapshot builds its index in one narrow Spark job over the written
+leaves (key and date columns only). A merge builds it with no job: a
+rewritten year's index is its old index ∪ the hashes of the batch rows
+dated in that year. That is a superset of the year's keys after the
+merge, because a merged row's ``transaction_date`` comes from its old
+row or from its batch row; a key that moved out leaves a stale entry,
+which is a false positive.
+
+A monthly merge is therefore two Spark actions: the gate's one collect
+of the batch's skinny columns (:meth:`ManifestStore.probe_batch`), then
+the state write running the merge join once, its outcome counters riding
+along as observed metrics. Everything between — the manifest lookup, the
+index probe, :meth:`ManifestStore.current_for_merge` given the probed
+years, and every state read's schema (the union of one parquet footer
+per leaf) — is driver work that schedules no Spark job.
 
 Merging only the touched partitions is sound because the CDC join is
 keyed: a state row whose key is absent from the batch passes through
@@ -72,9 +93,10 @@ import shutil
 import uuid
 from dataclasses import dataclass
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -116,20 +138,29 @@ _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 # state row lives in exactly one manifest entry.
 NULL_YEAR = -1
 
+# A leaf's key index lives at <run parts dir>/_key_index/<leaf>/keys.parquet.
+_KEY_INDEX = "_key_index"
 
-def write_parquet_file(rows: list[dict], schema: T.StructType, path: str) -> None:
-    """Write ``rows`` as ONE parquet file at ``path``, atomically: the file
-    is written under a hidden name in the same directory (Spark and
+
+def _write_table(table: pa.Table, path: str, **options) -> None:
+    """Write ``table`` as ONE parquet file at ``path``, atomically: the
+    file is written under a hidden name in the same directory (Spark and
     pyarrow readers skip ``.``-prefixed files) and published with
     ``os.replace``, so a reader sees the old file or the new one, never a
-    torn write. Naive datetimes are UTC — the engine's convention (the
-    default ``now`` is naive UTC) — never host-local time, which a DST
-    gap makes ambiguous."""
+    torn write."""
     os.makedirs(os.path.dirname(path), exist_ok=True)
     tmp = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.tmp")
-    rows = [{f.name: _utc(r.get(f.name)) for f in schema.fields} for r in rows]
-    pq.write_table(pa.Table.from_pylist(rows, to_arrow_schema(schema)), tmp)
+    pq.write_table(table, tmp, **options)
     os.replace(tmp, path)
+
+
+def write_parquet_file(rows: list[dict], schema: T.StructType, path: str) -> None:
+    """Write ``rows`` as ONE parquet file at ``path``, atomically
+    (:func:`_write_table`). Naive datetimes are UTC — the engine's
+    convention (the default ``now`` is naive UTC) — never host-local
+    time, which a DST gap makes ambiguous."""
+    rows = [{f.name: _utc(r.get(f.name)) for f in schema.fields} for r in rows]
+    _write_table(pa.Table.from_pylist(rows, to_arrow_schema(schema)), path)
 
 
 def read_parquet_rows(path: str, schema: T.StructType) -> list[dict]:
@@ -166,6 +197,47 @@ def _year_col():
     return F.coalesce(F.year("transaction_date"), F.lit(NULL_YEAR))
 
 
+def _index_path(leaf: str) -> str:
+    return os.path.join(
+        os.path.dirname(leaf), _KEY_INDEX, os.path.basename(leaf), "keys.parquet"
+    )
+
+
+def _write_key_index(leaf: str, hashes: np.ndarray, key: tuple[str, str]) -> None:
+    """Store ``leaf``'s sorted key hashes, tagged with the ``(column,
+    type)`` they hash. Sorted hashes delta-encode to ~5-6 bytes each."""
+    table = pa.table({"h": pa.array(hashes, pa.int64())}).replace_schema_metadata(
+        {"key_col": key[0], "key_type": key[1]}
+    )
+    _write_table(
+        table, _index_path(leaf), use_dictionary=False, compression="none",
+        column_encoding={"h": "DELTA_BINARY_PACKED"},
+    )
+
+
+def _read_key_index(leaf: str, key: tuple[str, str] | None = None) -> np.ndarray | None:
+    """``leaf``'s sorted key hashes; None when it has no index, or (given
+    ``key``) when its index hashes another column or type."""
+    path = _index_path(leaf)
+    if not os.path.exists(path):
+        return None
+    table = pq.read_table(path)
+    meta = table.schema.metadata or {}
+    if key is not None and (meta.get(b"key_col"), meta.get(b"key_type")) != (
+        key[0].encode(), key[1].encode()
+    ):
+        return None
+    return table.column("h").to_numpy()
+
+
+def _holds_any(index: np.ndarray, hashes: np.ndarray) -> bool:
+    """Whether the sorted ``index`` holds any of ``hashes``."""
+    if not len(index) or not len(hashes):
+        return False
+    pos = np.minimum(np.searchsorted(index, hashes), len(index) - 1)
+    return bool(np.any(index[pos] == hashes))
+
+
 def _union_schema(paths: list[str]) -> T.StructType:
     """Union, by column name in first-seen order, of the Spark row schemas
     that the first data file of each leaf dir records in its footer."""
@@ -177,6 +249,22 @@ def _union_schema(paths: list[str]) -> T.StructType:
         for f in schema.fields:
             fields.setdefault(f.name, f)
     return T.StructType(list(fields.values()))
+
+
+@dataclass(frozen=True)
+class BatchKeys:
+    """A batch's keys as the key index sees them, collected by
+    :meth:`ManifestStore.probe_batch`: per batch row, the ``xxhash64`` of
+    its key cast to the state's key type (``key`` names that column and
+    type) and its ``data_year``. ``touched`` is the set of years the merge
+    rewrites; ``leaves`` maps each year of the probed manifest to its
+    leaf, whose index the merge extends."""
+
+    key: tuple[str, str]
+    hashes: np.ndarray
+    years: np.ndarray
+    touched: set[int]
+    leaves: dict[int, str]
 
 
 @dataclass
@@ -375,10 +463,18 @@ class ManifestStore:
     def current_state(self) -> DataFrame:
         return self._read_parts([e["path"] for e in self._current_entries()])
 
-    def write_state(self, state: DataFrame, location: str) -> int:
+    def write_state(
+        self, state: DataFrame, location: str, key_col: str | None = None
+    ) -> int:
         """Full write (snapshot load): every partition lands under this
-        run's parts dir and the manifest references only this run."""
-        return self._write(state, location, [])
+        run's parts dir and the manifest references only this run. Given
+        ``key_col``, one more narrow Spark job indexes the written leaves
+        (:meth:`_index_leaves`); without it they have no index, so every
+        probe counts them as touched."""
+        n, written = self._write(state, location, [])
+        if key_col is not None:
+            self._index_leaves(location, written, key_col)
+        return n
 
     def read_state_at(self, location: str) -> DataFrame:
         """State rows at a state_location — including one written but not
@@ -392,27 +488,55 @@ class ManifestStore:
         shutil.rmtree(self._parts_dir(location), ignore_errors=True)
         shutil.rmtree(location, ignore_errors=True)
 
+    def duplicate_key_hashes(self, location: str) -> int:
+        """How many rows of the indexed state at ``location`` repeat an
+        earlier row's key hash — a duplicate key or a hash collision
+        (0 proves the keys unique; a real duplicate cannot hide). Driver
+        work over the key index: no Spark job."""
+        h = np.sort(np.concatenate(
+            [_read_key_index(e["path"]) for e in self._manifest_entries(location)]
+        ))
+        return int(np.count_nonzero(h[1:] == h[:-1]))
+
     def probe_batch(
-        self, updates: DataFrame, key_col: str, aggs: list[Column]
-    ) -> tuple[Row, set[int]]:
-        """The merge's first Spark action: ONE collect of the caller's
-        one-row aggregate ``aggs`` over ``updates`` (its batch invariants)
-        cross-joined with the one-row probe of the years the merge
-        touches. Returns the aggregate row and those years: the batch's
-        own years, union the years currently holding any batch key (the
-        broadcast-key semi-join over the state's key column)."""
-        paths = [e["path"] for e in self._current_entries()]
-        old_years = (
-            self._read_parts(paths)
-            .join(F.broadcast(updates.select(key_col)), key_col, "left_semi")
-            .agg(F.collect_set(_year_col()).alias("_old_years"))
+        self, updates: DataFrame, key_col: str, extra: list[Column] = ()
+    ) -> tuple[pa.Table, BatchKeys]:
+        """The merge's first Spark action: ONE collect, as Arrow, of the
+        batch's skinny columns — ``key_col``, its hash ``_hash`` (of the
+        key cast to the state's key type, from the footers), its year
+        ``_year`` and the caller's ``extra`` columns. Returns that table
+        and the batch's keys probed against the key index
+        (:meth:`probe_keys`); the state itself is not read."""
+        entries = self._current_entries()
+        key_type = _union_schema([e["path"] for e in entries])[key_col].dataType
+        cols = updates.select(
+            key_col,
+            F.xxhash64(F.col(key_col).cast(key_type)).alias("_hash"),
+            _year_col().alias("_year"),
+            *extra,
+        ).toArrow()
+        batch = self.probe_keys(
+            cols.column("_hash").to_numpy(),
+            cols.column("_year").to_numpy(),
+            (key_col, key_type.simpleString()),
         )
-        row = (
-            updates.agg(*aggs, F.collect_set(_year_col()).alias("_new_years"))
-            .crossJoin(old_years)
-            .collect()[0]
-        )
-        return row, set(row["_new_years"]) | set(row["_old_years"])
+        return cols, batch
+
+    def probe_keys(
+        self, hashes: np.ndarray, years: np.ndarray, key: tuple[str, str]
+    ) -> BatchKeys:
+        """The years a batch touches, on the driver: the batch's own
+        ``years``, union every current year whose key index holds one of
+        ``hashes`` or has no index over ``key`` (column, type). Reads only
+        the indexes of years the batch does not name; no Spark job."""
+        leaves = {e["data_year"]: e["path"] for e in self._current_entries()}
+        touched = {int(y) for y in np.unique(years)}
+        for year, leaf in leaves.items():
+            if year not in touched:
+                index = _read_key_index(leaf, key)
+                if index is None or _holds_any(index, hashes):
+                    touched.add(year)
+        return BatchKeys(key, hashes, years, touched, leaves)
 
     def current_for_merge(
         self, updates: DataFrame, key_col: str, touched_years: set[int] | None = None
@@ -423,7 +547,7 @@ class ManifestStore:
         ingest gate runs anyway) this schedules no Spark job; without it,
         it runs the probe itself."""
         if touched_years is None:
-            touched_years = self.probe_batch(updates, key_col, [])[1]
+            touched_years = self.probe_batch(updates, key_col)[1].touched
         entries = self._current_entries()
         touched = [e["path"] for e in entries if e["data_year"] in touched_years]
         carry = [e for e in entries if e["data_year"] not in touched_years]
@@ -432,15 +556,70 @@ class ManifestStore:
         schema = _union_schema([e["path"] for e in entries])
         return self.spark.createDataFrame([], schema), carry
 
-    def write_merged(self, new_state: DataFrame, location: str, carry) -> int:
+    def write_merged(
+        self, new_state: DataFrame, location: str, carry, batch: BatchKeys | None = None
+    ) -> int:
         """Merge write: the touched partitions land under this run's parts
-        dir; the manifest adds the ``carry`` entries by reference."""
-        return self._write(new_state, location, list(carry or []))
+        dir; the manifest adds the ``carry`` entries by reference. Given
+        the gate's ``batch``, each written leaf is indexed on the driver
+        as its year's old index ∪ the hashes of the batch rows dated in
+        that year (a superset of its keys — module docstring). A leaf
+        whose old index is missing or hashes another key type is indexed
+        from its rows instead, in one Spark job for all such leaves."""
+        n, written = self._write(new_state, location, list(carry or []))
+        if batch is None:
+            return n
+        key_col, key_type = batch.key
+        paths = [e["path"] for e in written]
+        retyped = _union_schema(paths)[key_col].dataType.simpleString() != key_type
+        batch_years = set(batch.years.tolist())
+        rebuild = []
+        for e in written:
+            year = e["data_year"]
+            if year in batch.leaves:
+                old = _read_key_index(batch.leaves[year], batch.key)
+            else:  # a year new to the state holds batch rows only
+                old = np.empty(0, np.int64) if year in batch_years else None
+            if old is None or retyped:
+                rebuild.append(e)
+            else:
+                new = batch.hashes[batch.years == year]
+                _write_key_index(e["path"], np.union1d(old, new), batch.key)
+        if rebuild:
+            self._index_leaves(location, rebuild, key_col)
+        return n
 
-    def _write(self, state: DataFrame, location: str, carry: list[dict]) -> int:
+    def _index_leaves(self, location: str, entries: list[dict], key_col: str) -> None:
+        """Index the leaves ``entries`` of this run's parts dir from their
+        rows: one narrow Spark job collects each row's ``data_year``
+        (from its leaf's path) and key hash to the driver, which writes
+        each leaf's sorted hashes. A duplicate key is kept, so that
+        :meth:`duplicate_key_hashes` sees it."""
+        paths = [e["path"] for e in entries]
+        key_field = _union_schema(paths)[key_col]
+        schema = T.StructType([key_field, T.StructField("data_year", T.IntegerType())])
+        cols = (
+            self.spark.read.schema(schema)
+            .option("basePath", self._parts_dir(location))
+            .parquet(*paths)
+            .select("data_year", F.xxhash64(key_col).alias("h"))
+            .toArrow()
+        )
+        years = cols.column("data_year").to_numpy()
+        hashes = cols.column("h").to_numpy()
+        order = np.lexsort((hashes, years))
+        years, hashes = years[order], hashes[order]
+        key = (key_col, key_field.dataType.simpleString())
+        for e in entries:
+            lo, hi = np.searchsorted(years, [e["data_year"], e["data_year"] + 1])
+            _write_key_index(e["path"], hashes[lo:hi], key)
+
+    def _write(
+        self, state: DataFrame, location: str, carry: list[dict]
+    ) -> tuple[int, list[dict]]:
         """Write ``state`` partitioned by ``data_year`` under the run's parts
         dir, then its manifest (written parts + ``carry``); returns the total
-        row count, observed during the write."""
+        row count, observed during the write, and the written entries."""
         parts_dir = self._parts_dir(location)
         state = state.withColumn("data_year", _year_col())
         obs = Observation()
@@ -457,12 +636,12 @@ class ManifestStore:
             # the manifest references a readable empty state.
             leaf = os.path.join(parts_dir, f"data_year={NULL_YEAR}")
             state.drop("data_year").limit(0).write.mode("overwrite").parquet(leaf)
-            self._write_manifest(
-                location, [{"data_year": NULL_YEAR, "path": leaf, "row_count": 0}]
-            )
-            return 0
-        self._write_manifest(location, self._scan_part_counts(parts_dir) + carry)
-        return n + sum(e["row_count"] for e in carry)
+            written = [{"data_year": NULL_YEAR, "path": leaf, "row_count": 0}]
+            self._write_manifest(location, written)
+            return 0, written
+        written = self._scan_part_counts(parts_dir)
+        self._write_manifest(location, written + carry)
+        return n + sum(e["row_count"] for e in carry), written
 
     # -- time travel ----------------------------------------------------
 
@@ -483,11 +662,11 @@ class ManifestStore:
     # -- garbage collection --------------------------------------------
 
     def vacuum(self, keep_runs: int = 2) -> list[str]:
-        """Delete partition dirs referenced by NO manifest of the latest
-        ``keep_runs`` accepted runs. Manifests themselves are kept (tiny,
-        and older ledger rows stay auditable); only their data partitions
-        become unreadable once vacuumed — same contract as Delta/Iceberg
-        ``VACUUM`` against time travel.
+        """Delete partition dirs, with their key indexes, referenced by NO
+        manifest of the latest ``keep_runs`` accepted runs. Manifests
+        themselves are kept (tiny, and older ledger rows stay auditable);
+        only their data partitions become unreadable once vacuumed — same
+        contract as Delta/Iceberg ``VACUUM`` against time travel.
 
         This also garbage-collects ORPHANS: state written by a run that
         crashed between its state write and its ledger append (the
@@ -511,6 +690,7 @@ class ManifestStore:
                 p = os.path.join(run_dir, part)
                 if part.startswith("data_year=") and p not in live:
                     shutil.rmtree(p)
+                    shutil.rmtree(os.path.dirname(_index_path(p)), ignore_errors=True)
                     removed.append(p)
             if not any(d.startswith("data_year=") for d in os.listdir(run_dir)):
                 shutil.rmtree(run_dir)

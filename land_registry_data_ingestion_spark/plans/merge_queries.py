@@ -309,7 +309,7 @@ def cdc_state_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         store = ManifestStore(spark=spark, root=root)
         loc1 = store.state_path("r1")
-        n1 = store.write_state(state1, loc1)
+        n1 = store.write_state(state1, loc1, "tuid")
         record_run(store, "r1", "derived:orders", "complete", "a" * 64,
                    datetime.datetime(2024, 1, 1), n1, loc1)
         current, carry = store.current_for_merge(updates, "tuid")

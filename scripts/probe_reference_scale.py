@@ -15,6 +15,9 @@ The two numbers it exists to track (COVERAGE.md "Reference-scale probe"):
   — the batch targets 3 of 29 years, which is the realistic shape of a
   monthly update file.
 
+It also prints ``key_index_bytes``, the size of the per-partition key
+index kept beside the state after both runs.
+
 Usage::
 
     python scripts/probe_reference_scale.py              # 28.9M rows
@@ -192,6 +195,13 @@ def main() -> None:
         )
         t_merge = time.monotonic() - t0
 
+    # bytes of the key index beside the state (state.py's ``_key_index/``)
+    index_bytes = sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, files in os.walk(store.root)
+        if "_key_index" in Path(d).parts
+        for f in files
+    )
     print(
         json.dumps(
             {
@@ -200,6 +210,7 @@ def main() -> None:
                 "merged_rows": merge_row["row_count"],
                 "snapshot_sec": round(t_snap, 1),
                 "merge_sec": None if t_merge is None else round(t_merge, 1),
+                "key_index_bytes": index_bytes,
             }
         )
     )

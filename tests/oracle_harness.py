@@ -9,9 +9,7 @@ contract is wrong and the driver's value-hash would fail too.
 
 from __future__ import annotations
 
-import math
-from typing import Any
-
+import numpy as np
 import pandas as pd
 
 
@@ -22,31 +20,68 @@ def normalize_frame(df: pd.DataFrame) -> pd.DataFrame:
     return out
 
 
-def _is_null(x: Any) -> bool:
-    # None, float NaN, and pandas NaT (which is != itself, like NaN, but
-    # not a float — a NaT-vs-NaT cell compared as values would falsely
-    # mismatch a NULL group key both engines agree on)
-    if x is None:
-        return True
-    if isinstance(x, float):
-        return math.isnan(x)
-    return x is pd.NaT
+def _is_datetime(col: pd.Series) -> bool:
+    return str(col.dtype).startswith("datetime")
 
 
-def _cell_equal(a: Any, b: Any) -> bool:
-    a_null = _is_null(a)
-    b_null = _is_null(b)
-    if a_null or b_null:
-        return a_null and b_null
-    if isinstance(a, float) and isinstance(b, float):
-        return a == b or (math.isnan(a) and math.isnan(b))
-    return a == b
+def _as_cells(col: pd.Series) -> np.ndarray:
+    """The column's cells as an object array of the scalars ``.at``
+    returns (numpy scalars for numpy dtypes), datetimes floored to the
+    microsecond like a round trip through python datetimes."""
+    if col.dtype == object:
+        return col.to_numpy()
+    if _is_datetime(col):
+        col = col.dt.floor("us")
+    out = np.empty(len(col), dtype=object)
+    out[:] = list(col.array) if _is_datetime(col) else list(col.to_numpy())
+    return out
+
+
+def _utc_micros(col: pd.Series) -> np.ndarray:
+    col = col.dt.floor("us")
+    if col.dt.tz is not None:
+        col = col.dt.tz_convert("UTC").dt.tz_localize(None)
+    return col.to_numpy().astype("datetime64[us]")
+
+
+def _column_equal(a: pd.Series, b: pd.Series) -> np.ndarray:
+    """Per-row equality of two aligned columns. A null (None, NaN, NaT)
+    equals only a null. Numbers compare as numpy compares them, floats
+    exactly; datetimes compare as instants floored to the microsecond,
+    and a zoned one never equals a naive one; anything else compares with
+    Python ``==`` cell by cell (in C, over object arrays)."""
+    a_null, b_null = a.isna().to_numpy(), b.isna().to_numpy()
+    both = ~a_null & ~b_null
+    eq = a_null & b_null
+    if not both.any():
+        return eq
+    if _is_datetime(a) and _is_datetime(b):
+        if (a.dt.tz is None) == (b.dt.tz is None):
+            eq[both] = _utc_micros(a)[both] == _utc_micros(b)[both]
+        return eq
+    if a.dtype.kind in "biuf" and b.dtype.kind in "biuf" and not (
+        isinstance(a.dtype, pd.api.extensions.ExtensionDtype)
+        or isinstance(b.dtype, pd.api.extensions.ExtensionDtype)
+    ):
+        eq[both] = a.to_numpy()[both] == b.to_numpy()[both]
+        return eq
+    eq[both] = _as_cells(a)[both] == _as_cells(b)[both]
+    return eq
+
+
+def _cell_repr(frame: pd.DataFrame, i: int, col: str) -> str:
+    v = frame.at[i, col]
+    if _is_datetime(frame[col]) and v is not pd.NaT:
+        v = v.floor("us")
+    return repr(v)
 
 
 def compare_results(
     spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame, name: str
 ) -> list[str]:
-    """Return a list of human-readable mismatch descriptions (empty = pass)."""
+    """Return a list of human-readable mismatch descriptions (empty = pass):
+    the first 5 mismatched cells in row-major order, then the total count.
+    Cells compare per column, vectorised (:func:`_column_equal`)."""
     problems: list[str] = []
     s_cols, d_cols = sorted(spark_pdf.columns), sorted(duck_pdf.columns)
     if s_cols != d_cols:
@@ -58,21 +93,18 @@ def compare_results(
         return problems
     s = normalize_frame(spark_pdf)
     d = normalize_frame(duck_pdf)
-    # timestamps → naive python datetimes on both sides
-    for col in s.columns:
-        for frame in (s, d):
-            if str(frame[col].dtype).startswith("datetime"):
-                frame[col] = frame[col].dt.to_pydatetime()
-    n_bad = 0
-    for i in range(len(s)):
+    bad = {col: ~_column_equal(s[col], d[col]) for col in s.columns}
+    n_bad = sum(int(m.sum()) for m in bad.values())
+    row_bad = np.zeros(len(s), dtype=bool)
+    for m in bad.values():
+        row_bad |= m
+    for i in np.flatnonzero(row_bad)[:5]:
         for col in s.columns:
-            if not _cell_equal(s.at[i, col], d.at[i, col]):
-                n_bad += 1
-                if n_bad <= 5:
-                    problems.append(
-                        f"{name}: row {i} col {col}: "
-                        f"spark={s.at[i, col]!r} duck={d.at[i, col]!r}"
-                    )
+            if bad[col][i] and len(problems) < 5:
+                problems.append(
+                    f"{name}: row {i} col {col}: "
+                    f"spark={_cell_repr(s, i, col)} duck={_cell_repr(d, i, col)}"
+                )
     if n_bad > 5:
         problems.append(f"{name}: ... {n_bad} mismatched cells total")
     return problems

@@ -12,6 +12,8 @@ import datetime
 import os
 import time
 
+import numpy as np
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -20,7 +22,12 @@ from land_registry_data_ingestion_spark.operators.ingest import (
     ingest_snapshot,
     merge_update_frame,
 )
-from land_registry_data_ingestion_spark.operators.state import ManifestStore
+from land_registry_data_ingestion_spark.operators.state import (
+    ManifestStore,
+    _index_path,
+    _read_key_index,
+    _write_key_index,
+)
 
 
 def _line(tuid: str, price: int, date: str, op: str = "A") -> str:
@@ -540,6 +547,12 @@ def test_state_reads_run_no_spark_job(spark, store, tmp_path):
             updates, "transaction_unique_id", {2015, 2016, 2018}
         ),
     }
+    cols, _ = store.probe_batch(updates, "transaction_unique_id")
+    calls["probe_keys"] = lambda: store.probe_keys(
+        cols.column("_hash").to_numpy(),
+        cols.column("_year").to_numpy(),
+        ("transaction_unique_id", "string"),
+    )
     frames = {}
     for name, call in calls.items():
         frames[name], n_jobs = _jobs_in_group(spark, name, call)
@@ -549,12 +562,29 @@ def test_state_reads_run_no_spark_job(spark, store, tmp_path):
     current, carry = frames["current_for_merge"]
     assert sorted(_state(current)) == ["{T0001}", "{T0002}", "{T0003}", "{T0005}"]
     assert [e["data_year"] for e in carry] == [2017]
+    # the index probe names the batch's own years and no other
+    assert frames["probe_keys"].touched == {2015, 2016, 2018}
+
+
+def test_snapshot_job_budget(spark, store, tmp_path):
+    """A snapshot load is the state write (gate counters observed) plus
+    the narrow job that builds the key index; key uniqueness is checked
+    on the driver over that index. 2 jobs."""
+    row, n_jobs = _jobs_in_group(
+        spark, "snapshot", lambda: ingest_snapshot(
+            store, _write(tmp_path, "g.csv", GOLDEN_SNAP), "r1",
+            now=datetime.datetime(2024, 1, 1),
+        )
+    )
+    assert row["row_count"] == len(GOLDEN_SNAP)
+    assert n_jobs <= 2
 
 
 def test_monthly_merge_job_budget(spark, store, tmp_path):
-    """A warm monthly merge is two Spark actions (the gate's one collect,
-    then the state write with its counters observed): 11 jobs on the
-    golden batch. A second parse or a second merge join fails this."""
+    """A warm monthly merge is two Spark actions (the gate's one collect
+    of the batch's skinny columns, then the state write with its
+    counters observed): 4 jobs on the golden batch. A second parse, a
+    second merge join or a gate that reads the state fails this."""
     t = datetime.datetime(2024, 1, 1)
     ingest_snapshot(store, _write(tmp_path, "g.csv", GOLDEN_SNAP), "r1", now=t)
     ingest_monthly_update(
@@ -568,7 +598,7 @@ def test_monthly_merge_job_budget(spark, store, tmp_path):
         )
     )
     assert row["decision"] == "archive"
-    assert n_jobs <= 11
+    assert n_jobs <= 4
 
 
 def test_ledger_row_round_trips_driver_and_dataframe(spark, store):
@@ -676,3 +706,179 @@ def test_crash_before_ledger_append_replays_once(spark, store, tmp_path, monkeyp
     # the replay appended the counters a second time; the view dedups them
     raw = spark.read.parquet(store.operation_log_path)
     assert raw.filter(F.col("run_id") == "r2").count() == 2 * len(MONTHLY_COUNTERS)
+
+
+# -- key index soundness ------------------------------------------------
+
+
+def _assert_indexed(spark, store, key_col="transaction_unique_id"):
+    """Every current leaf has a key index holding the hash of each of its
+    keys (a superset is allowed: stale entries are false positives)."""
+    for e in store._current_entries():
+        index = _read_key_index(e["path"])
+        assert index is not None, e["path"]
+        hashes = spark.read.parquet(e["path"]).select(F.xxhash64(key_col)).collect()
+        assert np.isin([h[0] for h in hashes], index).all(), e["path"]
+
+
+def _golden_until_deletes(store, tmp_path, t):
+    ingest_snapshot(store, _write(tmp_path, "g.csv", GOLDEN_SNAP), "r1", now=t)
+    ingest_monthly_update(
+        store, _write(tmp_path, "d.csv", GOLDEN_DELETES), "r2",
+        now=t + datetime.timedelta(days=1),
+    )
+
+
+def _golden_batch(store, tmp_path, t):
+    return ingest_monthly_update(
+        store, _write(tmp_path, "b.csv", [line for line, _ in GOLDEN_BATCH]), "r3",
+        now=t + datetime.timedelta(days=2),
+    )
+
+
+def _assert_golden(store, row):
+    assert _counters(store, "r3") == {
+        (line[-2], outcome): 1 for line, outcome in GOLDEN_BATCH
+    }
+    assert _state(store.current_state()) == GOLDEN_STATE
+    assert row["row_count"] == len(GOLDEN_STATE)
+
+
+def test_forced_false_positive_rewrites_only_that_year(spark, store, tmp_path):
+    """A stale hash in an untouched year's index (the batch's K0007)
+    makes the probe touch that year: it is rewritten, and the merged rows
+    and all 12 outcome counters stay the golden ones."""
+    t = datetime.datetime(2024, 1, 1)
+    _golden_until_deletes(store, tmp_path, t)
+    leaf_2018 = {e["data_year"]: e["path"] for e in store._current_entries()}[2018]
+    stale = spark.range(1).select(F.xxhash64(F.lit("{K0007}"))).collect()[0][0]
+    meta = pq.read_table(_index_path(leaf_2018)).schema.metadata
+    _write_key_index(
+        leaf_2018,
+        np.union1d(_read_key_index(leaf_2018), [stale]),
+        (meta[b"key_col"].decode(), meta[b"key_type"].decode()),
+    )
+
+    row = _golden_batch(store, tmp_path, t)
+    _assert_golden(store, row)
+    merge_parts = store._parts_dir(row["state_location"])
+    assert _part_years(merge_parts) == [
+        "data_year=2015", "data_year=2016", "data_year=2017",
+        "data_year=2018", "data_year=2019",
+    ]
+    _assert_indexed(spark, store)
+
+
+def test_year_moving_change_then_a_later_batch_finds_the_moved_key(
+    spark, store, tmp_path
+):
+    """T0004 moves 2017 → 2019 (C); a later batch changes it again and
+    names only 2017. Only 2019's index, written on the driver by the
+    first merge, can send the probe to 2019 — which must drop the row."""
+    t0 = datetime.datetime(2024, 1, 1)
+    day = datetime.timedelta(days=1)
+    ingest_snapshot(store, _write(tmp_path, "s.csv", SNAP), "r1", now=t0)
+    ingest_monthly_update(
+        store, _write(tmp_path, "m1.csv", [_line("T0004", 400000, "2019-08-01", "C")]),
+        "r2", now=t0 + day,
+    )
+    _assert_indexed(spark, store)
+    row = ingest_monthly_update(
+        store, _write(tmp_path, "m2.csv", [_line("T0004", 450000, "2017-09-01", "C")]),
+        "r3", now=t0 + 2 * day,
+    )
+    assert _state(store.current_state()) == dict(
+        SNAP_STATE, **{"{T0004}": (450000, 2017, False)}
+    )
+    assert _counters(store, "r3") == {("C", "change_change"): 1}
+    assert row["row_count"] == 4
+    years = [e["data_year"] for e in store._manifest_entries(row["state_location"])]
+    assert years == [2015, 2016, 2017]  # 2019 emptied out
+    _assert_indexed(spark, store)
+
+
+def test_delete_of_a_key_in_a_year_the_batch_does_not_name(spark, store, tmp_path):
+    """A D op dated 2020 for T0003, which sits in 2016: only the index
+    finds 2016, which must drop the row (its values differ, so the row
+    is changed, moving to 2020, then deleted)."""
+    t0 = datetime.datetime(2024, 1, 1)
+    ingest_snapshot(store, _write(tmp_path, "s.csv", SNAP), "r1", now=t0)
+    row = ingest_monthly_update(
+        store, _write(tmp_path, "d.csv", [_line("T0003", 300000, "2020-01-01", "D")]),
+        "r2", now=t0 + datetime.timedelta(days=1),
+    )
+    assert _state(store.current_state()) == dict(
+        SNAP_STATE, **{"{T0003}": (300000, 2020, True)}
+    )
+    assert _counters(store, "r2") == {("D", "delete_change_delete"): 1}
+    assert row["row_count"] == 4
+    years = [e["data_year"] for e in store._manifest_entries(row["state_location"])]
+    assert years == [2015, 2017, 2020]
+    _assert_indexed(spark, store)
+
+
+def test_batch_key_type_differs_from_the_state_key_type(spark, store, tmp_path):
+    """An int-keyed batch against a bigint-keyed state: the batch key is
+    hashed as a bigint, so a C op that moves key 2 out of 2016 (a year
+    the batch does not name) still finds it there."""
+    from land_registry_data_ingestion_spark.operators.ingest import record_run
+    from land_registry_data_ingestion_spark.operators.merge import init_state
+
+    ts = datetime.datetime
+    state = spark.createDataFrame(
+        [(1, ts(2015, 1, 5), 100), (2, ts(2016, 3, 7), 200), (3, ts(2017, 8, 1), 300)],
+        "k bigint, transaction_date timestamp, price int",
+    )
+    loc = store.state_path("r1")
+    n = store.write_state(init_state(state, F.lit(ts(2024, 1, 1))), loc, "k")
+    record_run(store, "r1", "frame", "complete", "a" * 64, ts(2024, 1, 1), n, loc)
+    batch = spark.createDataFrame(
+        [(2, ts(2018, 2, 1), 250, "C")],
+        "k int, transaction_date timestamp, price int, record_op string",
+    )
+    row = merge_update_frame(store, batch, run_id="r2", key_col="k", now=ts(2024, 2, 1))
+
+    out = {
+        r["k"]: (r["price"], r["transaction_date"].year)
+        for r in store.current_state().collect()
+    }
+    assert out == {1: (100, 2015), 2: (250, 2018), 3: (300, 2017)}
+    assert _counters(store, "r2") == {("C", "change_change"): 1}
+    assert row["row_count"] == 3
+    _assert_indexed(spark, store, key_col="k")
+
+
+def test_unindexed_store_merges_the_same_and_gets_indexed(spark, store, tmp_path):
+    """A store whose leaves have no key index (written before the index
+    existed): every such leaf counts as touched, the merge result is the
+    golden one, and afterwards every current leaf has an index."""
+    import shutil
+
+    t = datetime.datetime(2024, 1, 1)
+    _golden_until_deletes(store, tmp_path, t)
+    parts = os.path.join(store.root, "parts")
+    for run in os.listdir(parts):
+        shutil.rmtree(os.path.join(parts, run, "_key_index"), ignore_errors=True)
+
+    row = _golden_batch(store, tmp_path, t)
+    _assert_golden(store, row)
+    assert "data_year=2018" in _part_years(store._parts_dir(row["state_location"]))
+    _assert_indexed(spark, store)
+
+
+def test_vacuum_removes_a_leafs_index_with_the_leaf(spark, store, tmp_path):
+    """vacuum deletes the key index of each partition it removes and
+    keeps the indexes of partitions a live manifest references."""
+    snap_row = ingest_snapshot(
+        store, _write(tmp_path, "s.csv", SNAP), "r1", now=datetime.datetime(2024, 1, 1)
+    )
+    ingest_monthly_update(
+        store, _write(tmp_path, "m.csv", MONTHLY), "r2", now=datetime.datetime(2024, 2, 1)
+    )
+    removed = store.vacuum(keep_runs=1)
+    assert len(removed) == 2
+    for p in removed:
+        assert not os.path.exists(os.path.dirname(_index_path(p)))
+    snap_index = os.path.join(store._parts_dir(snap_row["state_location"]), "_key_index")
+    assert os.listdir(snap_index) == ["data_year=2017"]
+    _assert_indexed(spark, store)
