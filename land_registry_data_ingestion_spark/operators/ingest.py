@@ -50,7 +50,6 @@ from land_registry_data_ingestion_spark.operators.state import (
     _utc,
 )
 from land_registry_data_ingestion_spark.sources.csv import (
-    read_price_paid_csv,
     read_price_paid_csv_with_rejects,
 )
 
@@ -154,7 +153,9 @@ def ingest_snapshot(
     # work is the better trade there, and its aggregate also finds the
     # partitions the merge touches).
     key = "transaction_unique_id"
-    df = read_price_paid_csv(store.spark, csv_path, n_columns=n_columns)
+    df, rejects = read_price_paid_csv_with_rejects(
+        store.spark, csv_path, n_columns=n_columns
+    )
     gate_obs = Observation()
     gate_aggs = [
         F.sum(
@@ -171,18 +172,7 @@ def ingest_snapshot(
     # is gate-clean (the reference accepts it too), not a TypeError.
     if int(gate_obs.get["n_bad"] or 0):
         store.discard_state_at(location)
-        # failure path only: re-parse for the quarantine sample
-        _, rejects = read_price_paid_csv_with_rejects(
-            store.spark, csv_path, n_columns=n_columns
-        )
-        bad = rejects.limit(5).collect()
-        sample = ", ".join(
-            f"{r['transaction_unique_id']}({r['reject_reason']})" for r in bad
-        ) or "all-null after cast: grammar-broken or missing fields"
-        raise ValueError(
-            f"malformed values in {csv_path} (e.g. {sample}) — batch "
-            f"rejected before any state was committed"
-        )
+        raise _malformed(rejects, csv_path)
     # Key uniqueness — the check the reference enforces by `.one()`
     # crashing mid-load — reads the key index just written, on the
     # driver: no repeated key hash proves the keys unique (a real
@@ -204,6 +194,19 @@ def ingest_snapshot(
             )
 
     return record_run(store, run_id, csv_path, "complete", sha, now, row_count, location)
+
+
+def _malformed(rejects: DataFrame, what: str) -> ValueError:
+    """The error for a batch whose price/date casts failed, sampled from
+    the strict parse's quarantine ``rejects`` (failure path only)."""
+    bad = rejects.limit(5).collect()
+    sample = ", ".join(
+        f"{r['transaction_unique_id']}({r['reject_reason']})" for r in bad
+    ) or "all-null after cast: grammar-broken or missing fields"
+    return ValueError(
+        f"malformed values in {what} (e.g. {sample}) — batch "
+        f"rejected before any state was committed"
+    )
 
 
 def _gate_batch(
@@ -242,14 +245,7 @@ def _gate_batch(
         extra.append(bad.alias("_bad"))
     cols, batch = store.probe_batch(updates, key_col, extra)
     if rejects is not None and pc.any(cols.column("_bad")).as_py():
-        bad = rejects.limit(5).collect()  # failure path only
-        sample = ", ".join(
-            f"{r['transaction_unique_id']}({r['reject_reason']})" for r in bad
-        ) or "all-null after cast: grammar-broken or missing fields"
-        raise ValueError(
-            f"malformed values in {what} (e.g. {sample}) — batch "
-            f"rejected before any state was written"
-        )
+        raise _malformed(rejects, what)
     keys = cols.column(key_col)
     if keys.null_count:
         raise ValueError(
@@ -336,13 +332,16 @@ def merge_update_frame(
     DataFrames with no file to sha (the ledger's ``sha256`` then holds
     the sha256 of ``run_id``).
 
-    Two Spark actions: the gate (:func:`_gate_batch`, one collect of the
-    batch's skinny columns, which rejects a bad batch before any write
-    and probes the key index for the touched years; ``rejects`` is the
+    This is the engine's one merge path. Two Spark actions: the gate
+    (:func:`_gate_batch`, one collect of the batch's skinny columns,
+    which rejects a bad batch before any write and probes the key index
+    of the current manifest for the touched years; ``rejects`` is the
     strict CSV parse's quarantine, when there is one) and the state
     write, whose per-(op, outcome) counters ride the write as observed
-    metrics — no second join for the operation log. The written leaves'
-    key indexes are extended on the driver from the gate's key hashes.
+    metrics — no second join for the operation log. The gate's
+    :class:`~.state.BatchKeys` drives both ends: the merge reads its
+    touched leaves, and the write carries the rest by reference and
+    extends the written leaves' key indexes from its key hashes.
 
     Exactly-once by ``run_id``: if the ledger already holds an accepted
     run with this id the call is a no-op returning that row — Structured
@@ -359,7 +358,7 @@ def merge_update_frame(
     batch = _gate_batch(
         store, updates, key_col, op_col, f"update batch {source_path}", rejects
     )
-    current, carry = store.current_for_merge(updates, key_col, batch.touched)
+    current = store.current_for_merge(batch)
     value_cols = [
         c
         for c in current.columns
@@ -382,7 +381,7 @@ def merge_update_frame(
     )
     location = store.state_path(run_id)
     obs = Observation()
-    row_count = store.write_merged(result.observed_state(obs), location, carry, batch)
+    row_count = store.write_merged(result.observed_state(obs), location, batch)
     store._append_operation_log(run_id, observed_outcome_stats(obs.get, op_col))
     return record_run(
         store, run_id, source_path, "monthly",

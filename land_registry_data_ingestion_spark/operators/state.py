@@ -59,21 +59,27 @@ probe may only err towards MORE years:
 - a leaf with no index, or one hashing another column or type, counts
   as touched; that merge rewrites the leaf and indexes it anew.
 
-A snapshot builds its index in one narrow Spark job over the written
-leaves (key and date columns only). A merge builds it with no job: a
-rewritten year's index is its old index ∪ the hashes of the batch rows
-dated in that year. That is a superset of the year's keys after the
+Every leaf this store writes is indexed, so a leaf lacks an index only
+when it was written before the index existed or its index file was
+lost. A snapshot builds its index in one narrow Spark job over the
+written leaves (key and date columns only). A merge builds it with no
+job: a rewritten year's index is its old index ∪ the hashes of the batch
+rows dated in that year. That is a superset of the year's keys after the
 merge, because a merged row's ``transaction_date`` comes from its old
 row or from its batch row; a key that moved out leaves a stale entry,
-which is a false positive.
+which is a false positive. A rewritten year whose old index is missing
+or hashes another key type is indexed from its rows instead.
 
-A monthly merge is therefore two Spark actions: the gate's one collect
-of the batch's skinny columns (:meth:`ManifestStore.probe_batch`), then
-the state write running the merge join once, its outcome counters riding
-along as observed metrics. Everything between — the manifest lookup, the
-index probe, :meth:`ManifestStore.current_for_merge` given the probed
-years, and every state read's schema (the union of one parquet footer
-per leaf) — is driver work that schedules no Spark job.
+A monthly merge is one path (:func:`~.ingest.merge_update_frame`) and
+two Spark actions: the gate's one collect of the batch's skinny columns
+(:meth:`ManifestStore.probe_batch`), then the state write running the
+merge join once, its outcome counters riding along as observed metrics.
+The probe resolves the current manifest once; its :class:`BatchKeys`
+carries those entries into :meth:`ManifestStore.current_for_merge` (the
+touched leaves) and :meth:`ManifestStore.write_merged` (the carried
+ones). Everything between the two actions — the index probe, the read
+of the touched leaves and every state read's schema (the union of one
+parquet footer per leaf) — is driver work that schedules no Spark job.
 
 Merging only the touched partitions is sound because the CDC join is
 keyed: a state row whose key is absent from the batch passes through
@@ -256,15 +262,20 @@ class BatchKeys:
     """A batch's keys as the key index sees them, collected by
     :meth:`ManifestStore.probe_batch`: per batch row, the ``xxhash64`` of
     its key cast to the state's key type (``key`` names that column and
-    type) and its ``data_year``. ``touched`` is the set of years the merge
-    rewrites; ``leaves`` maps each year of the probed manifest to its
-    leaf, whose index the merge extends."""
+    type) and its ``data_year``. ``entries`` is the probed manifest, the
+    current state the merge reads and extends; ``touched`` is the set of
+    years the merge rewrites."""
 
     key: tuple[str, str]
     hashes: np.ndarray
     years: np.ndarray
     touched: set[int]
-    leaves: dict[int, str]
+    entries: list[dict]
+
+    @property
+    def carry(self) -> list[dict]:
+        """The untouched entries, carried by reference."""
+        return [e for e in self.entries if e["data_year"] not in self.touched]
 
 
 @dataclass
@@ -463,17 +474,13 @@ class ManifestStore:
     def current_state(self) -> DataFrame:
         return self._read_parts([e["path"] for e in self._current_entries()])
 
-    def write_state(
-        self, state: DataFrame, location: str, key_col: str | None = None
-    ) -> int:
+    def write_state(self, state: DataFrame, location: str, key_col: str) -> int:
         """Full write (snapshot load): every partition lands under this
-        run's parts dir and the manifest references only this run. Given
-        ``key_col``, one more narrow Spark job indexes the written leaves
-        (:meth:`_index_leaves`); without it they have no index, so every
-        probe counts them as touched."""
+        run's parts dir and the manifest references only this run; one
+        more narrow Spark job indexes the written leaves over ``key_col``
+        (:meth:`_index_leaves`)."""
         n, written = self._write(state, location, [])
-        if key_col is not None:
-            self._index_leaves(location, written, key_col)
+        self._index_leaves(location, written, key_col)
         return n
 
     def read_state_at(self, location: str) -> DataFrame:
@@ -505,8 +512,9 @@ class ManifestStore:
         batch's skinny columns — ``key_col``, its hash ``_hash`` (of the
         key cast to the state's key type, from the footers), its year
         ``_year`` and the caller's ``extra`` columns. Returns that table
-        and the batch's keys probed against the key index
-        (:meth:`probe_keys`); the state itself is not read."""
+        and the batch's keys probed against the key index of the current
+        manifest, resolved once here (:meth:`probe_keys`); the state
+        itself is not read."""
         entries = self._current_entries()
         key_type = _union_schema([e["path"] for e in entries])[key_col].dataType
         cols = updates.select(
@@ -516,6 +524,7 @@ class ManifestStore:
             *extra,
         ).toArrow()
         batch = self.probe_keys(
+            entries,
             cols.column("_hash").to_numpy(),
             cols.column("_year").to_numpy(),
             (key_col, key_type.simpleString()),
@@ -523,61 +532,51 @@ class ManifestStore:
         return cols, batch
 
     def probe_keys(
-        self, hashes: np.ndarray, years: np.ndarray, key: tuple[str, str]
+        self, entries: list[dict], hashes: np.ndarray, years: np.ndarray,
+        key: tuple[str, str],
     ) -> BatchKeys:
-        """The years a batch touches, on the driver: the batch's own
-        ``years``, union every current year whose key index holds one of
-        ``hashes`` or has no index over ``key`` (column, type). Reads only
-        the indexes of years the batch does not name; no Spark job."""
-        leaves = {e["data_year"]: e["path"] for e in self._current_entries()}
+        """The years a batch touches in the manifest ``entries``, on the
+        driver: the batch's own ``years``, union every entry's year whose
+        key index holds one of ``hashes`` or has no index over ``key``
+        (column, type). Reads only the indexes of years the batch does
+        not name; no Spark job."""
         touched = {int(y) for y in np.unique(years)}
-        for year, leaf in leaves.items():
-            if year not in touched:
-                index = _read_key_index(leaf, key)
+        for e in entries:
+            if e["data_year"] not in touched:
+                index = _read_key_index(e["path"], key)
                 if index is None or _holds_any(index, hashes):
-                    touched.add(year)
-        return BatchKeys(key, hashes, years, touched, leaves)
+                    touched.add(e["data_year"])
+        return BatchKeys(key, hashes, years, touched, entries)
 
-    def current_for_merge(
-        self, updates: DataFrame, key_col: str, touched_years: set[int] | None = None
-    ):
-        """State to feed ``cdc_merge`` — only the partitions the batch can
-        touch — plus the untouched manifest entries to carry by reference.
-        Given ``touched_years`` (from :meth:`probe_batch`, which the
-        ingest gate runs anyway) this schedules no Spark job; without it,
-        it runs the probe itself."""
-        if touched_years is None:
-            touched_years = self.probe_batch(updates, key_col)[1].touched
-        entries = self._current_entries()
-        touched = [e["path"] for e in entries if e["data_year"] in touched_years]
-        carry = [e for e in entries if e["data_year"] not in touched_years]
-        if touched:
-            return self._read_parts(touched), carry
-        schema = _union_schema([e["path"] for e in entries])
-        return self.spark.createDataFrame([], schema), carry
+    def current_for_merge(self, batch: BatchKeys) -> DataFrame:
+        """The state to feed ``cdc_merge``: the leaves of the gate's
+        probed manifest in ``batch.touched`` (empty, with the state's
+        schema, when none is). Schedules no Spark job."""
+        paths = [e["path"] for e in batch.entries if e["data_year"] in batch.touched]
+        if paths:
+            return self._read_parts(paths)
+        schema = _union_schema([e["path"] for e in batch.entries])
+        return self.spark.createDataFrame([], schema)
 
-    def write_merged(
-        self, new_state: DataFrame, location: str, carry, batch: BatchKeys | None = None
-    ) -> int:
+    def write_merged(self, new_state: DataFrame, location: str, batch: BatchKeys) -> int:
         """Merge write: the touched partitions land under this run's parts
-        dir; the manifest adds the ``carry`` entries by reference. Given
-        the gate's ``batch``, each written leaf is indexed on the driver
-        as its year's old index ∪ the hashes of the batch rows dated in
-        that year (a superset of its keys — module docstring). A leaf
-        whose old index is missing or hashes another key type is indexed
-        from its rows instead, in one Spark job for all such leaves."""
-        n, written = self._write(new_state, location, list(carry or []))
-        if batch is None:
-            return n
+        dir; the manifest adds ``batch.carry`` by reference. Each written
+        leaf is indexed on the driver as its year's old index ∪ the
+        hashes of the batch rows dated in that year (a superset of its
+        keys — module docstring). A leaf whose old index is missing or
+        hashes another key type is indexed from its rows instead, in one
+        Spark job for all such leaves. A merge may write no leaf at all
+        (a batch of ignored deletes in years the state lacks)."""
+        n, written = self._write(new_state, location, batch.carry)
         key_col, key_type = batch.key
-        paths = [e["path"] for e in written]
-        retyped = _union_schema(paths)[key_col].dataType.simpleString() != key_type
+        retyped = new_state.schema[key_col].dataType.simpleString() != key_type
+        leaves = {e["data_year"]: e["path"] for e in batch.entries}
         batch_years = set(batch.years.tolist())
         rebuild = []
         for e in written:
             year = e["data_year"]
-            if year in batch.leaves:
-                old = _read_key_index(batch.leaves[year], batch.key)
+            if year in leaves:
+                old = _read_key_index(leaves[year], batch.key)
             else:  # a year new to the state holds batch rows only
                 old = np.empty(0, np.int64) if year in batch_years else None
             if old is None or retyped:

@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from land_registry_data_ingestion_spark.operators.merge import (
-    cdc_merge,
     cdc_merge_coderived,
     merge_ledger,
     merge_outcome_stats,
@@ -278,8 +277,10 @@ def cdc_merge_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def cdc_state_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Manifest-store time travel (``operators/state.py:state_as_of``):
-    load a snapshot as run r1, CDC-merge an update batch as run r2, then
-    read the state **as of r1** — an O(1) manifest-pointer lookup, no
+    load a snapshot as run r1, CDC-merge an update batch as run r2
+    through the engine's one merge path (``merge_update_frame``: the
+    gate, then the write of the touched years), then read the state
+    **as of r1** — an O(1) manifest-pointer lookup, no
     history reconstruction. The checksum of the rewound state must equal
     the checksum DuckDB computes over the original snapshot input: the
     merge physically rewrote touched ``data_year`` partitions, so parity
@@ -302,7 +303,10 @@ def cdc_state_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
     state1 = _current(spark, sf_dir).join(date_col, "tuid")
     updates = _updates(spark, sf_dir).join(date_col, "tuid")
 
-    from land_registry_data_ingestion_spark.operators.ingest import record_run
+    from land_registry_data_ingestion_spark.operators.ingest import (
+        merge_update_frame,
+        record_run,
+    )
     from land_registry_data_ingestion_spark.operators.state import ManifestStore
 
     root = tempfile.mkdtemp(prefix="lrdi_state_as_of_")
@@ -312,18 +316,9 @@ def cdc_state_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
         n1 = store.write_state(state1, loc1, "tuid")
         record_run(store, "r1", "derived:orders", "complete", "a" * 64,
                    datetime.datetime(2024, 1, 1), n1, loc1)
-        current, carry = store.current_for_merge(updates, "tuid")
-        merged = cdc_merge(
-            current,
-            updates,
-            key_col="tuid",
-            value_cols=["price", "status", "transaction_date"],
-            batch_timestamp=F.lit(_TS).cast("timestamp"),
-        )
-        loc2 = store.state_path("r2")
-        n2 = store.write_merged(merged.new_state, loc2, carry)
-        record_run(store, "r2", "derived:orders", "monthly", "b" * 64,
-                   datetime.datetime(2024, 2, 1), n2, loc2)
+        merge_update_frame(store, updates, "r2", key_col="tuid",
+                           now=datetime.datetime(2024, 2, 1),
+                           source_path="derived:orders")
         checksum_df = (
             store.state_as_of("r1")
             .agg(

@@ -42,15 +42,7 @@ def read_price_paid_csv(
     ''-filled strings, and a (possibly null) ``ppd_cat`` regardless of the
     on-disk column count.
     """
-    raw = spark.read.csv(
-        path,
-        schema=price_paid_raw_schema(n_columns),
-        header=False,
-        quote='"',
-        escape='"',
-        mode="PERMISSIVE",
-    )
-    return finalize_price_paid(raw, date_format=date_format)
+    return read_price_paid_csv_with_rejects(spark, path, n_columns, date_format)[0]
 
 
 def read_price_paid_csv_with_rejects(
@@ -69,7 +61,8 @@ def read_price_paid_csv_with_rejects(
     (bad_price / bad_date) — one extra filter over the SAME scan, no
     second file pass. Rows failing the CSV grammar itself (wrong column
     count) surface as all-null business keys in PERMISSIVE mode and are
-    caught by the same null checks downstream.
+    caught by the same null checks downstream. Both frames are lazy:
+    building them runs no Spark job.
     """
     raw = spark.read.csv(
         path,

@@ -87,16 +87,6 @@ def main() -> None:
     ap.add_argument("--rows", type=int, default=28_900_000)
     ap.add_argument("--batch-rows", type=int, default=288_000)
     ap.add_argument("--workdir", default="/tmp/ref_scale_probe")
-    ap.add_argument(
-        "--snapshot-parse-write-only",
-        action="store_true",
-        help="measure the snapshot as ONE parse + state write with the "
-        "whole gate pass skipped (calls the parse/write internals "
-        "directly — not an API mode). This is the like-for-like shape "
-        "of the round-2 measurement, before the fused gate landed in "
-        "the ingestion path; the delta to the default run is the gate "
-        "pass's true cost.",
-    )
     args = ap.parse_args()
 
     spark = get_spark("reference-scale-probe")
@@ -158,42 +148,16 @@ def main() -> None:
     store = make_store(spark, str(work / "store"))
 
     t0 = time.monotonic()
-    if args.snapshot_parse_write_only:
-        from land_registry_data_ingestion_spark.operators.merge import (
-            init_state,
-        )
-        from land_registry_data_ingestion_spark.sources.csv import (
-            read_price_paid_csv,
-        )
-
-        df = read_price_paid_csv(spark, snap_csv, n_columns=16)
-        state = init_state(
-            df.drop("record_op"),
-            batch_timestamp=F.lit(datetime.datetime(2024, 1, 1)),
-        )
-        n = store.write_state(state, store.state_path("parsewriteonly"))
-        snap_row = {"row_count": n}
-    else:
-        snap_row = ingest_snapshot(
-            store,
-            snap_csv,
-            "probe-snap",
-            now=datetime.datetime(2024, 1, 1),
-        )
+    snap_row = ingest_snapshot(
+        store, snap_csv, "probe-snap", now=datetime.datetime(2024, 1, 1)
+    )
     t_snap = time.monotonic() - t0
 
-    if args.snapshot_parse_write_only:
-        t_merge = None
-        merge_row = {"row_count": None}
-    else:
-        t0 = time.monotonic()
-        merge_row = ingest_monthly_update(
-            store,
-            monthly_csv,
-            "probe-merge",
-            now=datetime.datetime(2024, 2, 1),
-        )
-        t_merge = time.monotonic() - t0
+    t0 = time.monotonic()
+    merge_row = ingest_monthly_update(
+        store, monthly_csv, "probe-merge", now=datetime.datetime(2024, 2, 1)
+    )
+    t_merge = time.monotonic() - t0
 
     # bytes of the key index beside the state (state.py's ``_key_index/``)
     index_bytes = sum(
@@ -209,7 +173,7 @@ def main() -> None:
                 "batch_rows": args.batch_rows,
                 "merged_rows": merge_row["row_count"],
                 "snapshot_sec": round(t_snap, 1),
-                "merge_sec": None if t_merge is None else round(t_merge, 1),
+                "merge_sec": round(t_merge, 1),
                 "key_index_bytes": index_bytes,
             }
         )

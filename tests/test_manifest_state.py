@@ -402,6 +402,8 @@ def test_schema_evolution_across_carried_partitions(spark, tmp_path):
     carried-by-reference partitions written before it existed."""
     import datetime as _dt
 
+    from land_registry_data_ingestion_spark.operators.ingest import record_run
+
     store = ManifestStore(spark=spark, root=str(tmp_path / "evo"))
     v1 = spark.createDataFrame(
         [
@@ -411,17 +413,19 @@ def test_schema_evolution_across_carried_partitions(spark, tmp_path):
         "k string, transaction_date timestamp, price int",
     )
     loc1 = str(tmp_path / "evo" / "m1")
-    assert store.write_state(v1, loc1) == 2
+    assert store.write_state(v1, loc1, "k") == 2
+    record_run(store, "r1", "frame", "complete", "a" * 64, _dt.datetime(2024, 1, 1), 2, loc1)
 
-    entries = store._manifest_entries(loc1)
-    carry = [e for e in entries if e["data_year"] == 2015]
-    assert len(carry) == 1
     v2 = spark.createDataFrame(
         [("K2", _dt.datetime(2016, 3, 7), 250, "web")],
         "k string, transaction_date timestamp, price int, channel string",
     )
+    _, batch = store.probe_batch(v2, "k")
+    carry = batch.carry
+    assert len(carry) == 1 and carry[0]["data_year"] == 2015
     loc2 = str(tmp_path / "evo" / "m2")
-    assert store.write_merged(v2, loc2, carry) == 2
+    assert store.write_merged(v2, loc2, batch) == 2
+    record_run(store, "r2", "frame", "monthly", "b" * 64, _dt.datetime(2024, 2, 1), 2, loc2)
 
     out = store._read_parts(
         [e["path"] for e in store._manifest_entries(loc2)]
@@ -430,6 +434,7 @@ def test_schema_evolution_across_carried_partitions(spark, tmp_path):
     rows = {r.k: r for r in out.collect()}
     assert rows["K1"].channel is None and rows["K1"].price == 100
     assert rows["K2"].channel == "web" and rows["K2"].price == 250
+    _assert_indexed(spark, store, key_col="k")
 
 
 def test_empty_merge_into_empty_state_stays_readable(spark, tmp_path):
@@ -461,6 +466,25 @@ def test_empty_merge_into_empty_state_stays_readable(spark, tmp_path):
     assert row["row_count"] == 0
     assert store.current_state().count() == 0  # readable, not a crash
     assert store.state_as_of("r1").count() == 0
+
+
+def test_merge_that_writes_no_leaf_commits(spark, store, tmp_path):
+    """A batch whose only row is a D for a missing key dated in a year
+    the state lacks touches no year: the merge writes no leaf, carries
+    every partition, and still commits (the reference ignores such a
+    delete)."""
+    t0 = datetime.datetime(2024, 1, 1)
+    ingest_snapshot(store, _write(tmp_path, "s.csv", SNAP), "r1", now=t0)
+    row = ingest_monthly_update(
+        store, _write(tmp_path, "d.csv", [_line("T0009", 1, "2030-01-01", "D")]),
+        "r2", now=t0 + datetime.timedelta(days=1),
+    )
+    assert row["decision"] == "archive"
+    assert row["row_count"] == 4
+    assert store.last_accepted()["run_id"] == "r2"
+    assert _state(store.current_state()) == SNAP_STATE
+    assert _counters(store, "r2") == {("D", "delete_ignore_missing"): 1}
+    assert _part_years(store._parts_dir(row["state_location"])) == []
 
 
 def _ledger_row(run_id: str, when: datetime.datetime, **kw) -> dict:
@@ -530,7 +554,7 @@ def test_control_plane_runs_no_spark_job(spark, store, tmp_path):
 def test_state_reads_run_no_spark_job(spark, store, tmp_path):
     """Building a state read is driver work: its schema comes from one
     parquet footer per leaf, not a mergeSchema job. current_for_merge
-    handed the probed years plans its frame without a job too."""
+    handed the gate's probed batch plans its frame without a job too."""
     from land_registry_data_ingestion_spark.sources.csv import read_price_paid_csv
 
     t0 = datetime.datetime(2024, 1, 1)
@@ -540,26 +564,25 @@ def test_state_reads_run_no_spark_job(spark, store, tmp_path):
         now=t0 + datetime.timedelta(days=1),
     )["state_location"]
     updates = read_price_paid_csv(spark, _write(tmp_path, "u.csv", MONTHLY))
+    cols, batch = store.probe_batch(updates, "transaction_unique_id")
     calls = {
         "current_state": store.current_state,
         "read_state_at": lambda: store.read_state_at(loc),
-        "current_for_merge": lambda: store.current_for_merge(
-            updates, "transaction_unique_id", {2015, 2016, 2018}
+        "current_for_merge": lambda: store.current_for_merge(batch),
+        "probe_keys": lambda: store.probe_keys(
+            store._manifest_entries(loc),
+            cols.column("_hash").to_numpy(),
+            cols.column("_year").to_numpy(),
+            ("transaction_unique_id", "string"),
         ),
     }
-    cols, _ = store.probe_batch(updates, "transaction_unique_id")
-    calls["probe_keys"] = lambda: store.probe_keys(
-        cols.column("_hash").to_numpy(),
-        cols.column("_year").to_numpy(),
-        ("transaction_unique_id", "string"),
-    )
     frames = {}
     for name, call in calls.items():
         frames[name], n_jobs = _jobs_in_group(spark, name, call)
         assert n_jobs == 0, name
     assert _state(frames["current_state"]) == MONTHLY_STATE
     assert _rows(frames["read_state_at"]) == _rows(frames["current_state"])
-    current, carry = frames["current_for_merge"]
+    current, carry = frames["current_for_merge"], batch.carry
     assert sorted(_state(current)) == ["{T0001}", "{T0002}", "{T0003}", "{T0005}"]
     assert [e["data_year"] for e in carry] == [2017]
     # the index probe names the batch's own years and no other
