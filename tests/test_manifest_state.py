@@ -414,7 +414,9 @@ def test_schema_evolution_across_carried_partitions(spark, tmp_path):
     )
     loc1 = str(tmp_path / "evo" / "m1")
     assert store.write_state(v1, loc1, "k") == 2
-    record_run(store, "r1", "frame", "complete", "a" * 64, _dt.datetime(2024, 1, 1), 2, loc1)
+    record_run(
+        store, "r1", "frame", "complete", "a" * 64, _dt.datetime(2024, 1, 1), 2, loc1
+    )
 
     v2 = spark.createDataFrame(
         [("K2", _dt.datetime(2016, 3, 7), 250, "web")],
@@ -425,7 +427,9 @@ def test_schema_evolution_across_carried_partitions(spark, tmp_path):
     assert len(carry) == 1 and carry[0]["data_year"] == 2015
     loc2 = str(tmp_path / "evo" / "m2")
     assert store.write_merged(v2, loc2, batch) == 2
-    record_run(store, "r2", "frame", "monthly", "b" * 64, _dt.datetime(2024, 2, 1), 2, loc2)
+    record_run(
+        store, "r2", "frame", "monthly", "b" * 64, _dt.datetime(2024, 2, 1), 2, loc2
+    )
 
     out = store._read_parts(
         [e["path"] for e in store._manifest_entries(loc2)]
