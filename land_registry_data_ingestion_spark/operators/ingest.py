@@ -49,6 +49,7 @@ from land_registry_data_ingestion_spark.operators.state import (
     ManifestStore,
     _utc,
 )
+from land_registry_data_ingestion_spark.schema import AUDIT_COLUMNS, OP_COLUMN
 from land_registry_data_ingestion_spark.sources.csv import (
     read_price_paid_csv_with_rejects,
 )
@@ -59,13 +60,13 @@ from land_registry_data_ingestion_spark.sources.csv import (
 IngestStore = ManifestStore
 
 
-def sha256_of_file(path: str, chunk: int = 1 << 20) -> str:
+def sha256_of_file(path: str) -> str:
     """F1: content hash of a staged file (driver-side, streamed — the file
     was just fetched by the driver; row-level hashing uses F.sha2)."""
     h = hashlib.sha256()
     with open(path, "rb") as f:
         while True:
-            b = f.read(chunk)
+            b = f.read(1 << 20)
             if not b:
                 break
             h.update(b)
@@ -164,7 +165,7 @@ def ingest_snapshot(
         ).alias("n_bad")
     ]
     df = df.observe(gate_obs, *gate_aggs)
-    state = init_state(df.drop("record_op"), batch_timestamp=F.lit(_utc(now)))
+    state = init_state(df.drop(OP_COLUMN), batch_timestamp=F.lit(_utc(now)))
     location = store.state_path(run_id)
     row_count = store.write_state(state, location, key)
 
@@ -213,7 +214,6 @@ def _gate_batch(
     store: ManifestStore,
     updates: DataFrame,
     key_col: str,
-    op_col: str,
     what: str,
     rejects: DataFrame | None = None,
 ) -> BatchKeys:
@@ -236,9 +236,10 @@ def _gate_batch(
     - only A/C/D ops (reference RuntimeError,
       database_updater.py:1011-1013).
 
-    Sample rows for the error message are fetched by a targeted query
-    only on the failure path."""
-    bad_op = ~F.coalesce(F.col(op_col).isin("A", "C", "D"), F.lit(False))
+    A duplicate key's sample comes from the collected keys; a bad op's
+    sample rows are fetched by a targeted query, on that failure path
+    only."""
+    bad_op = ~F.coalesce(F.col(OP_COLUMN).isin("A", "C", "D"), F.lit(False))
     extra = [bad_op.alias("_bad_op")]
     if rejects is not None:
         bad = F.col("price").isNull() | F.col("transaction_date").isNull()
@@ -252,16 +253,17 @@ def _gate_batch(
             f"{what} has {keys.null_count} row(s) with a NULL "
             f"{key_col} — batch rejected before any state was written"
         )
-    if len(pc.unique(keys)) < len(keys):
-        dups = validate_unique(updates, key_col).limit(5).collect()
-        sample = ", ".join(str(r[key_col]) for r in dups)
+    counts = pc.value_counts(keys)
+    dups = counts.field("values").filter(pc.greater(counts.field("counts"), 1))
+    if len(dups):
+        sample = ", ".join(str(k) for k in dups[:5].to_pylist())
         raise ValueError(
             f"duplicate {key_col} in {what} (e.g. {sample}) — "
             f"refusing to merge; the full-outer join would fan out"
         )
     if pc.any(cols.column("_bad_op")).as_py():
         bad = updates.filter(bad_op).limit(5).collect()  # failure path only
-        sample = ", ".join(f"{r[key_col]}={r[op_col]!r}" for r in bad)
+        sample = ", ".join(f"{r[key_col]}={r[OP_COLUMN]!r}" for r in bad)
         raise ValueError(
             f"{what} contains ops outside A/C/D (e.g. {sample}) — batch "
             f"rejected, state unchanged"
@@ -320,7 +322,6 @@ def merge_update_frame(
     updates: DataFrame,
     run_id: str,
     key_col: str = "transaction_unique_id",
-    op_col: str = "record_op",
     now: datetime.datetime | None = None,
     sha: str | None = None,
     source_path: str | None = None,
@@ -356,33 +357,21 @@ def merge_update_frame(
 
     source_path = source_path or f"stream:{run_id}"
     batch = _gate_batch(
-        store, updates, key_col, op_col, f"update batch {source_path}", rejects
+        store, updates, key_col, f"update batch {source_path}", rejects
     )
     current = store.current_for_merge(batch)
-    value_cols = [
-        c
-        for c in current.columns
-        if c
-        not in (
-            key_col,
-            "created_datetime",
-            "updated_datetime",
-            "deleted_datetime",
-            "is_deleted",
-        )
-    ]
+    value_cols = [c for c in current.columns if c not in (key_col, *AUDIT_COLUMNS)]
     result = cdc_merge(
         current,
         updates,
         key_col=key_col,
         value_cols=value_cols,
-        op_col=op_col,
         batch_timestamp=F.lit(_utc(now)),
     )
     location = store.state_path(run_id)
     obs = Observation()
     row_count = store.write_merged(result.observed_state(obs), location, batch)
-    store._append_operation_log(run_id, observed_outcome_stats(obs.get, op_col))
+    store._append_operation_log(run_id, observed_outcome_stats(obs.get))
     return record_run(
         store, run_id, source_path, "monthly",
         sha or hashlib.sha256(run_id.encode()).hexdigest(), now, row_count, location,

@@ -45,6 +45,8 @@ from functools import cached_property
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from land_registry_data_ingestion_spark.schema import OP_COLUMN
+
 # Outcome vocabulary (op_outcome), feeding the A8 statistics operator.
 OUTCOMES = [
     "add_ignore",
@@ -119,14 +121,14 @@ class MergeResult:
         return self._annotated.filter(q["upd_keyed"]).selectExpr(*q["transitions"])
 
 
-def observed_outcome_stats(metrics: dict, op_col: str = "record_op") -> list[dict]:
+def observed_outcome_stats(metrics: dict) -> list[dict]:
     """The non-zero ``(record_op, outcome, n_rows)`` counters of
     :meth:`MergeResult.observed_state`'s metrics — the rows
     :func:`merge_outcome_stats` would aggregate from ``outcomes`` for a
     batch with no NULL key and no op outside A/C/D, which the ingest gate
     rejects before any write."""
     return [
-        {op_col: _OP_OF[o], "outcome": o, "n_rows": n} for o, n in metrics.items() if n
+        {OP_COLUMN: _OP_OF[o], "outcome": o, "n_rows": n} for o, n in metrics.items() if n
     ]
 
 
@@ -145,7 +147,6 @@ def cdc_merge(
     updates: DataFrame,
     key_col: str,
     value_cols: list[str],
-    op_col: str = "record_op",
     batch_timestamp: Column | None = None,
 ) -> MergeResult:
     """Apply an A/C/D update batch to the current state in one join pass.
@@ -153,7 +154,7 @@ def cdc_merge(
     ``current`` must carry audit columns ``is_deleted`` (bool),
     ``created_datetime``/``updated_datetime``/``deleted_datetime``
     (timestamps, nullable); use :func:`init_state` to bootstrap them.
-    ``updates`` carries the key, the value columns and ``op_col`` ∈ A/C/D.
+    ``updates`` carries the key, the value columns and ``record_op`` ∈ A/C/D.
     """
     ts = batch_timestamp if batch_timestamp is not None else F.current_timestamp()
 
@@ -167,7 +168,7 @@ def cdc_merge(
     cur = current.withColumn("_cur_present", F.lit(True)).alias("cur")
     upd = updates.withColumn("_upd_present", F.lit(True)).alias("upd")
     joined = cur.join(upd, F.col(f"cur.{key_col}") == F.col(f"upd.{key_col}"), "full_outer")
-    return _merge_from_joined(joined, key_col, value_cols, op_col, ts)
+    return _merge_from_joined(joined, key_col, value_cols, ts)
 
 
 def cdc_merge_coderived(
@@ -178,7 +179,6 @@ def cdc_merge_coderived(
     upd_select: dict[str, Column],
     key_col: str,
     value_cols: list[str],
-    op_col: str = "record_op",
     batch_timestamp: Column | None = None,
 ) -> MergeResult:
     """Join-free :func:`cdc_merge` for the co-derived case (round 11,
@@ -208,7 +208,7 @@ def cdc_merge_coderived(
     ``cur_select`` must provide the key, every value column and the
     audit columns (``is_deleted``, ``created_datetime``,
     ``updated_datetime``, ``deleted_datetime``); ``upd_select`` the key,
-    value columns and ``op_col``.
+    value columns and ``record_op``.
     """
     from land_registry_data_ingestion_spark.util import spread
 
@@ -228,7 +228,6 @@ def cdc_merge_coderived(
         joined,
         key_col,
         value_cols,
-        op_col,
         ts,
         cur_prefix="_cur_",
         upd_prefix="_upd_",
@@ -239,7 +238,6 @@ def _merge_from_joined(
     joined: DataFrame,
     key_col: str,
     value_cols: list[str],
-    op_col: str,
     ts: Column,
     cur_prefix: str = "cur.",
     upd_prefix: str = "upd.",
@@ -277,7 +275,7 @@ def _merge_from_joined(
     identical = f"({cur_live} AND " + " AND ".join(
         f"({cur(c)} <=> {upd(c)})" for c in value_cols
     ) + ")"
-    op = upd(op_col)
+    op = upd(OP_COLUMN)
 
     # A NULL key can address no row (the reference's PK is NOT NULL — its
     # per-row path would fail the batch); surfaced like invalid ops so
@@ -381,7 +379,7 @@ def _merge_from_joined(
         "audit": audit,
         "outcomes": [
             f"{upd(key_col)} AS {name(key_col)}",
-            f"{op} AS {name(op_col)}",
+            f"{op} AS {name(OP_COLUMN)}",
             "_outcome AS outcome",
         ],
         # Before/after images for IVM: same annotated probe, no extra
@@ -414,13 +412,13 @@ def init_state(
     )
 
 
-def merge_outcome_stats(outcomes: DataFrame, op_col: str = "record_op") -> DataFrame:
+def merge_outcome_stats(outcomes: DataFrame) -> DataFrame:
     """A8: per-(op, outcome) counts — the normalized form of the operation
     ledger (reference ``...database_updater.py:48-84,1059-1117``)."""
-    return outcomes.groupBy(op_col, "outcome").agg(F.count("*").alias("n_rows"))
+    return outcomes.groupBy(OP_COLUMN, "outcome").agg(F.count("*").alias("n_rows"))
 
 
-def merge_ledger(outcomes: DataFrame, op_col: str = "record_op") -> DataFrame:
+def merge_ledger(outcomes: DataFrame) -> DataFrame:
     """A8 full parity: the reference's 17-counter operation-log row
     (``...database_updater.py:48-84`` defines the counters,
     ``:1059-1117`` assembles the row) as ONE conditional-sum aggregate
@@ -456,15 +454,16 @@ def merge_ledger(outcomes: DataFrame, op_col: str = "record_op") -> DataFrame:
     option via ``MergeResult.invalid_ops``).
     """
     o = F.col("outcome")
+    op = F.col(OP_COLUMN)
 
     def cnt(cond, name):
         return F.sum(F.when(cond, 1).otherwise(0)).cast("long").alias(name)
 
     return outcomes.agg(
         F.count("*").cast("long").alias("input_file_row_count"),
-        cnt(F.col(op_col) == "A", "input_file_row_count_insert"),
-        cnt(F.col(op_col) == "C", "input_file_row_count_update"),
-        cnt(F.col(op_col) == "D", "input_file_row_count_delete"),
+        cnt(op == "A", "input_file_row_count_insert"),
+        cnt(op == "C", "input_file_row_count_update"),
+        cnt(op == "D", "input_file_row_count_delete"),
         cnt(o.isin("add_insert", "change_insert"), "operation_count_insert"),
         cnt(
             o.isin("add_change", "change_change", "add_undelete_change"),

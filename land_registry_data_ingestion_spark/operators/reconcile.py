@@ -23,6 +23,8 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from land_registry_data_ingestion_spark.schema import OP_COLUMN
+
 
 @dataclass
 class ReconcileResult:
@@ -72,9 +74,7 @@ def reconcile(
     return ReconcileResult(diff=diff, counts=counts)
 
 
-def repair_updates(
-    truth: DataFrame, target: DataFrame, op_col: str = "record_op"
-) -> DataFrame:
+def repair_updates(truth: DataFrame, target: DataFrame) -> DataFrame:
     """The repair half of the reference's verify
     (``database_verify.py:296-446``): rows present in the source-of-truth
     file but not byte-identical in the target become an op='A' update
@@ -92,4 +92,4 @@ def repair_updates(
         lambda a, b: a & b,
         [F.col(f"l.{c}").eqNullSafe(F.col(f"r.{c}")) for c in cols],
     )
-    return l.join(r, cond, "left_anti").withColumn(op_col, F.lit("A"))
+    return l.join(r, cond, "left_anti").withColumn(OP_COLUMN, F.lit("A"))

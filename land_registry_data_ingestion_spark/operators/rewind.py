@@ -27,23 +27,6 @@ def number_versions(
     return updates.withColumn(version_col, F.row_number().over(w) - 1)
 
 
-def with_previous_version(
-    updates: DataFrame,
-    key_col: str,
-    order_col: str,
-    value_cols: list[str],
-    prefix: str = "prev_",
-) -> DataFrame:
-    """W4: attach the previous version's values per key via ``lag`` over a
-    struct (reference's version-1 lookup, cell 20)."""
-    w = Window.partitionBy(key_col).orderBy(order_col)
-    prev = F.lag(F.struct(*[F.col(c) for c in value_cols])).over(w)
-    out = updates.withColumn("_prev", prev)
-    for c in value_cols:
-        out = out.withColumn(f"{prefix}{c}", F.col(f"_prev.{c}"))
-    return out.drop("_prev")
-
-
 def rewind_to_version(
     versioned: DataFrame, key_col: str, version_col: str, max_version: int
 ) -> DataFrame:

@@ -895,56 +895,10 @@ def _with_centroids(
     return df.crossJoin(F.broadcast(cents))
 
 
-def ivf_assign(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Index build: attach ``centroid_id`` = argmax-cosine centroid to each
-    corpus vector. One scan + a broadcast of the centroid set (argmax is
-    struct-max over the attached array) — at 100 TB the build costs one
-    pass, and the assigned table is then written partitioned/bucketed by
-    ``centroid_id`` so probes prune partitions."""
-    return _ivf_assign_attached(
-        _with_centroids(corpus, centroids, id_col, vec_col), vec_col
-    ).drop("_cents")
-
-
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
-
-
-def _ivf_assign_attached(withc: DataFrame, vec_col: str) -> DataFrame:
-    vec = F.col(vec_col).cast("array<double>")
-    vnorm = l2_norm(F.col(vec_col))
-    # degenerate (zero-norm / NaN) vectors or centroids score -2.0 —
-    # below every real cosine, so assignment degrades to the smallest
-    # centroid id deterministically instead of an ANSI DIVIDE_BY_ZERO
-    # or a NaN winning the struct-max.
-    scored = F.transform(
-        F.col("_cents"),
-        lambda c: F.struct(
-            F.coalesce(
-                F.nanvl(
-                    F.round(
-                        F.try_divide(
-                            _dot(vec, c["cvec"]), vnorm * c["cnorm"]
-                        ),
-                        6,
-                    ),
-                    F.lit(None).cast("double"),
-                ),
-                F.lit(-2.0),
-            ).alias("cos"),
-            (-c["cid"]).alias("ncid"),
-        ),
-    )
-    # struct max orders by (cos, ncid): highest cosine, ties → smallest cid.
-    best = F.array_max(scored)
-    return withc.withColumn("centroid_id", (-best["ncid"]).cast("long"))
 
 
 def ivf_topk(

@@ -107,6 +107,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from land_registry_data_ingestion_spark.schema import OP_COLUMN
+
 FILE_LOG_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),
@@ -122,7 +124,7 @@ FILE_LOG_SCHEMA = T.StructType(
 
 OPERATION_LOG_SCHEMA = T.StructType(
     [
-        T.StructField("record_op", T.StringType(), True),
+        T.StructField(OP_COLUMN, T.StringType(), True),
         T.StructField("outcome", T.StringType(), False),
         T.StructField("n_rows", T.LongType(), False),
         T.StructField("run_id", T.StringType(), False),
@@ -139,6 +141,9 @@ MANIFEST_SCHEMA = T.StructType(
 
 # The footer key under which Spark records a data file's row schema.
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+# The ledger is rewritten as one file once it has more parts than this.
+FILE_LOG_MAX_PARTS = 64
 
 # Rows with NULL transaction_date get a concrete partition value so every
 # state row lives in exactly one manifest entry.
@@ -358,7 +363,7 @@ class ManifestStore:
         return (
             self.spark.read.schema(OPERATION_LOG_SCHEMA)
             .parquet(self.operation_log_path)
-            .dropDuplicates(["run_id", "record_op", "outcome"])
+            .dropDuplicates(["run_id", OP_COLUMN, "outcome"])
         )
 
     def _append_operation_log(self, run_id: str, stats: list[dict]) -> None:
@@ -395,10 +400,11 @@ class ManifestStore:
         shutil.rmtree(old)
         return len(rows)
 
-    def maybe_compact_file_log(self, max_files: int = 64) -> bool:
-        """Compact when the ledger dir has fragmented past ``max_files``
-        parquet parts — an O(listdir) probe, so every ledger append can
-        run it. Returns True when a compaction ran."""
+    def maybe_compact_file_log(self) -> bool:
+        """Compact when the ledger dir has fragmented past
+        :data:`FILE_LOG_MAX_PARTS` parquet parts — an O(listdir) probe,
+        so every ledger append can run it. Returns True when a compaction
+        ran."""
         if not os.path.isdir(self.file_log_path):
             return False
         n = sum(
@@ -406,7 +412,7 @@ class ManifestStore:
             for f in os.listdir(self.file_log_path)
             if f.startswith("part-") and f.endswith(".parquet")
         )
-        if n <= max_files:
+        if n <= FILE_LOG_MAX_PARTS:
             return False
         self.compact_file_log()
         return True

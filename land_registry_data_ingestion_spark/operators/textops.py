@@ -244,21 +244,6 @@ def gopher_quality_flags(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out.withColumn("passes_gopher", passes)
 
 
-def word_ngrams_all(col: Column, k: int) -> Column:
-    """NON-distinct word k-grams (every occurrence, unlike
-    ``word_shingles``): the multiset the repetition rules count over.
-    Same slice-zip build (tokenizer evaluated k times per row, not
-    k × n_grams times)."""
-    toks = tokens(normalize_text(col))
-    n = F.size(toks)
-    m = F.greatest(n - (k - 1), F.lit(0))
-    parts = [F.slice(toks, j + 1, m) for j in range(k)]
-    zipped = parts[0]
-    for p in parts[1:]:
-        zipped = F.zip_with(zipped, p, lambda x, y: F.concat(x, F.lit(" "), y))
-    return F.when(n >= k, zipped).otherwise(F.array().cast("array<string>"))
-
-
 def _run_length_stats(sorted_hashes: Column) -> Column:
     """``struct(top, dup)`` over a SORTED ``array<long>``: the longest
     run length (= max count of any value) and the total length of runs

@@ -11,9 +11,12 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
+# Column 16 of the files: the row's change op (A/C/D). The CDC merge and
+# its gate read it and the operation log keys its counters by it; it is
+# not persisted on the state table.
+OP_COLUMN = "record_op"
+
 # The 16 positional columns of pp-complete.txt / pp-monthly-update.txt.
-# Column 16 (record_op A/C/D) only appears in files; it is consumed by the
-# CDC merge and not persisted on the state table.
 PRICE_PAID_COLUMNS: list[str] = [
     "transaction_unique_id",
     "price",
@@ -30,33 +33,13 @@ PRICE_PAID_COLUMNS: list[str] = [
     "district",
     "county",
     "ppd_cat",
-    "record_op",
+    OP_COLUMN,
 ]
 
 # String value columns participating in full-row equality (reference fills
 # NA with '' before comparing — lib_db.py / database_updater.py:677).
 PRICE_PAID_STRING_COLUMNS: list[str] = [
     "transaction_unique_id",
-    "postcode",
-    "property_type",
-    "new_tag",
-    "lease",
-    "primary_address_object_name",
-    "secondary_address_object_name",
-    "street",
-    "locality",
-    "town_city",
-    "district",
-    "county",
-    "ppd_cat",
-]
-
-# The 14 value columns (everything except the business key and record_op)
-# used by the reconcile operator's full-outer compare
-# (reference LRD/land_registry_database_verify.py:209-236).
-PRICE_PAID_VALUE_COLUMNS: list[str] = [
-    "price",
-    "transaction_date",
     "postcode",
     "property_type",
     "new_tag",
@@ -89,38 +72,12 @@ def price_paid_raw_schema(n_columns: int = 16) -> T.StructType:
     return T.StructType([T.StructField(n, T.StringType(), True) for n in names])
 
 
-def price_paid_schema() -> T.StructType:
-    """Typed schema of the parsed record (engine's state-table shape)."""
-    return T.StructType(
-        [
-            T.StructField("transaction_unique_id", T.StringType(), False),
-            T.StructField("price", T.LongType(), True),
-            T.StructField("transaction_date", T.TimestampType(), True),
-            T.StructField("postcode", T.StringType(), True),
-            T.StructField("property_type", T.StringType(), True),
-            T.StructField("new_tag", T.StringType(), True),
-            T.StructField("lease", T.StringType(), True),
-            T.StructField("primary_address_object_name", T.StringType(), True),
-            T.StructField("secondary_address_object_name", T.StringType(), True),
-            T.StructField("street", T.StringType(), True),
-            T.StructField("locality", T.StringType(), True),
-            T.StructField("town_city", T.StringType(), True),
-            T.StructField("district", T.StringType(), True),
-            T.StructField("county", T.StringType(), True),
-            T.StructField("ppd_cat", T.StringType(), True),
-            T.StructField("record_op", T.StringType(), True),
-        ]
-    )
-
-
 # Engine-added audit columns on the current-state table
-# (reference lib_db.py:233-272).
+# (reference lib_db.py:233-272); every other state column but the key is
+# a value column the merge compares and carries.
 AUDIT_COLUMNS: list[str] = [
     "created_datetime",
     "updated_datetime",
     "deleted_datetime",
     "is_deleted",
-    "insert_op_count",
-    "update_op_count",
-    "delete_op_count",
 ]

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from land_registry_data_ingestion_spark.schema import (
+    OP_COLUMN,
     PRICE_PAID_COLUMNS,
     PRICE_PAID_STRING_COLUMNS,
     price_paid_raw_schema,
@@ -31,10 +32,7 @@ TRANSACTION_DATE_FORMAT = "yyyy-MM-dd HH:mm"
 
 
 def read_price_paid_csv(
-    spark: SparkSession,
-    path: str,
-    n_columns: int = 16,
-    date_format: str = TRANSACTION_DATE_FORMAT,
+    spark: SparkSession, path: str, n_columns: int = 16
 ) -> DataFrame:
     """Read a pp-complete / pp-monthly-update style headerless CSV.
 
@@ -42,14 +40,11 @@ def read_price_paid_csv(
     ''-filled strings, and a (possibly null) ``ppd_cat`` regardless of the
     on-disk column count.
     """
-    return read_price_paid_csv_with_rejects(spark, path, n_columns, date_format)[0]
+    return read_price_paid_csv_with_rejects(spark, path, n_columns)[0]
 
 
 def read_price_paid_csv_with_rejects(
-    spark: SparkSession,
-    path: str,
-    n_columns: int = 16,
-    date_format: str = TRANSACTION_DATE_FORMAT,
+    spark: SparkSession, path: str, n_columns: int = 16
 ) -> tuple[DataFrame, DataFrame]:
     """Like :func:`read_price_paid_csv` but ALSO returns the rows the
     strict casts silently nulled — ``(records, rejects)``.
@@ -72,12 +67,12 @@ def read_price_paid_csv_with_rejects(
         escape='"',
         mode="PERMISSIVE",
     )
-    records = finalize_price_paid(raw, date_format=date_format)
+    records = finalize_price_paid(raw)
     bad_price = F.col("price").isNotNull() & F.col("price").try_cast(
         "long"
     ).isNull()
     bad_date = F.col("transaction_date_raw").isNotNull() & F.try_to_timestamp(
-        F.col("transaction_date_raw"), F.lit(date_format)
+        F.col("transaction_date_raw"), F.lit(TRANSACTION_DATE_FORMAT)
     ).isNull()
     rejects = raw.filter(bad_price | bad_date).select(
         "transaction_unique_id",
@@ -90,19 +85,19 @@ def read_price_paid_csv_with_rejects(
     return records, rejects
 
 
-def finalize_price_paid(
-    raw: DataFrame, date_format: str = TRANSACTION_DATE_FORMAT
-) -> DataFrame:
+def finalize_price_paid(raw: DataFrame) -> DataFrame:
     """Casts + normalization shared by the CSV reader and test fixtures."""
     df = raw
     if "ppd_cat" not in df.columns:  # 15-column pre-2017 variant (S4)
         df = df.withColumn("ppd_cat", F.lit(None).cast("string"))
-    if "record_op" not in df.columns:
-        df = df.withColumn("record_op", F.lit(None).cast("string"))
+    if OP_COLUMN not in df.columns:
+        df = df.withColumn(OP_COLUMN, F.lit(None).cast("string"))
     df = (
         df.withColumn(
             "transaction_date",
-            F.try_to_timestamp(F.col("transaction_date_raw"), F.lit(date_format)),
+            F.try_to_timestamp(
+                F.col("transaction_date_raw"), F.lit(TRANSACTION_DATE_FORMAT)
+            ),
         )
         .withColumn("price", F.col("price").try_cast("long"))
         .drop("transaction_date_raw")

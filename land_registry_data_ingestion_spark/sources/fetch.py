@@ -8,7 +8,8 @@ failure like any other; download timestamps/durations are recorded.
 
 This layer is DRIVER-side orchestration, deliberately outside Spark: one
 file arrives per run, and the cluster enters at the staged file
-(``operators/ingest.py``). Transport and clock are injected so the policy
+(``operators/ingest.py``); ``operators/pipeline.run_*_cycle`` composes
+fetch, ingest and the archive step. Transport and clock are injected so the policy
 is fully testable with no network (the harness has none) and no real
 sleeping; production passes ``urllib_transport`` and ``time.sleep``.
 """
@@ -103,55 +104,3 @@ def fetch_with_retry(
         download_complete=complete,
     )
 
-
-def fetch_and_ingest_snapshot(
-    store,
-    url: str,
-    staging_dir: str,
-    run_id: str,
-    transport: Transport = urllib_transport,
-    n_columns: int = 16,
-    now: datetime.datetime | None = None,
-    **retry_kwargs,
-) -> dict:
-    """S1 end-to-end: fetch (with retry) → stage → hash/dedup-decide →
-    load (``operators/ingest.ingest_snapshot``). Returns the file-log row;
-    the short-circuit path (same sha as last accepted) never loads."""
-    from land_registry_data_ingestion_spark.operators.ingest import (
-        ingest_snapshot,
-    )
-
-    staged = fetch_with_retry(
-        url,
-        os.path.join(staging_dir, f"{run_id}-snapshot.csv"),
-        transport=transport,
-        **retry_kwargs,
-    )
-    return ingest_snapshot(store, staged.path, run_id, n_columns=n_columns, now=now)
-
-
-def fetch_and_ingest_monthly(
-    store,
-    url: str,
-    staging_dir: str,
-    run_id: str,
-    transport: Transport = urllib_transport,
-    n_columns: int = 16,
-    now: datetime.datetime | None = None,
-    **retry_kwargs,
-) -> dict:
-    """S2 end-to-end: fetch (with retry) → stage → CDC-merge
-    (``operators/ingest.ingest_monthly_update``)."""
-    from land_registry_data_ingestion_spark.operators.ingest import (
-        ingest_monthly_update,
-    )
-
-    staged = fetch_with_retry(
-        url,
-        os.path.join(staging_dir, f"{run_id}-monthly.csv"),
-        transport=transport,
-        **retry_kwargs,
-    )
-    return ingest_monthly_update(
-        store, staged.path, run_id, n_columns=n_columns, now=now
-    )

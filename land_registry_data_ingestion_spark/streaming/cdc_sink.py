@@ -27,24 +27,24 @@ from land_registry_data_ingestion_spark.operators.ingest import merge_update_fra
 from land_registry_data_ingestion_spark.operators.state import ManifestStore
 from land_registry_data_ingestion_spark.streaming.conflate import conflate_latest
 
+# Every ledger row the sink writes has a run id starting "stream-".
+RUN_PREFIX = "stream"
+
 
 def run_cdc_stream(
     stream: DataFrame,
     store: ManifestStore,
     checkpoint_dir: str,
-    key_col: str = "transaction_unique_id",
-    op_col: str = "record_op",
     ts_col: str | None = None,
-    run_prefix: str = "stream",
-    trigger_available_now: bool = True,
 ) -> StreamingQuery:
-    """Start the CDC sink. ``stream`` rows carry the state's value
-    columns plus ``op_col`` (A/C/D) and optionally ``ts_col`` for
-    within-batch conflation (omit it only if the source already
-    guarantees ≤1 row per key per batch)."""
+    """Start the CDC sink and drain what ``stream`` has available now.
+    ``stream`` rows carry the key ``transaction_unique_id``, the state's
+    value columns, ``record_op`` (A/C/D) and optionally ``ts_col``, by
+    which each micro-batch keeps only the newest row per key (omit it
+    only if the source already guarantees ≤1 row per key per batch)."""
 
     # Run ids must be STREAM-unique, not just batch-unique: a bare
-    # f"{prefix}-{batch_id}" would match a stale ledger row after a
+    # f"{RUN_PREFIX}-{batch_id}" would match a stale ledger row after a
     # checkpoint recreation (batch ids restart at 0) and silently no-op
     # genuinely new data. See streaming/identity.py for the tag's
     # lifetime contract.
@@ -58,18 +58,14 @@ def run_cdc_stream(
         if batch.isEmpty():
             return
         if ts_col is not None:
-            batch = conflate_latest(batch, [key_col], ts_col)
+            batch = conflate_latest(batch, ["transaction_unique_id"], ts_col)
         merge_update_frame(
-            store,
-            batch,
-            run_id=f"{run_prefix}-{stream_tag}-{batch_id:08d}",
-            key_col=key_col,
-            op_col=op_col,
+            store, batch, run_id=f"{RUN_PREFIX}-{stream_tag}-{batch_id:08d}"
         )
 
-    writer = stream.writeStream.foreachBatch(_effect).option(
-        "checkpointLocation", checkpoint_dir
+    return (
+        stream.writeStream.foreachBatch(_effect)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

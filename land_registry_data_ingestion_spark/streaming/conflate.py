@@ -37,9 +37,9 @@ def run_conflated_stream(
     ts_col: str,
     effect: Callable[[DataFrame, int], None],
     checkpoint_dir: str,
-    trigger_available_now: bool = True,
 ) -> StreamingQuery:
-    """Wire a stream through conflation into an idempotent ``effect``.
+    """Wire a stream through conflation into an idempotent ``effect``,
+    draining what the stream has available now.
 
     ``effect(conflated_batch, batch_id)`` must be idempotent per batch_id —
     the checkpoint replays the last batch after a crash (at-least-once
@@ -52,9 +52,9 @@ def run_conflated_stream(
             return
         effect(conflate_latest(batch, key_cols, ts_col), batch_id)
 
-    writer = stream.writeStream.foreachBatch(_foreach).option(
-        "checkpointLocation", checkpoint_dir
+    return (
+        stream.writeStream.foreachBatch(_foreach)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

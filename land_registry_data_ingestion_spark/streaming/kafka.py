@@ -103,22 +103,6 @@ def kafka_stream_reader(
     )
 
 
-def kafka_events_stream(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    value_schema: T.StructType,
-    starting_offsets: str = "earliest",
-) -> DataFrame:
-    """Streaming frame of parsed events from ``topic`` — plug into
-    ``run_conflated_stream`` for the conflate → idempotent-effect
-    pipeline."""
-    wire = kafka_stream_reader(
-        spark, bootstrap_servers, topic, starting_offsets
-    ).load()
-    return parse_kafka_events(wire, value_schema)
-
-
 def to_kafka_wire(
     df: DataFrame, key_col: str, topic: str | None = None
 ) -> DataFrame:

@@ -28,7 +28,6 @@ def run_span_dedup_stream(
     on_spans: Callable[[DataFrame, int], None] | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
-    trigger_available_now: bool = True,
     compact_every: int = 32,
 ) -> StreamingQuery:
     """Start the span-dedup sink. ``on_spans(spans_df, batch_id)`` runs
@@ -78,9 +77,9 @@ def run_span_dedup_stream(
             # cache per batch (same discipline as corpus_stream.py).
             release_caches()
 
-    writer = stream.writeStream.foreachBatch(_effect).option(
-        "checkpointLocation", checkpoint_dir
+    return (
+        stream.writeStream.foreachBatch(_effect)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

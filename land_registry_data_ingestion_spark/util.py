@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def spread(df: DataFrame, min_factor: int = 1) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Ensure a compute-heavy map stage can use every core.
 
     Small inputs often arrive as a single parquet file → one split → one
@@ -24,7 +24,7 @@ def spread(df: DataFrame, min_factor: int = 1) -> DataFrame:
         # micro-batch parallelism is the source/state-store partitioning's
         # job; an unconditional repartition would add a shuffle per batch
         return df
-    target = df.sparkSession.sparkContext.defaultParallelism * min_factor
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         n_files = len(df.inputFiles())
     except Exception:

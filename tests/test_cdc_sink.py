@@ -86,6 +86,42 @@ def test_stream_batches_equal_sequential_frame_merges(
     assert log.filter(F.col("run_id").startswith("stream-")).count() == 2
 
 
+def test_stream_conflates_by_ts_col_to_the_newest_op_per_key(
+    spark, tmp_path, booted
+):
+    """With ``ts_col`` set, a micro-batch holding two ops for one key
+    merges only the newer one, whatever the rows' order in the batch."""
+    store = booted
+    df = _updates_df(spark, tmp_path, "ts.csv", [
+        _line("T0001", 111000, "2015-01-05", "D"),
+        _line("T0002", 200000, "2015-06-06", "D"),
+        _line("T0001", 150000, "2015-01-05", "C"),
+        _line("T0002", 222000, "2015-06-06", "C"),
+    ])
+    # the newer op of each key: T0001's C, T0002's D
+    newer = (F.col("transaction_unique_id") == "{T0001}") == (F.col("record_op") == "C")
+    df = df.withColumn("ts", newer.cast("int"))
+    df.coalesce(1).write.parquet(str(tmp_path / "incoming"))
+    stream = spark.readStream.schema(df.schema).parquet(str(tmp_path / "incoming"))
+    q = run_cdc_stream(stream, store, checkpoint_dir=str(tmp_path / "ckpt"), ts_col="ts")
+    q.awaitTermination(120)
+
+    assert set(_state_rows(store)) == {
+        ("{T0001}", 150000),
+        ("{T0003}", 300000),
+        ("{T0004}", 400000),
+    }
+    deleted = store.current_state().filter("is_deleted").collect()
+    assert [(r.transaction_unique_id, r.price) for r in deleted] == [("{T0002}", 200000)]
+    ops = store.operation_log().filter(F.col("run_id").startswith("stream-")).collect()
+    assert {(r.record_op, r.outcome): r.n_rows for r in ops} == {
+        ("C", "change_change"): 1,
+        ("D", "delete_delete"): 1,
+    }
+    (run,) = store.file_log().filter(F.col("run_id").startswith("stream-")).collect()
+    assert run.decision == "archive" and run.row_count == 4
+
+
 def test_replayed_batch_is_noop(spark, tmp_path, booted):
     store = booted
     upd = _updates_df(spark, tmp_path, "m.csv", MONTHLY)

@@ -8,13 +8,10 @@ import datetime
 
 import pytest
 
-from land_registry_data_ingestion_spark.operators.state import ManifestStore
 from land_registry_data_ingestion_spark.sources.fetch import (
     FetchFailed,
-    fetch_and_ingest_snapshot,
     fetch_with_retry,
 )
-from tests.test_ingest import SNAP1
 
 
 class FlakyTransport:
@@ -77,19 +74,3 @@ def test_fetch_timestamps_from_injected_clock(tmp_path):
     )
     assert res.download_duration.total_seconds() == 42
 
-
-def test_fetch_and_ingest_snapshot_end_to_end(spark, tmp_path):
-    payload = ("\n".join(SNAP1) + "\n").encode()
-    store = ManifestStore(spark=spark, root=str(tmp_path / "store"))
-    transport = FlakyTransport(payload, n_failures=1)
-    row = fetch_and_ingest_snapshot(
-        store,
-        "http://example.invalid/pp-complete.txt",
-        str(tmp_path / "staging"),
-        "r1",
-        transport=transport,
-        now=datetime.datetime(2024, 1, 1),
-        sleep=lambda s: None,
-    )
-    assert row["decision"] == "archive" and row["row_count"] == 3
-    assert store.current_state().count() == 3

@@ -232,7 +232,7 @@ def test_compact_file_log_bounds_files_and_preserves_latest(spark, store, tmp_pa
     assert sorted(r["run_id"] for r in store.file_log().collect()) == before_rows
 
     # the threshold probe: under the bound → no-op, over → compacts
-    assert store.maybe_compact_file_log(max_files=64) is False
+    assert store.maybe_compact_file_log() is False
     for i in range(100, 170):
         store._append_log(
             {
@@ -247,7 +247,7 @@ def test_compact_file_log_bounds_files_and_preserves_latest(spark, store, tmp_pa
             }
         )
     assert parts() == 71
-    assert store.maybe_compact_file_log(max_files=64) is True
+    assert store.maybe_compact_file_log() is True
     assert parts() == 1
     assert store.file_log().count() == 170
 

@@ -23,6 +23,7 @@ from land_registry_data_ingestion_spark.operators.ingest import (
     merge_update_frame,
 )
 from land_registry_data_ingestion_spark.operators.state import (
+    FILE_LOG_MAX_PARTS,
     ManifestStore,
     _index_path,
     _read_key_index,
@@ -527,6 +528,9 @@ def test_control_plane_runs_no_spark_job(spark, store, tmp_path):
     t0 = datetime.datetime(2024, 1, 1)
     loc = ingest_snapshot(store, snap, "r1", now=t0)["state_location"]
     entries = store._manifest_entries(loc)
+    # ledger parts up to the compaction bound; r2's append crosses it
+    for i in range(FILE_LOG_MAX_PARTS - 1):
+        store._append_log(_ledger_row(f"g{i:02d}", t0, decision="garbage_collect"))
     calls = {
         "last_accepted": store.last_accepted,
         "accepted_run": lambda: store.accepted_run("r1"),
@@ -541,7 +545,7 @@ def test_control_plane_runs_no_spark_job(spark, store, tmp_path):
             store.state_path("f" * 64), entries
         ),
         "_scan_part_counts": lambda: store._scan_part_counts(store._parts_dir(loc)),
-        "maybe_compact_file_log": lambda: store.maybe_compact_file_log(max_files=1),
+        "maybe_compact_file_log": store.maybe_compact_file_log,
     }
     results = {}
     for name, call in calls.items():
@@ -552,6 +556,7 @@ def test_control_plane_runs_no_spark_job(spark, store, tmp_path):
     assert results["_scan_part_counts"] == entries
     assert store._manifest_entries(store.state_path("f" * 64)) == entries
     assert results["maybe_compact_file_log"] is True
+    assert len(os.listdir(store.file_log_path)) == 1
     assert store.last_accepted()["run_id"] == "r2"
 
 
@@ -626,6 +631,33 @@ def test_monthly_merge_job_budget(spark, store, tmp_path):
     )
     assert row["decision"] == "archive"
     assert n_jobs <= 4
+
+
+def test_duplicate_key_rejection_runs_one_job(spark, store, tmp_path):
+    """The gate samples a duplicate-key batch's keys from the key column
+    its one collect already holds: rejecting the batch runs that collect
+    and no second Spark query."""
+    t = datetime.datetime(2024, 1, 1)
+    ingest_snapshot(store, _write(tmp_path, "s.csv", SNAP), "r1", now=t)
+    dup = _write(tmp_path, "dup.csv", [
+        _line("T0002", 250000, "2015-06-06", "C"),
+        _line("T0005", 500000, "2018-02-01", "A"),
+        _line("T0002", 260000, "2015-06-06", "C"),
+    ])
+
+    def reject():
+        with pytest.raises(ValueError) as err:
+            ingest_monthly_update(store, dup, "r2", now=t + datetime.timedelta(days=1))
+        return str(err.value)
+
+    message, n_jobs = _jobs_in_group(spark, "duplicate", reject)
+    assert message == (
+        f"duplicate transaction_unique_id in update batch {dup} "
+        "(e.g. {T0002}) — refusing to merge; the full-outer join would fan out"
+    )
+    assert n_jobs == 1
+    assert store.last_accepted()["run_id"] == "r1"
+    assert store.accepted_run("r2") is None
 
 
 def test_ledger_row_round_trips_driver_and_dataframe(spark, store):

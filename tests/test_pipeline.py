@@ -43,6 +43,7 @@ def test_snapshot_cycle_archives_staged_file(spark, store, tmp_path):
     # staged file moved, not copied
     assert not os.path.exists(str(tmp_path / "staging" / "r1-pp-complete.csv"))
     assert os.path.exists(row["archived_path"].replace("file:", ""))
+    assert store.current_state().count() == 3
 
 
 def test_rerun_same_content_garbage_collects(spark, store, tmp_path):
