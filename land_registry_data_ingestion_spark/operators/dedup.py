@@ -25,13 +25,14 @@ Scale design notes (the point of each algorithm at 100 TB):
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from land_registry_data_ingestion_spark.functions.text import (
     fingerprint,
-    word_shingle_hashes,
     word_shingles,
 )
 from land_registry_data_ingestion_spark.util import barrier, spread
@@ -166,8 +167,6 @@ def minhash_coefficients(num_hashes: int) -> list[tuple[int, int]]:
 def minhash_signatures_from_shingles(
     sh: DataFrame,
     num_hashes: int = 16,
-    carry: tuple[str, ...] = (),
-    hashed: bool = False,
 ) -> DataFrame:
     """MinHash signatures from an already-shingled frame (``doc``,
     ``shingles``): min over the shingle set of each of ``num_hashes``
@@ -186,34 +185,20 @@ def minhash_signatures_from_shingles(
     Arrow/numpy kernel loses its win to nested-array serialization;
     measured at 100k docs: 12.8s (HOF) / 13.7s (Arrow) / ~2s (this).
     Same integers either way (a, h < 2³¹ keeps a·h+b inside int64).
-
-    ``carry`` names doc-level columns (functionally dependent on ``doc``,
-    e.g. ``n_shingles``) to ride through the aggregate as extra grouping
-    keys — same groups, zero extra shuffled rows, and downstream
-    consumers skip a join back to the shingled frame.
-
-    ``hashed=True`` declares that ``shingles`` already holds the 60-bit
-    ``_md5_hash64(s, 0)`` values (``array<long>``) instead of shingle
-    strings — the round-11 mine-and-verify core materializes those so
-    the verify join ships 8-byte elements; the signature then only pays
-    the ``% P`` residue per element (same integers: the 60-bit hash is
-    non-negative, so ``h % P`` equals ``md5_60(s) % P``).
     """
-    per_shingle = (
-        (lambda h: h % MINHASH_PRIME)
-        if hashed
-        else (lambda s: _md5_hash64(s, 0) % MINHASH_PRIME)
-    )
     base = sh.filter(F.size("shingles") > 0).select(
         "doc",
-        *carry,
-        F.explode(F.transform(F.col("shingles"), per_shingle)).alias("h"),
+        F.explode(
+            F.transform(
+                F.col("shingles"), lambda s: _md5_hash64(s, 0) % MINHASH_PRIME
+            )
+        ).alias("h"),
     )
     aggs = [
         F.min((F.lit(a) * F.col("h") + F.lit(b)) % MINHASH_PRIME).alias(f"mh_{i}")
         for i, (a, b) in enumerate(minhash_coefficients(num_hashes))
     ]
-    return base.groupBy("doc", *carry).agg(*aggs)
+    return base.groupBy("doc").agg(*aggs)
 
 
 def minhash_signatures(
@@ -240,18 +225,15 @@ def lsh_bands(
     signatures: DataFrame,
     num_hashes: int = 16,
     band_size: int = 4,
-    carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """Banded signature rows ``(doc, band_idx, band_hash)`` — the LSH
     join key. Exposed separately so an INCREMENTAL consumer
     (``corpus_store.CorpusStore``) can persist the bands of accepted
     documents and probe new batches against them without re-signing the
-    whole corpus. ``carry`` columns ride along unchanged (a few bytes per
-    band row, in exchange for no join back to the signature frame)."""
+    whole corpus."""
     n_bands = num_hashes // band_size
     return signatures.select(
         "doc",
-        *carry,
         F.explode(
             F.array(
                 *[
@@ -271,7 +253,7 @@ def lsh_bands(
                 ]
             )
         ).alias("band"),
-    ).select("doc", *carry, "band.band_idx", "band.band_hash")
+    ).select("doc", "band.band_idx", "band.band_hash")
 
 
 def minhash_lsh_candidates(
@@ -298,9 +280,8 @@ def minhash_lsh_candidates(
     is a hot one, which at sensible caps (≥ 64) are overwhelmingly
     coincidence pairs the verify step would reject anyway. Default off —
     declared-query semantics (and their oracles) are exact."""
-    # Same double-evaluation guard as the mine-and-verify core (round
-    # 12): the self-join's two selects (and the optional cap) would each
-    # re-run the signature producer — barrier the skinny band rows once.
+    # The self-join's two sides (and the optional cap) would each re-run
+    # the signature producer: barrier the skinny band rows once.
     bands = barrier(lsh_bands(signatures, num_hashes, band_size))
     if max_band_df is not None:
         # ids-only aggregate + semi join on the same key the candidate
@@ -322,6 +303,40 @@ def minhash_lsh_candidates(
     )
 
 
+def _sql(spark, text: str, **frames: DataFrame) -> DataFrame:
+    """``spark.sql`` over DataFrame arguments, each named ``{name}`` in
+    ``text``. PySpark's own ``spark.sql(text, **frames)`` drops its temp
+    views with ``catalog.dropTempView``, which also uncaches a view whose
+    plan is a persisted frame: a barrier passed to it is released as the
+    statement returns, and every later read recomputes it. The views here
+    leave the session catalog without touching the cache."""
+    names = {k: f"_dedup_{k}_{uuid.uuid4().hex}" for k in frames}
+    for k, f in frames.items():
+        f.createOrReplaceTempView(names[k])
+    try:
+        return spark.sql(text.format(**names))
+    finally:
+        catalog = spark._jsparkSession.sessionState().catalog()
+        for name in names.values():
+            catalog.dropTempView(name)
+
+
+def _sql_tokens(text: str) -> str:
+    """``tokens(normalize_text(text))`` of ``functions/text.py`` as SQL."""
+    return f"split(trim(trim(regexp_replace(lower({text}), '\\\\s+', ' '))), '\\\\s+')"
+
+
+def _sql_slices(arr: str, k: int, combine: str) -> str:
+    """The k shifted slices of ``arr`` zipped into one element per
+    k-gram, as in ``functions/text.py`` (``gram_hash_chain`` and
+    ``word_shingles``): element i combines elements i..i+k-1."""
+    m = f"greatest(size({arr}) - {k - 1}, 0)"
+    out = f"slice({arr}, 1, {m})"
+    for j in range(1, k):
+        out = f"zip_with({out}, slice({arr}, {j + 1}, {m}), (x, y) -> {combine})"
+    return out
+
+
 def _minhash_members_and_verified_pairs(
     df: DataFrame,
     id_col: str,
@@ -331,215 +346,182 @@ def _minhash_members_and_verified_pairs(
     band_size: int,
     threshold: float,
     max_band_df: int | None,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, str, dict[str, DataFrame]]:
     """Shared mine-and-verify core of the MinHash near-dup family.
 
-    Returns ``(members, verified)``:
+    Returns ``(members, verify, frames)``:
 
-    - ``members`` — barriered ``(doc, cfp, n_shingles)``, one row per
-      input document, where ``cfp`` is a 16-byte (two-lane xxhash64)
-      content fingerprint of the document's distinct-shingle array
-      (identical shingle arrays ⇔ identical cfp, modulo 128-bit
-      collisions — vanishing even at 10^10 documents);
-    - ``verified`` — ``(doc_a, doc_b, jaccard)``: verified (exact
-      Jaccard ≥ threshold) pairs between family REPRESENTATIVE doc ids
-      (each family's min doc id), one row per family pair regardless of
-      family sizes, ``doc_a < doc_b``.
+    - ``members`` — the barriered family map ``(doc, n_shingles, rep,
+      family_size)``, one row per input document. A family is the set of
+      documents with one identical distinct-shingle array, keyed by
+      ``cfp``, a 128-bit content fingerprint (two chained-seed xxhash64
+      lanes over the document's word-gram hashes,
+      ``functions/text.word_shingle_hashes``).
+      ``rep`` is the family's min doc id and ``family_size`` its number
+      of documents. Doc ids are taken as unique.
+    - ``verify`` — the text of a ``WITH`` clause over the DataFrames in
+      ``frames`` (named by their keys, for :func:`_sql`), whose last
+      table, ``verified(doc_a, doc_b, jaccard)``, holds the pairs of
+      family reps with exact shingle-set Jaccard ≥ ``threshold``, one
+      row per family pair, ``doc_a < doc_b``. Each caller finishes it
+      with its own ``SELECT``, so that verify and expansion are one
+      statement.
 
-    Consumers expand these differently: :func:`minhash_near_duplicates`
-    into member-level pairs (all-pairs or star, via the ``cfp``-keyed
-    :func:`_minhash_members_and_rep_pairs` wrapper), and
-    :func:`minhash_near_dup_groups` into canonical groups via connected
-    components over the (tiny) rep graph — whose node ids ARE these rep
-    doc ids.
+    Every document with the same shingle array has the same signature,
+    bands, length and Jaccard, so only the reps are signed, banded and
+    verified; the consumers expand the rep pairs over ``members``.
+
+    Shape: three barriers and the verify clause, each ``spark.sql`` text
+    over DataFrame arguments (:func:`_sql`) rather than the Column API,
+    whose per-node py4j calls made plan construction the query's largest
+    driver cost (the 16 signature aggregates and the band structs most).
+
+    1. ``members`` (barrier): the word-gram hash chain of
+       ``functions/text.word_shingle_hashes``, its 128-bit ``cfp``, and
+       ``rep`` and ``family_size`` as windows over ``cfp``. No shingle
+       string is built for a member. The key is 128 bits because a
+       collision would merge two distinct documents into one family and
+       fabricate Jaccard-1.0 pairs; the 64-bit birthday bound is
+       marginal at 10^10 documents.
+    2. ``sh`` (barrier): the reps' distinct shingles, each as the 60-bit
+       md5 hash of :func:`_md5_hash64`, so the barrier and the verify
+       joins move 8-byte longs. The text is shingled a second time for
+       the reps only: caching the string arrays of every document cost
+       more (measured 13-25 s against 4.2 s at 100k documents).
+    3. ``bands`` (barrier): the shingle hashes exploded to scalar rows
+       and reduced by ``num_hashes`` ``min((a·h + b) % P)`` aggregates
+       (see :func:`minhash_signatures_from_shingles` for why not a HOF),
+       then md5 band hashes. ``n_shingles`` rides along as a grouping key.
+    4. ``verify``: the band self-join, the length prune (J(A,B) ≥ t ⟹
+       t·|B| ≤ |A|, so no qualifying pair is dropped) before the pair
+       ``distinct``, then exact Jaccard ``round(·, 6)`` over the hash
+       arrays of the surviving pairs.
+
+    Every barrier has ``defaultParallelism`` partitions, hashed on the
+    key its reader groups by. A cached plan keeps its shuffle's
+    ``spark.sql.shuffle.partitions`` (AQE does not coalesce inside it),
+    and each read of a 32-partition barrier ran 32 tasks; a window over
+    32 partitions cost 0.2-0.3 s more than over 2. The ``REPARTITION``
+    hints size exchanges the plan needs anyway: ``members`` is hashed on
+    ``cfp``, which its windows need, and ``sh`` on ``doc``, so neither
+    the signature aggregate over it nor the pair ``distinct`` over the
+    bands needs an exchange of its own. The rep text crosses that one
+    exchange in place of the aggregate's. Only the member pass's input
+    is spread (:func:`spread`'s rule), so no exchange is added there
+    once the input already has that many splits.
+
+    Measured with ``dedup_minhash_lsh`` at ``local[2]`` on 4 cores, five
+    runs in one session, the first cold. On the 1,000-document
+    ``analytics_dedup`` input (seed 21), warm runs: plan construction
+    0.75-1.04 s and 3,566-4,218 py4j round trips before, 0.31-0.55 s and
+    under 200 after (the rest is Spark's parse, analysis and cache
+    planning); execution 1.74-2.64 s before, 1.04-1.32 s after; 20 jobs
+    and 219 tasks before, 14 and 51 after. On a 100,000-document corpus:
+    43.2 s before and 29.3 s after on the cold run, 30.0 s and 19.1 s on
+    the second.
     """
-    # Deliberately NOT a shared barrier on the fat shingled frame: caching
-    # the 140-string arrays for 100k docs costs more (block-store
-    # materialization + memory pressure) than recomputing the shingle map
-    # — measured 4.2 s total with the map run twice vs 13-25 s with the
-    # shared cache. Only the skinny frames (id projection, collapsed
-    # reps) are barriered, and the second shingle pass runs over the
-    # REPRESENTATIVES ONLY (collapse-factor× less text than the round-2
-    # shape, which re-shingled every member into the groupBy and shuffled
-    # all members' shingle arrays; here only rep ids cross the join and
-    # only rep arrays are ever built).
-    #
-    # The member pass never builds shingle STRINGS at all: grouping by
-    # identical shingle arrays only needs an injective-enough array key,
-    # and ``word_shingle_hashes`` is positionally aligned with
-    # ``word_shingles`` (gram i's hash ↔ gram i's string; array_distinct
-    # keeps first-occurrence order on both), so xxhash64 over the hash
-    # array groups exactly like a digest of the string array. This
-    # replaces the round-5 shape (string shingles + md5 of the \x01-join
-    # — k-1 concats plus an md5 of the whole document's shingle text per
-    # row): two xxhash64 combines per row and a 16-byte group key, which
-    # also makes every downstream cfp join/groupBy a 2-long struct, not
-    # a 32-char string. Measured at the bench scale tier (100k docs), isolated
-    # member-barrier materialization, same session: min-of-2 1.34 s →
-    # 0.54 s (first runs 3.98 s → 1.31 s).
-    # The doc-level cfp is 128-BIT (two chained-seed xxhash64 views of
-    # the same gram-hash array — the lit(1) prefix reseeds the second
-    # lane, so the lanes are independent): a cfp collision silently
-    # merges two DISTINCT documents into one "identical-content" family
-    # and fabricates jaccard=1.0 pairs, so the doc-level key must stay
-    # collision-free at corpus scale. At 64 bits the birthday bound is
-    # n²/2^65 — marginal at the 10^10-document scale this operator
-    # targets; at 128 bits it is vanishing. Per-GRAM hashes stay 64-bit
-    # (a gram collision only perturbs one Jaccard estimate, the class
-    # the gram-hash contract already accepts). The struct is a pure
-    # equi-key (groupBy/join only), so consumers are unchanged.
-    shingled_ids = spread(df).select(
-        F.col(id_col).alias("doc"),
-        word_shingle_hashes(F.col(text_col), k).alias("_sh"),
-    ).select(
-        "doc",
-        F.struct(
-            F.xxhash64("_sh").alias("h0"),
-            F.xxhash64(F.lit(1), F.col("_sh")).alias("h1"),
-        ).alias("cfp"),
-        F.size("_sh").alias("n_shingles"),
+    spark = df.sparkSession
+    n = spark.sparkContext.defaultParallelism
+    doc, text = f"`{id_col}`", f"`{text_col}`"
+    members = barrier(
+        _sql(
+            spark,
+            f"""
+            SELECT doc, n_shingles,
+                   min(doc) OVER (PARTITION BY cfp) AS rep,
+                   count(*) OVER (PARTITION BY cfp) AS family_size
+            FROM (SELECT /*+ REPARTITION({n}, cfp) */ doc,
+                         size(sh) AS n_shingles,
+                         named_struct('h0', xxhash64(sh),
+                                      'h1', xxhash64(1, sh)) AS cfp
+                  FROM (SELECT doc, array_distinct(
+                                   {_sql_slices("th", k, "xxhash64(x, y)")}) AS sh
+                        FROM (SELECT {doc} AS doc,
+                                     transform({_sql_tokens(text)},
+                                               t -> xxhash64(t)) AS th
+                              FROM {{docs}})))
+            """,
+            docs=spread(df),
+        )
     )
-    members = barrier(shingled_ids)
-    rep_ids = members.groupBy("cfp").agg(F.min("doc").alias("doc")).select("doc")
-    reps = df.join(
-        rep_ids.withColumnRenamed("doc", id_col), id_col, "left_semi"
-    )
-    # Round-11 shape (guide §2.4/§8: skinny keys decide, fat rows move
-    # once, late). Three structural changes vs the round-10 plan, all
-    # value-identical:
-    #
-    # 1. ``sh`` no longer joins the fat shingle arrays with ``members``
-    #    to pick up ``cfp`` — that was a SortMergeJoin whose exchanges
-    #    shuffled every representative's string arrays before the
-    #    pipeline proper even started. ``cfp`` is functionally dependent
-    #    on ``doc``, so it is attached AT THE END, to the (tiny)
-    #    verified pair set, by two joins against the skinny ``members``
-    #    projection.
-    # 2. ``n_shingles`` rides through the signature aggregate and the
-    #    band rows (``carry`` — extra grouping key, zero extra rows), so
-    #    the AllPairs/PPJoin length prune (J(A,B) ≥ t ⟹ t·|B| ≤ |A|;
-    #    provably no qualifying pair dropped) applies IN the band
-    #    self-join output — before the pair ``distinct`` — instead of
-    #    via two joins back to the shingled frame. 8 bytes per band row
-    #    buys the removal of two SortMergeJoins and their exchanges.
-    # 3. The candidate join is inlined (``minhash_lsh_candidates`` stays
-    #    as the public single-purpose operator; its declared semantics —
-    #    filter-before-distinct commutes with distinct-then-filter on a
-    #    pair-deterministic predicate — are preserved bit-for-bit).
-    # 4. (round 11, guide §2.3 "shuffle keys and metadata instead of
-    #    payloads") ``sh`` materializes the 60-bit ``_md5_hash64`` of
-    #    each distinct shingle (``array<long>``, ~8 B/element) instead
-    #    of the shingle STRINGS (~k·word bytes): the signature pass was
-    #    already reducing each string to exactly this hash before its
-    #    ``% P`` residues, so minima are unchanged integer-for-integer,
-    #    and the Jaccard verify — an equality-only set intersection —
-    #    rides the same equality-modulo-collisions contract as ``cfp``
-    #    one level up (within-pair perturbation ~|A|·|B|/2^60). The
-    #    barrier, both verify-side joins, and the ``array_intersect``
-    #    all move/compare longs instead of strings.
+    grams = _sql_slices("toks", k, "concat(x, ' ', y)")
     sh = barrier(
-        spread(reps)
-        .select(
-            F.col(id_col).alias("doc"),
-            F.transform(
-                word_shingles(F.col(text_col), k),
-                lambda s: _md5_hash64(s, 0),
-            ).alias("shingles"),
+        _sql(
+            spark,
+            f"""
+            SELECT doc, shingles, size(shingles) AS n_shingles
+            FROM (SELECT doc, transform(
+                             CASE WHEN size(toks) >= {k}
+                                  THEN array_distinct({grams})
+                                  ELSE CAST(array() AS array<string>) END,
+                             s -> CAST(conv(substring(md5(concat('0|', s)),
+                                                      1, 15), 16, 10) AS BIGINT)
+                         ) AS shingles
+                  FROM (SELECT doc, {_sql_tokens("text")} AS toks
+                        FROM (SELECT /*+ REPARTITION({n}, doc) */ d.{doc} AS doc,
+                                     d.{text} AS text
+                              FROM {{docs}} d LEFT SEMI JOIN {{members}} m
+                                ON d.{doc} = m.rep AND m.doc = m.rep)))
+            """,
+            docs=df,
+            members=members,
         )
-        .withColumn("n_shingles", F.size("shingles"))
     )
-    # Round 12: bands are consumed by BOTH sides of the self-join below
-    # (plus the optional band-df cap) — left lazy, the signature
-    # aggregate (explode of every shingle hash + num_hashes min-aggs,
-    # the family's most expensive reduction) and the band md5 expansion
-    # execute once PER CONSUMER. Barriered, they run once: ~4 skinny
-    # rows per rep (idx, 32-char hash, doc, n_shingles).
+    P = MINHASH_PRIME
+    coeffs = minhash_coefficients(num_hashes)
+    mins = ", ".join(
+        f"min(({a} * h + {b}) % {P}) AS mh_{i}" for i, (a, b) in enumerate(coeffs)
+    )
+    structs = ", ".join(
+        f"named_struct('band_idx', {b}, 'band_hash', md5(concat_ws(',', "
+        + ", ".join(f"mh_{b * band_size + j}" for j in range(band_size))
+        + ")))"
+        for b in range(num_hashes // band_size)
+    )
     bands = barrier(
-        lsh_bands(
-            minhash_signatures_from_shingles(
-                sh, num_hashes, carry=("n_shingles",), hashed=True
-            ),
-            num_hashes,
-            band_size,
-            carry=("n_shingles",),
+        _sql(
+            spark,
+            f"""
+            SELECT doc, n_shingles, band.band_idx, band.band_hash
+            FROM (SELECT doc, n_shingles, {mins}
+                  FROM (SELECT doc, n_shingles, s % {P} AS h
+                        FROM (SELECT doc, n_shingles, explode(shingles) AS s
+                              FROM {{sh}} WHERE size(shingles) > 0))
+                  GROUP BY doc, n_shingles)
+            LATERAL VIEW explode(array({structs})) AS band
+            """,
+            sh=sh,
         )
     )
-    if max_band_df is not None:
-        ok = (
-            bands.groupBy("band_idx", "band_hash")
-            .agg(F.count("*").alias("band_df"))
-            .filter(F.col("band_df") <= max_band_df)
-            .select("band_idx", "band_hash")
-        )
-        bands = bands.join(ok, ["band_idx", "band_hash"], "left_semi")
-    a_band = bands.select(
-        "band_idx",
-        "band_hash",
-        F.col("doc").alias("doc_a"),
-        F.col("n_shingles").alias("n_a"),
+    kept = (
+        "SELECT * FROM {bands}"
+        if max_band_df is None
+        else "SELECT doc, n_shingles, band_idx, band_hash FROM ("
+        "SELECT *, count(*) OVER (PARTITION BY band_idx, band_hash) AS band_df "
+        f"FROM {{bands}}) WHERE band_df <= {int(max_band_df)}"
     )
-    b_band = bands.select(
-        "band_idx",
-        "band_hash",
-        F.col("doc").alias("doc_b"),
-        F.col("n_shingles").alias("n_b"),
-    )
-    sized = (
-        a_band.join(b_band, ["band_idx", "band_hash"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .filter(
-            (F.col("n_a") >= threshold * F.col("n_b"))
-            & (F.col("n_b") >= threshold * F.col("n_a"))
-        )
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    a = sh.select(F.col("doc").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    b = sh.select(F.col("doc").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    joined = sized.join(a, "doc_a").join(b, "doc_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    verified = (
-        joined.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-    return members, verified
-
-
-def _minhash_members_and_rep_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int,
-    num_hashes: int,
-    band_size: int,
-    threshold: float,
-    max_band_df: int | None,
-) -> tuple[DataFrame, DataFrame]:
-    """``(members, rep_pairs)`` with rep pairs keyed by ``cfp`` — the
-    family-key form the member-pair EXPANSION consumes (members join on
-    ``cfp`` directly). ``cfp`` is functionally dependent on the rep's
-    ``doc``, so it is attached to the (tiny) verified pair set by two
-    joins against the skinny ``members`` projection — consumers that can
-    use rep DOC ids directly (the groups path: rep ids ARE the
-    propagation node ids) should take
-    :func:`_minhash_members_and_verified_pairs` and skip the attach."""
-    members, verified = _minhash_members_and_verified_pairs(
-        df, id_col, text_col, k, num_hashes, band_size, threshold, max_band_df
-    )
-    cfp_a = members.select(
-        F.col("doc").alias("doc_a"), F.col("cfp").alias("cfp_a")
-    )
-    cfp_b = members.select(
-        F.col("doc").alias("doc_b"), F.col("cfp").alias("cfp_b")
-    )
-    rep_pairs = (
-        verified.join(cfp_a, "doc_a")
-        .join(cfp_b, "doc_b")
-        .select("cfp_a", "cfp_b", "jaccard")
-    )
-    return members, rep_pairs
+    t = f"{float(threshold)!r}D"
+    inter = "size(array_intersect(a.shingles, b.shingles))"
+    verify = f"""
+        WITH kept AS ({kept}),
+        cand AS (
+            SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
+            FROM kept a JOIN kept b
+              ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
+            WHERE a.doc < b.doc
+              AND a.n_shingles >= b.n_shingles * {t}
+              AND b.n_shingles >= a.n_shingles * {t}
+        ),
+        scored AS (
+            SELECT c.doc_a, c.doc_b,
+                   round({inter} / (size(a.shingles) + size(b.shingles) - {inter}),
+                         6) AS jaccard
+            FROM cand c JOIN {{sh}} a ON a.doc = c.doc_a
+                        JOIN {{sh}} b ON b.doc = c.doc_b
+        ),
+        verified AS (SELECT doc_a, doc_b, jaccard FROM scored WHERE jaccard >= {t})
+        """
+    return members, verify, {"bands": bands, "sh": sh}
 
 
 def minhash_near_duplicates(
@@ -551,16 +533,9 @@ def minhash_near_duplicates(
     band_size: int = 4,
     threshold: float = 0.5,
     max_band_df: int | None = None,
-    family_edges: str = "all-pairs",
 ) -> DataFrame:
     """Full near-dup pipeline: LSH candidates verified with exact Jaccard
     (verify step touches only candidate pairs).
-
-    ``family_edges``: ``"all-pairs"`` (default) emits every member-level
-    pair — the declared PAIRS semantics. ``"star"`` emits a
-    connectivity-equivalent linear-size edge set (family-min ↔ member
-    stars + one rep-level edge per verified family pair) for consumers
-    that only need connected components (``near_dup_groups``).
 
     **Identical-content collapse** (the dedup-cascade): real corpora are
     full of exact duplicates, and every m-way duplicate family would
@@ -578,89 +553,42 @@ def minhash_near_duplicates(
 
     Provably the same output as running the pipeline over all docs;
     measured 106 s → ~13 s on the 100k-doc / 20-way-family scale probe.
-
-    The shingled frame is consumed multiple times (grouping, signatures,
-    verify sides), so it is persisted rather than recomputed per branch —
-    at cluster scale this intermediate would be staged to Parquet between
-    pipeline steps; MEMORY_AND_DISK gives the same compute-once semantics
-    here without a write barrier. The mine-and-verify core lives in
-    :func:`_minhash_members_and_rep_pairs`; this function is the pair
-    EXPANSION on top of it.
+    The mine-and-verify core is
+    :func:`_minhash_members_and_verified_pairs`; this function is the
+    pair EXPANSION on top of it, in the same statement: verified rep
+    pairs and each family's self-pair, expanded by two joins on ``rep``.
     """
-    members, rep_pairs = _minhash_members_and_rep_pairs(
+    members, verify, frames = _minhash_members_and_verified_pairs(
         df, id_col, text_col, k, num_hashes, band_size, threshold, max_band_df
     )
-
-    if family_edges == "star":
-        # CONNECTIVITY-ONLY output for consumers that group, not rank:
-        # an m-way identical family contributes m-1 star edges
-        # (family-min ↔ member) instead of C(m,2), and an inter-family
-        # rep pair stays ONE edge (rep ↔ rep) instead of m_a·m_b.
-        # Connected components are provably identical — every member
-        # reaches its rep through the star, and reps carry the verified
-        # inter-family links — but the edge count is linear in corpus
-        # size where the cross product is quadratic in family size (the
-        # 400k-doc scaling tier measured exponent 2.38 on the expanded
-        # form: 80-way families → 16× the edges of the 20-way tier).
-        rep_doc = members.filter(F.col("n_shingles") > 0).groupBy(
-            "cfp"
-        ).agg(F.min("doc").alias("rep"))
-        ra = rep_doc.select(F.col("cfp").alias("cfp_a"), F.col("rep").alias("da"))
-        rb = rep_doc.select(F.col("cfp").alias("cfp_b"), F.col("rep").alias("db"))
-        cross = (
-            rep_pairs.join(ra, "cfp_a")
-            .join(rb, "cfp_b")
-            .select(
-                F.least("da", "db").alias("doc_a"),
-                F.greatest("da", "db").alias("doc_b"),
-                "jaccard",
-            )
-        )
-        intra = (
-            members.filter(F.col("n_shingles") > 0)
-            .join(rep_doc, "cfp")
-            .filter(F.col("doc") != F.col("rep"))
-            .select(
-                F.col("rep").alias("doc_a"),
-                F.col("doc").alias("doc_b"),
-                F.lit(1.0).alias("jaccard"),
-            )
-        )
-        if threshold > 1.0:
-            return cross
-        return cross.unionByName(intra)
-
-    # Expand representative pairs to member pairs (families differ, so
-    # member ids interleave → re-order with least/greatest).
-    ma = members.select(F.col("cfp").alias("cfp_a"), F.col("doc").alias("da"))
-    mb = members.select(F.col("cfp").alias("cfp_b"), F.col("doc").alias("db"))
-    cross = (
-        rep_pairs.join(ma, "cfp_a")
-        .join(mb, "cfp_b")
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            "jaccard",
-        )
+    # A verified rep pair expands to the cross product of its two
+    # families; member ids interleave, so least/greatest re-orders. A
+    # family of ≥ 2 pairs with itself at Jaccard 1.0 (identical arrays ⇒
+    # every band collides), expanded by the same two joins: its self-pair
+    # (rep, rep) yields each member pair once. Empty-shingle docs carry no
+    # signature and so never pair, and J = 1.0 does not qualify above a
+    # threshold of 1.0.
+    self_pairs = (
+        "UNION ALL SELECT rep, rep, 1.0D FROM {members} "
+        "WHERE doc = rep AND family_size > 1 AND n_shingles > 0"
+        if threshold <= 1.0
+        else ""
     )
-    # Intra-family pairs: identical arrays ⇒ identical signatures ⇒ all
-    # bands collide ⇒ candidate; Jaccard = 1.0 exactly. Empty-shingle
-    # docs carry no signature (size > 0 filter) and so never pair —
-    # mirror that by excluding n_shingles = 0 families.
-    m1 = members.filter(F.col("n_shingles") > 0).select(
-        "cfp", F.col("doc").alias("doc_a")
+    return _sql(
+        df.sparkSession,
+        verify
+        + f""",
+        rep_pairs AS (SELECT doc_a AS ra, doc_b AS rb, jaccard FROM verified
+                      {self_pairs})
+        SELECT least(ma.doc, mb.doc) AS doc_a,
+               greatest(ma.doc, mb.doc) AS doc_b, p.jaccard
+        FROM rep_pairs p JOIN {{members}} ma ON ma.rep = p.ra
+                         JOIN {{members}} mb ON mb.rep = p.rb
+        WHERE p.ra < p.rb OR ma.doc < mb.doc
+        """,
+        members=members,
+        **frames,
     )
-    m2 = members.filter(F.col("n_shingles") > 0).select(
-        "cfp", F.col("doc").alias("doc_b")
-    )
-    intra = (
-        m1.join(m2, "cfp")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", F.lit(1.0).alias("jaccard"))
-    )
-    if threshold > 1.0:  # degenerate config: J = 1.0 wouldn't qualify
-        return cross
-    return cross.unionByName(intra)
 
 
 # --- near-dup grouping (connected components) -------------------------------
@@ -883,11 +811,11 @@ def minhash_near_dup_groups(
     on the REP GRAPH (one node per identical-content family), then
     propagated to members with one join.
 
-    Equivalent to ``near_dup_groups(minhash_near_duplicates(...,
-    family_edges="star"))`` — same (doc, canonical_doc, n_members) rows —
-    but the iterative propagation runs over |families| nodes and
-    |verified family pairs| edges instead of |docs| nodes and |docs|
-    star edges. Correctness of the collapse: every member reaches its
+    Equivalent to ``near_dup_groups(minhash_near_duplicates(...))`` —
+    same (doc, canonical_doc, n_members) rows — but the iterative
+    propagation runs over |families| nodes and |verified family pairs|
+    edges instead of |docs| nodes and every member-level pair.
+    Correctness of the collapse: every member reaches its
     family rep (rep = min doc of the family, so the component minimum
     over reps IS the component minimum over docs), reps carry all
     verified inter-family links, and a family is in the output iff it
@@ -901,40 +829,30 @@ def minhash_near_dup_groups(
     table while the full corpus is touched exactly twice — once to
     fingerprint members, once to join the final labels back.
     """
-    members, verified = _minhash_members_and_verified_pairs(
+    members, verify, frames = _minhash_members_and_verified_pairs(
         df, id_col, text_col, k, num_hashes, band_size, threshold, max_band_df
     )
-    fam = barrier(
-        members.filter(F.col("n_shingles") > 0)
-        .groupBy("cfp")
-        .agg(F.min("doc").alias("rep"), F.count("*").alias("m"))
-    )
-    # The verified pairs already carry the propagation node ids: a
-    # family's rep is its min doc id, every family member shares one
-    # shingle array (identical cfp ⇔ identical array ⇒ identical
-    # n_shingles, so the n > 0 filter keeps whole families), hence
-    # ``fam.rep`` for any family reaching the verify step equals the
-    # rep doc id the pair rows hold. The round-10 shape re-derived that
-    # identity through two joins (pairs → cfp → fam → rep); round 11
-    # feeds the doc-level pairs to label propagation directly.
-    rep_edges = verified.select("doc_a", "doc_b")
+    verified = _sql(df.sparkSession, verify + "SELECT * FROM verified", **frames)
+    # The verified pairs are between family reps, which are the
+    # propagation node ids. A family is in the output iff it can emit a
+    # pair: a verified cross pair (its rep has a root), or ≥ 2 members
+    # (intra pairs at Jaccard 1.0, which qualify up to threshold 1.0).
     roots = near_dup_groups(
-        rep_edges, max_iters=max_iters, stats=stats
-    ).select(F.col("doc").alias("rep"), F.col("canonical_doc").alias("_root"))
-    rep_label = fam.join(roots, "rep", "left").filter(
-        (F.col("_root").isNotNull())
-        | ((F.col("m") >= 2) & F.lit(threshold <= 1.0))
+        verified.select("doc_a", "doc_b"), max_iters=max_iters, stats=stats
     )
-    out = (
-        members.filter(F.col("n_shingles") > 0)
-        .join(rep_label.select("cfp", "rep", "_root"), "cfp")
-        .select(
-            "doc", F.coalesce("_root", F.col("rep")).alias("canonical_doc")
-        )
-    )
-    wl = Window.partitionBy("canonical_doc")
-    return out.select(
-        "doc", "canonical_doc", F.count("*").over(wl).alias("n_members")
+    return _sql(
+        df.sparkSession,
+        f"""
+        SELECT doc, canonical_doc,
+               count(*) OVER (PARTITION BY canonical_doc) AS n_members
+        FROM (SELECT m.doc, coalesce(r.canonical_doc, m.rep) AS canonical_doc
+              FROM {{members}} m LEFT JOIN {{roots}} r ON r.doc = m.rep
+              WHERE m.n_shingles > 0
+                AND (r.canonical_doc IS NOT NULL
+                     OR (m.family_size >= 2 AND {threshold <= 1.0})))
+        """,
+        members=members,
+        roots=roots,
     )
 
 

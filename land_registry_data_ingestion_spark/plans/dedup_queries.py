@@ -1,8 +1,13 @@
 """Deduplication queries over ``documents`` (scale-out §8).
 
 Every pipeline stage gets an exact DuckDB oracle — including MinHash+LSH,
-whose hash functions are md5-derived specifically so a second engine can
-reproduce the signatures bit-for-bit.
+whose signatures a second engine reproduces bit-for-bit: each shingle's
+hash is md5-derived (the first 60 bits of ``md5('0|' || shingle)``), and
+the 16 hash functions ``(a·h + b) mod (2^31 - 1)`` take their
+coefficients from ``operators.dedup.minhash_coefficients``, which both
+engines read. Those coefficients are a Knuth multiplicative sequence, an
+arithmetic progression whose minima are correlated (ROADMAP Direction 4),
+not an independent hash family.
 """
 
 from __future__ import annotations
@@ -175,12 +180,10 @@ def dedup_near_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     = min id per component. The oracle replays the closure with a
     recursive CTE — exact group parity, not just pair parity."""
     t = load_tables(spark, sf_dir)
-    # Rep-graph components (round 6; supersedes the round-5 star-edge
-    # expansion, which was itself linear where all-pairs was quadratic):
-    # label propagation runs over one node per identical-content family
-    # and one edge per VERIFIED family pair, then members take their
-    # family's label in one join — provably the same groups as the
-    # oracle's recursive closure over the expanded pairs.
+    # Label propagation runs over one node per identical-content family
+    # and one edge per verified family pair, then members take their
+    # family's label in one join: the same groups as the oracle's
+    # recursive closure over the expanded pairs.
     from land_registry_data_ingestion_spark.operators.dedup import (
         minhash_near_dup_groups,
     )

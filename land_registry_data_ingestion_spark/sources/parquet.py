@@ -5,15 +5,24 @@ partitioned-Parquet state store. At 100 TB the same reader works unchanged:
 ``spark.read.parquet`` hands Catalyst a relation that supports predicate
 pushdown, column pruning, and partition pruning for free — the scan only
 materializes what downstream operators reference.
+
+A table's schema comes from its parquet footer, read on the driver, so an
+open schedules no Spark job: ``spark.read.parquet`` without a schema runs
+one schema-inference job per open (100-157 ms against 16-27 ms with the
+schema given, measured at ``local[2]``).
 """
 
 from __future__ import annotations
 
+import json
 import os
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLE_NAMES: tuple[str, ...] = (
     "region",
@@ -27,6 +36,107 @@ TABLE_NAMES: tuple[str, ...] = (
     "documents",
     "embeddings",
 )
+
+
+# The footer key under which Spark records a data file's row schema.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+_ARROW_TO_SPARK = (
+    (pa.types.is_boolean, T.BooleanType()),
+    (pa.types.is_int8, T.ByteType()),
+    (pa.types.is_int16, T.ShortType()),
+    (pa.types.is_int32, T.IntegerType()),
+    (pa.types.is_int64, T.LongType()),
+    (pa.types.is_uint8, T.ShortType()),
+    (pa.types.is_uint16, T.IntegerType()),
+    (pa.types.is_uint32, T.LongType()),
+    (pa.types.is_uint64, T.DecimalType(20, 0)),
+    (pa.types.is_float32, T.FloatType()),
+    (pa.types.is_float64, T.DoubleType()),
+    (pa.types.is_string, T.StringType()),
+    (pa.types.is_large_string, T.StringType()),
+    (pa.types.is_date, T.DateType()),
+)
+
+
+def _spark_type(t: pa.DataType, nanos_as_long: bool) -> T.DataType | None:
+    """The type Spark's parquet reader infers for a column that pyarrow
+    reads as ``t``, made nullable as Spark makes every file-source column;
+    None where this mapping does not follow Spark (the caller then lets
+    Spark infer). Follows the default ``inferTimestampNTZ`` (true) and
+    ``binaryAsString`` (false) settings: a plain binary column, whose
+    type those settings decide, is left to Spark."""
+    for test, spark_type in _ARROW_TO_SPARK:
+        if test(t):
+            return spark_type
+    if pa.types.is_decimal(t):
+        return T.DecimalType(t.precision, t.scale)
+    if pa.types.is_timestamp(t):
+        if t.unit == "ns":
+            return T.LongType() if nanos_as_long else None
+        return T.TimestampType() if t.tz is not None else T.TimestampNTZType()
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        element = _spark_type(t.value_type, nanos_as_long)
+        return None if element is None else T.ArrayType(element, True)
+    if pa.types.is_struct(t):
+        return _spark_struct(list(t), nanos_as_long)
+    return None
+
+
+def _spark_struct(fields: list[pa.Field], nanos_as_long: bool) -> T.StructType | None:
+    out = []
+    for f in fields:
+        spark_type = _spark_type(f.type, nanos_as_long)
+        if spark_type is None:
+            return None
+        out.append(T.StructField(f.name, spark_type, True))
+    return T.StructType(out)
+
+
+def _nullable(t: T.DataType) -> T.DataType:
+    """``t`` with every field, element and value nullable, as Spark reads
+    a file source's schema."""
+    if isinstance(t, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t]
+        )
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, T.MapType):
+        return T.MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def footer_schema(path: str, nanos_as_long: bool = False) -> T.StructType | None:
+    """The schema ``spark.read.parquet(path)`` would infer, read from one
+    parquet footer on the driver, or None when this cannot tell (not a
+    local file or flat directory of data files, summary files, INT96
+    columns, or a type outside :func:`_spark_type`). A directory's first
+    data file by name stands for all of them, as Spark, without schema
+    merging, takes one file's schema for the whole directory.
+    ``nanos_as_long`` follows ``spark.sql.legacy.parquet.nanosAsLong``."""
+    if os.path.isdir(path):
+        names = sorted(os.listdir(path))
+        if any(n in ("_metadata", "_common_metadata") for n in names) or any(
+            os.path.isdir(os.path.join(path, n)) for n in names
+        ):
+            return None
+        data = [n for n in names if not n.startswith(("_", "."))]
+        if not data:
+            return None
+        path = os.path.join(path, data[0])
+    elif not os.path.isfile(path):
+        return None
+    meta = pq.ParquetFile(path).metadata
+    spark_json = (meta.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if spark_json is not None:
+        return _nullable(T.StructType.fromJson(json.loads(spark_json)))
+    if any(
+        meta.schema.column(i).physical_type == "INT96"
+        for i in range(meta.num_columns)
+    ):
+        return None
+    return _spark_struct(list(meta.schema.to_arrow_schema()), nanos_as_long)
 
 
 @dataclass
@@ -63,17 +173,21 @@ class Tables:
                     )
                 except Exception:
                     pass
-                df = self.spark.read.parquet(path)
+                df = self._read(path, nanos_as_long=True)
                 if dict(df.dtypes).get("ts") == "bigint":
                     df = df.withColumn(
                         "ts", F.timestamp_micros(F.expr("ts div 1000"))
                     )
                 self._cache[name] = self._normalize_ntz(df)
             else:
-                self._cache[name] = self._normalize_ntz(
-                    self.spark.read.parquet(path)
-                )
+                self._cache[name] = self._normalize_ntz(self._read(path))
         return self._cache[name]
+
+    def _read(self, path: str, nanos_as_long: bool = False) -> DataFrame:
+        schema = footer_schema(path, nanos_as_long)
+        if schema is None:
+            return self.spark.read.parquet(path)
+        return self.spark.read.schema(schema).parquet(path)
 
     @staticmethod
     def _normalize_ntz(df: DataFrame) -> DataFrame:

@@ -91,46 +91,6 @@ def test_minhash_band_df_cap_bounds_hot_buckets(spark):
     assert all(r["jaccard"] == 1.0 for r in pairs)
 
 
-def test_star_family_edges_same_components_linear_edge_count(spark):
-    """``family_edges="star"`` must produce EXACTLY the connected
-    components of the all-pairs expansion while emitting m-1 edges per
-    m-way identical family (not C(m,2)) and one rep-level edge per
-    verified family pair (not m_a*m_b). Corpus: two identical families
-    chained by a near-dup bridge, one isolated doc, one empty doc."""
-    from land_registry_data_ingestion_spark.operators.dedup import (
-        near_dup_groups,
-    )
-
-    fam_a = " ".join(f"w{i}" for i in range(60))
-    fam_b = " ".join(f"w{i}" for i in range(58)) + " ya yb"  # ~0.9 vs fam_a
-    docs = spark.createDataFrame(
-        [(i, fam_a) for i in range(1, 6)]  # 5-way identical family
-        + [(i, fam_b) for i in range(10, 14)]  # 4-way identical family
-        + [(50, " ".join(f"z{i}" for i in range(60)))]  # isolated
-        + [(60, "")],  # empty: shingle-free, must never pair
-        ["doc_id", "text"],
-    )
-
-    def components(mode):
-        pairs = minhash_near_duplicates(
-            docs, "doc_id", threshold=0.5, family_edges=mode
-        )
-        return pairs, {
-            r["doc"]: (r["canonical_doc"], r["n_members"])
-            for r in near_dup_groups(pairs).collect()
-        }
-
-    all_pairs, comp_all = components("all-pairs")
-    star_pairs, comp_star = components("star")
-    assert comp_star == comp_all
-    # one 9-member component: both families plus the bridge
-    assert comp_all[1] == (1, 9) and comp_all[13] == (1, 9)
-    assert 50 not in comp_all and 60 not in comp_all
-    # edge counts: all-pairs C(5,2)+C(4,2)+5*4 = 36; star (5-1)+(4-1)+1 = 8
-    assert all_pairs.count() == 36
-    assert star_pairs.count() == 8
-
-
 @pytest.fixture(scope="module")
 def embeddings(spark):
     return load_tables(spark, SF_CORRECTNESS).embeddings
