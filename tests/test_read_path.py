@@ -54,7 +54,9 @@ def test_minhash_build_is_a_few_round_trips_and_no_job(spark, monkeypatch):
         return send(self, command)
 
     monkeypatch.setattr(ClientServerConnection, "send_command", counted)
-    _, n_jobs = _jobs_in_group(spark, "minhash-build", lambda: fn(spark, SF_CORRECTNESS))
+    _, n_jobs = _jobs_in_group(
+        spark, "minhash-build", lambda: fn(spark, SF_CORRECTNESS)
+    )
     monkeypatch.undo()
     release_caches()
     assert n_jobs == 0
@@ -111,11 +113,15 @@ def test_family_map_groups_by_word_shingle_hashes(spark):
     )
     got = {(r["doc"], r["rep"], r["n_shingles"]) for r in members.collect()}
     release_caches()
-    sh = docs.select(F.col("doc_id").alias("doc"), word_shingle_hashes(F.col("text"), 3).alias("sh"))
+    sh = docs.select(
+        F.col("doc_id").alias("doc"), word_shingle_hashes(F.col("text"), 3).alias("sh")
+    )
     fam = sh.groupBy("sh").agg(F.min("doc").alias("rep"))
     want = {
         (r["doc"], r["rep"], r["n"])
-        for r in sh.join(fam, "sh").select("doc", "rep", F.size("sh").alias("n")).collect()
+        for r in sh.join(fam, "sh")
+        .select("doc", "rep", F.size("sh").alias("n"))
+        .collect()
     }
     assert got == want
     assert len({rep for _, rep, _ in got}) <= len(got) - 50
