@@ -147,6 +147,28 @@ def word_shingle_hashes(col: Column, k: int = 3) -> Column:
     return F.array_distinct(word_ngram_hashes(col, k))
 
 
+def tokens_sql(text: str) -> str:
+    """``tokens(normalize_text(text))`` as SQL text over the SQL
+    expression ``text``, for plans built as ``spark.sql`` statements,
+    where each Column-API node would cost its own py4j round trips."""
+    ws = "'" + WHITESPACE.replace("\\", "\\\\") + "'"
+    return f"split(trim(trim(regexp_replace(lower({text}), {ws}, ' '))), {ws})"
+
+
+def gram_slices_sql(arr: str, k: int, combine: str) -> str:
+    """The k shifted slices of the SQL array ``arr`` zipped into one
+    element per k-gram, as SQL text: element i folds elements i..i+k-1
+    with ``combine``, a SQL expression over ``x`` and ``y``. With
+    ``xxhash64(x, y)`` over token hashes it is :func:`gram_hash_chain`;
+    with ``concat(x, ' ', y)`` over tokens, the grams of
+    :func:`word_shingles`."""
+    m = f"greatest(size({arr}) - {k - 1}, 0)"
+    out = f"slice({arr}, 1, {m})"
+    for j in range(1, k):
+        out = f"zip_with({out}, slice({arr}, {j + 1}, {m}), (x, y) -> {combine})"
+    return out
+
+
 def token_set_hits(col: Column, words: list[str]) -> Column:
     """Number of whitespace tokens of ``col`` (normalized) that are in
     ``words``, with repeats — as ONE codegen'd ``regexp_count``.

@@ -33,6 +33,8 @@ from pyspark.sql import types as T
 
 from land_registry_data_ingestion_spark.functions.text import (
     fingerprint,
+    gram_slices_sql,
+    tokens_sql,
     word_shingles,
 )
 from land_registry_data_ingestion_spark.util import barrier, spread
@@ -139,12 +141,38 @@ def ngram_jaccard_pairs(
 # --- MinHash + LSH ----------------------------------------------------------
 
 
+def _sql(spark, text: str, **frames: DataFrame) -> DataFrame:
+    """``spark.sql`` over DataFrame arguments, each named ``{name}`` in
+    ``text``. PySpark's own ``spark.sql(text, **frames)`` drops its temp
+    views with ``catalog.dropTempView``, which also uncaches a view whose
+    plan is a persisted frame: a barrier passed to it is released as the
+    statement returns, and every later read recomputes it. The views here
+    leave the session catalog without touching the cache."""
+    names = {k: f"_dedup_{k}_{uuid.uuid4().hex}" for k in frames}
+    for k, f in frames.items():
+        f.createOrReplaceTempView(names[k])
+    try:
+        return spark.sql(text.format(**names))
+    finally:
+        catalog = spark._jsparkSession.sessionState().catalog()
+        for name in names.values():
+            catalog.dropTempView(name)
+
+
 def _md5_hash64(col, salt: int):
     """Deterministic 60-bit integer hash: first 15 hex chars of
     md5(salt|value). Reproducible in any engine with md5 — no RNG."""
     return F.conv(
         F.substring(F.md5(F.concat(F.lit(f"{salt}|"), col)), 1, 15), 16, 10
     ).cast("long")
+
+
+def _md5_hash64_sql(value: str, salt: int) -> str:
+    """:func:`_md5_hash64` as SQL text over the SQL expression ``value``."""
+    return (
+        f"CAST(conv(substring(md5(concat('{salt}|', {value})), 1, 15), 16, 10)"
+        " AS BIGINT)"
+    )
 
 
 # Universal hash family over the Mersenne prime 2^31-1: one expensive md5
@@ -186,19 +214,40 @@ def minhash_signatures_from_shingles(
     measured at 100k docs: 12.8s (HOF) / 13.7s (Arrow) / ~2s (this).
     Same integers either way (a, h < 2³¹ keeps a·h+b inside int64).
     """
-    base = sh.filter(F.size("shingles") > 0).select(
-        "doc",
-        F.explode(
-            F.transform(
-                F.col("shingles"), lambda s: _md5_hash64(s, 0) % MINHASH_PRIME
-            )
-        ).alias("h"),
+    return _sql(
+        sh.sparkSession,
+        f"""
+        SELECT doc, {_minhash_mins_sql(num_hashes)}
+        FROM (SELECT doc, {_md5_hash64_sql("s", 0)} % {MINHASH_PRIME} AS h
+              FROM (SELECT doc, explode(shingles) AS s FROM {{sh}}))
+        GROUP BY doc
+        """,
+        sh=sh,
     )
-    aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % MINHASH_PRIME).alias(f"mh_{i}")
+
+
+def _minhash_mins_sql(num_hashes: int) -> str:
+    """The signature aggregates as SQL, over a column ``h`` of shingle
+    hashes mod P: ``min((a·h + b) % P) AS mh_i`` for each of the
+    ``num_hashes`` coefficient pairs."""
+    return ", ".join(
+        f"min(({a} * h + {b}) % {MINHASH_PRIME}) AS mh_{i}"
         for i, (a, b) in enumerate(minhash_coefficients(num_hashes))
-    ]
-    return base.groupBy("doc").agg(*aggs)
+    )
+
+
+def _bands_sql(num_hashes: int, band_size: int) -> str:
+    """A signature's bands as SQL, over columns ``mh_i``: an array of
+    ``(band_idx, band_hash)`` structs, ``band_hash`` the md5 of the
+    band's ``band_size`` components joined by commas."""
+    return "array({})".format(
+        ", ".join(
+            f"named_struct('band_idx', {b}, 'band_hash', md5(concat_ws(',', "
+            + ", ".join(f"mh_{b * band_size + j}" for j in range(band_size))
+            + ")))"
+            for b in range(num_hashes // band_size)
+        )
+    )
 
 
 def minhash_signatures(
@@ -231,29 +280,9 @@ def lsh_bands(
     (``corpus_store.CorpusStore``) can persist the bands of accepted
     documents and probe new batches against them without re-signing the
     whole corpus."""
-    n_bands = num_hashes // band_size
-    return signatures.select(
-        "doc",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.md5(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.col(f"mh_{b * band_size + j}")
-                                    for j in range(band_size)
-                                ],
-                            )
-                        ).alias("band_hash"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc", "band.band_idx", "band.band_hash")
+    return signatures.selectExpr(
+        "doc", f"inline({_bands_sql(num_hashes, band_size)})"
+    )
 
 
 def minhash_lsh_candidates(
@@ -303,40 +332,6 @@ def minhash_lsh_candidates(
     )
 
 
-def _sql(spark, text: str, **frames: DataFrame) -> DataFrame:
-    """``spark.sql`` over DataFrame arguments, each named ``{name}`` in
-    ``text``. PySpark's own ``spark.sql(text, **frames)`` drops its temp
-    views with ``catalog.dropTempView``, which also uncaches a view whose
-    plan is a persisted frame: a barrier passed to it is released as the
-    statement returns, and every later read recomputes it. The views here
-    leave the session catalog without touching the cache."""
-    names = {k: f"_dedup_{k}_{uuid.uuid4().hex}" for k in frames}
-    for k, f in frames.items():
-        f.createOrReplaceTempView(names[k])
-    try:
-        return spark.sql(text.format(**names))
-    finally:
-        catalog = spark._jsparkSession.sessionState().catalog()
-        for name in names.values():
-            catalog.dropTempView(name)
-
-
-def _sql_tokens(text: str) -> str:
-    """``tokens(normalize_text(text))`` of ``functions/text.py`` as SQL."""
-    return f"split(trim(trim(regexp_replace(lower({text}), '\\\\s+', ' '))), '\\\\s+')"
-
-
-def _sql_slices(arr: str, k: int, combine: str) -> str:
-    """The k shifted slices of ``arr`` zipped into one element per
-    k-gram, as in ``functions/text.py`` (``gram_hash_chain`` and
-    ``word_shingles``): element i combines elements i..i+k-1."""
-    m = f"greatest(size({arr}) - {k - 1}, 0)"
-    out = f"slice({arr}, 1, {m})"
-    for j in range(1, k):
-        out = f"zip_with({out}, slice({arr}, {j + 1}, {m}), (x, y) -> {combine})"
-    return out
-
-
 def _minhash_members_and_verified_pairs(
     df: DataFrame,
     id_col: str,
@@ -351,14 +346,14 @@ def _minhash_members_and_verified_pairs(
 
     Returns ``(members, verify, frames)``:
 
-    - ``members`` — the barriered family map ``(doc, n_shingles, rep,
-      family_size)``, one row per input document. A family is the set of
-      documents with one identical distinct-shingle array, keyed by
-      ``cfp``, a 128-bit content fingerprint (two chained-seed xxhash64
-      lanes over the document's word-gram hashes,
-      ``functions/text.word_shingle_hashes``).
-      ``rep`` is the family's min doc id and ``family_size`` its number
-      of documents. Doc ids are taken as unique.
+    - ``members`` — the barriered family map ``(doc, rep, family_size)``,
+      one row per input document that has at least one shingle (the
+      others never pair). A family is the set of documents with one
+      identical distinct-shingle array, keyed by ``cfp``, a 128-bit
+      content fingerprint (two chained-seed xxhash64 lanes over the
+      document's ``functions/text.word_shingle_hashes``). ``rep`` is the
+      family's min doc id and ``family_size`` its number of documents.
+      Doc ids are taken as unique.
     - ``verify`` — the text of a ``WITH`` clause over the DataFrames in
       ``frames`` (named by their keys, for :func:`_sql`), whose last
       table, ``verified(doc_a, doc_b, jaccard)``, holds the pairs of
@@ -374,24 +369,33 @@ def _minhash_members_and_verified_pairs(
     Shape: three barriers and the verify clause, each ``spark.sql`` text
     over DataFrame arguments (:func:`_sql`) rather than the Column API,
     whose per-node py4j calls made plan construction the query's largest
-    driver cost (the 16 signature aggregates and the band structs most).
+    driver cost (the 16 signature aggregates and the band structs most;
+    one ``F.col`` alone is 13 round trips). Every fragment is built by
+    the same function as its Column-API twin uses or sits beside it:
+    :func:`_minhash_mins_sql` and :func:`_bands_sql` are shared with
+    :func:`minhash_signatures_from_shingles` and :func:`lsh_bands`;
+    ``functions/text.tokens_sql`` and ``gram_slices_sql`` and
+    :func:`_md5_hash64_sql` mirror the Column functions, and tests pin
+    each pass's output to its Column-API form.
 
     1. ``members`` (barrier): the word-gram hash chain of
-       ``functions/text.word_shingle_hashes``, its 128-bit ``cfp``, and
-       ``rep`` and ``family_size`` as windows over ``cfp``. No shingle
-       string is built for a member. The key is 128 bits because a
-       collision would merge two distinct documents into one family and
-       fabricate Jaccard-1.0 pairs; the 64-bit birthday bound is
-       marginal at 10^10 documents.
-    2. ``sh`` (barrier): the reps' distinct shingles, each as the 60-bit
+       ``word_shingle_hashes``, its 128-bit ``cfp``, and ``rep`` and
+       ``family_size`` as windows over ``cfp``. Shingle-free documents
+       (NULL text, fewer than k tokens) are dropped before the exchange:
+       they all share one ``cfp`` and would form one unbounded window
+       group. No shingle string is built for a member. The key is 128
+       bits because a collision would merge two distinct documents into
+       one family and fabricate Jaccard-1.0 pairs; the 64-bit birthday
+       bound is marginal at 10^10 documents.
+    2. ``sh`` (barrier): the reps' ``word_shingles``, each as the 60-bit
        md5 hash of :func:`_md5_hash64`, so the barrier and the verify
        joins move 8-byte longs. The text is shingled a second time for
        the reps only: caching the string arrays of every document cost
        more (measured 13-25 s against 4.2 s at 100k documents).
     3. ``bands`` (barrier): the shingle hashes exploded to scalar rows
-       and reduced by ``num_hashes`` ``min((a·h + b) % P)`` aggregates
-       (see :func:`minhash_signatures_from_shingles` for why not a HOF),
-       then md5 band hashes. ``n_shingles`` rides along as a grouping key.
+       and reduced by the signature aggregates (see
+       :func:`minhash_signatures_from_shingles` for why not a HOF), then
+       the md5 band hashes. ``n_shingles`` rides along as a grouping key.
     4. ``verify``: the band self-join, the length prune (J(A,B) ≥ t ⟹
        t·|B| ≤ |A|, so no qualifying pair is dropped) before the pair
        ``distinct``, then exact Jaccard ``round(·, 6)`` over the hash
@@ -413,12 +417,11 @@ def _minhash_members_and_verified_pairs(
     Measured with ``dedup_minhash_lsh`` at ``local[2]`` on 4 cores, five
     runs in one session, the first cold. On the 1,000-document
     ``analytics_dedup`` input (seed 21), warm runs: plan construction
-    0.75-1.04 s and 3,566-4,218 py4j round trips before, 0.31-0.55 s and
-    under 200 after (the rest is Spark's parse, analysis and cache
-    planning); execution 1.74-2.64 s before, 1.04-1.32 s after; 20 jobs
-    and 219 tasks before, 14 and 51 after. On a 100,000-document corpus:
-    43.2 s before and 29.3 s after on the cold run, 30.0 s and 19.1 s on
-    the second.
+    0.75-1.04 s and 3,566-4,218 py4j round trips before, MEASURE_BUILD
+    after (the rest is Spark's parse, analysis and cache planning);
+    execution 1.74-2.64 s before, MEASURE_EXEC after; 20 jobs and 219
+    tasks before, 14 and 51 after. On a 100,000-document corpus:
+    MEASURE_100K
     """
     spark = df.sparkSession
     n = spark.sparkContext.defaultParallelism
@@ -427,37 +430,32 @@ def _minhash_members_and_verified_pairs(
         _sql(
             spark,
             f"""
-            SELECT doc, n_shingles,
-                   min(doc) OVER (PARTITION BY cfp) AS rep,
+            SELECT doc, min(doc) OVER (PARTITION BY cfp) AS rep,
                    count(*) OVER (PARTITION BY cfp) AS family_size
             FROM (SELECT /*+ REPARTITION({n}, cfp) */ doc,
-                         size(sh) AS n_shingles,
                          named_struct('h0', xxhash64(sh),
                                       'h1', xxhash64(1, sh)) AS cfp
                   FROM (SELECT doc, array_distinct(
-                                   {_sql_slices("th", k, "xxhash64(x, y)")}) AS sh
+                                   {gram_slices_sql("th", k, "xxhash64(x, y)")}) AS sh
                         FROM (SELECT {doc} AS doc,
-                                     transform({_sql_tokens(text)},
+                                     transform({tokens_sql(text)},
                                                t -> xxhash64(t)) AS th
-                              FROM {{docs}})))
+                              FROM {{docs}}))
+                  WHERE size(sh) > 0)
             """,
             docs=spread(df),
         )
     )
-    grams = _sql_slices("toks", k, "concat(x, ' ', y)")
+    grams = gram_slices_sql("toks", k, "concat(x, ' ', y)")
     sh = barrier(
         _sql(
             spark,
             f"""
             SELECT doc, shingles, size(shingles) AS n_shingles
-            FROM (SELECT doc, transform(
-                             CASE WHEN size(toks) >= {k}
-                                  THEN array_distinct({grams})
-                                  ELSE CAST(array() AS array<string>) END,
-                             s -> CAST(conv(substring(md5(concat('0|', s)),
-                                                      1, 15), 16, 10) AS BIGINT)
-                         ) AS shingles
-                  FROM (SELECT doc, {_sql_tokens("text")} AS toks
+            FROM (SELECT doc,
+                         transform(array_distinct({grams}),
+                                   s -> {_md5_hash64_sql("s", 0)}) AS shingles
+                  FROM (SELECT doc, {tokens_sql("text")} AS toks
                         FROM (SELECT /*+ REPARTITION({n}, doc) */ d.{doc} AS doc,
                                      d.{text} AS text
                               FROM {{docs}} d LEFT SEMI JOIN {{members}} m
@@ -467,28 +465,16 @@ def _minhash_members_and_verified_pairs(
             members=members,
         )
     )
-    P = MINHASH_PRIME
-    coeffs = minhash_coefficients(num_hashes)
-    mins = ", ".join(
-        f"min(({a} * h + {b}) % {P}) AS mh_{i}" for i, (a, b) in enumerate(coeffs)
-    )
-    structs = ", ".join(
-        f"named_struct('band_idx', {b}, 'band_hash', md5(concat_ws(',', "
-        + ", ".join(f"mh_{b * band_size + j}" for j in range(band_size))
-        + ")))"
-        for b in range(num_hashes // band_size)
-    )
     bands = barrier(
         _sql(
             spark,
             f"""
-            SELECT doc, n_shingles, band.band_idx, band.band_hash
-            FROM (SELECT doc, n_shingles, {mins}
-                  FROM (SELECT doc, n_shingles, s % {P} AS h
+            SELECT doc, n_shingles, inline({_bands_sql(num_hashes, band_size)})
+            FROM (SELECT doc, n_shingles, {_minhash_mins_sql(num_hashes)}
+                  FROM (SELECT doc, n_shingles, s % {MINHASH_PRIME} AS h
                         FROM (SELECT doc, n_shingles, explode(shingles) AS s
-                              FROM {{sh}} WHERE size(shingles) > 0))
+                              FROM {{sh}}))
                   GROUP BY doc, n_shingles)
-            LATERAL VIEW explode(array({structs})) AS band
             """,
             sh=sh,
         )
@@ -565,12 +551,11 @@ def minhash_near_duplicates(
     # families; member ids interleave, so least/greatest re-orders. A
     # family of ≥ 2 pairs with itself at Jaccard 1.0 (identical arrays ⇒
     # every band collides), expanded by the same two joins: its self-pair
-    # (rep, rep) yields each member pair once. Empty-shingle docs carry no
-    # signature and so never pair, and J = 1.0 does not qualify above a
-    # threshold of 1.0.
+    # (rep, rep) yields each member pair once. J = 1.0 does not qualify
+    # above a threshold of 1.0.
     self_pairs = (
         "UNION ALL SELECT rep, rep, 1.0D FROM {members} "
-        "WHERE doc = rep AND family_size > 1 AND n_shingles > 0"
+        "WHERE doc = rep AND family_size > 1"
         if threshold <= 1.0
         else ""
     )
@@ -847,9 +832,8 @@ def minhash_near_dup_groups(
                count(*) OVER (PARTITION BY canonical_doc) AS n_members
         FROM (SELECT m.doc, coalesce(r.canonical_doc, m.rep) AS canonical_doc
               FROM {{members}} m LEFT JOIN {{roots}} r ON r.doc = m.rep
-              WHERE m.n_shingles > 0
-                AND (r.canonical_doc IS NOT NULL
-                     OR (m.family_size >= 2 AND {threshold <= 1.0})))
+              WHERE r.canonical_doc IS NOT NULL
+                 OR (m.family_size >= 2 AND {threshold <= 1.0}))
         """,
         members=members,
         roots=roots,

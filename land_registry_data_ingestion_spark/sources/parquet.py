@@ -14,7 +14,6 @@ schema given, measured at ``local[2]``).
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass, field
 
@@ -37,9 +36,6 @@ TABLE_NAMES: tuple[str, ...] = (
     "embeddings",
 )
 
-
-# The footer key under which Spark records a data file's row schema.
-_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 _ARROW_TO_SPARK = (
     (pa.types.is_boolean, T.BooleanType()),
@@ -93,44 +89,15 @@ def _spark_struct(fields: list[pa.Field], nanos_as_long: bool) -> T.StructType |
     return T.StructType(out)
 
 
-def _nullable(t: T.DataType) -> T.DataType:
-    """``t`` with every field, element and value nullable, as Spark reads
-    a file source's schema."""
-    if isinstance(t, T.StructType):
-        return T.StructType(
-            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t]
-        )
-    if isinstance(t, T.ArrayType):
-        return T.ArrayType(_nullable(t.elementType), True)
-    if isinstance(t, T.MapType):
-        return T.MapType(_nullable(t.keyType), _nullable(t.valueType), True)
-    return t
-
-
 def footer_schema(path: str, nanos_as_long: bool = False) -> T.StructType | None:
-    """The schema ``spark.read.parquet(path)`` would infer, read from one
+    """The schema ``spark.read.parquet(path)`` would infer, read from the
     parquet footer on the driver, or None when this cannot tell (not a
-    local file or flat directory of data files, summary files, INT96
-    columns, or a type outside :func:`_spark_type`). A directory's first
-    data file by name stands for all of them, as Spark, without schema
-    merging, takes one file's schema for the whole directory.
-    ``nanos_as_long`` follows ``spark.sql.legacy.parquet.nanosAsLong``."""
-    if os.path.isdir(path):
-        names = sorted(os.listdir(path))
-        if any(n in ("_metadata", "_common_metadata") for n in names) or any(
-            os.path.isdir(os.path.join(path, n)) for n in names
-        ):
-            return None
-        data = [n for n in names if not n.startswith(("_", "."))]
-        if not data:
-            return None
-        path = os.path.join(path, data[0])
-    elif not os.path.isfile(path):
+    single local file, INT96 columns, or a type outside
+    :func:`_spark_type`). ``nanos_as_long`` follows
+    ``spark.sql.legacy.parquet.nanosAsLong``."""
+    if not os.path.isfile(path):
         return None
     meta = pq.ParquetFile(path).metadata
-    spark_json = (meta.metadata or {}).get(_SPARK_SCHEMA_KEY)
-    if spark_json is not None:
-        return _nullable(T.StructType.fromJson(json.loads(spark_json)))
     if any(
         meta.schema.column(i).physical_type == "INT96"
         for i in range(meta.num_columns)

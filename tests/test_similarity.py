@@ -91,6 +91,45 @@ def test_minhash_band_df_cap_bounds_hot_buckets(spark):
     assert all(r["jaccard"] == 1.0 for r in pairs)
 
 
+def test_minhash_all_pairs_expands_family_cross_product(spark):
+    """Verified rep pairs expand to the cross product of their families
+    and each family of m identical documents to its C(m,2) pairs. Corpus:
+    two identical families with interleaved ids chained by a near-dup
+    bridge, one isolated doc, one empty doc."""
+    from land_registry_data_ingestion_spark.operators.dedup import (
+        near_dup_groups,
+    )
+
+    fam_a = " ".join(f"w{i}" for i in range(60))
+    fam_b = " ".join(f"w{i}" for i in range(58)) + " ya yb"  # ~0.9 vs fam_a
+    docs = spark.createDataFrame(
+        [(i, fam_a) for i in (1, 3, 5, 20, 22)]  # 5-way identical family
+        + [(i, fam_b) for i in (2, 4, 21, 23)]  # 4-way identical family
+        + [(50, " ".join(f"z{i}" for i in range(60)))]  # isolated
+        + [(60, "")],  # empty: shingle-free, must never pair
+        ["doc_id", "text"],
+    )
+    fam_b_ids = {2, 4, 21, 23}
+    pairs = minhash_near_duplicates(docs, "doc_id", threshold=0.5)
+    rows = pairs.collect()
+    # C(5,2) + C(4,2) intra-family pairs + 5*4 cross pairs, each once
+    assert len(rows) == 36
+    assert len({(r["doc_a"], r["doc_b"]) for r in rows}) == 36
+    assert all(r["doc_a"] < r["doc_b"] for r in rows)
+    cross = [
+        r for r in rows if (r["doc_a"] in fam_b_ids) != (r["doc_b"] in fam_b_ids)
+    ]
+    assert len(cross) == 20 and len({r["jaccard"] for r in cross}) == 1
+    assert all(r["jaccard"] == 1.0 for r in rows if r not in cross)
+    comp = {
+        r["doc"]: (r["canonical_doc"], r["n_members"])
+        for r in near_dup_groups(pairs).collect()
+    }
+    # one 9-member component: both families plus the bridge
+    assert comp[22] == (1, 9) and comp[23] == (1, 9)
+    assert 50 not in comp and 60 not in comp
+
+
 @pytest.fixture(scope="module")
 def embeddings(spark):
     return load_tables(spark, SF_CORRECTNESS).embeddings
