@@ -347,13 +347,14 @@ def _minhash_members_and_verified_pairs(
     Returns ``(members, verify, frames)``:
 
     - ``members`` — the barriered family map ``(doc, rep, family_size)``,
-      one row per input document that has at least one shingle (the
-      others never pair). A family is the set of documents with one
-      identical distinct-shingle array, keyed by ``cfp``, a 128-bit
+      one row per input document. A family is the set of documents with
+      one identical distinct-shingle array, keyed by ``cfp``, a 128-bit
       content fingerprint (two chained-seed xxhash64 lanes over the
       document's ``functions/text.word_shingle_hashes``). ``rep`` is the
       family's min doc id and ``family_size`` its number of documents.
-      Doc ids are taken as unique.
+      A shingle-free document (NULL text, fewer than k tokens) is a
+      family of one, and with no bands it never pairs. Doc ids are
+      taken as unique.
     - ``verify`` — the text of a ``WITH`` clause over the DataFrames in
       ``frames`` (named by their keys, for :func:`_sql`), whose last
       table, ``verified(doc_a, doc_b, jaccard)``, holds the pairs of
@@ -380,13 +381,16 @@ def _minhash_members_and_verified_pairs(
 
     1. ``members`` (barrier): the word-gram hash chain of
        ``word_shingle_hashes``, its 128-bit ``cfp``, and ``rep`` and
-       ``family_size`` as windows over ``cfp``. Shingle-free documents
-       (NULL text, fewer than k tokens) are dropped before the exchange:
-       they all share one ``cfp`` and would form one unbounded window
-       group. No shingle string is built for a member. The key is 128
-       bits because a collision would merge two distinct documents into
-       one family and fabricate Jaccard-1.0 pairs; the 64-bit birthday
-       bound is marginal at 10^10 documents.
+       ``family_size`` as windows over ``cfp``. The shingle-free
+       documents all hash alike, so their ``cfp`` also carries the doc
+       id (``lone``), or they would form one unbounded window group. A
+       ``WHERE`` dropping them instead is pushed below the input's
+       spread with the whole tokenizer inlined, and ran the member pass
+       in one task: 38.7 s against 31.7 s for the Column-API parent on
+       100k documents. No shingle string is built for a member. The key
+       is 128 bits because a collision would merge two distinct documents
+       into one family and fabricate Jaccard-1.0 pairs; the 64-bit
+       birthday bound is marginal at 10^10 documents.
     2. ``sh`` (barrier): the reps' ``word_shingles``, each as the 60-bit
        md5 hash of :func:`_md5_hash64`, so the barrier and the verify
        joins move 8-byte longs. The text is shingled a second time for
@@ -417,11 +421,12 @@ def _minhash_members_and_verified_pairs(
     Measured with ``dedup_minhash_lsh`` at ``local[2]`` on 4 cores, five
     runs in one session, the first cold. On the 1,000-document
     ``analytics_dedup`` input (seed 21), warm runs: plan construction
-    0.75-1.04 s and 3,566-4,218 py4j round trips before, MEASURE_BUILD
+    0.66-0.91 s and 3,437 py4j round trips before, 0.37-0.44 s and 78
     after (the rest is Spark's parse, analysis and cache planning);
-    execution 1.74-2.64 s before, MEASURE_EXEC after; 20 jobs and 219
-    tasks before, 14 and 51 after. On a 100,000-document corpus:
-    MEASURE_100K
+    execution 2.03-2.44 s before, 1.06-1.52 s after; 20 jobs and 157
+    tasks before, 14 and 28 after. On a 100,000-document corpus, two
+    runs: 38.8 s before and 27.7 s after on the cold run, 31.7 s and
+    18.0 s on the second.
     """
     spark = df.sparkSession
     n = spark.sparkContext.defaultParallelism
@@ -434,14 +439,14 @@ def _minhash_members_and_verified_pairs(
                    count(*) OVER (PARTITION BY cfp) AS family_size
             FROM (SELECT /*+ REPARTITION({n}, cfp) */ doc,
                          named_struct('h0', xxhash64(sh),
-                                      'h1', xxhash64(1, sh)) AS cfp
+                                      'h1', xxhash64(1, sh),
+                                      'lone', IF(size(sh) > 0, NULL, doc)) AS cfp
                   FROM (SELECT doc, array_distinct(
                                    {gram_slices_sql("th", k, "xxhash64(x, y)")}) AS sh
                         FROM (SELECT {doc} AS doc,
                                      transform({tokens_sql(text)},
                                                t -> xxhash64(t)) AS th
-                              FROM {{docs}}))
-                  WHERE size(sh) > 0)
+                              FROM {{docs}})))
             """,
             docs=spread(df),
         )

@@ -113,17 +113,21 @@ def test_minhash_barriers_stay_cached(spark):
 
 def _docs_with_copies(spark):
     """The sf0.01 corpus plus a copy of 50 of its documents, so that
-    families of two exist."""
+    families of two exist, and three shingle-free documents."""
     docs = load_tables(spark, SF_CORRECTNESS).documents.select("doc_id", "text")
+    lone = spark.createDataFrame(
+        [(2_000_000, None), (2_000_001, "two words"), (2_000_002, "")],
+        "doc_id long, text string",
+    )
     return docs.unionByName(
         docs.filter("doc_id < 50").withColumn("doc_id", F.col("doc_id") + 1_000_000)
-    )
+    ).unionByName(lone)
 
 
 def test_family_map_groups_by_word_shingle_hashes(spark):
     """The family map's ``rep`` is the min doc id over documents with one
-    ``word_shingle_hashes`` array, the Column-API form of its SQL text,
-    and shingle-free documents are left out."""
+    ``word_shingle_hashes`` array, the Column-API form of its SQL text;
+    a shingle-free document is a family of one."""
     docs = _docs_with_copies(spark)
     members, _, _ = _minhash_members_and_verified_pairs(
         docs, "doc_id", "text", 3, 16, 4, 0.3, None
@@ -132,28 +136,31 @@ def test_family_map_groups_by_word_shingle_hashes(spark):
     release_caches()
     sh = docs.select(
         F.col("doc_id").alias("doc"), word_shingle_hashes(F.col("text"), 3).alias("sh")
-    ).filter(F.size("sh") > 0)
-    fam = sh.groupBy("sh").agg(F.min("doc").alias("rep"))
-    want = {(r["doc"], r["rep"]) for r in sh.join(fam, "sh").collect()}
+    )
+    shingled = sh.filter(F.size("sh") > 0)
+    fam = shingled.groupBy("sh").agg(F.min("doc").alias("rep"))
+    want = {(r["doc"], r["rep"]) for r in shingled.join(fam, "sh").collect()}
+    lone = {r["doc"] for r in sh.filter(~(F.size("sh") > 0) | F.isnull("sh")).collect()}
+    want |= {(d, d) for d in lone}
+    assert len(lone) == 3
     assert got == want
     assert len({rep for _, rep in got}) <= len(got) - 50
 
 
 def test_rep_shingle_hashes_are_md5_of_word_shingles(spark):
     """The reps' shingle-hash barrier holds, per rep, ``_md5_hash64`` of
-    each of its ``word_shingles``, the Column-API form of its SQL text."""
+    each of its ``word_shingles``, the Column-API form of its SQL text;
+    a shingle-free rep holds none (NULL text gives a NULL array)."""
     docs = _docs_with_copies(spark)
     members, _, frames = _minhash_members_and_verified_pairs(
         docs, "doc_id", "text", 3, 16, 4, 0.3, None
     )
-    got = {
-        (r["doc"], frozenset(r["shingles"]), r["n_shingles"])
-        for r in frames["sh"].collect()
-    }
+    rows = frames["sh"].collect()
     reps = {r["rep"] for r in members.select("rep").distinct().collect()}
     release_caches()
+    got = {(r["doc"], frozenset(r["shingles"] or ())) for r in rows}
     want = {
-        (r["doc"], frozenset(r["h"]), len(r["h"]))
+        (r["doc"], frozenset(r["h"]))
         for r in docs.filter(F.col("doc_id").isin(sorted(reps)))
         .select(
             F.col("doc_id").alias("doc"),
@@ -164,4 +171,5 @@ def test_rep_shingle_hashes_are_md5_of_word_shingles(spark):
         .collect()
     }
     assert got == want
-    assert len(got) == len(reps)
+    assert len(rows) == len(reps)
+    assert all(r["n_shingles"] == len(r["shingles"]) for r in rows if r["shingles"])
